@@ -1,6 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Checkpoint-transparent plan capture (VERDICT r14 lead item).
@@ -78,6 +79,25 @@ object Ckpt {
   }
 }
 
+/** Job attribution at the engine's choke points (kernel iterations, MV
+  * builds, Par legs): runs `body` with the thread's Spark job
+  * description set to `desc`, then restores the caller's. The job group
+  * (what a caller such as a benchmark sets around a whole query) is
+  * never touched. */
+object JobTag {
+  private val Key = "spark.job.description" // SparkContext.SPARK_JOB_DESCRIPTION
+
+  def apply[A](sc: SparkContext, desc: String)(body: => A): A = {
+    val prev = sc.getLocalProperty(Key)
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** The calling thread's current job description, if any. */
+  def current(sc: SparkContext): Option[String] =
+    Option(sc.getLocalProperty(Key))
+}
+
 /** Overlap INDEPENDENT legs of one query on driver threads (guide
   * §2.6: actions are only sequential because driver code calls them
   * sequentially; concurrent jobs back-fill executors freed by each
@@ -92,16 +112,19 @@ object Ckpt {
   * InheritableThreadLocal at Thread creation, and the Ckpt capture
   * scope is handed over explicitly so the plan-audit gate keeps seeing
   * worker-thread checkpoints (the r17 blocker for overlapping the RFM
-  * axes). Exceptions propagate to the caller (first one wins). */
+  * axes). Each leg's jobs carry the description `<caller's>/leg<i>`.
+  * Exceptions propagate to the caller (first one wins). */
 object Par {
-  def run[A](bodies: Seq[() => A]): Seq[A] = {
+  def run[A](s: SparkSession, bodies: Seq[() => A]): Seq[A] = {
     if (bodies.sizeIs <= 1) return bodies.map(_())
+    val sc = s.sparkContext
+    val caller = JobTag.current(sc).fold("")(_ + "/")
     val buf = Ckpt.currentBuffer
     val results = new Array[Any](bodies.size)
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val threads = bodies.zipWithIndex.map { case (b, i) =>
       val t = new Thread(() => {
-        try results(i) = Ckpt.withBuffer(buf)(b())
+        try results(i) = JobTag(sc, s"${caller}leg$i")(Ckpt.withBuffer(buf)(b()))
         catch { case e: Throwable => failure.compareAndSet(null, e) }
       }, s"graft-par-$i")
       t.setDaemon(true)

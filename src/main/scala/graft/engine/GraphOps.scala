@@ -2,7 +2,7 @@ package graft.engine
 
 import graft.engine.Ckpt.CkptOps
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,15 +35,17 @@ object GraphOps {
   val JaccardMinSim = 0.05
 
   /** Memo for the one-scalar vertex-count stats probe: one pair of
-    * distinct-counts per (session, fixture), not one per fixpoint query
-    * (the LlmOps.tokenMasks device — pagerank/cc/bfs/hits/… would
-    * otherwise each rescan the edge MV just to learn |V|). */
+    * distinct-counts per (session, edge-MV generation), not one per
+    * fixpoint query (the LlmOps.tokenMasks device — cc/bfs/closeness/…
+    * would otherwise each rescan the edge MV just to learn |V|). Keyed
+    * on the freshness-scoped `gKey`, like the MV it counts, so a
+    * mid-session rewrite of orders/lineitem re-probes. */
   private val vertexCountCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
 
   private[graft] def vertexCount(s: SparkSession, dir: String): Long =
     vertexCountCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
+      (s.sparkContext.applicationId, gKey(s, dir)), _ => {
         val e = edges(s, dir)
         e.select(col("src")).distinct().count() +
           e.select(col("dst")).distinct().count()
@@ -56,20 +58,20 @@ object GraphOps {
     * (PlanAuditSpec pins both regimes with it). */
   val StateBroadcastMaxRows = 20000000L
 
-  /** Memoized edge-count probe (one scalar per session × fixture over
-    * the checkpointed edge MV) — feeds the iterative tier's adaptive
-    * scan width. */
+  /** Memoized edge-count probe (one scalar per session × edge-MV
+    * generation, `gKey` as for |V|) — feeds the iterative tier's
+    * adaptive scan width. */
   private val edgeCountCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
   private[graft] def edgeCount(s: SparkSession, dir: String): Long =
     edgeCountCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => edges(s, dir).count())
+      (s.sparkContext.applicationId, gKey(s, dir)), _ => edges(s, dir).count())
 
-  /** Target rows per task for the iterative matvec scans — tiny rows
-    * (two longs), so a task under ~75k rows is scheduler-bound, not
-    * compute-bound (A/B: 32 blocks of ~19k rows ran each HITS job
-    * slower than 8 blocks of ~75k at sf0.1). */
-  val IterRowsPerTask = 75000L
+  /** Target rows per task for the PowerIter arc scans (about 5 ms of
+    * kernel work per task, a few times a local task launch): at sf0.01
+    * on 3 cores one 119k-arc pagerank task per step took 16 ms and the
+    * query 0.55 s, three tasks 5 ms each and 0.45 s. */
+  val IterRowsPerTask = 25000L
 
   /** ADAPTIVE scan width for the iterative tier (VERDICT r16 advisory:
     * q_graph_hits hard-coded `coalesce(8)` as a local[32] tune that
@@ -206,9 +208,9 @@ object GraphOps {
     }
 
   /** Out-degree-weighted arc list (src, dst, d) over the symmetrized
-    * bipartite graph, pre-hash-partitioned on dst (what every power-
-    * iteration groupBy(dst) wants: partition-local aggregation, NO
-    * exchange — the only per-step movement is the rank-table broadcast).
+    * bipartite graph, pre-hash-partitioned on dst (a relational
+    * power-iteration step's groupBy(dst) aggregates partition-locally,
+    * NO exchange — PlanAuditSpec pins the layout).
     * Session MV: PageRank and PPR consumed identical private copies
     * until round 6 (VERDICT r5 what's-wrong #1); at 100 TB this is a
     * persisted adjacency layout, built once per corpus snapshot. */
@@ -333,10 +335,10 @@ object GraphOps {
     val nodes = t.select(col("src").as("v"))
       .union(t.select(col("dst").as("v")))
       .distinct().ckpt()
-    // checkpoint every 2nd hop (the pagerank cadence; freshStats resets
-    // the inherited size estimate): these loops have no broadcast
-    // subqueries to cut, so the per-hop materialization was pure
-    // scheduler overhead — 27 jobs / ~1 s of planning gaps measured.
+    // checkpoint every 2nd hop (freshStats resets the inherited size
+    // estimate): these loops have no broadcast subqueries to cut, so the
+    // per-hop materialization was pure scheduler overhead — 27 jobs /
+    // ~1 s of planning gaps measured.
     // The forward and backward sweeps are INDEPENDENT k-hop min-label
     // propagations over the same edge MV (each ~14 jobs of ~20 ms
     // scheduler/planning latency) — overlap them on two driver threads
@@ -353,7 +355,7 @@ object GraphOps {
       }
       x
     }
-    val Seq(f, b) = Par.run(Seq[() => DataFrame](
+    val Seq(f, b) = Par.run(s, Seq[() => DataFrame](
       () => sweep("src", "dst", "f"),
       () => sweep("dst", "src", "b")))
     f.join(b, Seq("v"))
@@ -936,52 +938,29 @@ object GraphOps {
   }
 
   /** PageRank (10 power iterations, reset 0.15, r₀=1) over the
-    * UNDIRECTED co-purchase graph as declarative relational algebra:
-    * each iteration is one join + keyed aggregation — a Pregel superstep
-    * expressed as a shuffle, with no driver-side state (the round-1
-    * GraphX mirror lives on in the test suite as an independent check).
-    * Undirected means no dangling mass: Σr is conserved at exactly
-    * |V_connected| every step. Deterministic (rounded ranks + id
-    * tie-break) and oracle-checked against a 10-step unrolled CTE chain
-    * in DuckDB. Vertex ids: customer→2k, part→2k+1 (key spaces
-    * overlap). */
-  def q_graph_pagerank(s: SparkSession, dir: String): DataFrame = {
-    // The degree-weighted arc list is the shared session MV (pre-hash-
-    // partitioned on dst — the checkpoint preserves the partitioning,
-    // the broadcast join keeps it, so every iteration's groupBy(dst)
-    // aggregates partition-locally with NO exchange: the only per-step
-    // data movement is the rank-table broadcast).
-    val undW = undWeighted(s, dir)
-    var ranks = undDegrees(s, dir).select(col("node"), lit(1.0).as("r"))
-    for (it <- 1 to 10) {
-      ranks = undW
-        // probe-gated broadcast (stateHint): below the |V| guard the rank
-        // table broadcasts and chaining the 10 steps through broadcast
-        // exchanges makes the whole computation ONE job; above it the
-        // hint drops and the rank table pre-hash-partitions on the join
-        // key instead (shuffle join, edge MV re-exchanges at most once).
-        .join(stateHint(s, dir, ranks.select(col("node").as("rn"), col("r")), "rn"),
-          col("src") === col("rn"))
-        .groupBy(col("dst"))
-        // per-term contributions rounded at the 9th decimal via the
-        // 1e9-scaled BIGINT device and summed exactly (order-blind).
-        // round(y*1e9, 0) is computed on the SAME double product in both
-        // engines — measured zero-divergence, unlike round(y, 9) whose
-        // decimal-vs-float implementations split true near-ties
-        // (~1e-5 of terms; one such term broke gcn_norm at sf0.1).
-        .agg((lit(0.15) + lit(0.85)
-          * (sum(Dsl.rlong(col("r") / col("d") * 1e9)).cast("double") / 1e9)).as("r"))
-        .select(col("dst").as("node"), col("r"))
-      // checkpoint every 2nd step: bounds plan depth (planning + codegen
-      // cost of a 10-deep broadcast chain is worse than 5 short jobs)
-      // without paying a scheduler round-trip for every single step.
-      if (it % 2 == 0) ranks = freshStats(s, ranks.ckpt())
-    }
+    * UNDIRECTED co-purchase graph: r(v) ← 0.15 + 0.85·Σ_{u→v} r(u)/d(u),
+    * each term rounded at the 9th decimal via the 1e9-scaled BIGINT
+    * device (round(y·1e9) is computed on the SAME double product in
+    * both engines — zero divergence, unlike round(y, 9), whose decimal-
+    * vs-float implementations split true near-ties) and summed exactly,
+    * so the result is order-blind. The loop is the PowerIter kernel over
+    * the shared degree-weighted arc MV (the GraphX mirror lives on in the
+    * test suite as an independent check). Undirected means no dangling
+    * mass: Σr is conserved at |V_connected| every step. Oracle: a 10-step
+    * unrolled CTE chain in DuckDB. Vertex ids: customer→2k, part→2k+1. */
+  def q_graph_pagerank(s: SparkSession, dir: String): DataFrame =
+    partRanks(PowerIter.run(s, "q_graph_pagerank", undDegrees(s, dir)
+      .select(col("node"), lit(1.0).as("r")), 10,
+      Seq(PowerIter.Leg(undWeighted(s, dir), "src", "dst", (r, d, _) => r / d, Seq("d"),
+        update = (_, x) => 0.15 + 0.85 * x)), iterWidth(s, dir)))
+
+  /** Top-20 parts (odd node ids) of a bipartite rank state (node, r) by
+    * round-6 rank, id tie-break. */
+  private def partRanks(ranks: DataFrame): DataFrame =
     ranks.filter(col("node") % 2 === 1)
       .select(expr("(node - 1) div 2").as("part_key"), round(col("r"), 6).as("rank"))
       .orderBy(col("rank").desc, col("part_key").asc)
       .limit(20)
-  }
 
   /** Weighted bipartite arc list (src, dst, w, wt): edge weight w =
     * purchase MULTIPLICITY (order-line count of the customer–part
@@ -1015,34 +994,18 @@ object GraphOps {
     * power iteration with the transition probability w_uv/W_u in the
     * numerator — purchase multiplicity instead of the uniform 1/deg, so
     * a part bought repeatedly by its customers outranks one bought once
-    * by the same customers. Same 10 iterations, same reset 0.15, same
-    * per-term 1e9-scaled BIGINT rounding device (the double product
-    * r·w/W·1e9 is computed identically in both engines), same
-    * broadcast-chain/checkpoint cadence. Undirected symmetrized ⇒ no
-    * dangling mass: Σr is conserved at |V| every step (mod 1e-9
-    * rounding). */
-  def q_graph_pagerank_w(s: SparkSession, dir: String): DataFrame = {
-    val undW = undWeightedArcs(s, dir)
-    // node set of the weighted graph == node set of the distinct graph
-    // (multiplicity never adds or removes a node): r₀ seeds from the
-    // SHARED undDegrees MV instead of a fresh distinct over the arcs
-    var ranks = undDegrees(s, dir).select(col("node"), lit(1.0).as("r"))
-    for (it <- 1 to 10) {
-      ranks = undW
-        .join(stateHint(s, dir, ranks.select(col("node").as("rn"), col("r")), "rn"),
-          col("src") === col("rn"))
-        .groupBy(col("dst"))
-        .agg((lit(0.15) + lit(0.85)
-          * (sum(Dsl.rlong(col("r") * col("w") / col("wt") * 1e9))
-            .cast("double") / 1e9)).as("r"))
-        .select(col("dst").as("node"), col("r"))
-      if (it % 2 == 0) ranks = freshStats(s, ranks.ckpt())
-    }
-    ranks.filter(col("node") % 2 === 1)
-      .select(expr("(node - 1) div 2").as("part_key"), round(col("r"), 6).as("rank"))
-      .orderBy(col("rank").desc, col("part_key").asc)
-      .limit(20)
-  }
+    * by the same customers. Same 10 iterations, reset 0.15 and per-term
+    * 1e9-scaled BIGINT rounding (the double product r·w/W·1e9 is computed
+    * identically in both engines). Undirected symmetrized ⇒ no dangling
+    * mass: Σr is conserved at |V| every step (mod 1e-9 rounding). The
+    * node set of the weighted graph is that of the distinct graph, so r₀
+    * seeds from the shared undDegrees MV. */
+  def q_graph_pagerank_w(s: SparkSession, dir: String): DataFrame =
+    partRanks(PowerIter.run(s, "q_graph_pagerank_w", undDegrees(s, dir)
+      .select(col("node"), lit(1.0).as("r")), 10,
+      Seq(PowerIter.Leg(undWeightedArcs(s, dir), "src", "dst",
+        (r, w, wt) => r * w / wt, Seq("w", "wt"), update = (_, x) => 0.15 + 0.85 * x)),
+      iterWidth(s, dir)))
 
   /** BFS hop cap shared with the DuckDB recursive-CTE oracle. */
   val BfsMaxHops = 15
@@ -2210,104 +2173,19 @@ object GraphOps {
       .orderBy(col("n_1hop").desc, col("part_key").asc)
   }
 
+  /** HITS (Kleinberg 1999) on the customer–part graph: HitsIters
+    * iterations of hub h ← A·a then authority a ← Aᵀ·h, each leg
+    * max-normalized, as two PowerIter legs over the edge MV. The kernel's
+    * per-term product (v/max)·1e9 is the oracle's normalized-projection
+    * term bit for bit. Top-20 parts by round-6 authority, id tie-break. */
   def q_graph_hits(s: SparkSession, dir: String): DataFrame = {
-    // coalesce the checkpointed edge MV for the iterative scans: each
-    // of the 10 matvec jobs is scheduler-bound at small |E| (tiny
-    // rows) — fewer, fatter tasks cut per-job latency without a
-    // shuffle (narrow dependency over the checkpoint blocks). The
-    // width is the measured-|E| iterWidth rule, not a constant: at
-    // scale it saturates at full parallelism and the coalesce becomes
-    // a no-op.
-    val e = edges(s, dir).coalesce(iterWidth(s, dir))
-    // Max-norm FUSED into the consuming matvec (VERDICT r17 item 9):
-    // the rank table stays RAW (un-normalized) between legs, carrying
-    // its 1-row max beside it; the next leg divides inside its own
-    // keyed aggregation — round((ar/am)·1e9) is the identical IEEE
-    // expression the old normalized projection fed it. What this buys:
-    // the old normalized-hub projection was a THIRD broadcast build per
-    // leg whose job could only start after the max broadcast finished
-    // (nested dependency); now the raw-table and max broadcasts both
-    // read the leg's checkpoint directly and build in parallel — one
-    // fewer serial job per leg in a 52-job query (measured 1.2 s of
-    // inter-job gaps).
-    // One leg = join the raw rank state (+ its 1-row max when a prior
-    // leg produced one) into the edge MV, aggregate per opposite
-    // endpoint with the established rlong 1e9-scaled integer sum. The
-    // per-term expression is EXACTLY the old one — ((raw/max)·1e9) —
-    // only computed inside this leg instead of via an intermediate
-    // normalized projection.
-    def leg(rank: DataFrame, rmax: Option[DataFrame],
-        joinKey: String, outKey: String, out: String): (DataFrame, DataFrame) = {
-      val state = stateHint(s, dir,
-        rank.select(col(rank.columns(0)).as("rn"), col(rank.columns(1)).as("rv")), "rn")
-      val joined = rmax.foldLeft(e.join(state, col(joinKey) === col("rn")))(
-        (df, mx) => df.crossJoin(broadcast(mx)))
-      val term = rmax.map(_ => col("rv") / col("rm")).getOrElse(col("rv"))
-      val raw = joined.groupBy(col(outKey))
-        .agg((sum(Dsl.rlong(term * 1e9)).cast("double") / 1e9).as(out))
-        .ckpt()
-      val rawF = freshStats(s, raw)
-      (rawF, rawF.agg(max(col(out)).as("rm")))
-    }
-    var rank = e.select(col("dst").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("a"))
-    var rankMax: Option[DataFrame] = None
-    for (_ <- 1 to HitsIters) {
-      val (h, hm) = leg(rank, rankMax, "dst", "src", "h")
-      val (ar, am) = leg(h, Some(hm), "src", "dst", "ar")
-      rank = ar
-      rankMax = Some(am)
-    }
-    rank.crossJoin(broadcast(rankMax.get))
-      .select(col("dst").as("part_key"),
-        round(col("ar") / col("rm"), 6).as("authority"))
-      .orderBy(col("authority").desc, col("part_key").asc)
-      .limit(20)
-  }
-
-  /** UNFUSED spec twin of q_graph_hits (the pre-r18 shape: normalize
-    * into an intermediate hub/auth projection per leg, then matvec the
-    * normalized table). Kept as the equality pin for the max-norm
-    * fusion — OptimizationR18Spec asserts the fused query returns
-    * byte-identical rows. Not registered; never run in the bench. */
-  private[graft] def hitsUnfusedTwin(s: SparkSession, dir: String): DataFrame = {
-    val e = edges(s, dir).coalesce(iterWidth(s, dir))
-    var auth = e.select(col("dst").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("a"))
-    for (_ <- 1 to HitsIters) {
-      // round-9 scores summed as 1e9-scaled BIGINTs (exact, order-blind,
-      // long-fast — the q_gnn_gin/adamic-adar integer device; scores are
-      // ≤ 1 post-max-norm so overflow needs ~9e9 neighbors, DECIMAL
-      // being the swap there) — the round-6 double-SUM retirement sweep.
-      // hRaw/aRaw each feed TWO branches (the max-norm broadcast and the
-      // main chain); WITHOUT a cut, each downstream broadcast build
-      // re-executes the |E|-scan join+agg, ~6 edge scans per iteration
-      // (the r06 job-count indictment: ~25 jobs / 8.7 s for 5
-      // iterations). localCheckpoint materializes the 15k-row aggregate
-      // ONCE per leg — 2 edge scans per iteration, every max-norm /
-      // broadcast consumer reads the materialized blocks. (Plain
-      // .persist was A/B-measured ~2.5 s SLOWER here — columnar
-      // InMemoryRelation build + codegen-pipeline break — but it also
-      // never cut the recompute chain for the broadcast subqueries;
-      // the checkpoint does both.)
-      val hRaw = e.join(stateHint(s, dir, auth.select(col("node").as("an"), col("a")), "an"),
-          col("dst") === col("an"))
-        .groupBy(col("src"))
-        .agg((sum(Dsl.rlong(col("a") * 1e9)).cast("double") / 1e9).as("h"))
-        .ckpt()
-      val hRawF = freshStats(s, hRaw)
-      val hub = hRawF.crossJoin(broadcast(hRawF.agg(max(col("h")).as("hm"))))
-        .select(col("src"), (col("h") / col("hm")).as("h"))
-      val aRaw = e.join(stateHint(s, dir, hub.select(col("src").as("hn"), col("h")), "hn"),
-          col("src") === col("hn"))
-        .groupBy(col("dst"))
-        .agg((sum(Dsl.rlong(col("h") * 1e9)).cast("double") / 1e9).as("ar"))
-        .ckpt()
-      val aRawF = freshStats(s, aRaw)
-      auth = aRawF.crossJoin(broadcast(aRawF.agg(max(col("ar")).as("am"))))
-        .select(col("dst").as("node"), (col("ar") / col("am")).as("a"))
-    }
-    auth.select(col("node").as("part_key"), round(col("a"), 6).as("authority"))
+    val e = edges(s, dir)
+    val leg = (from: String, to: String) =>
+      PowerIter.Leg(e, from, to, (v, _, _) => v, maxNorm = true)
+    PowerIter.run(s, "q_graph_hits", e.select(col("dst").as("node")).distinct()
+        .select(col("node"), lit(1.0).as("a")), HitsIters,
+        Seq(leg("dst", "src"), leg("src", "dst")), iterWidth(s, dir))
+      .select(col("node").as("part_key"), round(col("a"), 6).as("authority"))
       .orderBy(col("authority").desc, col("part_key").asc)
       .limit(20)
   }
@@ -2343,49 +2221,30 @@ object GraphOps {
     * the seed node — the smallest part id — so scores measure proximity
     * to the seed instead of global centrality (the recommendation /
     * related-items primitive). Same bipartite customer–part encoding and
-    * broadcast-chained power iteration as q_graph_pagerank; nodes the
+    * PowerIter leg as q_graph_pagerank; nodes the
     * seed's mass has not reached carry implicit rank 0 and simply stay
     * absent from the rank table, so iteration cost GROWS with reach
     * rather than starting at |V| — the frontier-expansion property that
     * makes PPR cheap on huge graphs. Top-20 parts by round-6 rank. */
-  def q_graph_ppr(s: SparkSession, dir: String): DataFrame = {
-    // shared session MVs — same arc list + degree table as pagerank
-    val undW = undWeighted(s, dir)
-    // seed = smallest part node in the odd encoding; 1-row broadcast
+  def q_graph_ppr(s: SparkSession, dir: String): DataFrame =
+    ppr(s, dir, "q_graph_ppr", PowerIter.Leg(undWeighted(s, dir), "src", "dst",
+      (r, d, _) => r / d, Seq("d")))
+
+  /** The PPR power iteration shared by the uniform and weighted
+    * variants: `arcs` carries the transition term; the seed is the
+    * smallest part node, teleport 0.15 lands on it alone (r = 0.85·Σ +
+    * 0.15 there, + 0.0 elsewhere — the oracle's fused teleport row), and
+    * the state starts as the seed's one row and grows with its reach. */
+  private def ppr(s: SparkSession, dir: String, query: String,
+      arcs: PowerIter.Leg): DataFrame = {
     val seed = undDegrees(s, dir).filter(col("node") % 2 === 1)
-      .agg(min(col("node")).as("sn"))
-    // teleport row shaped like a pre-aggregation contribution (c9 = 0,
-    // t = 0.15): unioned BEFORE the groupBy so each iteration is ONE
-    // keyed aggregation instead of agg → union → second groupBy (two
-    // exchanges per step). r = 0.85·(Σc9)/1e9 + Σt is bit-identical to
-    // the old two-stage form: arc rows carry t = 0, so Σt is exactly
-    // 0.15 on the seed and +0.0 (an IEEE no-op on non-negative r)
-    // elsewhere.
-    val teleport9 = seed.select(col("sn").as("node"),
-      lit(0L).as("c9"), lit(0.15).as("t"))
-    var ranks = seed.select(col("sn").as("node"), lit(1.0).as("r"))
-    for (it <- 1 to PprIters) {
-      ranks = undW
-        .join(stateHint(s, dir, ranks.select(col("node").as("rn"), col("r")), "rn"),
-          col("src") === col("rn"))
-        // 1e9-scaled BIGINT per-term rounding + exact sum (order-blind;
-        // see q_graph_pagerank for why the scaled form, not round-9)
-        .select(col("dst").as("node"),
-          Dsl.rlong(col("r") / col("d") * 1e9).as("c9"),
-          lit(0.0).as("t"))
-        .unionByName(teleport9)
-        .groupBy(col("node"))
-        .agg((lit(0.85) * (sum(col("c9")).cast("double") / 1e9)
-          + sum(col("t"))).as("r"))
-      // freshStats: the loop's plan-size estimate compounds quartically
-      // through preserved checkpoint stats (the MST finding)
-      if (it % 2 == 0) ranks = freshStats(s, ranks.ckpt())
-    }
-    ranks.filter(col("node") % 2 === 1)
-      .select(expr("(node - 1) div 2").as("part_key"), round(col("r"), 6).as("rank"))
-      .filter(col("rank") > 0)
-      .orderBy(col("rank").desc, col("part_key").asc)
-      .limit(20)
+      .agg(min(col("node")).as("node"))
+    val sn = JobTag(s.sparkContext, s"$query/iter0")(seed.collect()(0).get(0))
+    val init = s.createDataFrame(java.util.List.of(Row(sn, 1.0)),
+      seed.schema.add("r", "double"))
+    partRanks(PowerIter.run(s, query, init, PprIters, Seq(arcs.copy(always = Seq(sn),
+        update = (k, x) => 0.85 * x + (if (k == sn) 0.15 else 0.0))),
+      iterWidth(s, dir)).filter(round(col("r"), 6) > 0))
   }
 
   /** WEIGHTED personalized PageRank (r17, VERDICT r16 item 5's second
@@ -2397,36 +2256,9 @@ object GraphOps {
     * identical double product; reads the shared weighted arc MV
     * beside the unweighted one. Cost ∝ reach of the seed, not |V| —
     * ranks start 1-row and grow with the frontier. */
-  def q_graph_ppr_w(s: SparkSession, dir: String): DataFrame = {
-    val undW = undWeightedArcs(s, dir)
-    val seed = undDegrees(s, dir).filter(col("node") % 2 === 1)
-      .agg(min(col("node")).as("sn"))
-    // teleport fused into the single keyed aggregation — see q_graph_ppr
-    // (bit-identical; halves the per-iteration exchanges)
-    val teleport9 = seed.select(col("sn").as("node"),
-      lit(0L).as("c9"), lit(0.15).as("t"))
-    var ranks = seed.select(col("sn").as("node"), lit(1.0).as("r"))
-    for (it <- 1 to PprIters) {
-      ranks = undW
-        .join(stateHint(s, dir, ranks.select(col("node").as("rn"), col("r")), "rn"),
-          col("src") === col("rn"))
-        .select(col("dst").as("node"),
-          Dsl.rlong(col("r") * col("w") / col("wt") * 1e9).as("c9"),
-          lit(0.0).as("t"))
-        .unionByName(teleport9)
-        .groupBy(col("node"))
-        .agg((lit(0.85) * (sum(col("c9")).cast("double") / 1e9)
-          + sum(col("t"))).as("r"))
-      // freshStats: the loop's plan-size estimate compounds quartically
-      // through preserved checkpoint stats (the MST finding)
-      if (it % 2 == 0) ranks = freshStats(s, ranks.ckpt())
-    }
-    ranks.filter(col("node") % 2 === 1)
-      .select(expr("(node - 1) div 2").as("part_key"), round(col("r"), 6).as("rank"))
-      .filter(col("rank") > 0)
-      .orderBy(col("rank").desc, col("part_key").asc)
-      .limit(20)
-  }
+  def q_graph_ppr_w(s: SparkSession, dir: String): DataFrame =
+    ppr(s, dir, "q_graph_ppr_w", PowerIter.Leg(undWeightedArcs(s, dir), "src", "dst",
+      (r, w, wt) => r * w / wt, Seq("w", "wt")))
 
   /** Butterfly (bipartite 4-cycle) census of the customer–part graph
     * (Sanei-Mehri 2018) — the bipartite analog of the triangle count and
@@ -2542,26 +2374,17 @@ object GraphOps {
     * projection: x ← 1 + α·A·x for KatzIters steps from x₀ = 1 — counts
     * damped walks of every length ≤ 6 ending at the node, the
     * prestige measure that, unlike degree, credits nodes for WELL-
-    * CONNECTED neighbors at walk distance. Same declarative Pregel
-    * shape as q_graph_pagerank: one probe-gated state join + keyed agg
-    * per step, per-term 1e9-scaled BIGINT rounding so every step's sum
-    * is order-blind and engine-identical; oracle = unrolled CTE chain.
-    * Top-20 by round-6 score, id tie-break. */
+    * CONNECTED neighbors at walk distance. One PowerIter leg over the
+    * projection MV (arcs b → a), per-term 1e9-scaled BIGINT rounding so
+    * every step's sum is order-blind and engine-identical; oracle =
+    * unrolled CTE chain. Top-20 by round-6 score, id tie-break. */
   def q_graph_katz(s: SparkSession, dir: String): DataFrame = {
     val ue = undProj(s, dir, TriangleMinCooccur)
-    var x = ue.select(col("a").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("x"))
-    for (it <- 1 to KatzIters) {
-      x = ue
-        .join(stateHint(s, dir, x.select(col("node").as("xn"), col("x")), "xn"),
-          col("b") === col("xn"))
-        .groupBy(col("a"))
-        .agg((lit(1.0) + lit(KatzAlpha)
-          * (sum(Dsl.rlong(col("x") * 1e9)).cast("double") / 1e9)).as("x"))
-        .select(col("a").as("node"), col("x"))
-      if (it % 2 == 0) x = x.ckpt()
-    }
-    x.select(col("node").as("part_key"), round(col("x"), 6).as("katz"))
+    PowerIter.run(s, "q_graph_katz", ue.select(col("a").as("node")).distinct()
+        .select(col("node"), lit(1.0).as("x")), KatzIters,
+        Seq(PowerIter.Leg(ue, "b", "a", (x, _, _) => x,
+          update = (_, y) => 1.0 + KatzAlpha * y)), iterWidth(s, dir))
+      .select(col("node").as("part_key"), round(col("x"), 6).as("katz"))
       .orderBy(col("katz").desc, col("part_key").asc)
       .limit(20)
   }
@@ -2622,38 +2445,15 @@ object GraphOps {
   /** Eigenvector centrality (Bonacich 1972) on the thresholded
     * projection: L∞-normalized power iteration x ← A·x / max(A·x) — the
     * un-damped spectral sibling of Katz (walk counts weighted by the
-    * principal eigenvector, no per-step teleport/offset). Same Pregel
-    * shape + 1e9-scaled per-term rounding as pagerank/katz; each raw
-    * step is localCheckpoint'd because BOTH the max-norm subquery and
-    * the main chain read it (the q_graph_hits recompute device). Top-20
-    * round-6, id tie-break. */
+    * principal eigenvector, no per-step teleport/offset). One max-normed
+    * PowerIter leg with the same 1e9-scaled per-term rounding as
+    * pagerank/katz. Top-20 round-6, id tie-break. */
   def q_graph_eigenvector(s: SparkSession, dir: String): DataFrame = {
     val ue = undProj(s, dir, TriangleMinCooccur)
-    // max-norm fused into the consuming matvec (the q_graph_hits r18
-    // device): the state stays RAW between steps with its 1-row max
-    // beside it; the next step divides inside its keyed aggregation —
-    // round((xr/xm)·1e9) is the identical IEEE expression the old
-    // normalized projection fed it, and the raw-state and max
-    // broadcasts now build in parallel off the step checkpoint instead
-    // of nesting.
-    var x = ue.select(col("a").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("xv"))
-    var xMax: Option[DataFrame] = None
-    for (_ <- 1 to EigIters) {
-      val joined0 = ue
-        .join(stateHint(s, dir, x.select(col(x.columns(0)).as("xn"), col(x.columns(1)).as("xv")), "xn"),
-          col("b") === col("xn"))
-      val joined = xMax.foldLeft(joined0)((df, mx) => df.crossJoin(broadcast(mx)))
-      val term = xMax.map(_ => col("xv") / col("xm")).getOrElse(col("xv"))
-      val raw = joined.groupBy(col("a"))
-        .agg((sum(Dsl.rlong(term * 1e9)).cast("double") / 1e9)
-          .as("xr"))
-        .ckpt()
-      x = raw
-      xMax = Some(raw.agg(max(col("xr")).as("xm")))
-    }
-    x.crossJoin(broadcast(xMax.get))
-      .select(col("a").as("part_key"), round(col("xr") / col("xm"), 6).as("eigen"))
+    PowerIter.run(s, "q_graph_eigenvector", ue.select(col("a").as("node")).distinct()
+        .select(col("node"), lit(1.0).as("x")), EigIters,
+        Seq(PowerIter.Leg(ue, "b", "a", (x, _, _) => x, maxNorm = true)), iterWidth(s, dir))
+      .select(col("node").as("part_key"), round(col("x"), 6).as("eigen"))
       .orderBy(col("eigen").desc, col("part_key").asc)
       .limit(20)
   }

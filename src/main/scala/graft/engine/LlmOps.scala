@@ -718,7 +718,7 @@ object LlmOps {
     // (Par.run, guide §2.6) instead of paying two sequential chains.
     val md5Df = q_llm_simhash_md5(s, dir).select(col("doc_a"), col("doc_b"))
     val exactS = exactSamplePairs(s, dir) // memoized checkpoint-backed MV
-    val Seq(xxS, md5) = Par.run(Seq[() => DataFrame](
+    val Seq(xxS, md5) = Par.run(s, Seq[() => DataFrame](
       () => xxSampled.ckpt(),
       () => md5Df.ckpt()))
     // full-corpus precision: exact-verify ONLY the emitted pairs

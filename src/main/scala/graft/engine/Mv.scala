@@ -129,7 +129,8 @@ object Mv {
         // checkpointed LogicalRDD is a self-contained leaf, so the
         // re-bind changes which sessionState governs CONSUMERS, nothing
         // about the data or its captured partitioning.
-        val built = org.apache.spark.sql.graft.SessionBridge.rebind(s, build(clone))
+        val built = org.apache.spark.sql.graft.SessionBridge.rebind(s,
+          JobTag(s.sparkContext, s"mv:$key")(build(clone)))
         import scala.jdk.CollectionConverters._
         val attributed = rddIds.values.asScala.flatten.toSet
         val mine = s.sparkContext.getPersistentRDDs.keySet.toSet -- before -- attributed

@@ -786,7 +786,7 @@ object Relational {
     // equi-joins. Bucket values are unchanged: each axis ntiles the
     // same rows under the same (metric, custkey) total order the fold
     // version used (extra columns never entered the order).
-    val Seq(rq, fq, mq) = Par.run(Seq[() => DataFrame](
+    val Seq(rq, fq, mq) = Par.run(base.sparkSession, Seq[() => DataFrame](
       () => Dist.ntile(base, 5, Seq(col("last_days"), col("o_custkey")), "r_q")
         .select(col("o_custkey"), col("r_q")),
       () => Dist.ntile(base, 5, Seq(col("freq"), col("o_custkey")), "f_q")

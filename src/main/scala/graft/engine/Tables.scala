@@ -119,4 +119,14 @@ object Dsl {
     val r = fl + when(a - fl.cast("double") >= 0.5, 1L).otherwise(0L)
     when(y >= 0, r).otherwise(-r)
   }
+
+  /** JVM twin of the Column `rlong`, op for op (Spark's `floor` on a
+    * double is the `(long)` cast of `Math.floor`), for the power-
+    * iteration kernel's per-arc terms; FastRoundSpec pins both. */
+  def rlong(y: Double): Long = {
+    val a = math.abs(y)
+    val fl = math.floor(a).toLong
+    val r = fl + (if (a - fl.toDouble >= 0.5) 1L else 0L)
+    if (y >= 0) r else -r
+  }
 }

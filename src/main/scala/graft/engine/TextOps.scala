@@ -837,11 +837,12 @@ object TextOps {
     * edges connect ADJACENT token pairs of the original sequence whose
     * endpoints both survive the stoplist (window 2, undirected,
     * distinct), and the score is PageRank at d = 0.85 for 10
-    * synchronous iterations using the q_graph_pagerank arithmetic
-    * device verbatim (per-term 1e9-scaled BIGINT rounding — exact,
-    * order-blind, engine-identical). The only corpus-scale work is the
-    * token scan + one keyed lead window; the fixpoint runs on the
-    * vocab-bounded distinct-edge graph. Top-20 words, text tie-break. */
+    * synchronous iterations on the PowerIter kernel with the
+    * q_graph_pagerank leg verbatim (per-term 1e9-scaled BIGINT
+    * rounding — exact, order-blind, engine-identical). The only
+    * corpus-scale work is the token scan + one keyed lead window; the
+    * fixpoint runs on the vocab-bounded distinct-edge graph. Top-20
+    * words, text tie-break. */
   def q_text_textrank(s: SparkSession, dir: String): DataFrame = {
     val tok = Tables.documents(s, dir)
       .select(col("doc_id"),
@@ -872,23 +873,11 @@ object TextOps {
     val arcs = ue.join(deg, col("src") === col("dn"))
       .select(col("src"), col("dst"), col("d"))
       .ckpt("textrank_arcs")
-    var r = arcs.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("r"))
-    for (it <- 1 to TextrankIters) {
-      r = arcs
-        .join(r.select(col("node").as("pn"), col("r")), col("src") === col("pn"))
-        .groupBy(col("dst"))
-        .agg((lit(0.15) + lit(0.85)
-          * (sum(Dsl.rlong(col("r") / col("d") * 1e9))
-            .cast("double") / 1e9)).as("r"))
-        .select(col("dst").as("node"), col("r"))
-      // checkpoint every 2nd step (the pagerank cadence): the word
-      // graph is vocabulary-bounded, so materializing every iteration
-      // was pure scheduler overhead — this loop ran 61 jobs per query
-      // (measured), ~0.9 s of it planning gaps.
-      if (it % 2 == 0) r = GraphOps.freshStats(s, r.ckpt())
-    }
-    r.select(col("node").as("word"), round(col("r"), 6).as("rank"))
+    PowerIter.run(s, "q_text_textrank", arcs.select(col("src").as("node")).distinct()
+        .select(col("node"), lit(1.0).as("r")), TextrankIters,
+        Seq(PowerIter.Leg(arcs, "src", "dst", (r, d, _) => r / d, Seq("d"),
+          update = (_, x) => 0.15 + 0.85 * x)))
+      .select(col("node").as("word"), round(col("r"), 6).as("rank"))
       .orderBy(col("rank").desc, col("word").asc).limit(20)
   }
 

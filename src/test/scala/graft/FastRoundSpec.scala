@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * diverges (values one ulp below a .5 boundary, where the +0.5
   * addition rounds up across the tie). The hot 1e9-scaled-BIGINT
   * aggregations swap to rlong on this guarantee — the oracle SQL keeps
-  * plain ROUND, so this equivalence IS the correctness argument.
+  * plain ROUND, so this equivalence IS the correctness argument. The
+  * JVM twin `Dsl.rlong(Double)` (the PowerIter kernel's per-arc
+  * rounding) is checked on every input as well.
   */
 class FastRoundSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -23,6 +25,10 @@ class FastRoundSpec extends AnyFunSuite {
     val bad = df.filter(col("slow") =!= col("fast") ||
       col("slow").isNull =!= col("fast").isNull).collect()
     assert(bad.isEmpty, s"rlong diverges from round: ${bad.take(5).mkString("; ")}")
+    // the JVM twin the power-iteration kernel sums with
+    val badTwin = df.collect().filter(r => engine.Dsl.rlong(r.getDouble(0)) != r.getLong(1))
+    assert(badTwin.isEmpty,
+      s"JVM rlong diverges from round: ${badTwin.take(5).mkString("; ")}")
   }
 
   test("rlong == round(x,0).cast(bigint) on adversarial tie classes") {

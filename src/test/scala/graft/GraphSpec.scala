@@ -105,6 +105,28 @@ class GraphSpec extends AnyFunSuite {
     assert(hist == Seq((1L, 3L)), s"expected 3 singletons, got $hist")
   }
 
+  test("vertex and edge count probes follow a mid-session rewrite of the fact tables") {
+    val s = spark
+    import s.implicits._
+    // the probes feed the state-broadcast guard and the iterative scan
+    // width; keyed on the fixture dir alone they kept the first
+    // generation's counts while the edge MV itself rebuilt
+    val dir = java.nio.file.Files.createTempDirectory("graft_counts").toString
+    def write(orders: Seq[(Long, Long)], lines: Seq[(Long, Long)]): Unit = {
+      orders.toDF("o_orderkey", "o_custkey")
+        .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      lines.toDF("l_orderkey", "l_partkey")
+        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    }
+    write(Seq((0L, 0L), (1L, 1L)), Seq((0L, 0L), (1L, 1L)))
+    assert(GraphOps.vertexCount(s, dir) == 4L && GraphOps.edgeCount(s, dir) == 2L)
+    write(Seq((0L, 0L), (1L, 1L), (2L, 2L)), Seq((0L, 0L), (1L, 1L), (2L, 5L), (2L, 6L)))
+    // customers {0, 1, 2} + parts {0, 1, 5, 6}; four distinct edges
+    assert(GraphOps.edges(s, dir).count() == 4L)
+    assert(GraphOps.vertexCount(s, dir) == 7L, "stale |V| after the rewrite")
+    assert(GraphOps.edgeCount(s, dir) == 4L, "stale |E| after the rewrite")
+  }
+
   test("degree sum equals edge count (bipartite handshake)") {
     val s = spark
     val degSum = GraphOps.q_graph_degree(s, sf0001)

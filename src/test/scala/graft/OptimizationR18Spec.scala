@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,9 +14,43 @@ class OptimizationR18Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import TestSpark.{sf0001, sf001}
 
+  /** The relational HITS the kernel replaced (normalize into a hub/auth
+    * projection per leg, then matvec the normalized table through a
+    * probe-gated state join) — the reference q_graph_hits must equal. */
+  private def hitsUnfusedTwin(s: SparkSession, dir: String): DataFrame = {
+    import engine.{Dsl, GraphOps}
+    import engine.Ckpt.CkptOps
+    val e = GraphOps.edges(s, dir).coalesce(GraphOps.iterWidth(s, dir))
+    var auth = e.select(col("dst").as("node")).distinct()
+      .select(col("node"), lit(1.0).as("a"))
+    for (_ <- 1 to GraphOps.HitsIters) {
+      // each raw leg is checkpointed: the max-norm broadcast and the
+      // main chain both read it
+      val hRaw = e.join(GraphOps.stateHint(s, dir, auth.select(col("node").as("an"), col("a")), "an"),
+          col("dst") === col("an"))
+        .groupBy(col("src"))
+        .agg((sum(Dsl.rlong(col("a") * 1e9)).cast("double") / 1e9).as("h"))
+        .ckpt()
+      val hRawF = GraphOps.freshStats(s, hRaw)
+      val hub = hRawF.crossJoin(broadcast(hRawF.agg(max(col("h")).as("hm"))))
+        .select(col("src"), (col("h") / col("hm")).as("h"))
+      val aRaw = e.join(GraphOps.stateHint(s, dir, hub.select(col("src").as("hn"), col("h")), "hn"),
+          col("src") === col("hn"))
+        .groupBy(col("dst"))
+        .agg((sum(Dsl.rlong(col("h") * 1e9)).cast("double") / 1e9).as("ar"))
+        .ckpt()
+      val aRawF = GraphOps.freshStats(s, aRaw)
+      auth = aRawF.crossJoin(broadcast(aRawF.agg(max(col("ar")).as("am"))))
+        .select(col("dst").as("node"), (col("ar") / col("am")).as("a"))
+    }
+    auth.select(col("node").as("part_key"), round(col("a"), 6).as("authority"))
+      .orderBy(col("authority").desc, col("part_key").asc)
+      .limit(20)
+  }
+
   test("hits max-norm fusion returns rows identical to the unfused twin") {
     val fused = engine.GraphOps.q_graph_hits(spark, sf001).collect().toSeq
-    val twin = engine.GraphOps.hitsUnfusedTwin(spark, sf001).collect().toSeq
+    val twin = hitsUnfusedTwin(spark, sf001).collect().toSeq
     assert(fused == twin)
   }
 
@@ -50,22 +85,60 @@ class OptimizationR18Spec extends AnyFunSuite {
     import engine.{Ckpt, Par}
     import engine.Ckpt.CkptOps
     // order
-    assert(Par.run(Seq(() => 1, () => 2, () => 3)) == Seq(1, 2, 3))
+    assert(Par.run(spark, Seq(() => 1, () => 2, () => 3)) == Seq(1, 2, 3))
     // failure propagation
     val boom = intercept[RuntimeException] {
-      Par.run[Int](Seq(() => 1, () => throw new RuntimeException("leg failed")))
+      Par.run[Int](spark, Seq(() => 1, () => throw new RuntimeException("leg failed")))
     }
     assert(boom.getMessage == "leg failed")
     // a worker-thread ckpt must stay visible to the plan-audit capture
     // (the r17 blocker for overlapping the RFM axes)
     val (_, recorded) = Ckpt.record {
-      Par.run(Seq(() => {
+      Par.run(spark, Seq(() => {
         import spark.implicits._
         Seq(1, 2).toDF("x").ckpt("par-worker-leg").count()
       }))
     }
     assert(recorded.exists(_._1 == "par-worker-leg"),
       s"worker ckpt not captured: ${recorded.map(_._1)}")
+  }
+
+  test("job descriptions tag kernel iterations, MV builds and Par legs " +
+      "and restore the caller's; the job group is untouched") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import engine.{GraphOps, Mv, Par}
+    import engine.Ckpt.CkptOps
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add((
+        e.properties.getProperty("spark.job.description"),
+        e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val mvKey = s"jobTagProbe|${System.nanoTime()}"
+    sc.addSparkListener(listener)
+    sc.setJobGroup("tag-group", "caller")
+    try {
+      GraphOps.q_graph_katz(spark, sf0001).collect()
+      Mv.memo(spark, mvKey)(bs => bs.range(8).toDF("x").ckpt())
+      Par.run(spark, Seq(() => spark.range(5).count(), () => spark.range(6).count()))
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "tag-group")
+    } finally {
+      sc.clearJobGroup()
+      Mv.evict(spark, mvKey)
+    }
+    val want = (0 to GraphOps.KatzIters).map(i => s"q_graph_katz/iter$i") ++
+      Seq(s"mv:$mvKey", "caller/leg0", "caller/leg1")
+    import scala.jdk.CollectionConverters._
+    try eventually(timeout(20.seconds)) {
+      val tags = seen.asScala.toSeq
+      assert(want.forall(w => tags.exists(_._1 == w)), s"missing tags in ${tags.map(_._1)}")
+      assert(tags.filter(t => want.contains(t._1)).forall(_._2 == "tag-group"),
+        "every tagged job keeps the caller's job group")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("eigenvector max-norm fusion == unfused twin") {

@@ -729,7 +729,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // hint drops and the state table pre-hash-partitions on its join
     // key. Pinned on the two fixpoint consumers whose final plan is NOT
     // checkpoint-truncated (modularity, assortativity), plus a result-
-    // invariance check on pagerank across both regimes.
+    // invariance check on every PowerIter operator across both regimes
+    // (guard 0 runs the kernel's partitioned placement).
     val guardKey = "spark.graft.stateBroadcastMaxRows"
     def hintCount(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.analyzed.collect {
@@ -738,8 +739,11 @@ class PlanAuditSpec extends AnyFunSuite {
     // fixture regime: |V| ≈ 2k ≪ guard → the state joins ARE hinted
     assert(hintCount(GraphOps.q_graph_assortativity(spark, sf0001)) >= 2,
       "under the guard, the degree table must broadcast onto both arc ends")
-    val small = GraphOps.q_graph_pagerank(spark, sf0001).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSet
+    val kernelOps = Seq("q_graph_pagerank", "q_graph_pagerank_w", "q_graph_ppr",
+      "q_graph_ppr_w", "q_graph_katz", "q_graph_eigenvector", "q_graph_hits",
+      "q_text_textrank")
+    def kernelRows() = kernelOps.map(q => q -> SparkEntry.queries(q)(spark, sf0001).collect().toSeq)
+    val small = kernelRows()
     spark.conf.set(guardKey, "0")
     try {
       assert(hintCount(GraphOps.q_graph_assortativity(spark, sf0001)) == 0,
@@ -754,11 +758,12 @@ class PlanAuditSpec extends AnyFunSuite {
         s"gated plan must shuffle-join the state side:\n$p")
       assert(p.contains("hashpartitioning"),
         "gated state table must be pre-hash-partitioned on its join key")
-      // both regimes compute the identical result (the per-term
-      // 1e9-scaled integer sums are order- and strategy-blind)
-      val big = GraphOps.q_graph_pagerank(spark, sf0001).collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(big == small, "pagerank must be identical across join regimes")
+      // both regimes compute the identical rows in the identical order
+      // (the per-term 1e9-scaled integer sums are order- and
+      // strategy-blind)
+      kernelRows().zip(small).foreach { case ((q, big), (_, sm)) =>
+        assert(big.nonEmpty && big == sm, s"$q must be identical across join regimes")
+      }
     } finally spark.conf.unset(guardKey)
   }
 

@@ -87,9 +87,8 @@ class Round23Spec extends AnyFunSuite {
       "(replaces the hand-edited coalesce(8) local[32] tune)") {
     import graft.engine.GraphOps
     // sf0.001: |E| = 5,382 -> 1 fat task; the sf0.1 fixture's 599k
-    // edges -> 8 (the measured A/B optimum the old constant encoded);
-    // past defaultParallelism * rowsPerTask the clamp makes the
-    // coalesce a no-op at full width
+    // edges -> 24; past defaultParallelism * rowsPerTask the clamp
+    // makes the coalesce a no-op at full width
     assert(GraphOps.iterWidth(spark, sf0001) == 1)
     val dp = spark.sparkContext.defaultParallelism
     assert((1 to dp).contains(GraphOps.iterWidth(spark, sf001)),
