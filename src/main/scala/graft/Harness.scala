@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared session factory for the builder/driver mains (Bench, Verify,
-  * TimeQ, TimeOne, ScaleProbe, StreamBench, ApproxBounds, Explain):
+  * TimeQ, ScaleProbe, StreamBench, ApproxBounds, Explain):
   * one place for the contract configuration — local[SPARK_GRAFT_CPUS],
   * shuffle partitions = cores (not the 200 default), UTC, no UI — so
-  * the eight entry points cannot drift apart. */
+  * the entry points cannot drift apart. */
 object Harness {
   def session(defaultCpus: String = "32",
       extraConfs: Map[String, String] = Map.empty): SparkSession = {

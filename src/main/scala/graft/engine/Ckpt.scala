@@ -65,7 +65,8 @@ object Ckpt {
   }
 
   /** Checkpoint `df`, capturing its pre-checkpoint physical plan when a
-    * `record` scope is active on this thread. */
+    * `record` scope is active on this thread; the checkpoint's jobs run
+    * under the description `<caller's>/ckpt:<tag>`. */
   def apply(df: DataFrame, tag: String = ""): DataFrame = df.ckpt(tag)
 
   implicit class CkptOps[T](private val ds: Dataset[T]) extends AnyVal {
@@ -74,13 +75,13 @@ object Ckpt {
       if (buf != null) buf.synchronized {
         buf += ((tag, ds.queryExecution.sparkPlan))
       }
-      ds.localCheckpoint()
+      JobTag.under(ds.sparkSession.sparkContext, s"ckpt:$tag")(ds.localCheckpoint())
     }
   }
 }
 
 /** Job attribution at the engine's choke points (kernel iterations, MV
-  * builds, Par legs): runs `body` with the thread's Spark job
+  * builds, Par legs, checkpoints): runs `body` with the thread's Spark job
   * description set to `desc`, then restores the caller's. The job group
   * (what a caller such as a benchmark sets around a whole query) is
   * never touched. */
@@ -93,9 +94,10 @@ object JobTag {
     try body finally sc.setJobDescription(prev)
   }
 
-  /** The calling thread's current job description, if any. */
-  def current(sc: SparkContext): Option[String] =
-    Option(sc.getLocalProperty(Key))
+  /** `apply` with `leaf` appended to the caller's description:
+    * `<caller's>/<leaf>`, or `leaf` alone when the caller has none. */
+  def under[A](sc: SparkContext, leaf: String)(body: => A): A =
+    apply(sc, Option(sc.getLocalProperty(Key)).fold("")(_ + "/") + leaf)(body)
 }
 
 /** Overlap INDEPENDENT legs of one query on driver threads (guide
@@ -118,13 +120,12 @@ object Par {
   def run[A](s: SparkSession, bodies: Seq[() => A]): Seq[A] = {
     if (bodies.sizeIs <= 1) return bodies.map(_())
     val sc = s.sparkContext
-    val caller = JobTag.current(sc).fold("")(_ + "/")
     val buf = Ckpt.currentBuffer
     val results = new Array[Any](bodies.size)
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val threads = bodies.zipWithIndex.map { case (b, i) =>
       val t = new Thread(() => {
-        try results(i) = JobTag(sc, s"${caller}leg$i")(Ckpt.withBuffer(buf)(b()))
+        try results(i) = JobTag.under(sc, s"leg$i")(Ckpt.withBuffer(buf)(b()))
         catch { case e: Throwable => failure.compareAndSet(null, e) }
       }, s"graft-par-$i")
       t.setDaemon(true)

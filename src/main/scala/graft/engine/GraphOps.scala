@@ -326,35 +326,20 @@ object GraphOps {
     * the bounded-horizon APPROXIMATION of that coloring — the horizon
     * can clip the ancestor/descendant sets differently for members of
     * the same SCC, so class boundaries near the horizon are heuristic.
-    * The census reports the top-10 classes of the k-hop refinement. Each hop is one |E| keyed
-    * min-aggregation (the pagerank shuffle shape), label tables
-    * localCheckpoint'ed per hop to bound the plan tower; top-10 via
-    * TakeOrderedAndProject, never a global sort. */
+    * The census reports the top-10 classes of the k-hop refinement.
+    * Each sweep is a SccHops-round PowerIter min relaxation over the
+    * transition arcs (a hop is one narrow scan within the state guard);
+    * top-10 via TakeOrderedAndProject, never a global sort. */
   def q_graph_scc_colors(s: SparkSession, dir: String): DataFrame = {
     val t = transEdges(s, dir)
     val nodes = t.select(col("src").as("v"))
       .union(t.select(col("dst").as("v")))
-      .distinct().ckpt()
-    // checkpoint every 2nd hop (freshStats resets the inherited size
-    // estimate): these loops have no broadcast subqueries to cut, so the
-    // per-hop materialization was pure scheduler overhead — 27 jobs /
-    // ~1 s of planning gaps measured.
-    // The forward and backward sweeps are INDEPENDENT k-hop min-label
-    // propagations over the same edge MV (each ~14 jobs of ~20 ms
-    // scheduler/planning latency) — overlap them on two driver threads
-    // (Par.run, guide §2.6) instead of running 2×SccHops rounds
-    // back-to-back; per-sweep semantics (hop count, cadence,
-    // checkpoints) unchanged.
-    def sweep(srcCol: String, dstCol: String, lbl: String): DataFrame = {
-      var x = nodes.select(col("v"), col("v").as(lbl)).ckpt()
-      for (it <- 1 to SccHops) {
-        val prop = t.join(x, col(srcCol) === col("v"))
-          .select(col(dstCol).as("v"), col(lbl))
-        x = x.union(prop).groupBy(col("v")).agg(min(col(lbl)).as(lbl))
-        if (it % 2 == 0 || it == SccHops) x = freshStats(s, x.ckpt())
-      }
-      x
-    }
+      .distinct()
+    // the forward and backward sweeps are independent: overlap them on
+    // two driver threads (Par.run, guide §2.6)
+    def sweep(from: String, to: String, lbl: String): DataFrame =
+      PowerIter.relax(s, s"q_graph_scc_colors/$lbl", nodes.select(col("v"), col("v").as(lbl)),
+        t, from, to, maxRounds = SccHops, width = iterWidth(s, dir))
     val Seq(f, b) = Par.run(s, Seq[() => DataFrame](
       () => sweep("src", "dst", "f"),
       () => sweep("dst", "src", "b")))
@@ -687,7 +672,7 @@ object GraphOps {
     * propagation — one shuffle per iteration, converges in O(diameter).
     * Returns the component-size histogram. */
   def q_graph_cc(s: SparkSession, dir: String): DataFrame =
-    ccHistogram(s, dir, ccLabels(s, dir, undProj(s, dir, CcMinCooccur)))
+    ccHistogram(s, dir, ccLabels(s, dir, "q_graph_cc", undProj(s, dir, CcMinCooccur)))
 
   /** Typed edge row for the streaming CC maintainer (shard = state
     * partition key — 8-way scale-out of the union-find state). */
@@ -760,7 +745,7 @@ object GraphOps {
       .filter(col("a") =!= col("b"))
     val undSpan = span.union(span.select(col("b").as("a"), col("a").as("b")))
       .ckpt("cc_span")
-    ccHistogram(s, dir, ccLabels(s, dir, undSpan))
+    ccHistogram(s, dir, ccLabels(s, dir, "q_stream_cc", undSpan))
   }
 
   /** Typed edge row for the streaming MSF maintainer. */
@@ -871,53 +856,12 @@ object GraphOps {
     * q_graph_cc and the q_stream_cc snapshot (which runs it over the
     * union-find spanning forest its keyed state maintains: the forest
     * preserves connectivity exactly, so the labels agree). */
-  private[graft] def ccLabels(s: SparkSession, dir: String, und: DataFrame): DataFrame = {
-    // Iterate ONLY over nodes that have at least one edge: isolated parts
-    // never change label, so they are folded back in as singleton
-    // components at the end. This shrinks every per-iteration join from
-    // |V| rows to |V_connected| (the thresholded projection is sparse).
-    var labels = und.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-      .ckpt()
-    // Empty projection (no pair reaches the threshold): sum() is NULL —
-    // skip the loop entirely and fall through to the all-singletons
-    // histogram instead of NPE-ing on the null aggregate.
-    val first = labels.agg(sum(col("lbl"))).collect()(0)
-    var prevSum = if (first.isNullAt(0)) 0L else first.getLong(0)
-    var converged = first.isNullAt(0)
-    while (!converged) {
-      // probe-gated broadcast (stateHint): the label table is checkpointed
-      // each round, so AQE has no size stats and would sort-merge-join the
-      // edge list every iteration; past the |V| guard the hint drops and
-      // the label table pre-hash-partitions on its join key instead.
-      val nbrMin = und
-        .join(stateHint(s, dir, labels.select(col("node").as("bn"), col("lbl").as("blbl")), "bn"),
-          col("b") === col("bn"))
-        .groupBy(col("a"))
-        .agg(min(col("blbl")).as("nbr_min"))
-      val stepped = labels
-        .join(nbrMin, col("node") === col("a"), "left_outer")
-        .select(col("node"), least(col("lbl"), coalesce(col("nbr_min"), col("lbl"))).as("lbl"))
-      // pointer jumping (lbl := lbl(lbl)): long chains converge in
-      // O(log diameter) rounds instead of O(diameter).
-      val next = stepped.alias("s")
-        .join(stateHint(s, dir, stepped.select(col("node").as("jn"), col("lbl").as("jl")), "jn"),
-          col("s.lbl") === col("jn"))
-        .select(col("s.node").as("node"), least(col("s.lbl"), col("jl")).as("lbl"))
-        .ckpt()
-      // freshStats: checkpoint-preserved size estimates compound
-      // quartically through the doubling join (the MST finding)
-      // Labels are monotone non-increasing, so the iteration is at its
-      // fixpoint exactly when sum(lbl) stops decreasing — one cheap scan
-      // of the just-checkpointed result instead of a change-count join.
-      val nextF = freshStats(s, next)
-      val curSum = nextF.agg(sum(col("lbl"))).collect()(0).getLong(0)
-      labels = nextF
-      converged = curSum == prevSum
-      prevSum = curSum
-    }
-    labels
-  }
+  private[graft] def ccLabels(s: SparkSession, dir: String, query: String,
+      und: DataFrame): DataFrame =
+    // only nodes with at least one edge: isolated parts never change
+    // label and fold back in as singleton components (ccHistogram)
+    PowerIter.relax(s, query, und.select(col("a").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl")), und, "b", "a", width = iterWidth(s, dir))
 
   /** Component-size histogram from the connected-node label table,
     * folding isolated parts back in as singleton components. */
@@ -1012,52 +956,26 @@ object GraphOps {
 
   /** Single-source shortest hop distances (BFS) on the thresholded
     * part–part projection, from the smallest projected part id; returns
-    * the distance histogram. Frontier expansion is one join + anti-join
-    * per level — the Pregel traversal superstep as relational algebra,
-    * O(diameter) rounds, no driver-side graph. */
+    * the distance histogram. */
   def q_graph_bfs(s: SparkSession, dir: String): DataFrame = {
     val ue = undProj(s, dir, CcMinCooccur)
     val seed = ue.agg(min(col("a")).as("node"))
       .select(col("node"), lit(0L).as("d"))
-      .ckpt()
-    bfsDistances(s, dir, ue, seed)
+    bfsDistances(s, dir, "q_graph_bfs", ue, seed)
       .groupBy(col("d").as("dist"))
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy("dist")
   }
 
-  /** Frontier-superstep BFS from a checkpointed 1+-row seed table
-    * (node, d=0): one join + anti-join per level, O(diameter) rounds,
-    * no driver-side graph. Shared by q_graph_bfs and the double-sweep
-    * pseudo-diameter. Returns the (node, d) min-distance table. */
-  private def bfsDistances(s: SparkSession, dir: String, ue: DataFrame, seed: DataFrame): DataFrame = {
-    var dist = seed
-    var frontier = seed
-    var depth = 0L
-    var frontierSize = 1L
-    while (depth < BfsMaxHops && frontierSize > 0) {
-      depth += 1
-      // one checkpoint + one count job per level: `dist` is a union of
-      // already-checkpointed level outputs, so its lineage stays shallow
-      // without materializing it again.
-      // Probe-gated broadcasts (stateHint): frontier and visited-set are
-      // |V_frontier|-sized (≪ the edge list), but both are checkpointed
-      // LogicalRDDs with no stats, so the planner would sort-merge-join
-      // the full edge list every level; past the |V| guard the hints drop
-      // and the state tables pre-hash-partition on their join keys.
-      val next = ue
-        .join(stateHint(s, dir, frontier, "node"), col("node") === col("a"))
-        .select(col("b").as("node")).distinct()
-        .join(stateHint(s, dir, dist.select(col("node").as("vn")), "vn"),
-          col("node") === col("vn"), "left_anti")
-        .select(col("node"), lit(depth).as("d"))
-        .ckpt()
-      frontierSize = next.count()
-      dist = dist.union(next)
-      frontier = next
-    }
-    dist
-  }
+  /** BFS from a 1+-row seed table (node, d=0): a PowerIter min
+    * relaxation with hop 1, capped at BfsMaxHops rounds — the Pregel
+    * traversal superstep, one arc scan per level, O(diameter) rounds.
+    * Shared by q_graph_bfs and the double-sweep pseudo-diameter.
+    * Returns the (node, d) min-distance table. */
+  private def bfsDistances(s: SparkSession, dir: String, query: String, ue: DataFrame,
+      seed: DataFrame): DataFrame =
+    PowerIter.relax(s, query, seed, ue, "a", "b", hop = 1L, maxRounds = BfsMaxHops,
+      width = iterWidth(s, dir))
 
   /** Double-sweep pseudo-diameter (Magnien, Latapy & Habib 2009 — the
     * standard cheap diameter lower bound): BFS from the min projected
@@ -1072,14 +990,14 @@ object GraphOps {
     val seed = ue.agg(min(col("a")).as("node"))
       .select(col("node"), lit(0L).as("d"))
       .ckpt()
-    val d1 = bfsDistances(s, dir, ue, seed)
+    val d1 = bfsDistances(s, dir, "q_graph_pseudo_diameter/1", ue, seed)
     // 1-row far-endpoint tables via TakeOrdered (distributed top-1, no
-    // global window sort); they stay DataFrames — broadcast seeds for
-    // the next sweep, no driver collect
+    // global window sort)
     val far1 = d1.orderBy(col("d").desc, col("node").asc).limit(1)
       .select(col("node"), col("d").as("ecc1"))
       .ckpt()
-    val d2 = bfsDistances(s, dir, ue, far1.select(col("node"), lit(0L).as("d")))
+    val d2 = bfsDistances(s, dir, "q_graph_pseudo_diameter/2", ue,
+      far1.select(col("node"), lit(0L).as("d")))
     val far2 = d2.orderBy(col("d").desc, col("node").asc).limit(1)
       .select(col("node").as("far_node2"), col("d").as("pseudo_diameter"))
     seed.select(col("node").as("seed_node"))
@@ -1111,16 +1029,12 @@ object GraphOps {
     * the thresholded part–part projection with integer edge weights
     * w = co-occurrence count, from the smallest projected part id —
     * the classical weighted-graph primitive next to the unweighted BFS
-    * tier. Frontier-pruned supersteps: each round relaxes ONLY edges
-    * out of nodes improved last round (provably the same d_k as
-    * relaxing every edge: a non-improved node's outgoing relaxations
-    * were all applied the round it last improved), so per-round cost is
-    * frontier-bounded — the delta-stepping-style shape, one join +
-    * min-aggregation per round, O(rounds) shuffles, no driver-side
-    * graph. Integer distances → exact; capped at SsspMaxRounds shared
-    * with the unrolled oracle, so both engines compute the identical
-    * bounded-relaxation distance even on a hypothetical non-converged
-    * instance. Returns the 20 nearest nodes (dist asc, id asc). */
+    * tier: a PowerIter min relaxation over the weight column, each round
+    * relaxing only the arcs out of the keys improved the round before.
+    * Integer distances → exact; capped at SsspMaxRounds shared with the
+    * unrolled oracle, so both engines compute the identical bounded-
+    * relaxation distance even on a hypothetical non-converged instance.
+    * Returns the 20 nearest nodes (dist asc, id asc). */
   def q_graph_sssp(s: SparkSession, dir: String): DataFrame = {
     val uew = undProjW(s, dir, CcMinCooccur)
     // empty-projection guard: no seed row (matching the oracle's
@@ -1128,42 +1042,9 @@ object GraphOps {
     val seed = uew.agg(min(col("a")).as("node"))
       .filter(col("node").isNotNull)
       .select(col("node"), lit(0L).as("dist"))
-      .ckpt()
-    var dist = seed
-    var frontier = seed
-    var round = 0
-    var frontierSize = 1L
-    while (round < SsspMaxRounds && frontierSize > 0) {
-      round += 1
-      // candidate relaxations from the frontier only; min per target.
-      // Probe-gated broadcasts (stateHint): frontier and dist are
-      // checkpointed stats-less tables — below the |V| guard they
-      // broadcast (the whole round is one job), above it they
-      // pre-hash-partition on their join keys.
-      val cand = uew
-        .join(stateHint(s, dir, frontier.select(col("node").as("fn"), col("dist").as("fd")), "fn"),
-          col("a") === col("fn"))
-        .groupBy(col("b"))
-        .agg(min(col("fd") + col("w")).as("nd"))
-      // improved = strictly better than the current label (or unseen)
-      val improved = cand
-        .join(stateHint(s, dir, dist.select(col("node").as("dn"), col("dist").as("dd")), "dn"),
-          col("b") === col("dn"), "left_outer")
-        .filter(col("dd").isNull || col("nd") < col("dd"))
-        .select(col("b").as("node"), col("nd").as("dist"))
-        .ckpt()
-      frontierSize = improved.count()
-      if (frontierSize > 0) {
-        // merge: improved labels replace, untouched labels survive
-        dist = dist
-          .join(stateHint(s, dir, improved.select(col("node").as("inode")), "inode"),
-            col("node") === col("inode"), "left_anti")
-          .union(improved)
-          .ckpt()
-      }
-      frontier = improved
-    }
-    dist.select(col("node").as("part_key"), col("dist"))
+    PowerIter.relax(s, "q_graph_sssp", seed, uew, "a", "b", weight = Some("w"),
+        maxRounds = SsspMaxRounds, width = iterWidth(s, dir))
+      .select(col("node").as("part_key"), col("dist"))
       .orderBy(col("dist").asc, col("part_key").asc)
       .limit(20)
   }
@@ -1173,13 +1054,12 @@ object GraphOps {
     * VERDICT r16 noted the path/centrality tier ignores the edge
     * weights the Louvain/SSSP tier already carries): bounded
     * multi-source Bellman-Ford from the CloseSeeds smallest projected
-    * nodes — the q_graph_sssp frontier-pruned relaxation with a `seed`
-    * column, so all seeds advance in the SAME per-round join (one scan
-    * of the weighted edge list per round, not per seed; per-(seed,
-    * node) state bounded by CloseSeeds·|V|). Same SsspMaxRounds cap as
-    * the unrolled multi-source min-agg CTE oracle, so both engines
-    * compute the identical bounded-relaxation distances; integer
-    * weights ⇒ exact sums. closeness_w = (reached−1)/Σdist as one
+    * nodes — the q_graph_sssp relaxation with the seed as a PowerIter
+    * lane, so all seeds advance in the SAME arc scan per round, not one
+    * scan per seed (per-(seed, node) state bounded by CloseSeeds·|V|).
+    * Same SsspMaxRounds cap as the unrolled multi-source min-agg CTE
+    * oracle, so both engines compute the identical bounded-relaxation
+    * distances; integer weights ⇒ exact sums. closeness_w = (reached−1)/Σdist as one
     * exact-integer division; ecc_w = max weighted distance within the
     * relaxation horizon. */
   def q_graph_closeness_w(s: SparkSession, dir: String): DataFrame =
@@ -1216,39 +1096,8 @@ object GraphOps {
       val uew = undProjW(bs, dir, CcMinCooccur)
       val seeds = uew.select(col("a")).distinct().orderBy(col("a")).limit(CloseSeeds)
         .select(col("a").as("seed"), col("a").as("node"), lit(0L).as("dist"))
-        .ckpt()
-      var dist = seeds
-      var frontier = seeds
-      var round = 0
-      var frontierSize = frontier.count()
-      while (round < SsspMaxRounds && frontierSize > 0) {
-        round += 1
-        val cand = uew
-          .join(stateHint(bs, dir, frontier.select(col("seed").as("fs"),
-              col("node").as("fn"), col("dist").as("fd")), "fn", CloseSeeds),
-            col("a") === col("fn"))
-          .groupBy(col("fs").as("seed"), col("b"))
-          .agg(min(col("fd") + col("w")).as("nd"))
-        val improved = cand
-          .join(stateHint(bs, dir, dist.select(col("seed").as("ds"),
-              col("node").as("dn"), col("dist").as("dd")), "ds",
-              CloseSeeds, moreKeys = Seq("dn")),
-            col("seed") === col("ds") && col("b") === col("dn"), "left_outer")
-          .filter(col("dd").isNull || col("nd") < col("dd"))
-          .select(col("seed"), col("b").as("node"), col("nd").as("dist"))
-          .ckpt()
-        frontierSize = improved.count()
-        if (frontierSize > 0) {
-          dist = freshStats(bs, dist
-            .join(stateHint(bs, dir, improved.select(col("seed").as("is"),
-                col("node").as("inode")), "is", CloseSeeds, moreKeys = Seq("inode")),
-              col("seed") === col("is") && col("node") === col("inode"), "left_anti")
-            .union(improved)
-            .ckpt())
-        }
-        frontier = improved
-      }
-      dist.ckpt()
+      PowerIter.relax(bs, "closeDistW", seeds, uew, "a", "b", weight = Some("w"),
+        maxRounds = SsspMaxRounds, width = iterWidth(bs, dir)).ckpt()
     }
 
   /** Borůvka round cap shared with the oracle. The MSF under the
@@ -2290,9 +2139,9 @@ object GraphOps {
 
   /** K-hop truncated closeness centrality from the 8 smallest nodes of
     * the thresholded part–part projection: multi-source BFS carrying
-    * (seed, node, dist) rows — the q_graph_bfs frontier superstep with a
-    * seed column, so all seeds advance in the SAME per-level join (one
-    * scan of the edge list per level, not per seed). closeness =
+    * (seed, node, dist) rows — the q_graph_bfs relaxation with the seed
+    * as a PowerIter lane, so all seeds advance in the SAME arc scan per
+    * level, not one scan per seed. closeness =
     * (reached−1)/Σdist as a single exact-integer division; eccentricity
     * = max dist within the horizon. */
   def q_graph_closeness(s: SparkSession, dir: String): DataFrame =
@@ -2316,33 +2165,8 @@ object GraphOps {
       val seeds = ue.select(col("a")).distinct()
         .orderBy(col("a")).limit(CloseSeeds)
         .select(col("a").as("seed"), col("a").as("node"), lit(0L).as("d"))
-        .ckpt()
-      var dist = seeds
-      var frontier = seeds
-      var depth = 0L
-      var frontierSize = frontier.count()
-      while (depth < CloseMaxHops && frontierSize > 0) {
-        depth += 1
-        // same probe-gated rationale as q_graph_bfs: checkpointed
-        // frontiers carry no stats; past the |V| guard stateHint
-        // pre-partitions the frontier on the node key instead.
-        // per-seed state: up to CloseSeeds x |V| rows — the guard
-        // compares vertexCount x seeds (round-11 review)
-        val next = ue
-          .join(stateHint(bs, dir, frontier, "node", CloseSeeds),
-            col("node") === col("a"))
-          .select(col("seed"), col("b").as("node")).distinct()
-          .join(stateHint(bs, dir,
-              dist.select(col("seed").as("vs"), col("node").as("vn")), "vs",
-              CloseSeeds, moreKeys = Seq("vn")),
-            col("seed") === col("vs") && col("node") === col("vn"), "left_anti")
-          .select(col("seed"), col("node"), lit(depth).as("d"))
-          .ckpt()
-        frontierSize = next.count()
-        dist = dist.union(next)
-        frontier = next
-      }
-      dist.ckpt()
+      PowerIter.relax(bs, "closeDist", seeds, ue, "a", "b", hop = 1L,
+        maxRounds = CloseMaxHops, width = iterWidth(bs, dir)).ckpt()
     }
 
   /** Harmonic centrality (Marchiori & Latora 2000; the centrality

@@ -1232,7 +1232,7 @@ object LlmOps {
     * deterministic 10% sample (same jaccardVerify formula as
     * q_llm_jaccard_pairs, with the exact-preserving size prune
     * 5·min ≥ 4·max for J ≥ 0.8); components via the same monotone
-    * min-label fixpoint loop as q_graph_cc. Per-lang accounting:
+    * PowerIter min-label relaxation as q_graph_cc. Per-lang accounting:
     * sampled docs, clusters, removable dups (= docs − clusters), and
     * the largest duplicate group. */
   /** Sampled dedup universe (doc, lang, token count) — session MV
@@ -1247,7 +1247,7 @@ object LlmOps {
       // component MV's candidate stage is all-pairs per lang over this
       // sample — refuse past the shared bound rather than melt a cluster
       val maxPerLang = d.groupBy(col("lang")).agg(count(lit(1)).as("c"))
-        .agg(max(col("c"))).collect()(0).getLong(0)
+        .agg(coalesce(max(col("c")), lit(0L))).collect()(0).getLong(0)
       require(maxPerLang <= JaccardExactMaxDocsPerLang,
         s"dedupDocs sample has $maxPerLang docs in one lang > fence " +
           s"$JaccardExactMaxDocsPerLang — use the LSH candidate path")
@@ -1270,30 +1270,8 @@ object LlmOps {
         .select(col("doc_a").as("x"), col("doc_b").as("y"))
       val ue = pairs.union(pairs.select(col("y").as("x"), col("x").as("y")))
         .ckpt()
-      var labels = docs.select(col("doc_id").as("node"), col("doc_id").as("lbl"))
-        .ckpt()
-      var prevSum = labels.agg(sum(col("lbl"))).collect()(0).getLong(0)
-      var converged = false
-      while (!converged) {
-        // label table is |sampled docs|-sized — route the broadcast
-        // through the probe-gated docHint (VERDICT r17 item 5: an
-        // unconditional broadcast is the one shape that breaks outright
-        // at 100 TB doc counts; past the guard the hint drops and the
-        // superstep runs as a shuffle join)
-        val nbrMin = ue
-          .join(docHint(s, dir, labels.select(col("node").as("bn"), col("lbl").as("blbl"))),
-            col("y") === col("bn"))
-          .groupBy(col("x")).agg(min(col("blbl")).as("nbr_min"))
-        val next = labels
-          .join(nbrMin, col("node") === col("x"), "left_outer")
-          .select(col("node"), least(col("lbl"), coalesce(col("nbr_min"), col("lbl"))).as("lbl"))
-          .ckpt()
-        val curSum = next.agg(sum(col("lbl"))).collect()(0).getLong(0)
-        labels = next
-        converged = curSum == prevSum
-        prevSum = curSum
-      }
-      labels
+      PowerIter.relax(bs, "dedupLabels",
+        docs.select(col("doc_id").as("node"), col("doc_id").as("lbl")), ue, "y", "x").ckpt()
     }
 
   def q_llm_dedup_clusters(s: SparkSession, dir: String): DataFrame = {
@@ -2222,43 +2200,11 @@ object LlmOps {
       .select(col("doc_a").as("x"), col("doc_b").as("y"))
     val ue = p.union(p.select(col("y").as("x"), col("x").as("y")))
       .ckpt()
-    // The ccLabels shape (r17 opt): iterate only over edge-connected
-    // docs (isolated docs never change label — folded back in below),
-    // and pointer-jump (lbl := lbl(lbl)) so long chains converge in
-    // O(log diameter) rounds instead of O(diameter) — the old plain
-    // loop ran 47 jobs per query (measured). Same min-label fixpoint,
-    // identical labels. Label tables are doc-count-bounded →
-    // broadcast.
-    var labels = ue.select(col("x").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-      .ckpt()
-    val first = labels.agg(sum(col("lbl"))).collect()(0)
-    var prevSum = if (first.isNullAt(0)) 0L else first.getLong(0)
-    var converged = first.isNullAt(0)
-    while (!converged) {
-      // label tables are |sampled docs|-sized — probe-gated docHint
-      // instead of an unconditional broadcast (VERDICT r17 item 5: the
-      // one shape that breaks outright at 100 TB doc counts; past the
-      // guard the hint drops and the supersteps run as shuffle joins)
-      val nbrMin = ue
-        .join(docHint(s, dir, labels.select(col("node").as("bn"), col("lbl").as("blbl"))),
-          col("y") === col("bn"))
-        .groupBy(col("x")).agg(min(col("blbl")).as("nbr_min"))
-      val stepped = labels
-        .join(nbrMin, col("node") === col("x"), "left_outer")
-        .select(col("node"),
-          least(col("lbl"), coalesce(col("nbr_min"), col("lbl"))).as("lbl"))
-      val next = stepped.alias("s")
-        .join(docHint(s, dir, stepped.select(col("node").as("jn"), col("lbl").as("jl"))),
-          col("s.lbl") === col("jn"))
-        .select(col("s.node").as("node"), least(col("s.lbl"), col("jl")).as("lbl"))
-        .ckpt()
-      val nextF = GraphOps.freshStats(s, next)
-      val curSum = nextF.agg(sum(col("lbl"))).collect()(0).getLong(0)
-      labels = nextF
-      converged = curSum == prevSum
-      prevSum = curSum
-    }
+    // iterate only over edge-connected docs: isolated docs never change
+    // label and fold back in below
+    val labels = PowerIter.relax(s, "q_llm_lsh_clusters",
+      ue.select(col("x").as("node")).distinct().select(col("node"), col("node").as("lbl")),
+      ue, "y", "x")
     docs.join(labels, col("doc_id") === col("node"), "left_outer")
       .select(col("lang"), col("doc_id"),
         coalesce(col("lbl"), col("doc_id")).as("lbl"))

@@ -3,22 +3,28 @@ package graft.engine
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
-/** The power-iteration kernel of the iterative tier (pagerank and its
-  * weighted/personalized variants, katz, eigenvector, HITS, textrank).
-  *
-  * A step multiplies the state vector by an arc MV: every arc whose
-  * `from` key holds state `v` adds `rlong(term(v, w1, w2)·1e9)` to its
-  * `to` key, and the leg's `update` (teleport, offset) of `x = Σ/1e9`,
-  * optionally max-normed, is the next state. Long sums are exact and
-  * order-blind, so how arcs are grouped into tasks cannot change a bit
-  * of the result — each value equals the DuckDB oracle's unrolled CTE
-  * chain, which rounds the same IEEE product per term.
+/** The iterative kernel: every superstep of the iterative tier is a scan
+  * of an arc MV in which each arc whose `from` key holds a value offers a
+  * Long to its `to` key. Two semirings share the placement and the step:
+  *  - `run`, power iteration (pagerank and its weighted/personalized
+  *    variants, katz, eigenvector, HITS, textrank): an arc from a key
+  *    holding `v` adds `rlong(term(v, w1, w2)·1e9)` to its `to` key, and
+  *    the leg's `update` (teleport, offset) of `x = Σ/1e9`, optionally
+  *    max-normed, replaces the state. Long sums are exact and
+  *    order-blind, so each value equals the DuckDB oracle's unrolled CTE
+  *    chain, which rounds the same IEEE product per term.
+  *  - `relax`, min relaxation (connected components, BFS, bounded
+  *    Bellman-Ford, closeness, SCC coloring, dedup components): an arc
+  *    from a frontier key holding `v` offers `v + hop + w` to its `to`
+  *    key, a key keeps the minimum of its value and its offers, and the
+  *    keys that strictly improved are the next frontier. A Long min is
+  *    exact and order-blind too.
   *
   * Two placements of the state, chosen per step by its own row count
   * against `spark.graft.stateBroadcastMaxRows`:
@@ -28,10 +34,12 @@ import org.apache.spark.sql.types._
   *    Long partials the driver merges — no query is planned per step;
   *  - past it the state stays partitioned on its key: each step zips it
   *    with the arcs (shuffled onto their `from` key once per run, the
-  *    shuffle output reused by every step) and sums with one
-  *    `reduceByKey` shuffle onto the same partitioner.
-  * State only grows between steps (PPR's frontier), so once partitioned
-  * it stays partitioned.
+  *    shuffle output reused by every step) and combines with one
+  *    `reduceByKey` shuffle onto the same placement.
+  * State only grows between steps, so once partitioned it stays
+  * partitioned. Round i's jobs run under the job description
+  * `<query>/iter<i>` (the state's collect is iter0); `width`, when
+  * positive, coalesces the arc scan to that many tasks.
   *
   * Stateless: a run's state is local to it, so concurrent callers share
   * nothing but the SparkContext. */
@@ -49,95 +57,38 @@ object PowerIter {
       always: Seq[Any] = Nil)
 
   /** Runs `iters` iterations of `legs` from `init` (key, value) and
-    * returns the final state as a DataFrame with `init`'s column names.
-    * Iteration i's jobs run under the job description `<query>/iter<i>`
-    * (the state's collect is iter0); `width`, when positive, coalesces
-    * the arc scan to that many tasks. */
+    * returns the final state as a DataFrame with `init`'s column names. */
   def run(s: SparkSession, query: String, init: DataFrame, iters: Int,
       legs: Seq[Leg], width: Int = 0): DataFrame = {
-    val sc = s.sparkContext
-    val guard = s.conf.get("spark.graft.stateBroadcastMaxRows",
-      GraphOps.StateBroadcastMaxRows.toString).toLong
-    val p = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
-    val readers = legs.map(l => Reader(l))
-    val rows = legs.map { l =>
-      val r = l.arcs.queryExecution.toRdd
-      if (width > 0 && width < r.getNumPartitions) r.coalesce(width) else r
+    val k = Plumbing(s, query, width)
+    val scans = legs.map(l => k.scan(l.arcs, l.from, l.to, l.weights))
+    var state: Either[collection.Map[Any, Double], RDD[(Any, Double)]] = k.held(init) match {
+      case Some(rows) => Left(rows.map(r => r.get(0) -> r.getDouble(1)).toMap)
+      case None => Right(init.rdd.map(r => (r.get(0): Any) -> r.getDouble(1)).partitionBy(k.p))
     }
-    // (from, (to, w1, w2)) on the state's partitioner; RDDs are lazy, so
-    // a run that never leaves the driver-held placement never shuffles
-    val byFrom = readers.zip(rows).map { case (rd, r) =>
-      r.map(x => (rd.from(x), (rd.to(x), rd.w1(x), rd.w2(x)))).partitionBy(p)
-    }
-
-    val first = JobTag(sc, s"$query/iter0") {
-      init.limit(math.min(guard, Int.MaxValue - 1L).toInt + 1).collect()
-    }
-    var state: Either[collection.Map[Any, Double], RDD[(Any, Double)]] =
-      if (first.length <= guard) Left(first.map(r => r.get(0) -> r.getDouble(1)).toMap)
-      else Right(init.rdd.map(r => (r.get(0): Any) -> r.getDouble(1)).partitionBy(p))
-    for (i <- 1 to iters) JobTag(sc, s"$query/iter$i") {
-      legs.indices.foreach { j =>
+    for (i <- 1 to iters) k.round(i) {
+      legs.zip(scans).foreach { case (leg, sc) =>
+        val term = leg.term
+        val offer: Offer[Double] = (v, to, w1, w2, acc) =>
+          acc.add(to, Dsl.rlong(term(v, w1, w2) * 1e9))
         state = state match {
-          case Left(m) if m.size <= guard => Left(narrowStep(s, legs(j), readers(j), rows(j), m))
-          case Left(m) => Right(shuffleStep(s, legs(j), byFrom(j),
-            sc.parallelize(m.toSeq).partitionBy(p), p))
-          case Right(st) => Right(shuffleStep(s, legs(j), byFrom(j), st, p))
+          case Left(m) if m.size <= k.guard =>
+            Left(sumMerge(leg, k.narrow(sc, m, min = false)(offer)))
+          case st =>
+            val part = st.fold(m => s.sparkContext.parallelize(m.toSeq).partitionBy(k.p), identity)
+            Right(sumShuffled(s, leg, k.shuffled(part, sc, k.p, min = false)(offer)))
         }
       }
     }
-
-    val schema = StructType(Seq(init.schema.fields(0).copy(nullable = true),
-      StructField(init.columns(1), DoubleType)))
-    state match {
-      case Left(m) =>
-        s.createDataFrame(m.toSeq.map { case (k, v) => Row(k, v) }.asJava, schema)
-      case Right(st) => s.createDataFrame(st.map { case (k, v) => Row(k, v) }, schema)
-    }
+    k.frame(StructType(Seq(init.schema.fields(0).copy(nullable = true),
+      StructField(init.columns(1), DoubleType))), state.fold(
+      m => Left(m.map { case (key, v) => Row(key, v) }),
+      st => Right(st.map { case (key, v) => Row(key, v) })))
   }
 
-  /** Reads a leg's arc row by column ordinal (Long or String keys). */
-  private final case class Reader(fromAt: Int, toAt: Int, strKeys: Boolean,
-      w1At: Int, w2At: Int, term: (Double, Long, Long) => Double) {
-    private def key(r: InternalRow, i: Int): Any =
-      if (strKeys) r.getUTF8String(i).toString else r.getLong(i)
-    def from(r: InternalRow): Any = key(r, fromAt)
-    def to(r: InternalRow): Any = key(r, toAt)
-    def w1(r: InternalRow): Long = if (w1At < 0) 0L else r.getLong(w1At)
-    def w2(r: InternalRow): Long = if (w2At < 0) 0L else r.getLong(w2At)
-  }
-
-  private object Reader {
-    def apply(l: Leg): Reader = {
-      val sc = l.arcs.schema
-      val w = l.weights.map(sc.fieldIndex)
-      Reader(sc.fieldIndex(l.from), sc.fieldIndex(l.to), sc(l.from).dataType == StringType,
-        w.headOption.getOrElse(-1), w.lift(1).getOrElse(-1), l.term)
-    }
-  }
-
-  /** One step with the driver-held state: broadcast it, scan the arcs
-    * in one narrow job, merge the per-task Long partials. */
-  private def narrowStep(s: SparkSession, leg: Leg, rd: Reader, rows: RDD[InternalRow],
-      state: collection.Map[Any, Double]): collection.Map[Any, Double] = {
-    val held = new java.util.HashMap[Any, java.lang.Double](state.size * 2)
-    state.foreach { case (k, v) => held.put(k, v) }
-    val bc = s.sparkContext.broadcast(held)
-    val parts = try rows.mapPartitions { it =>
-      val st = bc.value
-      val acc = new java.util.HashMap[Any, Array[Long]]()
-      it.foreach { r =>
-        val v = st.get(rd.from(r))
-        if (v != null) {
-          val t = Dsl.rlong(rd.term(v, rd.w1(r), rd.w2(r)) * 1e9)
-          val to = rd.to(r)
-          val cell = acc.get(to)
-          if (cell == null) acc.put(to, Array(t)) else cell(0) += t
-        }
-      }
-      acc.asScala.iterator.map { case (k, c) => (k, c(0)) }
-    }.collect()
-    finally bc.destroy()
+  /** The sum mode's driver merge: the summed partials, through the
+    * leg's update and max-norm, replace the state. */
+  private def sumMerge(leg: Leg, parts: Array[(Any, Long)]): collection.Map[Any, Double] = {
     val sums = mutable.HashMap.empty[Any, Long]
     for ((k, t) <- parts) sums.update(k, sums.getOrElse(k, 0L) + t)
     leg.always.foreach(k => sums.getOrElseUpdate(k, 0L))
@@ -146,26 +97,194 @@ object PowerIter {
     else { val mx = next.values.max; next.map { case (k, v) => k -> v / mx } }
   }
 
-  /** One step with the partitioned state: zip it with the arcs
-    * co-partitioned on `from`, one `reduceByKey` shuffle onto `to`. */
-  private def shuffleStep(s: SparkSession, leg: Leg, arcs: RDD[(Any, (Any, Long, Long))],
-      state: RDD[(Any, Double)], p: HashPartitioner): RDD[(Any, Double)] = {
-    val Leg(_, _, _, term, _, update, maxNorm, always) = leg
-    val terms = state.zipPartitions(arcs) { (st, it) =>
-      val m = st.toMap
-      it.flatMap { case (k, (to, w1, w2)) =>
-        m.get(k).map(v => to -> Dsl.rlong(term(v, w1, w2) * 1e9))
-      }
-    }
-    val seeded = if (always.isEmpty) terms
-      else terms.union(s.sparkContext.parallelize(always.map(_ -> 0L), 1))
-    val next = seeded.reduceByKey(p, _ + _)
-      .mapPartitions(_.map { case (k, t) => k -> update(k, t.toDouble / 1e9) },
-        preservesPartitioning = true)
+  /** The sum mode's partitioned merge over the reduced sums. */
+  private def sumShuffled(s: SparkSession, leg: Leg, sums: RDD[(Any, Long)]): RDD[(Any, Double)] = {
+    val Leg(_, _, _, _, _, update, maxNorm, always) = leg
+    val seeded = if (always.isEmpty) sums
+      else sums.union(s.sparkContext.parallelize(always.map(_ -> 0L), 1))
+        .reduceByKey(sums.partitioner.get, _ + _)
+    val next = seeded.mapPartitions(
+      _.map { case (k, t) => k -> update(k, t.toDouble / 1e9) }, preservesPartitioning = true)
     if (!maxNorm) next
     else {
       val mx = next.values.fold(Double.NegativeInfinity)(math.max)
       next.mapValues(_ / mx)
     }
+  }
+
+  /** Min relaxation from `init`, either (key, value) or (lane, key,
+    * value) with Long values, over `arcs`: each round, every arc from a
+    * frontier key holding `v` in a lane offers `v + hop + w` (`w` the
+    * Long `weight` column, 0 when absent) to its `to` key in that lane;
+    * a key keeps the minimum of its value and its offers, and the keys
+    * that strictly improved are the next frontier (round 1's frontier is
+    * all of `init`). Stops when the frontier is empty or after
+    * `maxRounds` rounds. Pruning to the frontier gives the same values
+    * as relaxing every arc at every round count: a key that did not
+    * improve has already offered its value. Lanes (closeness seeds)
+    * advance in the same arc scan. Returns the state with `init`'s
+    * columns. */
+  def relax(s: SparkSession, query: String, init: DataFrame, arcs: DataFrame,
+      from: String, to: String, hop: Long = 0L, weight: Option[String] = None,
+      maxRounds: Int = Int.MaxValue, width: Int = 0): DataFrame = {
+    val k = Plumbing(s, query, width)
+    val sc = k.scan(arcs, from, to, weight.toSeq)
+    val lanes = init.columns.length == 3
+    val byKey = new ByKey(k.p)
+    def keyed(r: Row): ((Any, Any), Long) =
+      if (lanes) (r.get(0), r.get(1)) -> r.getLong(2) else (null, r.get(0)) -> r.getLong(1)
+    val offer: Offer[Seq[(Any, Long)]] = (ls, to, w1, _, acc) =>
+      ls.foreach { case (lane, v) => acc.add((lane, to), v + hop + w1) }
+    // state and frontier, (lane, key) → value; a partitioned pair is
+    // placed by its key, as the arcs are by `from`
+    type Part = RDD[((Any, Any), Long)]
+    def part(e: Either[collection.Map[(Any, Any), Long], Part]): Part =
+      e.fold(m => s.sparkContext.parallelize(m.toSeq).partitionBy(byKey), identity)
+    def byNode(f: Iterable[((Any, Any), Long)]): Map[Any, Seq[(Any, Long)]] =
+      f.toSeq.groupMap(_._1._2) { case ((l, _), v) => (l, v) }
+    val first = k.held(init).map(rows => mutable.HashMap.from(rows.map(keyed)))
+    var state: Either[mutable.HashMap[(Any, Any), Long], Part] =
+      first.toLeft(init.rdd.map(keyed).partitionBy(byKey))
+    var front: Either[collection.Map[(Any, Any), Long], Part] = state
+    var live = first.forall(_.nonEmpty)
+    var i = 0
+    while (live && i < maxRounds) {
+      i += 1
+      k.round(i) {
+        (state, front) match {
+          case (Left(m), Left(f)) if m.size <= k.guard =>
+            // driver merge: keep the minimum, the improved keys go next
+            val next = mutable.HashMap.empty[(Any, Any), Long]
+            for ((key: (Any, Any) @unchecked, c) <- k.narrow(sc, byNode(f), min = true)(offer))
+              if (c < m.getOrElse(key, Long.MaxValue)) { m(key) = c; next(key) = c }
+            front = Left(next)
+            live = next.nonEmpty
+          case _ =>
+            val offers = k.shuffled(part(front).mapPartitions(it => byNode(it.toSeq).iterator),
+              sc, byKey, min = true)(offer)
+            val merged = part(state).zipPartitions(offers, preservesPartitioning = true) { (st, of) =>
+              val m = mutable.HashMap.from(st.map { case (key, v) => key -> (v, false) })
+              for ((key: (Any, Any) @unchecked, c) <- of)
+                if (c < m.get(key).fold(Long.MaxValue)(_._1)) m(key) = (c, true)
+              m.iterator
+            }.localCheckpoint()
+            val improved = merged.filter(_._2._2).mapValues(_._1)
+            live = improved.count() > 0
+            state = Right(merged.mapValues(_._1))
+            front = Right(improved)
+        }
+      }
+    }
+    def row(key: (Any, Any), v: Long): Row =
+      if (lanes) Row(key._1, key._2, v) else Row(key._2, v)
+    k.frame(StructType(init.schema.fields.init :+ StructField(init.columns.last, LongType,
+      init.schema.fields.last.nullable)), state.fold(
+      m => Left(m.map { case (key, v) => row(key, v) }),
+      st => Right(st.map { case (key, v) => row(key, v) })))
+  }
+
+  /** A mode's per-arc offer: given the value(s) held at the arc's `from`
+    * key and the arc's (to, w1, w2), add the arc's terms to the task's
+    * combiner. */
+  private type Offer[V] = (V, Any, Long, Long, Acc) => Unit
+
+  /** A task's per-key Long combiner: a key keeps the sum or the minimum
+    * of its terms. */
+  private final class Acc(min: Boolean) {
+    private val cells = new java.util.HashMap[Any, Array[Long]]()
+    def add(k: Any, t: Long): Unit = {
+      val c = cells.get(k)
+      if (c == null) cells.put(k, Array(t))
+      else c(0) = if (min) math.min(c(0), t) else c(0) + t
+    }
+    def iterator: Iterator[(Any, Long)] = cells.asScala.iterator.map { case (k, c) => (k, c(0)) }
+  }
+
+  /** Places a (lane, key) pair where `p` places the key. */
+  private final class ByKey(p: Partitioner) extends Partitioner {
+    def numPartitions: Int = p.numPartitions
+    def getPartition(k: Any): Int = p.getPartition(k.asInstanceOf[(Any, Any)]._2)
+  }
+
+  /** Reads an arc row by column ordinal (Long or String keys). */
+  private final case class Reader(fromAt: Int, toAt: Int, strKeys: Boolean,
+      w1At: Int, w2At: Int) {
+    private def key(r: InternalRow, i: Int): Any =
+      if (strKeys) r.getUTF8String(i).toString else r.getLong(i)
+    def from(r: InternalRow): Any = key(r, fromAt)
+    def to(r: InternalRow): Any = key(r, toAt)
+    def w1(r: InternalRow): Long = if (w1At < 0) 0L else r.getLong(w1At)
+    def w2(r: InternalRow): Long = if (w2At < 0) 0L else r.getLong(w2At)
+  }
+
+  /** One arc MV as the kernel reads it: the reader, the (coalesced) row
+    * blocks, and the arcs keyed on `from` on the state's partitioner —
+    * lazy, so a run that never leaves the driver-held placement never
+    * shuffles. */
+  private final case class Scan(rd: Reader, rows: RDD[InternalRow],
+      byFrom: RDD[(Any, (Any, Long, Long))])
+
+  /** The placement and step plumbing both modes share. */
+  private final case class Plumbing(s: SparkSession, query: String, width: Int) {
+    val guard: Long = s.conf.get("spark.graft.stateBroadcastMaxRows",
+      GraphOps.StateBroadcastMaxRows.toString).toLong
+    val p = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
+
+    def scan(arcs: DataFrame, from: String, to: String, weights: Seq[String]): Scan = {
+      val sc = arcs.schema
+      val w = weights.map(sc.fieldIndex)
+      val rd = Reader(sc.fieldIndex(from), sc.fieldIndex(to), sc(from).dataType == StringType,
+        w.headOption.getOrElse(-1), w.lift(1).getOrElse(-1))
+      val r = arcs.queryExecution.toRdd
+      val rows = if (width > 0 && width < r.getNumPartitions) r.coalesce(width) else r
+      Scan(rd, rows, rows.map(x => (rd.from(x), (rd.to(x), rd.w1(x), rd.w2(x)))).partitionBy(p))
+    }
+
+    /** `init`'s rows when they fit the guard, else None (iter0). */
+    def held(init: DataFrame): Option[Array[Row]] = {
+      val first = JobTag(s.sparkContext, s"$query/iter0") {
+        init.limit(math.min(guard, Int.MaxValue - 1L).toInt + 1).collect()
+      }
+      if (first.length <= guard) Some(first) else None
+    }
+
+    def round[A](i: Int)(body: => A): A = JobTag(s.sparkContext, s"$query/iter$i")(body)
+
+    /** One step with a driver-held state: broadcast the values of the
+      * keys that offer, scan the arcs in one narrow job, and return each
+      * task's combined partials for the driver to merge. */
+    def narrow[V](sc: Scan, held: collection.Map[Any, V], min: Boolean)(
+        offer: Offer[V]): Array[(Any, Long)] = {
+      val m = new java.util.HashMap[Any, V](held.size * 2)
+      held.foreach { case (k, v) => m.put(k, v) }
+      val bc = s.sparkContext.broadcast(m)
+      val rd = sc.rd
+      try sc.rows.mapPartitions { it =>
+        val st = bc.value
+        val acc = new Acc(min)
+        it.foreach { r =>
+          val v = st.get(rd.from(r))
+          if (v != null) offer(v, rd.to(r), rd.w1(r), rd.w2(r), acc)
+        }
+        acc.iterator
+      }.collect()
+      finally bc.destroy()
+    }
+
+    /** One step with a partitioned state (placed as the arcs' `from`):
+      * zip it with the arcs, combine per task, then one `reduceByKey`
+      * shuffle onto `onto`. */
+    def shuffled[V](st: RDD[(Any, V)], sc: Scan, onto: Partitioner, min: Boolean)(
+        offer: Offer[V]): RDD[(Any, Long)] =
+      st.zipPartitions(sc.byFrom) { (held, it) =>
+        val m = held.toMap
+        val acc = new Acc(min)
+        it.foreach { case (k, (to, w1, w2)) => m.get(k).foreach(offer(_, to, w1, w2, acc)) }
+        acc.iterator
+      }.reduceByKey(onto, if (min) math.min(_: Long, _: Long) else (_: Long) + (_: Long))
+
+    /** The final state as a DataFrame of `schema`. */
+    def frame(schema: StructType, rows: Either[Iterable[Row], RDD[Row]]): DataFrame =
+      rows.fold(r => s.createDataFrame(r.toSeq.asJava, schema), r => s.createDataFrame(r, schema))
   }
 }

@@ -122,7 +122,7 @@ class OptimizationR18Spec extends AnyFunSuite {
     sc.setJobGroup("tag-group", "caller")
     try {
       GraphOps.q_graph_katz(spark, sf0001).collect()
-      Mv.memo(spark, mvKey)(bs => bs.range(8).toDF("x").ckpt())
+      Mv.memo(spark, mvKey)(bs => bs.range(8).toDF("x").ckpt("probe"))
       Par.run(spark, Seq(() => spark.range(5).count(), () => spark.range(6).count()))
       assert(sc.getLocalProperty("spark.job.description") == "caller")
       assert(sc.getLocalProperty("spark.jobGroup.id") == "tag-group")
@@ -131,7 +131,7 @@ class OptimizationR18Spec extends AnyFunSuite {
       Mv.evict(spark, mvKey)
     }
     val want = (0 to GraphOps.KatzIters).map(i => s"q_graph_katz/iter$i") ++
-      Seq(s"mv:$mvKey", "caller/leg0", "caller/leg1")
+      Seq(s"mv:$mvKey/ckpt:probe", "caller/leg0", "caller/leg1")
     import scala.jdk.CollectionConverters._
     try eventually(timeout(20.seconds)) {
       val tags = seen.asScala.toSeq

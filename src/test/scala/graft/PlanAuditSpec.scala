@@ -729,8 +729,9 @@ class PlanAuditSpec extends AnyFunSuite {
     // hint drops and the state table pre-hash-partitions on its join
     // key. Pinned on the two fixpoint consumers whose final plan is NOT
     // checkpoint-truncated (modularity, assortativity), plus a result-
-    // invariance check on every PowerIter operator across both regimes
-    // (guard 0 runs the kernel's partitioned placement).
+    // invariance check on every PowerIter operator, sum and min mode,
+    // across both regimes (guard 0 runs the kernel's partitioned
+    // placement; the kernel-built MVs are evicted so they rebuild in it).
     val guardKey = "spark.graft.stateBroadcastMaxRows"
     def hintCount(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.analyzed.collect {
@@ -741,9 +742,17 @@ class PlanAuditSpec extends AnyFunSuite {
       "under the guard, the degree table must broadcast onto both arc ends")
     val kernelOps = Seq("q_graph_pagerank", "q_graph_pagerank_w", "q_graph_ppr",
       "q_graph_ppr_w", "q_graph_katz", "q_graph_eigenvector", "q_graph_hits",
-      "q_text_textrank")
+      "q_text_textrank", "q_graph_cc", "q_stream_cc", "q_graph_bfs",
+      "q_graph_pseudo_diameter", "q_graph_sssp", "q_graph_closeness", "q_graph_harmonic",
+      "q_graph_closeness_w", "q_graph_harmonic_w", "q_graph_scc_colors",
+      "q_llm_dedup_clusters", "q_llm_soft_dedup", "q_llm_dedup_keep", "q_llm_dedup_funnel",
+      "q_llm_lsh_clusters")
     def kernelRows() = kernelOps.map(q => q -> SparkEntry.queries(q)(spark, sf0001).collect().toSeq)
+    def evictKernelMvs(): Unit = graft.engine.Mv.keys(spark)
+      .filter(k => Seq("closeDist|", "closeDistW|", "dedupLabels|").exists(k.startsWith))
+      .foreach(graft.engine.Mv.evict(spark, _))
     val small = kernelRows()
+    evictKernelMvs()
     spark.conf.set(guardKey, "0")
     try {
       assert(hintCount(GraphOps.q_graph_assortativity(spark, sf0001)) == 0,
@@ -764,7 +773,7 @@ class PlanAuditSpec extends AnyFunSuite {
       kernelRows().zip(small).foreach { case ((q, big), (_, sm)) =>
         assert(big.nonEmpty && big == sm, s"$q must be identical across join regimes")
       }
-    } finally spark.conf.unset(guardKey)
+    } finally { spark.conf.unset(guardKey); evictKernelMvs() }
   }
 
   test("round-16 plan pins: new operators keep their scale shapes") {

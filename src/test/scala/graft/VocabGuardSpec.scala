@@ -18,11 +18,11 @@ import graft.engine.LlmOps
 class VocabGuardSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def writeDocs(dir: String, texts: Seq[String]): Unit = {
+  private def writeDocs(dir: String, texts: Seq[String], firstId: Long = 0L): Unit = {
     val s = spark
     import s.implicits._
     texts.zipWithIndex
-      .map { case (t, i) => (i.toLong, t, "en", "src0", t.length.toLong) }
+      .map { case (t, i) => (firstId + i, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
   }
@@ -49,6 +49,17 @@ class VocabGuardSpec extends AnyFunSuite {
     // the only pair at J >= 0.5 is the planted exact duplicate (J = 1)
     assert(grown.length == 1 && grown(0).getDouble(3) == 1.0,
       s"array-path fallback must compute correct jaccards: ${grown.toSeq}")
+  }
+
+  test("dedup queries return zero rows when the 10% sample is empty") {
+    // doc ids 1..5: no doc has doc_id % 10 = 0, so the dedup sample, its
+    // per-lang fence probe and the component labels are all empty; the
+    // oracle's GROUP BY lang gives zero rows
+    val dir = java.nio.file.Files.createTempDirectory("graft_nosample").toString
+    writeDocs(dir, Seq("a b c d", "a b c d", "a b c e", "x y z", "x y z"), firstId = 1L)
+    for (q <- Seq("q_llm_dedup_clusters", "q_llm_soft_dedup", "q_llm_dedup_keep",
+        "q_llm_dedup_funnel", "q_llm_lsh_clusters"))
+      assert(SparkEntry.queries(q)(spark, dir).collect().isEmpty, s"$q must return zero rows")
   }
 
   test("jaccard exact-baseline fence refuses a lang past the doc bound") {
