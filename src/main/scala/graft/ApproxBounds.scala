@@ -42,17 +42,6 @@ import graft.engine.{LlmOps, Relational}
   */
 object ApproxBounds {
 
-  /** Dev entry: print the bounds JSON for SPARK_GRAFT_SF_DIR without a
-    * full Bench sweep, and refresh both artifact copies. */
-  def main(args: Array[String]): Unit = {
-    val sfDir = Harness.sfDir("/root/testdata/sf0.01")
-    val spark = Harness.session()
-    val json = measureJson(spark, sfDir)
-    println(json)
-    writeArtifacts(json)
-    spark.stop()
-  }
-
   /** Write the bounds JSON to BOTH the working artifact
     * (`target/approx_bounds.json`) and the committed root artifact
     * (`APPROX_BOUNDS.json`) — the r9 verdict caught the root copy one

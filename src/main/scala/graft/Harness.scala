@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session factory for the builder/driver mains (Bench, Verify,
-  * TimeQ, ScaleProbe, StreamBench, ApproxBounds, Explain):
+/** Shared session factory for the mains (Bench, Verify, Dev):
   * one place for the contract configuration — local[SPARK_GRAFT_CPUS],
   * shuffle partitions = cores (not the 200 default), UTC, no UI — so
   * the entry points cannot drift apart. */

@@ -1302,7 +1302,7 @@ object LlmOps {
     * cell population is ~√n, so the pair join does O(Σ cell²) = O(n^1.5)
     * work — the capacity rule is what makes semantic dedup
     * sub-quadratic at corpus scale (VERDICT r15 item 1: a FIXED cell
-    * count made this O(n²/nlist); ScaleProbe's `emb` group measures the
+    * count made this O(n²/nlist); `Dev scale emb` measures the
     * pair-count growth at 1×/4×/16× vectors). */
   def q_llm_semdedup(s: SparkSession, dir: String): DataFrame = {
     // materialized ONCE: three consumers below (size agg + both pair-join
@@ -1474,6 +1474,14 @@ object LlmOps {
       .orderBy("lang")
   }
 
+  /** (id, m, sv) rows: the 64-dim `vecCol` split into the 8 PQ
+    * subvectors of 8 dims, with `idCol` renamed to `as`. */
+  private def pqSubs(df: DataFrame, idCol: String, vecCol: String, as: String): DataFrame = df
+    .select(col(idCol).as(as), explode(expr(
+      s"transform(sequence(0, 7), m -> struct(m as m, slice($vecCol, m*8 + 1, 8) as sv))"))
+      .as("e"))
+    .select(col(as), col("e.m").as("m"), col("e.sv").as("sv"))
+
   /** Product-quantization ANN (Jégou et al., TPAMI 2011) — the
     * memory-bounded fourth ANN variant next to brute-force / LSH / IVF:
     * at 100 TB the raw vectors (256 B each) cannot sit in RAM, but the
@@ -1489,19 +1497,14 @@ object LlmOps {
     * by ADC, vec_id tie-break. */
   def q_llm_ann_pq(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    // (id, m, 8-dim subvector) for every vector; centroids = ids 0-15
-    def subs(df: DataFrame, idCol: String): DataFrame = df
-      .select(col("vec_id").as(idCol), explode(expr(
-        "transform(sequence(0, 7), m -> struct(m as m, slice(embedding, m*8 + 1, 8) as sv))"))
-        .as("e"))
-      .select(col(idCol), col("e.m").as("m"), col("e.sv").as("sv"))
-    val cents = subs(emb.filter(col("vec_id") < 16), "j")
+    // centroids = ids 0-15
+    val cents = pqSubs(emb.filter(col("vec_id") < 16), "vec_id", "embedding", "j")
       .select(col("j"), col("m").as("cm"), col("sv").as("cv"))
     // fixed-order L2²: double promotion per element, left-to-right sum
     val d2 = expr("aggregate(zip_with(sv, cv, (x, c) -> " +
       "(cast(x as double) - cast(c as double)) * (cast(x as double) - cast(c as double)))," +
       " cast(0.0 as double), (acc, v) -> acc + v)")
-    val dists = subs(emb, "vid")
+    val dists = pqSubs(emb, "vec_id", "embedding", "vid")
       .join(broadcast(cents), col("m") === col("cm"))
       .select(col("vid"), col("m"), col("j"), d2.as("d2"))
     val codes = dists.groupBy(col("vid"), col("m"))
@@ -1784,17 +1787,12 @@ object LlmOps {
         expr("zip_with(dv, rcv, (x, c) -> cast(x as double) - cast(c as double))")
           .as("rv"))
       .ckpt()
-    def subs(df: DataFrame, idCol: String): DataFrame = df
-      .select(col("vid").as(idCol), explode(expr(
-        "transform(sequence(0, 7), m -> struct(m as m, slice(rv, m*8 + 1, 8) as sv))"))
-        .as("e"))
-      .select(col(idCol), col("e.m").as("m"), col("e.sv").as("sv"))
-    val cb = subs(res.filter(col("vid").between(nlist, nlist + 15)), "j")
+    val cb = pqSubs(res.filter(col("vid").between(nlist, nlist + 15)), "vid", "rv", "j")
       .select(col("j"), col("m").as("cm"), col("sv").as("cv"))
     // fixed-order L2² fold — left-assoc, same chain as the oracle's
     val d2 = expr("aggregate(zip_with(sv, cv, (x, c) -> (x - c) * (x - c)), " +
       "cast(0.0 as double), (acc, v) -> acc + v)")
-    val dists = subs(res, "dvid").join(broadcast(cb), col("m") === col("cm"))
+    val dists = pqSubs(res, "vid", "rv", "dvid").join(broadcast(cb), col("m") === col("cm"))
       .select(col("dvid"), col("m"), col("j"), d2.as("d2"))
     val codes = dists.groupBy(col("dvid"), col("m"))
       .agg(min(struct(col("d2"), col("j"))).as("best"))
@@ -1868,16 +1866,11 @@ object LlmOps {
         expr("zip_with(dv, rcv, (x, c) -> cast(x as double) - cast(c as double))")
           .as("rv"))
       .ckpt()
-    def subs(df: DataFrame, idCol: String): DataFrame = df
-      .select(col("vid").as(idCol), explode(expr(
-        "transform(sequence(0, 7), m -> struct(m as m, slice(rv, m*8 + 1, 8) as sv))"))
-        .as("e"))
-      .select(col(idCol), col("e.m").as("m"), col("e.sv").as("sv"))
-    val cb = subs(res.filter(col("vid").between(nlist, nlist + 15)), "j")
+    val cb = pqSubs(res.filter(col("vid").between(nlist, nlist + 15)), "vid", "rv", "j")
       .select(col("j"), col("m").as("cm"), col("sv").as("cv2"))
     val d2 = expr("aggregate(zip_with(sv, cv2, (x, c) -> (x - c) * (x - c)), " +
       "cast(0.0 as double), (acc, v) -> acc + v)")
-    val dists = subs(res, "dvid").join(broadcast(cb), col("m") === col("cm"))
+    val dists = pqSubs(res, "vid", "rv", "dvid").join(broadcast(cb), col("m") === col("cm"))
       .select(col("dvid"), col("m"), col("j"), d2.as("d2"))
     val codes = dists.groupBy(col("dvid"), col("m"))
       .agg(min(struct(col("d2"), col("j"))).as("best"))

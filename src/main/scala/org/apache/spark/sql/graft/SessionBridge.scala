@@ -26,4 +26,9 @@ object SessionBridge {
   def rebind(target: SparkSession, df: DataFrame): DataFrame =
     ClassicDataset.ofRows(target.asInstanceOf[ClassicSession],
       df.queryExecution.logical)
+
+  /** Block until every event posted so far has reached the session's
+    * SparkListeners (`listenerBus` is `private[spark]`). */
+  def drainListeners(s: SparkSession): Unit =
+    s.sparkContext.listenerBus.waitUntilEmpty()
 }

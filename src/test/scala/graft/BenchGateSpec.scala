@@ -98,7 +98,7 @@ class BenchGateSpec extends AnyFunSuite {
       val r = scala.io.Source.fromFile(root).mkString.trim
       val w = scala.io.Source.fromFile(work).mkString.trim
       assert(r == w, "APPROX_BOUNDS.json and target/approx_bounds.json have diverged — " +
-        "re-run graft.ApproxBounds (or Bench) to regenerate both from one measurement")
+        "re-run graft.Dev bounds (or Bench) to regenerate both from one measurement")
     }
   }
 }

@@ -288,10 +288,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // regression (a new unpartitioned entity-scale window, an accidental
     // cartesian, an unbounded nested-loop broadcast) fails CI the commit
     // it lands, not a round later in the judge's audit.
-    import org.apache.spark.sql.execution.{LocalTableScanExec, RangeExec, SparkPlan, TakeOrderedAndProjectExec}
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    import org.apache.spark.sql.execution.SparkPlan
+    import PlanHazards.{cartesian, globalWindows, unboundedBnlj}
 
     // Unpartitioned windows whose input is bounded by something OTHER
     // than the data volume (the only legitimate reason one may exist).
@@ -351,24 +349,6 @@ class PlanAuditSpec extends AnyFunSuite {
     val ckptWinAllow: Map[String, String] = Map(
       "hurst_spine" -> "R/S ladder over the day calendar (rows = distinct days per block size)")
 
-    def boundedBnlj(j: BroadcastNestedLoopJoinExec): Boolean = {
-      val side: SparkPlan = j.buildSide match {
-        case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
-        case _ => j.right
-      }
-      val oneRowAggOrLocal = side.find {
-        case a: BaseAggregateExec => a.groupingExpressions.isEmpty // global agg: 1 row
-        case _: LocalTableScanExec => true // driver literals
-        case _: TakeOrderedAndProjectExec => true // limit-k bounded
-        case _ => false
-      }.isDefined
-      val rangeSpine = { // spark.range literal spine: every leaf a Range
-        val leaves = side.collectLeaves()
-        leaves.nonEmpty && leaves.forall(_.isInstanceOf[RangeExec])
-      }
-      oneRowAggOrLocal || rangeSpine
-    }
-
     // Deterministic capture (VERDICT r15 item 6): a memoized MV build
     // records its pre-checkpoint plans only when it actually BUILDS, so
     // evict the whole registry first — every build then runs (and
@@ -395,17 +375,13 @@ class PlanAuditSpec extends AnyFunSuite {
         ("final", None, df.queryExecution.sparkPlan) +:
           recorded.map { case (tag, p) => (s"ckpt:$tag", Some(tag), p) }
       plans.foreach { case (where, tagOpt, p) =>
-        if (p.find(_.isInstanceOf[CartesianProductExec]).isDefined)
+        if (cartesian(p))
           problems += s"$name[$where]: CartesianProduct (never allowed)"
-        val badBnlj = p.collect { case j: BroadcastNestedLoopJoinExec => j }
-          .filterNot(boundedBnlj)
+        val badBnlj = unboundedBnlj(p)
         if (badBnlj.nonEmpty && !bnljAllow.contains(name)
             && !tagOpt.exists(ckptBnljAllow.contains))
           problems += s"$name[$where]: ${badBnlj.size} BNLJ with non-bounded build side"
-        val gwin = p.collect {
-          case w: WindowExec if w.partitionSpec.isEmpty => w.nodeName
-          case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w.nodeName
-        }
+        val gwin = globalWindows(p)
         if (gwin.nonEmpty && !globalWinAllow.contains(name)
             && !tagOpt.exists(ckptWinAllow.contains))
           problems += s"$name[$where]: unpartitioned ${gwin.mkString("+")} (use graft.engine.Dist)"
@@ -419,36 +395,26 @@ class PlanAuditSpec extends AnyFunSuite {
     // hazardous pattern in at least one captured plan — an entry whose
     // build went clean keeps a silent exemption otherwise.
     val staleCkptBnlj = ckptBnljAllow.keys.filterNot { tag =>
-      capturedByTag.getOrElse(tag, Nil).exists(p =>
-        p.collect { case j: BroadcastNestedLoopJoinExec => j }
-          .exists(j => !boundedBnlj(j)))
+      capturedByTag.getOrElse(tag, Nil).exists(p => unboundedBnlj(p).nonEmpty)
     }
     assert(staleCkptBnlj.isEmpty,
       s"stale ckptBnljAllow tags (build clean or never captured): ${staleCkptBnlj.mkString(",")}")
     val staleCkptWin = ckptWinAllow.keys.filterNot { tag =>
-      capturedByTag.getOrElse(tag, Nil).exists(p => p.collect {
-        case w: WindowExec if w.partitionSpec.isEmpty => w
-        case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w
-      }.nonEmpty)
+      capturedByTag.getOrElse(tag, Nil).exists(p => globalWindows(p).nonEmpty)
     }
     assert(staleCkptWin.isEmpty,
       s"stale ckptWinAllow tags (build clean or never captured): ${staleCkptWin.mkString(",")}")
     // allowlists must not rot: every entry still exhibits its pattern
     // (an entry whose query went clean should be deleted)
     val staleWin = globalWinAllow.keys.filterNot { name =>
-      SparkEntry.queries(name)(spark, sf0001).queryExecution.sparkPlan.collect {
-        case w: WindowExec if w.partitionSpec.isEmpty => w
-        case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w
-      }.nonEmpty
+      globalWindows(SparkEntry.queries(name)(spark, sf0001).queryExecution.sparkPlan).nonEmpty
     }
     assert(staleWin.isEmpty, s"stale globalWinAllow entries: ${staleWin.mkString(",")}")
     // same rot check for the BNLJ allowlist (ADVICE r13): an entry whose
     // BNLJ disappeared — or became structurally bounded — keeps a silent
     // exemption that could later mask a genuinely unbounded BNLJ
     val staleBnlj = bnljAllow.keys.filterNot { name =>
-      SparkEntry.queries(name)(spark, sf0001).queryExecution.sparkPlan
-        .collect { case j: BroadcastNestedLoopJoinExec => j }
-        .exists(j => !boundedBnlj(j))
+      unboundedBnlj(SparkEntry.queries(name)(spark, sf0001).queryExecution.sparkPlan).nonEmpty
     }
     assert(staleBnlj.isEmpty, s"stale bnljAllow entries: ${staleBnlj.mkString(",")}")
   }
