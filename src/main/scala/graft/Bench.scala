@@ -45,11 +45,12 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
-  /** Untimed warmups shared by Bench and TimeQ: session/codegen/parquet
-    * init plus the one-time builds of every session MV that two or more
-    * operators consume (edge list, pair-count projection, thresholded
-    * adjacencies, weighted adjacency, link-prediction training set,
-    * label-prop labels, walk table, dedup components, bucketed layout).
+  /** Untimed warmups shared by Bench and `Dev time`/`Dev profile`:
+    * session/codegen/parquet init plus the one-time builds of every
+    * session MV that two or more operators consume (edge list, pair-count
+    * projection, thresholded adjacencies, weighted adjacency,
+    * link-prediction training set, label-prop labels, walk table, dedup
+    * components, bucketed layout).
     * These are engine infrastructure, not query work: a production
     * deployment materializes them once per corpus snapshot and every
     * operator consumes them. Charging the one-time build to whichever

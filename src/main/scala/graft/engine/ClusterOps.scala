@@ -307,22 +307,20 @@ object ClusterOps {
   case class IsoShard(shard: Long, n: Long, s9: Seq[Long], qs9: Long)
 
   /** Per-shard fold: element-wise long adds — order-blind, exact. */
-  private[graft] def updateIso(shard: Long, it: Iterator[IsoIn],
-      state: org.apache.spark.sql.streaming.GroupState[IsoShard]): Iterator[IsoShard] = {
-    var st = state.getOption.getOrElse(
-      IsoShard(shard, 0L, Seq.fill(EmbDims)(0L), 0L))
-    val acc = st.s9.toArray
-    var n = st.n
-    var qs = st.qs9
-    it.foreach { r =>
-      var i = 0
-      while (i < EmbDims) { acc(i) += r.u9(i); i += 1 }
-      n += 1L; qs += r.q9
+  private[graft] val isoFold: Keyed.Fold[IsoIn, Long, IsoShard, IsoShard] =
+    Keyed.fold((r: IsoIn) => r.shard, IsoShard(0L, 0L, Seq.fill(EmbDims)(0L), 0L)) {
+      (shard, st, it) =>
+        val acc = st.s9.toArray
+        var n = st.n
+        var qs = st.qs9
+        it.foreach { r =>
+          var i = 0
+          while (i < EmbDims) { acc(i) += r.u9(i); i += 1 }
+          n += 1L; qs += r.q9
+        }
+        val next = IsoShard(shard, n, acc.toSeq, qs)
+        (next, Iterator.single(next))
     }
-    st = IsoShard(shard, n, acc.toSeq, qs)
-    state.update(st)
-    Iterator.single(st)
-  }
 
   /** STREAMING isotropy maintainer — the embedding-health counters a
     * live index keeps: per shard (vec_id mod 8) the keyed state is
@@ -338,14 +336,11 @@ object ClusterOps {
     import s.implicits._
     val uArr = "transform(embedding, x -> cast(round(" +
       "round(cast(x as double) / nrm, 9) * 1e9, 0) as bigint))"
-    val rows = isoScan(s, dir)
+    val rows = Keyed.run(isoScan(s, dir)
       .select((col("vec_id") % 8).as("shard"),
         expr(uArr).as("u9"),
         Dsl.rlong(round(expr(isoQFold), 9) * 1e9).as("q9"))
-      .as[IsoIn]
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateIso)
+      .as[IsoIn], isoFold)
       .toDF()
     val perDim = rows.select(posexplode(col("s9")).as(Seq("d", "sl")))
       .groupBy(col("d"))

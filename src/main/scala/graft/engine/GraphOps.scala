@@ -691,32 +691,30 @@ object GraphOps {
     * associative under the downstream merge (CC over the union of
     * spanning forests = CC over the union of edge sets), which is what
     * makes the 8-way state sharding correct at any scale. */
-  private[graft] def ccUpdate(shard: Int, it: Iterator[CcEdge],
-      state: org.apache.spark.sql.streaming.GroupState[CcForest]): Iterator[CcForest] = {
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    state.getOption.foreach(f =>
-      f.nodes.lazyZip(f.parents).foreach((n, p) => parent(n) = p))
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-    it.foreach { e =>
-      parent.getOrElseUpdate(e.a, e.a)
-      parent.getOrElseUpdate(e.b, e.b)
-      val ra = find(e.a)
-      val rb = find(e.b)
-      if (ra != rb) {
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+  private[graft] val ccFold: Keyed.Fold[CcEdge, Int, CcForest, CcForest] =
+    Keyed.fold((e: CcEdge) => e.shard, CcForest(0, Nil, Nil)) { (shard, f, it) =>
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      f.nodes.lazyZip(f.parents).foreach((n, p) => parent(n) = p)
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrElse(r, r) != r) r = parent(r)
+        var c = x
+        while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+        r
       }
+      it.foreach { e =>
+        parent.getOrElseUpdate(e.a, e.a)
+        parent.getOrElseUpdate(e.b, e.b)
+        val ra = find(e.a)
+        val rb = find(e.b)
+        if (ra != rb) {
+          if (ra < rb) parent(rb) = ra else parent(ra) = rb
+        }
+      }
+      val ns = parent.keys.toSeq.sorted
+      val st = CcForest(shard, ns, ns.map(find))
+      (st, Iterator.single(st))
     }
-    val ns = parent.keys.toSeq.sorted
-    val st = CcForest(shard, ns, ns.map(find))
-    state.update(st)
-    Iterator.single(st)
-  }
 
   /** STREAMING connected components (r17, VERDICT r16 item 4 — the
     * streaming tier's first incremental TOPOLOGY analytic beside its
@@ -735,10 +733,7 @@ object GraphOps {
       .select(pmod(col("a") + col("b"), lit(8)).cast("int").as("shard"),
         col("a"), col("b"))
       .as[CcEdge]
-    val snap = es.groupByKey(_.shard)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(ccUpdate)
-      .toDF()
+    val snap = Keyed.run(es, ccFold).toDF()
     val span = snap
       .select(explode(arrays_zip(col("nodes"), col("parents"))).as("z"))
       .select(col("z.nodes").as("a"), col("z.parents").as("b"))
@@ -766,64 +761,62 @@ object GraphOps {
     * hence outside the global MSF) makes the union of shard forests
     * MSF-equivalent to the full edge set — snapshot ≡ batch
     * q_graph_mst, one oracle. */
-  private[graft] def mstUpdate(shard: Int, it: Iterator[MstEdge],
-      state: org.apache.spark.sql.streaming.GroupState[MstForest]): Iterator[MstForest] = {
-    type E = (Long, Long, Long)
-    def lessE(x: E, y: E): Boolean =
-      x._3 < y._3 || (x._3 == y._3 &&
-        (x._1 < y._1 || (x._1 == y._1 && x._2 < y._2)))
-    val edges = scala.collection.mutable.LinkedHashSet.empty[E]
-    state.getOption.foreach(f =>
-      f.us.lazyZip(f.vs).lazyZip(f.ws).foreach((u, v, w) => edges += ((u, v, w))))
-    val adj = scala.collection.mutable
-      .Map.empty[Long, scala.collection.mutable.ListBuffer[E]]
-    def link(e: E): Unit = {
-      adj.getOrElseUpdate(e._1, scala.collection.mutable.ListBuffer.empty) += e
-      adj.getOrElseUpdate(e._2, scala.collection.mutable.ListBuffer.empty) += e
-    }
-    edges.foreach(link)
-    // unique tree path src→dst (DFS with edge backtracking), or None
-    def pathEdges(src: Long, dst: Long): Option[List[E]] = {
-      if (!adj.contains(src) || !adj.contains(dst)) return None
-      val via = scala.collection.mutable.Map.empty[Long, E]
-      val seen = scala.collection.mutable.Set(src)
-      val stack = scala.collection.mutable.Stack(src)
-      while (stack.nonEmpty && !seen.contains(dst)) {
-        val n = stack.pop()
-        adj.getOrElse(n, Nil).foreach { e =>
-          val o = if (e._1 == n) e._2 else e._1
-          if (seen.add(o)) { via(o) = e; stack.push(o) }
-        }
+  private[graft] val mstFold: Keyed.Fold[MstEdge, Int, MstForest, MstForest] =
+    Keyed.fold((e: MstEdge) => e.shard, MstForest(0, Nil, Nil, Nil)) { (shard, f, it) =>
+      type E = (Long, Long, Long)
+      def lessE(x: E, y: E): Boolean =
+        x._3 < y._3 || (x._3 == y._3 &&
+          (x._1 < y._1 || (x._1 == y._1 && x._2 < y._2)))
+      val edges = scala.collection.mutable.LinkedHashSet.empty[E]
+      f.us.lazyZip(f.vs).lazyZip(f.ws).foreach((u, v, w) => edges += ((u, v, w)))
+      val adj = scala.collection.mutable
+        .Map.empty[Long, scala.collection.mutable.ListBuffer[E]]
+      def link(e: E): Unit = {
+        adj.getOrElseUpdate(e._1, scala.collection.mutable.ListBuffer.empty) += e
+        adj.getOrElseUpdate(e._2, scala.collection.mutable.ListBuffer.empty) += e
       }
-      if (!seen.contains(dst)) None
-      else {
-        var path = List.empty[E]
-        var cur = dst
-        while (cur != src) {
-          val e = via(cur)
-          path = e :: path
-          cur = if (e._1 == cur) e._2 else e._1
-        }
-        Some(path)
-      }
-    }
-    it.foreach { me =>
-      val e: E = (math.min(me.a, me.b), math.max(me.a, me.b), me.w)
-      if (!edges.contains(e)) pathEdges(e._1, e._2) match {
-        case None => edges += e; link(e)
-        case Some(path) =>
-          val maxE = path.reduceLeft((x, y) => if (lessE(x, y)) y else x)
-          if (lessE(e, maxE)) {
-            edges -= maxE; adj(maxE._1) -= maxE; adj(maxE._2) -= maxE
-            edges += e; link(e)
+      edges.foreach(link)
+      // unique tree path src→dst (DFS with edge backtracking), or None
+      def pathEdges(src: Long, dst: Long): Option[List[E]] = {
+        if (!adj.contains(src) || !adj.contains(dst)) return None
+        val via = scala.collection.mutable.Map.empty[Long, E]
+        val seen = scala.collection.mutable.Set(src)
+        val stack = scala.collection.mutable.Stack(src)
+        while (stack.nonEmpty && !seen.contains(dst)) {
+          val n = stack.pop()
+          adj.getOrElse(n, Nil).foreach { e =>
+            val o = if (e._1 == n) e._2 else e._1
+            if (seen.add(o)) { via(o) = e; stack.push(o) }
           }
+        }
+        if (!seen.contains(dst)) None
+        else {
+          var path = List.empty[E]
+          var cur = dst
+          while (cur != src) {
+            val e = via(cur)
+            path = e :: path
+            cur = if (e._1 == cur) e._2 else e._1
+          }
+          Some(path)
+        }
       }
+      it.foreach { me =>
+        val e: E = (math.min(me.a, me.b), math.max(me.a, me.b), me.w)
+        if (!edges.contains(e)) pathEdges(e._1, e._2) match {
+          case None => edges += e; link(e)
+          case Some(path) =>
+            val maxE = path.reduceLeft((x, y) => if (lessE(x, y)) y else x)
+            if (lessE(e, maxE)) {
+              edges -= maxE; adj(maxE._1) -= maxE; adj(maxE._2) -= maxE
+              edges += e; link(e)
+            }
+        }
+      }
+      val sorted = edges.toSeq.sortBy(e => (e._3, e._1, e._2))
+      val st = MstForest(shard, sorted.map(_._1), sorted.map(_._2), sorted.map(_._3))
+      (st, Iterator.single(st))
     }
-    val sorted = edges.toSeq.sortBy(e => (e._3, e._1, e._2))
-    val st = MstForest(shard, sorted.map(_._1), sorted.map(_._2), sorted.map(_._3))
-    state.update(st)
-    Iterator.single(st)
-  }
 
   /** STREAMING minimum spanning forest (r17 — the streaming tier's
     * second incremental topology analytic beside q_stream_cc): weighted
@@ -838,10 +831,7 @@ object GraphOps {
       .select(pmod(col("a") + col("b"), lit(8)).cast("int").as("shard"),
         col("a"), col("b"), col("w"))
       .as[MstEdge]
-    val snap = es.groupByKey(_.shard)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(mstUpdate)
-      .toDF()
+    val snap = Keyed.run(es, mstFold).toDF()
     val span = snap
       .select(explode(arrays_zip(col("us"), col("vs"), col("ws"))).as("z"))
       .select(col("z.us").as("a"), col("z.vs").as("b"), col("z.ws").as("w"))

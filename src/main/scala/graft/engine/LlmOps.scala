@@ -516,21 +516,19 @@ object LlmOps {
 
   /** Per-lang union-sketch fold: element-wise mins — order-blind,
     * idempotent, exactly the merge a distributed sketch union runs. */
-  private[graft] def updateMh(lang: String, it: Iterator[MhIn],
-      state: org.apache.spark.sql.streaming.GroupState[MhState]): Iterator[MhState] = {
-    var st = state.getOption.getOrElse(
-      MhState(lang, 0L, Seq.fill(8)(Long.MaxValue)))
-    val acc = st.mins.toArray
-    var n = st.n_docs
-    it.foreach { r =>
-      var i = 0
-      while (i < 8) { acc(i) = math.min(acc(i), r.sig(i)); i += 1 }
-      n += 1L
+  private[graft] val mhFold: Keyed.Fold[MhIn, String, MhState, MhState] =
+    Keyed.fold((r: MhIn) => r.lang, MhState("", 0L, Seq.fill(8)(Long.MaxValue))) {
+      (lang, st, it) =>
+        val acc = st.mins.toArray
+        var n = st.n_docs
+        it.foreach { r =>
+          var i = 0
+          while (i < 8) { acc(i) = math.min(acc(i), r.sig(i)); i += 1 }
+          n += 1L
+        }
+        val next = MhState(lang, n, acc.toSeq)
+        (next, Iterator.single(next))
     }
-    st = MhState(lang, n, acc.toSeq)
-    state.update(st)
-    Iterator.single(st)
-  }
 
   /** STREAMING MinHash union maintainer — the per-source vocabulary
     * sketch a live ingest keeps (8 md5-permutation minima per lang,
@@ -545,10 +543,7 @@ object LlmOps {
     * signature tier's declared scale). */
   def q_stream_minhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val snap = md5SampleSig(s, dir).select(col("lang"), col("sig")).as[MhIn]
-      .groupByKey(_.lang)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateMh)
+    val snap = Keyed.run(md5SampleSig(s, dir).select(col("lang"), col("sig")).as[MhIn], mhFold)
       .toDF()
     val vocab = tokenSets(s, dir)
       .filter(col("doc_id") % 10 === 0 && size(col("toks")) > 0)

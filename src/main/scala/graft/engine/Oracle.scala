@@ -349,7 +349,7 @@ object Oracle {
         |SELECT day, user_id, cnt, CAST(rnk AS BIGINT) AS rnk
         |FROM r WHERE rnk <= 3 ORDER BY day, rnk""".stripMargin,
 
-    // transformWithState runs the same fold as flatMapGroupsWithState —
+    // transformWithState runs the same fold as Keyed (flatMapGroupsWithState) —
     // one oracle text, two stateful APIs.
     "q_stream_stateful_tws" ->
       """SELECT user_id, COUNT(*) AS n_events,
@@ -4866,7 +4866,7 @@ object Oracle {
     // formula bit-for-bit. Guard domain (ADVICE r8): the per-TERM
     // tmax−x ≥ 63 zero here matches Spark's per-STEP dx ≥ 63 + gap ≥ 63
     // guards exactly while the calendar span stays < 63 days (the 30-day
-    // fixture); see the matching note in StatsOps.updateDecay.
+    // fixture); see the matching note in StatsOps.decayFold.
     "q_stream_decay_topk" ->
       """WITH daily AS (SELECT event_type,
         |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, COUNT(*) AS c

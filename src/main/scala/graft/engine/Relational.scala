@@ -35,30 +35,26 @@ object Relational {
   /** Per-customer RFM fold: three order-blind accumulators (max day,
     * count, cent sum) — the snapshot after any batch split equals the
     * batch aggregate by commutativity, no in-group sort needed. */
-  private[graft] def updateRfm(ck: Long, it: Iterator[RfmOrd],
-      state: org.apache.spark.sql.streaming.GroupState[RfmState]): Iterator[RfmCust] = {
-    var st = state.getOption.getOrElse(RfmState(Int.MinValue, 0L, 0L))
-    it.foreach { o =>
-      st = RfmState(math.max(st.days, o.days), st.freq + 1L, st.cents + o.cents)
+  private[graft] val rfmFold: Keyed.Fold[RfmOrd, Long, RfmState, RfmCust] =
+    Keyed.fold((o: RfmOrd) => o.ck, RfmState(Int.MinValue, 0L, 0L)) { (ck, st0, it) =>
+      val st = it.foldLeft(st0) { (st, o) =>
+        RfmState(math.max(st.days, o.days), st.freq + 1L, st.cents + o.cents)
+      }
+      (st, Iterator.single(RfmCust(ck, st.days, st.freq, st.cents)))
     }
-    state.update(st)
-    Iterator.single(RfmCust(ck, st.days, st.freq, st.cents))
-  }
 
   /** Per-customer fold: state = first-ever order month (running min);
     * each order is labeled with the min as of its (date, orderkey)
     * position. Sorting inside the group is customer-order-bounded. */
-  private[graft] def updateNv(ck: Long, it: Iterator[NvOrd],
-      state: org.apache.spark.sql.streaming.GroupState[Long]): Iterator[NvPair] = {
-    val sorted = it.toArray.sortBy(o => (o.us, o.ok))
-    var fm = state.getOption.getOrElse(Long.MaxValue)
-    val out = sorted.map { o =>
-      if (o.m < fm) fm = o.m
-      NvPair(ck, o.m, fm)
+  private[graft] val nvFold: Keyed.Fold[NvOrd, Long, Long, NvPair] =
+    Keyed.fold((o: NvOrd) => o.ck, Long.MaxValue) { (ck, fm0, it) =>
+      var fm = fm0
+      val out = it.toArray.sortBy(o => (o.us, o.ok)).map { o =>
+        if (o.m < fm) fm = o.m
+        NvPair(ck, o.m, fm)
+      }
+      (fm, out.iterator)
     }
-    state.update(fm)
-    out.iterator
-  }
 
   private val ld = (y: Int, m: Int, d: Int) => lit(java.time.LocalDateTime.of(y, m, d, 0, 0, 0))
 
@@ -819,14 +815,11 @@ object Relational {
     * in Round18Spec covers the cross-batch state carry. */
   def q_stream_rfm(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val per = Tables.orders(s, dir)
+    val per = Keyed.run(Tables.orders(s, dir)
       .select(col("o_custkey").as("ck"),
         datediff(col("o_orderdate"), lit("1970-01-01").cast("date")).as("days"),
         (dec(col("o_totalprice")) * 100).cast("long").as("cents"))
-      .as[RfmOrd]
-      .groupByKey(_.ck)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateRfm)
+      .as[RfmOrd], rfmFold)
       .toDF()
       .select(col("o_custkey"), col("last_days"), col("freq"), col("cents"))
     rfmFrom(per)
@@ -917,16 +910,13 @@ object Relational {
     * Round17Spec covers the cross-batch state carry. */
   def q_stream_new_vs_returning(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val om = Tables.orders(s, dir)
+    val om = Keyed.run(Tables.orders(s, dir)
       .select(col("o_custkey").as("ck"),
         unix_micros(col("o_orderdate").cast("timestamp")).as("us"),
         col("o_orderkey").as("ok"),
         (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("m"))
-      .as[NvOrd]
-      .groupByKey(_.ck)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateNv)
+      .as[NvOrd], nvFold)
       .toDF()
       .select(col("o_custkey"), col("m"), col("fm"))
     nvrFrom(om)

@@ -109,12 +109,11 @@ object SketchOps {
   case class CmsIn(d: Int, bucket: Int)
   case class CmsCell(d: Int, bucket: Int, c: Long)
 
-  def updateCms(key: CmsIn, it: Iterator[CmsIn],
-      state: org.apache.spark.sql.streaming.GroupState[Long]): Iterator[CmsCell] = {
-    val c = state.getOption.getOrElse(0L) + it.size
-    state.update(c)
-    Iterator.single(CmsCell(key.d, key.bucket, c))
-  }
+  val cmsFold: Keyed.Fold[CmsIn, CmsIn, Long, CmsCell] =
+    Keyed.fold((c: CmsIn) => c, 0L) { (key, c0, it) =>
+      val c = c0 + it.size
+      (c, Iterator.single(CmsCell(key.d, key.bucket, c)))
+    }
 
   /** Driver-contract query: the incrementally-maintained sketch replaces
     * the batch grid inside the q_llm_cms_topk probe; output (and oracle)
@@ -126,15 +125,12 @@ object SketchOps {
     val toks = Tables.spread(s, Tables.documents(s, dir))
       .select(explode(split(col("text"), " ")).as("tok"))
       .filter(length(col("tok")) > 0)
-    val cms = toks.select(col("tok"),
+    val cms = Keyed.run(toks.select(col("tok"),
         explode(array((0 until CmsDepth).map(lit): _*)).as("d"))
       .select(col("d"),
         pmod(Dsl.md5Hash60(concat(col("d").cast("string"), lit(":"), col("tok"))),
           lit(CmsWidth)).cast("int").as("bucket"))
-      .as[CmsIn]
-      .groupByKey(identity)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateCms)
+      .as[CmsIn], cmsFold)
       .toDF()
     val exact = toks.groupBy(col("tok")).agg(count(lit(1)).as("exact"))
     val top = exact.orderBy(col("exact").desc, col("tok").asc).limit(10)

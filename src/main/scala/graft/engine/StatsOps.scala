@@ -181,17 +181,14 @@ object StatsOps {
     PsiSnap("", nr, nc, total.toDouble)
   }
 
-  def updatePsi(key: String, it: Iterator[PsiEvent],
-      state: org.apache.spark.sql.streaming.GroupState[PsiState]): Iterator[PsiSnap] = {
-    val st = state.getOption
-      .getOrElse(PsiState(new Array[Long](PsiBuckets), new Array[Long](PsiBuckets)))
-    it.foreach { e =>
-      if (e.isRef) st.ref(e.b) += 1 else st.cur(e.b) += 1
+  val psiFold: Keyed.Fold[PsiEvent, String, PsiState, PsiSnap] =
+    Keyed.fold((e: PsiEvent) => e.etype,
+        PsiState(new Array[Long](PsiBuckets), new Array[Long](PsiBuckets))) { (key, st, it) =>
+      it.foreach { e =>
+        if (e.isRef) st.ref(e.b) += 1 else st.cur(e.b) += 1
+      }
+      (st, Iterator.single(psiOf(st.ref, st.cur).copy(event_type = key)))
     }
-    state.update(st)
-    val s = psiOf(st.ref, st.cur)
-    Iterator.single(s.copy(event_type = key))
-  }
 
   /** Driver-contract query: the incremental drift maintainer over the
     * bounded event set; final snapshots equal the batch PSI (shared
@@ -199,15 +196,12 @@ object StatsOps {
     * metric maintained event-at-a-time instead of recomputed per batch. */
   def q_stream_drift_psi(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, dir)
+    Keyed.run(Tables.events(s, dir)
       .select(col("event_type").as("etype"),
         least(lit(PsiBuckets - 1),
           greatest(lit(0L), floor(col("value") / PsiBucketWidth))).cast("int").as("b"),
         (to_date(col("ts")) <= lit("2024-01-15").cast("date")).as("isRef"))
-      .as[PsiEvent]
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updatePsi)
+      .as[PsiEvent], psiFold)
       .toDF()
       .orderBy("event_type")
   }
@@ -227,31 +221,25 @@ object StatsOps {
   case class ResState(hs: Array[Long], ids: Array[Long])
   case class ResPick(lang: String, rank: Int, doc_id: Long, h: Long)
 
-  def updateReservoir(key: String, it: Iterator[ResDoc],
-      state: org.apache.spark.sql.streaming.GroupState[ResState]): Iterator[ResPick] = {
-    val st = state.getOption.getOrElse(ResState(Array.empty, Array.empty))
-    var pairs = st.hs.zip(st.ids)
-    it.foreach { d =>
-      pairs = (pairs :+ (d.h, d.doc_id)).sortBy(identity).take(ReservoirK)
+  val reservoirFold: Keyed.Fold[ResDoc, String, ResState, ResPick] =
+    Keyed.fold((d: ResDoc) => d.lang, ResState(Array.empty, Array.empty)) { (key, st, it) =>
+      var pairs = st.hs.zip(st.ids)
+      it.foreach { d =>
+        pairs = (pairs :+ (d.h, d.doc_id)).sortBy(identity).take(ReservoirK)
+      }
+      (ResState(pairs.map(_._1), pairs.map(_._2)),
+        pairs.iterator.zipWithIndex.map { case ((h, id), i) => ResPick(key, i + 1, id, h) })
     }
-    state.update(ResState(pairs.map(_._1), pairs.map(_._2)))
-    pairs.iterator.zipWithIndex.map { case ((h, id), i) =>
-      ResPick(key, i + 1, id, h)
-    }
-  }
 
   /** Driver-contract query: the keyed bottom-k maintainer over the
     * bounded document set; final snapshot = the batch bottom-k (window
     * rank over the hash — the oracle). */
   def q_stream_reservoir(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, dir)
+    Keyed.run(Tables.documents(s, dir)
       .select(col("lang"), col("doc_id"),
         Dsl.md5Hash60(concat(lit("res:"), col("doc_id").cast("string"))).as("h"))
-      .as[ResDoc]
-      .groupByKey(_.lang)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateReservoir)
+      .as[ResDoc], reservoirFold)
       .toDF()
       .orderBy("lang", "rank")
   }
@@ -334,24 +322,23 @@ object StatsOps {
   case class AnomHit(event_type: String, event_id: Long, value_cents: Long,
       n_prior: Long)
 
-  def updateAnomaly(key: String, it: Iterator[AnomEvent],
-      state: org.apache.spark.sql.streaming.GroupState[AnomState]): Iterator[AnomHit] = {
-    var st = state.getOption.getOrElse(AnomState(0L, 0L, 0L))
-    val hits = scala.collection.mutable.ArrayBuffer.empty[AnomHit]
-    // event-time replay order (deterministic tie-break on event_id)
-    it.toArray.sortBy(e => (e.tsUs, e.event_id)).foreach { e =>
-      if (st.n >= AnomalyMinPrior) {
-        val dev = BigInt(st.n) * e.c - BigInt(st.s1)
-        val varN = BigInt(st.n) * st.s2 - BigInt(st.s1) * st.s1
-        if (dev * dev > varN * 9) {
-          hits += AnomHit(key, e.event_id, e.c, st.n)
+  val anomalyFold: Keyed.Fold[AnomEvent, String, AnomState, AnomHit] =
+    Keyed.fold((e: AnomEvent) => e.etype, AnomState(0L, 0L, 0L)) { (key, st0, it) =>
+      var st = st0
+      val hits = scala.collection.mutable.ArrayBuffer.empty[AnomHit]
+      // event-time replay order (deterministic tie-break on event_id)
+      it.toArray.sortBy(e => (e.tsUs, e.event_id)).foreach { e =>
+        if (st.n >= AnomalyMinPrior) {
+          val dev = BigInt(st.n) * e.c - BigInt(st.s1)
+          val varN = BigInt(st.n) * st.s2 - BigInt(st.s1) * st.s1
+          if (dev * dev > varN * 9) {
+            hits += AnomHit(key, e.event_id, e.c, st.n)
+          }
         }
+        st = AnomState(st.n + 1, st.s1 + e.c, st.s2 + e.c * e.c)
       }
-      st = AnomState(st.n + 1, st.s1 + e.c, st.s2 + e.c * e.c)
+      (st, hits.iterator)
     }
-    state.update(st)
-    hits.iterator
-  }
 
   /** Driver-contract query: the streaming anomaly detector over the
     * bounded event set; the batch oracle replays the same prefix stats
@@ -359,14 +346,11 @@ object StatsOps {
     * per-batch sort is bounded by the micro-batch, not the stream. */
   def q_stream_anomaly(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, dir)
+    Keyed.run(Tables.events(s, dir)
       .select(col("event_type").as("etype"), unix_micros(col("ts")).as("tsUs"),
         col("event_id"),
         Dsl.rlong(col("value") * 100).as("c"))
-      .as[AnomEvent]
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateAnomaly)
+      .as[AnomEvent], anomalyFold)
       .toDF()
       .orderBy("event_type", "event_id")
   }
@@ -436,36 +420,30 @@ object StatsOps {
   case class HoltSnap(event_type: String, n_days: Long, level: Double,
       trend: Double, forecast: Double)
 
-  def updateHolt(key: String, it: Iterator[HoltIn],
-      state: org.apache.spark.sql.streaming.GroupState[HoltState]): Iterator[HoltSnap] = {
-    var st = state.getOption.getOrElse(HoltState(0.0, 0.0, 0L))
-    it.toArray.sortBy(_.dayUs).foreach { e =>
-      st =
+  val holtFold: Keyed.Fold[HoltIn, String, HoltState, HoltSnap] =
+    Keyed.fold((e: HoltIn) => e.etype, HoltState(0.0, 0.0, 0L)) { (key, st0, it) =>
+      val st = it.toArray.sortBy(_.dayUs).foldLeft(st0) { (st, e) =>
         if (st.n == 0L) HoltState(e.y, 0.0, 1L)
         else {
           val lNew = HoltAlpha * e.y + (1 - HoltAlpha) * (st.l + st.b)
           val bNew = HoltBeta * (lNew - st.l) + (1 - HoltBeta) * st.b
           HoltState(lNew, bNew, st.n + 1)
         }
+      }
+      (st, Iterator.single(HoltSnap(key, st.n, st.l, st.b, st.l + st.b)))
     }
-    state.update(st)
-    Iterator.single(HoltSnap(key, st.n, st.l, st.b, st.l + st.b))
-  }
 
   /** Driver-contract query: the streaming trend maintainer over the
     * bounded daily series; the oracle replays the recursion as a
     * recursive CTE. State per key is 2 doubles + a count. */
   def q_stream_holt(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, dir)
+    val daily = Tables.events(s, dir)
       .groupBy(col("event_type").as("etype"),
         date_trunc("day", col("ts")).as("day"))
       .agg(sum(Dsl.dec(col("value"))).cast("double").as("y"))
       .select(col("etype"), unix_micros(col("day")).as("dayUs"), col("y"))
-      .as[HoltIn]
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateHolt)
+    Keyed.run(daily.as[HoltIn], holtFold)
       .toDF()
       .orderBy("event_type")
   }
@@ -490,42 +468,38 @@ object StatsOps {
   case class HwSnap(event_type: String, n_days: Long, level: Double,
       trend: Double, season_next: Double, forecast: Double)
 
-  def updateHw(key: String, it: Iterator[HwIn],
-      state: org.apache.spark.sql.streaming.GroupState[HwState]): Iterator[HwSnap] = {
-    var st = state.getOption.getOrElse(HwState(0.0, 0.0, Array.fill(7)(0.0), 0L, 0L))
-    it.toArray.sortBy(_.x).foreach { e =>
-      val idx = ((e.x % 7) + 7).toInt % 7
-      st =
-        if (st.n == 0L) HwState(e.y, 0.0, st.s, 1L, e.x)
-        else {
-          val sPrev = st.s(idx)
-          val lNew = HoltAlpha * (e.y - sPrev) + (1 - HoltAlpha) * (st.l + st.b)
-          val bNew = HoltBeta * (lNew - st.l) + (1 - HoltBeta) * st.b
-          val sNew = HwGamma * (e.y - lNew) + (1 - HwGamma) * sPrev
-          val s2 = st.s.clone(); s2(idx) = sNew
-          HwState(lNew, bNew, s2, st.n + 1, e.x)
+  val holtWintersFold: Keyed.Fold[HwIn, String, HwState, HwSnap] =
+    Keyed.fold((e: HwIn) => e.etype, HwState(0.0, 0.0, Array.fill(7)(0.0), 0L, 0L)) {
+      (key, st0, it) =>
+        val st = it.toArray.sortBy(_.x).foldLeft(st0) { (st, e) =>
+          val idx = ((e.x % 7) + 7).toInt % 7
+          if (st.n == 0L) HwState(e.y, 0.0, st.s, 1L, e.x)
+          else {
+            val sPrev = st.s(idx)
+            val lNew = HoltAlpha * (e.y - sPrev) + (1 - HoltAlpha) * (st.l + st.b)
+            val bNew = HoltBeta * (lNew - st.l) + (1 - HoltBeta) * st.b
+            val sNew = HwGamma * (e.y - lNew) + (1 - HwGamma) * sPrev
+            val s2 = st.s.clone(); s2(idx) = sNew
+            HwState(lNew, bNew, s2, st.n + 1, e.x)
+          }
         }
+        val nIdx = (((st.lastX + 1) % 7) + 7).toInt % 7
+        (st, Iterator.single(
+          HwSnap(key, st.n, st.l, st.b, st.s(nIdx), st.l + st.b + st.s(nIdx))))
     }
-    state.update(st)
-    val nIdx = (((st.lastX + 1) % 7) + 7).toInt % 7
-    Iterator.single(HwSnap(key, st.n, st.l, st.b, st.s(nIdx), st.l + st.b + st.s(nIdx)))
-  }
 
   /** Driver-contract query: the seasonal maintainer's bounded-run
     * snapshot (the streaming fold over the daily series; state = 9
     * doubles + 2 longs per key at any stream length). */
   def q_stream_holt_winters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, dir)
+    val daily = Tables.events(s, dir)
       .groupBy(col("event_type").as("etype"), to_date(col("ts")).as("day"))
       .agg(sum(Dsl.dec(col("value"))).cast("double").as("y"))
       .select(col("etype"),
         datediff(col("day"), lit("2024-01-01").cast("date")).cast("bigint").as("x"),
         col("y"))
-      .as[HwIn]
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateHw)
+    Keyed.run(daily.as[HwIn], holtWintersFold)
       .toDF()
       .orderBy("event_type")
   }
@@ -658,14 +632,17 @@ object StatsOps {
     * Yule-Walker chain as q_time_ar2 — BigInt moment sums cast to
     * double exactly like the DECIMAL(38,0) device, so snapshot ≡ batch
     * and both share one oracle. */
-  private[graft] def updateAr2(key: String, it: Iterator[Ar2In],
-      state: org.apache.spark.sql.streaming.GroupState[Ar2State]): Iterator[Ar2Snap] = {
-    val m = scala.collection.mutable.Map.empty[Long, Long]
-    state.getOption.foreach(st =>
-      st.days.lazyZip(st.vals).foreach((d, v) => m(d) = v))
-    it.foreach(r => m(r.x) = r.y)
-    val days = m.keys.toSeq.sorted
-    state.update(Ar2State(days, days.map(m)))
+  private[graft] val ar2Fold: Keyed.Fold[Ar2In, String, Ar2State, Ar2Snap] =
+    Keyed.fold((r: Ar2In) => r.etype, Ar2State(Nil, Nil)) { (key, st, it) =>
+      val m = scala.collection.mutable.Map.empty[Long, Long]
+      st.days.lazyZip(st.vals).foreach((d, v) => m(d) = v)
+      it.foreach(r => m(r.x) = r.y)
+      val days = m.keys.toSeq.sorted
+      (Ar2State(days, days.map(m)), ar2Snap(key, days, m))
+    }
+
+  private def ar2Snap(key: String, days: Seq[Long],
+      m: scala.collection.Map[Long, Long]): Iterator[Ar2Snap] = {
     def r6(x: Double): Double =
       if (x.isNaN || x.isInfinite) x
       else java.math.BigDecimal.valueOf(x)
@@ -691,16 +668,13 @@ object StatsOps {
     * pattern): one snapshot row per event_type ≡ q_time_ar2. */
   def q_stream_ar2(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, dir)
+    val daily = Tables.events(s, dir)
       .groupBy(col("event_type").as("etype"), to_date(col("ts")).as("day"))
       .agg(sum(Dsl.rlong(col("value") * 100)).as("y"))
       .select(col("etype"),
         datediff(col("day"), lit("2024-01-01").cast("date")).cast("bigint").as("x"),
         col("y"))
-      .as[Ar2In]
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateAr2)
+    Keyed.run(daily.as[Ar2In], ar2Fold)
       .toDF()
       .orderBy("event_type")
   }
@@ -837,29 +811,23 @@ object StatsOps {
   case class TtSnap(event_type: String, n_ref: Long, n_cur: Long,
     s1: Long, q1: Long, s2: Long, q2: Long)
 
-  def updateTtest(key: String, it: Iterator[TtEv],
-      state: org.apache.spark.sql.streaming.GroupState[TtState]): Iterator[TtSnap] = {
-    var st = state.getOption.getOrElse(TtState(0L, 0L, 0L, 0L, 0L, 0L))
-    it.foreach { e =>
-      st =
+  val ttestFold: Keyed.Fold[TtEv, String, TtState, TtSnap] =
+    Keyed.fold((e: TtEv) => e.etype, TtState(0L, 0L, 0L, 0L, 0L, 0L)) { (key, st0, it) =>
+      val st = it.foldLeft(st0) { (st, e) =>
         if (e.isRef) st.copy(nr = st.nr + 1, s1 = st.s1 + e.c, q1 = st.q1 + e.c * e.c)
         else st.copy(nc = st.nc + 1, s2 = st.s2 + e.c, q2 = st.q2 + e.c * e.c)
+      }
+      (st, Iterator.single(TtSnap(key, st.nr, st.nc, st.s1, st.q1, st.s2, st.q2)))
     }
-    state.update(st)
-    Iterator.single(TtSnap(key, st.nr, st.nc, st.s1, st.q1, st.s2, st.q2))
-  }
 
   /** Driver-contract query: the streaming moment maintainer; snapshots
     * feed the shared Welch assembly (one oracle with q_agg_ttest). */
   def q_stream_ttest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val snap = Tables.events(s, dir).select(col("event_type").as("etype"),
+    val snap = Keyed.run(Tables.events(s, dir).select(col("event_type").as("etype"),
         Dsl.rlong(col("value") * 100).as("c"),
         (to_date(col("ts")) <= lit("2024-01-15").cast("date")).as("isRef"))
-      .as[TtEv]
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateTtest)
+      .as[TtEv], ttestFold)
       .toDF()
     ttestFrom(snap.select(col("event_type"), col("n_ref"), col("n_cur"),
       col("s1").cast("double").as("s1"), col("q1").cast("double").as("q1"),
@@ -999,26 +967,21 @@ object StatsOps {
   case class Chi2Ev(etype: String, b: Int)
   case class Chi2Snap(event_type: String, counts: Array[Long])
 
-  def updateChi2(key: String, it: Iterator[Chi2Ev],
-      state: org.apache.spark.sql.streaming.GroupState[Array[Long]]): Iterator[Chi2Snap] = {
-    val c = state.getOption.getOrElse(Array.fill(PsiBuckets)(0L))
-    it.foreach(e => c(e.b) += 1)
-    state.update(c)
-    Iterator.single(Chi2Snap(key, c))
-  }
+  val chi2Fold: Keyed.Fold[Chi2Ev, String, Array[Long], Chi2Snap] =
+    Keyed.fold((e: Chi2Ev) => e.etype, Array.fill(PsiBuckets)(0L)) { (key, c, it) =>
+      it.foreach(e => c(e.b) += 1)
+      (c, Iterator.single(Chi2Snap(key, c)))
+    }
 
   /** Driver-contract query: the streaming contingency maintainer; the
     * final per-type histograms feed the shared χ² assembly. */
   def q_stream_chi2(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val snap = Tables.events(s, dir)
+    val snap = Keyed.run(Tables.events(s, dir)
       .select(col("event_type").as("etype"),
         least(lit(PsiBuckets - 1),
           greatest(lit(0L), floor(col("value") / PsiBucketWidth))).cast("int").as("b"))
-      .as[Chi2Ev]
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateChi2)
+      .as[Chi2Ev], chi2Fold)
       .toDF()
     chi2From(snap.select(col("event_type"),
       posexplode(col("counts")).as(Seq("b", "o"))))
@@ -1027,25 +990,21 @@ object StatsOps {
   case class BenfEv(digit: Int)
   case class BenfSnap(digit: Int, o: Long)
 
-  def updateBenford(key: Int, it: Iterator[BenfEv],
-      state: org.apache.spark.sql.streaming.GroupState[Long]): Iterator[BenfSnap] = {
-    val c = state.getOption.getOrElse(0L) + it.size
-    state.update(c)
-    Iterator.single(BenfSnap(key, c))
-  }
+  val benfordFold: Keyed.Fold[BenfEv, Int, Long, BenfSnap] =
+    Keyed.fold((e: BenfEv) => e.digit, 0L) { (key, c0, it) =>
+      val c = c0 + it.size
+      (c, Iterator.single(BenfSnap(key, c)))
+    }
 
   /** Driver-contract query: the streaming first-digit counter (9 keys,
     * 8 bytes each); snapshots feed the shared Benford assembly. */
   def q_stream_benford(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val snap = Tables.events(s, dir)
+    val snap = Keyed.run(Tables.events(s, dir)
       .select(Dsl.rlong(col("value") * 100).as("cents"))
       .filter(col("cents") > 0)
       .select(substring(col("cents").cast("string"), 1, 1).cast("int").as("digit"))
-      .as[BenfEv]
-      .groupByKey(_.digit)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateBenford)
+      .as[BenfEv], benfordFold)
       .toDF()
     benfordFrom(s, snap.select(col("digit"), col("o")))
   }
@@ -1382,31 +1341,25 @@ object StatsOps {
   case class MkEv(user_id: Long, event_id: Long, us: Long, etype: String)
   case class MkTrans(from_type: String, to_type: String)
 
-  def updateMarkov(key: Long, it: Iterator[MkEv],
-      state: org.apache.spark.sql.streaming.GroupState[(Long, Long, String)])
-      : Iterator[MkTrans] = {
-    val evs = it.toSeq.sortBy(e => (e.us, e.event_id))
-    var cur = state.getOption
-    val out = scala.collection.mutable.ArrayBuffer.empty[MkTrans]
-    evs.foreach { e =>
-      cur.foreach(c => out += MkTrans(c._3, e.etype))
-      cur = Some((e.us, e.event_id, e.etype))
+  /** State: the last event (us, event_id, type); a null type = none yet. */
+  val markovFold: Keyed.Fold[MkEv, Long, (Long, Long, String), MkTrans] =
+    Keyed.fold((e: MkEv) => e.user_id, (0L, 0L, null: String)) { (_, st, it) =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[MkTrans]
+      val last = it.toSeq.sortBy(e => (e.us, e.event_id)).foldLeft(st) { (c, e) =>
+        if (c._3 != null) out += MkTrans(c._3, e.etype)
+        (e.us, e.event_id, e.etype)
+      }
+      (last, out.iterator)
     }
-    cur.foreach(state.update)
-    out.iterator
-  }
 
   /** Driver-contract query: the streaming transition maintainer; the
     * emitted pairs feed the shared Markov assembly. */
   def q_stream_markov(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pairs = Tables.events(s, dir)
+    val pairs = Keyed.run(Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
         col("event_type").as("etype"))
-      .as[MkEv]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateMarkov)
+      .as[MkEv], markovFold)
       .toDF()
     markovFrom(s, pairs.groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n_trans")))
@@ -1929,28 +1882,27 @@ object StatsOps {
   case class DecayState(lastX: Long, w: Double)
   case class DecaySnap(event_type: String, n_days: Long, last_x: Long, w_raw: Double)
 
-  def updateDecay(key: String, it: Iterator[DecayIn],
-      state: org.apache.spark.sql.streaming.GroupState[DecayState]): Iterator[DecaySnap] = {
-    var st = state.getOption.getOrElse(DecayState(Long.MinValue, 0.0))
-    var n = 0L
-    it.toArray.sortBy(_.x).foreach { e =>
-      val dx = if (st.lastX == Long.MinValue) 0L else e.x - st.lastX
-      // Overflow-guard equivalence domain (ADVICE r8): this zeroes
-      // per-STEP at dx ≥ 63 (1L << 63 would overflow) while the oracle
-      // zeroes per-TERM at total distance tmax − x ≥ 63. The two are
-      // bit-identical exactly while the calendar span stays < 63 days
-      // (true for the 30-day fixture and pinned by the oracle's
-      // matching shift guard); a wider calendar would leave a 2^-63-
-      // scale nonzero here that the oracle makes exact 0 — invisible
-      // after the round-6 display but not raw-bit-equal. Widening the
-      // calendar requires revisiting BOTH guards together.
-      val decay = if (dx >= 63) 0.0 else 1.0 / (1L << dx).toDouble
-      st = DecayState(e.x, st.w * decay + e.c)
-      n += 1
+  val decayFold: Keyed.Fold[DecayIn, String, DecayState, DecaySnap] =
+    Keyed.fold((e: DecayIn) => e.etype, DecayState(Long.MinValue, 0.0)) { (key, st0, it) =>
+      var st = st0
+      var n = 0L
+      it.toArray.sortBy(_.x).foreach { e =>
+        val dx = if (st.lastX == Long.MinValue) 0L else e.x - st.lastX
+        // Overflow-guard equivalence domain (ADVICE r8): this zeroes
+        // per-STEP at dx ≥ 63 (1L << 63 would overflow) while the oracle
+        // zeroes per-TERM at total distance tmax − x ≥ 63. The two are
+        // bit-identical exactly while the calendar span stays < 63 days
+        // (true for the 30-day fixture and pinned by the oracle's
+        // matching shift guard); a wider calendar would leave a 2^-63-
+        // scale nonzero here that the oracle makes exact 0 — invisible
+        // after the round-6 display but not raw-bit-equal. Widening the
+        // calendar requires revisiting BOTH guards together.
+        val decay = if (dx >= 63) 0.0 else 1.0 / (1L << dx).toDouble
+        st = DecayState(e.x, st.w * decay + e.c)
+        n += 1
+      }
+      (st, Iterator.single(DecaySnap(key, n, st.lastX, st.w)))
     }
-    state.update(st)
-    Iterator.single(DecaySnap(key, n, st.lastX, st.w))
-  }
 
   /** Driver-contract query: decayed heavy hitters over the daily count
     * series — the keyed-state maintainer (8 bytes weight + 8 bytes day
@@ -1965,11 +1917,7 @@ object StatsOps {
       .select(col("etype"),
         datediff(col("day"), lit("2024-01-01").cast("date")).cast("bigint").as("x"),
         col("c"))
-    val snap = daily.as[DecayIn]
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateDecay)
-      .toDF()
+    val snap = Keyed.run(daily.as[DecayIn], decayFold).toDF()
     val tmax = daily.agg(max(col("x")).as("tmax"))
     val norm = snap.crossJoin(broadcast(tmax))
       .withColumn("gap", col("tmax") - col("last_x"))
@@ -2033,27 +1981,25 @@ object StatsOps {
     * also what makes the oracle a window expression). State per key:
     * 8 longs / 64 B (seenRef, sRef, r, rMin, cMax, cMaxX, alarms,
     * monitored) — the bounded-state drift detector a monitor deploys. */
-  def updateCusumPos(key: String, it: Iterator[CusumIn],
-      state: org.apache.spark.sql.streaming.GroupState[Array[Long]]):
-      Iterator[CusumSnap] = {
+  val cusumFold: Keyed.Fold[CusumIn, String, Array[Long], CusumSnap] =
     // state layout: seenRef, sRef, r, rMin, cMax, cMaxX, alarms, monitored
-    val st = state.getOption.getOrElse(Array(0L, 0L, 0L, 0L, Long.MinValue, -1L, 0L, 0L))
-    it.toArray.sortBy(_.x).foreach { e =>
-      if (st(0) < CusumRefDays) { st(0) += 1; st(1) += e.y }
-      else {
-        st(7) += 1
-        val d = CusumRefDays * e.y - st(1)
-        st(2) += d
-        if (st(2) < st(3)) st(3) = st(2)
-        val c = st(2) - math.min(0L, st(3))
-        if (c > st(4)) { st(4) = c; st(5) = e.x }
-        if (10L * c > CusumRefDays * st(1)) st(6) += 1
+    Keyed.fold((e: CusumIn) => e.etype,
+        Array(0L, 0L, 0L, 0L, Long.MinValue, -1L, 0L, 0L)) { (key, st, it) =>
+      it.toArray.sortBy(_.x).foreach { e =>
+        if (st(0) < CusumRefDays) { st(0) += 1; st(1) += e.y }
+        else {
+          st(7) += 1
+          val d = CusumRefDays * e.y - st(1)
+          st(2) += d
+          if (st(2) < st(3)) st(3) = st(2)
+          val c = st(2) - math.min(0L, st(3))
+          if (c > st(4)) { st(4) = c; st(5) = e.x }
+          if (10L * c > CusumRefDays * st(1)) st(6) += 1
+        }
       }
+      (st, if (st(7) == 0L) Iterator.empty
+        else Iterator.single(CusumSnap(key, st(0), st(7), st(4), st(5), st(6))))
     }
-    state.update(st)
-    if (st(7) == 0L) Iterator.empty
-    else Iterator.single(CusumSnap(key, st(0), st(7), st(4), st(5), st(6)))
-  }
 
   /** Driver-contract query: the streaming CUSUM drift monitor over the
     * bounded daily series (the batch-mode fMGWS run of the maintainer,
@@ -2070,10 +2016,7 @@ object StatsOps {
       .select(col("etype"),
         datediff(col("day"), lit("2024-01-01").cast("date")).cast("bigint").as("x"),
         col("y"))
-    daily.as[CusumIn]
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateCusumPos)
+    Keyed.run(daily.as[CusumIn], cusumFold)
       .toDF()
       .orderBy("event_type")
   }
@@ -2171,43 +2114,37 @@ object StatsOps {
     * day's 20-tap numerator and EWMA once ≥ 20 days are seen. Same
     * exact-integer numerator as the batch window, so both share one
     * oracle (the q_stream_ttest shared-assembly device). */
-  def updateEwma(key: String, it: Iterator[EwmaIn],
-      state: org.apache.spark.sql.streaming.GroupState[Array[Long]]):
-      Iterator[EwmaSnap] = {
+  val ewmaFold: Keyed.Fold[EwmaIn, String, Array[Long], EwmaSnap] =
     // state layout: n, lastX, ring[EwmaTaps] (write pos = n % taps)
-    val st = state.getOption.getOrElse(Array.fill(2 + EwmaTaps)(0L))
-    it.toArray.sortBy(_.x).foreach { e =>
-      st(2 + (st(0) % EwmaTaps).toInt) = e.y
-      st(0) += 1
-      st(1) = e.x
-    }
-    state.update(st)
-    if (st(0) < EwmaTaps) Iterator.empty
-    else {
+    Keyed.fold((e: EwmaIn) => e.etype, Array.fill(2 + EwmaTaps)(0L)) { (key, st, it) =>
+      it.toArray.sortBy(_.x).foreach { e =>
+        st(2 + (st(0) % EwmaTaps).toInt) = e.y
+        st(0) += 1
+        st(1) = e.x
+      }
       val n = st(0)
-      val num = (0 until EwmaTaps).map { k =>
-        val idx = ((n - 1 - k) % EwmaTaps).toInt
-        st(2 + idx) * (1L << (EwmaTaps - 1 - k))
-      }.sum
-      Iterator.single(EwmaSnap(key, n, st(1), num, num.toDouble / EwmaDenom.toDouble))
+      (st, if (n < EwmaTaps) Iterator.empty
+        else {
+          val num = (0 until EwmaTaps).map { k =>
+            val idx = ((n - 1 - k) % EwmaTaps).toInt
+            st(2 + idx) * (1L << (EwmaTaps - 1 - k))
+          }.sum
+          Iterator.single(EwmaSnap(key, n, st(1), num, num.toDouble / EwmaDenom.toDouble))
+        })
     }
-  }
 
   /** Driver-contract query: the streaming EWMA maintainer over the
     * bounded daily series (the q_stream_cusum batch-mode fMGWS run);
     * one snapshot row per event_type = the latest 20-tap EWMA. */
   def q_stream_ewma(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, dir)
+    val daily = Tables.events(s, dir)
       .groupBy(col("event_type").as("etype"), to_date(col("ts")).as("day"))
       .agg(sum(Dsl.rlong(col("value") * 100)).as("y"))
       .select(col("etype"),
         datediff(col("day"), lit("2024-01-01").cast("date")).cast("bigint").as("x"),
         col("y"))
-      .as[EwmaIn]
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateEwma)
+    Keyed.run(daily.as[EwmaIn], ewmaFold)
       .toDF()
       .orderBy("event_type")
   }

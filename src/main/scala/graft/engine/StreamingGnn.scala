@@ -2,13 +2,12 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming GNN embedding maintenance — the reference's headline
   * capability (`/root/reference/README.md:1-2` "Streaming GNN implemented
   * using Flink + DL4J"): as co-purchase edge events arrive, each
   * customer's neighborhood-mean embedding is updated incrementally in
-  * keyed state (Flink ValueState analog = GroupState), exactly the
+  * keyed state (Flink ValueState analog = `Keyed`), exactly the
   * event-at-a-time aggregator of TGN/GraphSAGE-style systems.
   *
   * State per vertex is (count, 64 f64 sums) — 520 bytes — sharded by key
@@ -28,32 +27,41 @@ object StreamingGnn {
 
   val Dim = 64
 
-  /** Incremental neighbor-mean update: fold new edges into per-customer
-    * running sums, emit the refreshed embedding snapshot (dims 1–4). */
-  def updateEmbed(key: Long, it: Iterator[EdgeFeat],
-      state: GroupState[GnnState]): Iterator[CustEmbed] = {
-    val st = state.getOption.getOrElse(GnnState(0L, new Array[Double](Dim)))
-    var n = st.n
-    val sums = st.sums
-    it.foreach { e =>
-      var i = 0
-      val m = math.min(e.vec.length, Dim)
-      while (i < m) { sums(i) += e.vec(i); i += 1 }
-      n += 1
-    }
-    state.update(GnnState(n, sums))
-    if (n == 0L) Iterator.empty
-    else Iterator.single(CustEmbed(key, n,
-      sums(0) / n, sums(1) / n, sums(2) / n, sums(3) / n))
+  /** (src, embedding) edge rows as the typed input of the neighbor folds. */
+  private def feats(s: SparkSession, edgeFeats: DataFrame): Dataset[EdgeFeat] = {
+    import s.implicits._
+    edgeFeats.select(col("src").as("cust"), col("embedding").as("vec")).as[EdgeFeat]
   }
+
+  /** Incremental neighbor mean: fold new edges into the per-customer
+    * (count, 64 sums) and emit `out` of the refreshed state — the one
+    * accumulator behind the embedding snapshot and layer 1. */
+  private def meanFold[O](out: (Long, GnnState) => O) =
+    Keyed.fold((e: EdgeFeat) => e.cust, GnnState(0L, new Array[Double](Dim))) {
+      (key, st, it) =>
+        var n = st.n
+        val sums = st.sums
+        it.foreach { e =>
+          var i = 0
+          val m = math.min(e.vec.length, Dim)
+          while (i < m) { sums(i) += e.vec(i); i += 1 }
+          n += 1
+        }
+        val next = GnnState(n, sums)
+        (next, Iterator.single(out(key, next)))
+    }
+
+  /** Embedding snapshot: the neighbor mean's dims 1–4. */
+  val embedFold: Keyed.Fold[EdgeFeat, Long, GnnState, CustEmbed] =
+    meanFold { (key, g) =>
+      CustEmbed(key, g.n, g.sums(0) / g.n, g.sums(1) / g.n, g.sums(2) / g.n, g.sums(3) / g.n)
+    }
 
   /** Shared transform: (cust, part-embedding) edge rows → per-customer
     * embedding snapshots via keyed state. */
   def embedStream(s: SparkSession, edgeFeats: DataFrame): Dataset[CustEmbed] = {
     import s.implicits._
-    edgeFeats.select(col("src").as("cust"), col("embedding").as("vec")).as[EdgeFeat]
-      .groupByKey(_.cust)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updateEmbed)
+    Keyed.run(feats(s, edgeFeats), embedFold)
   }
 
   /** Driver-contract query: run the incremental maintainer over the full
@@ -77,7 +85,7 @@ object StreamingGnn {
   // state pattern of distributed streaming-GNN engines) and re-aggregates
   // g = ReLU(W·mean_c h1(c) + b) whenever one changes.
   //
-  // Deployment shape: Spark requires flatMapGroupsWithState to be the
+  // Deployment shape: Spark requires a keyed-state operator to be the
   // terminal stateful operator of a streaming query, so the two layers run
   // as two chained jobs connected by a stream (exactly Flink's iteration
   // edge made explicit); the scenario test wires that two-hop pipeline.
@@ -93,42 +101,24 @@ object StreamingGnn {
   case class PartEmbed(part_key: Long, n_custs: Long,
       g1: Double, g2: Double, g3: Double, g4: Double)
 
-  /** Layer 1: fold incoming part-embedding edges into the per-customer
-    * accumulator, emit the refreshed DENSE representation (full 64 dims —
-    * layer 2 consumes all of them, unlike the 4-dim display snapshot of
-    * q_stream_gnn_embed). */
-  def updateCustRep(key: Long, it: Iterator[EdgeFeat],
-      state: GroupState[GnnState]): Iterator[CustRep] = {
-    val st = state.getOption.getOrElse(GnnState(0L, new Array[Double](Dim)))
-    var n = st.n
-    val sums = st.sums
-    it.foreach { e =>
-      var i = 0
-      val m = math.min(e.vec.length, Dim)
-      while (i < m) { sums(i) += e.vec(i); i += 1 }
-      n += 1
-    }
-    state.update(GnnState(n, sums))
-    if (n == 0L) Iterator.empty
-    else {
+  /** Layer 1: the neighbor mean's refreshed DENSE representation (full
+    * 64 dims — layer 2 consumes all of them, unlike the 4-dim display
+    * snapshot of q_stream_gnn_embed). */
+  val custRepFold: Keyed.Fold[EdgeFeat, Long, GnnState, CustRep] =
+    meanFold { (key, g) =>
       val mean = new Array[Double](Dim)
       var i = 0
-      while (i < Dim) { mean(i) = sums(i) / n; i += 1 }
-      Iterator.single(CustRep(key, Gnn.forward(mean)))
+      while (i < Dim) { mean(i) = g.sums(i) / g.n; i += 1 }
+      CustRep(key, Gnn.forward(mean))
     }
-  }
 
   /** Layer 2: replace the stored representation of each updated neighbor
     * customer, then re-aggregate. The fold iterates neighbors in customer-
     * key order so the FP sum order is run-to-run stable (the 6dp rounding
     * absorbs the difference vs the batch aggregation order anyway). */
-  def updatePartRep(key: Long, it: Iterator[PartMsg],
-      state: GroupState[L2State]): Iterator[PartEmbed] = {
-    val prior = state.getOption.map(_.reps).getOrElse(Map.empty[Long, Array[Double]])
-    val reps = it.foldLeft(prior)((acc, m) => acc.updated(m.cust, m.rep))
-    if (reps.isEmpty) Iterator.empty
-    else {
-      state.update(L2State(reps))
+  val partRepFold: Keyed.Fold[PartMsg, Long, L2State, PartEmbed] =
+    Keyed.fold((m: PartMsg) => m.part, L2State(Map.empty)) { (key, st, it) =>
+      val reps = it.foldLeft(st.reps)((acc, m) => acc.updated(m.cust, m.rep))
       val sums = new Array[Double](Dim)
       val n = reps.size
       reps.toSeq.sortBy(_._1).foreach { case (_, v) =>
@@ -137,23 +127,19 @@ object StreamingGnn {
       var i = 0
       while (i < Dim) { sums(i) /= n; i += 1 }
       val g = Gnn.forward(sums)
-      Iterator.single(PartEmbed(key, n.toLong, g(0), g(1), g(2), g(3)))
+      (L2State(reps), Iterator.single(PartEmbed(key, n.toLong, g(0), g(1), g(2), g(3))))
     }
-  }
 
   /** Layer-1 stage: edge-feature rows → refreshed customer representations. */
   def custRepStream(s: SparkSession, edgeFeats: DataFrame): Dataset[CustRep] = {
     import s.implicits._
-    edgeFeats.select(col("src").as("cust"), col("embedding").as("vec")).as[EdgeFeat]
-      .groupByKey(_.cust)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updateCustRep)
+    Keyed.run(feats(s, edgeFeats), custRepFold)
   }
 
   /** Layer-2 stage: (part, cust, h1) messages → refreshed part embeddings. */
   def partRepStream(s: SparkSession, msgs: Dataset[PartMsg]): Dataset[PartEmbed] = {
     import s.implicits._
-    msgs.groupByKey(_.part)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updatePartRep)
+    Keyed.run(msgs, partRepFold)
   }
 
   /** Driver-contract query: the chained 2-layer maintainer over the full
@@ -211,29 +197,24 @@ object StreamingGnn {
     out
   }
 
-  def updatePool(key: Long, it: Iterator[EdgeFeat],
-      state: GroupState[PoolState]): Iterator[CustPool] = {
-    val st = state.getOption
-      .getOrElse(PoolState(0L, Array.fill(4)(Double.NegativeInfinity)))
-    var n = st.n
-    val mx = st.mx
-    it.foreach { e =>
-      val z = poolZ(e.vec)
-      var i = 0
-      while (i < 4) { if (z(i) > mx(i)) mx(i) = z(i); i += 1 }
-      n += 1
+  val poolFold: Keyed.Fold[EdgeFeat, Long, PoolState, CustPool] =
+    Keyed.fold((e: EdgeFeat) => e.cust, PoolState(0L, Array.fill(4)(Double.NegativeInfinity))) {
+      (key, st, it) =>
+        var n = st.n
+        val mx = st.mx
+        it.foreach { e =>
+          val z = poolZ(e.vec)
+          var i = 0
+          while (i < 4) { if (z(i) > mx(i)) mx(i) = z(i); i += 1 }
+          n += 1
+        }
+        (PoolState(n, mx), Iterator.single(CustPool(key, n, mx(0), mx(1), mx(2), mx(3))))
     }
-    state.update(PoolState(n, mx))
-    if (n == 0L) Iterator.empty
-    else Iterator.single(CustPool(key, n, mx(0), mx(1), mx(2), mx(3)))
-  }
 
   /** Shared transform for the scenario tests and the contract query. */
   def poolStream(s: SparkSession, edgeFeats: DataFrame): Dataset[CustPool] = {
     import s.implicits._
-    edgeFeats.select(col("src").as("cust"), col("embedding").as("vec")).as[EdgeFeat]
-      .groupByKey(_.cust)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updatePool)
+    Keyed.run(feats(s, edgeFeats), poolFold)
   }
 
   /** Driver-contract query: final streaming snapshots must equal the

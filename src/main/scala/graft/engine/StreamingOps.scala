@@ -131,22 +131,20 @@ object StreamingOps {
     * longs — exact and order-independent, mirroring the DECIMAL(18,2)
     * oracle policy. Runs identically under batch (one invocation, empty
     * state) and streaming (incremental state across micro-batches). */
-  def statefulUpdate(key: Long, events: Iterator[Ev],
-      state: GroupState[UserState]): Iterator[UserAgg] = {
-    val init = state.getOption.getOrElse(UserState(0L, null, 0L))
-    var n = init.n
-    var last = init.lastTs
-    var cents = init.cents
-    events.foreach { e =>
-      n += 1
-      if (last == null || e.ts.compareTo(last) > 0) last = e.ts
-      cents += java.math.BigDecimal.valueOf(e.value)
-        .setScale(2, java.math.RoundingMode.HALF_UP)
-        .movePointRight(2).longValueExact()
+  val userAggFold: Keyed.Fold[Ev, Long, UserState, UserAgg] =
+    Keyed.fold((e: Ev) => e.user_id, UserState(0L, null, 0L)) { (key, init, events) =>
+      var n = init.n
+      var last = init.lastTs
+      var cents = init.cents
+      events.foreach { e =>
+        n += 1
+        if (last == null || e.ts.compareTo(last) > 0) last = e.ts
+        cents += java.math.BigDecimal.valueOf(e.value)
+          .setScale(2, java.math.RoundingMode.HALF_UP)
+          .movePointRight(2).longValueExact()
+      }
+      (UserState(n, last, cents), Iterator.single(UserAgg(key, n, last, cents / 100.0)))
     }
-    state.update(UserState(n, last, cents))
-    Iterator.single(UserAgg(key, n, last, cents / 100.0))
-  }
 
   case class SessionOut(user_id: Long, n_events: Long, last_ts: java.sql.Timestamp)
 
@@ -214,7 +212,7 @@ object StreamingOps {
     * replacement for flatMapGroupsWithState and the closest Spark analog
     * of Flink's keyed `ValueState` + `processElement` — typed state
     * handles in the state store (RocksDB provider at scale), per-key
-    * timers, TTL. Same fold as statefulUpdate so both APIs are covered
+    * timers, TTL. Same fold as userAggFold so both APIs are covered
     * by the same oracle. */
   class UserAggProcessor extends StatefulProcessor[Long, Ev, UserAgg] {
     @transient private var st: ValueState[UserState] = _
@@ -280,9 +278,8 @@ object StreamingOps {
 
   def statefulSnapshot(s: SparkSession, ev: DataFrame): Dataset[UserAgg] = {
     import s.implicits._
-    ev.select(col("event_id"), col("user_id"), col("ts"), col("value")).as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(statefulUpdate)
+    Keyed.run(ev.select(col("event_id"), col("user_id"), col("ts"), col("value")).as[Ev],
+      userAggFold)
   }
 
   /** Stream-stream interval join (Flink intervalJoin analog): purchases
@@ -937,24 +934,21 @@ object StreamingOps {
     * order) with ts < maxTs − delay is LATE (it would be dropped by a
     * watermark-evicted window). State: 4 longs / 32 B per key (maxTs µs,
     * n, nLate, maxDelay). Exact integer µs arithmetic end to end. */
-  def updateLate(key: String, it: Iterator[LateIn],
-      state: GroupState[Array[Long]]): Iterator[LateSnap] = {
-    val st = state.getOption.getOrElse(Array(Long.MinValue, 0L, 0L, 0L))
-    it.toArray.sortBy(_.eid).foreach { e =>
-      st(1) += 1
-      val wm = if (st(0) == Long.MinValue) Long.MinValue
-        else st(0) - LateDelaySec * 1000000L
-      if (e.us < wm) {
-        st(2) += 1
-        val d = (wm - e.us) / 1000000L
-        if (d > st(3)) st(3) = d
+  val lateFold: Keyed.Fold[LateIn, String, Array[Long], LateSnap] =
+    Keyed.fold((e: LateIn) => e.etype, Array(Long.MinValue, 0L, 0L, 0L)) { (key, st, it) =>
+      it.toArray.sortBy(_.eid).foreach { e =>
+        st(1) += 1
+        val wm = if (st(0) == Long.MinValue) Long.MinValue
+          else st(0) - LateDelaySec * 1000000L
+        if (e.us < wm) {
+          st(2) += 1
+          val d = (wm - e.us) / 1000000L
+          if (d > st(3)) st(3) = d
+        }
+        if (e.us > st(0)) st(0) = e.us
       }
-      if (e.us > st(0)) st(0) = e.us
+      (st, Iterator.single(LateSnap(key, st(1), st(2), st(3))))
     }
-    state.update(st)
-    if (st(1) == 0L) Iterator.empty
-    else Iterator.single(LateSnap(key, st(1), st(2), st(3)))
-  }
 
   /** Driver-contract query: late-data accounting per event_type — how
     * many events arrive behind the 10-minute watermark and by how much.
@@ -962,12 +956,10 @@ object StreamingOps {
     * (event_id) order. */
   def q_stream_late_events(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, dir)
+    Keyed.run(Tables.events(s, dir)
       .select(col("event_type").as("etype"), col("event_id").as("eid"),
         unix_micros(col("ts")).as("us"))
-      .as[LateIn]
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updateLate)
+      .as[LateIn], lateFold)
       .toDF()
       .orderBy("event_type")
   }

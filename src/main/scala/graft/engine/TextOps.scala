@@ -423,24 +423,18 @@ object TextOps {
   case class XentTok(doc_id: Long, lang: String, nll9: Long)
   case class XentSnap(doc_id: Long, lang: String, n_tokens: Long, s9: Long)
 
-  def updateXent(key: Long, it: Iterator[XentTok],
-      state: org.apache.spark.sql.streaming.GroupState[(String, Long, Long)])
-      : Iterator[XentSnap] = {
-    var (lang, n, s9) = state.getOption.getOrElse(("", 0L, 0L))
-    it.foreach { t => lang = t.lang; n += 1; s9 += t.nll9 }
-    state.update((lang, n, s9))
-    Iterator.single(XentSnap(key, lang, n, s9))
-  }
+  val xentFold: Keyed.Fold[XentTok, Long, (String, Long, Long), XentSnap] =
+    Keyed.fold((t: XentTok) => t.doc_id, ("", 0L, 0L)) { (key, st, it) =>
+      var (lang, n, s9) = st
+      it.foreach { t => lang = t.lang; n += 1; s9 += t.nll9 }
+      ((lang, n, s9), Iterator.single(XentSnap(key, lang, n, s9)))
+    }
 
   /** Driver-contract query: the streaming per-doc cross-entropy
     * maintainer; the final snapshots feed the shared decile assembly. */
   def q_stream_ppl_bucket(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val snap = heldoutNll9(s, dir)
-      .as[XentTok]
-      .groupByKey(_.doc_id)
-      .flatMapGroupsWithState(org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(updateXent)
+    val snap = Keyed.run(heldoutNll9(s, dir).as[XentTok], xentFold)
       .toDF()
     pplBucketFrom(snap.select(col("doc_id"), col("lang"), col("n_tokens"),
       xentOf(col("s9"), col("n_tokens")).as("xent")))

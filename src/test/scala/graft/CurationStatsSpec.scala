@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{CurationOps, StatsOps, Tables}
+import graft.engine.{CurationOps, Keyed, StatsOps, Tables}
 
 /** Round-8 curation + stats operators: semantic invariants beyond the
   * oracle hash-compare. */
@@ -101,9 +101,7 @@ class CurationStatsSpec extends AnyFunSuite {
       StatsOps.PsiEvent("a", 0, false))
     val b2 = Seq(StatsOps.PsiEvent("a", 2, false), StatsOps.PsiEvent("a", 0, true))
     val ms = MemoryStream[StatsOps.PsiEvent]
-    val q = ms.toDS().groupByKey(_.etype)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(StatsOps.updatePsi)
+    val q = Keyed.run(ms.toDS(), StatsOps.psiFold)
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("psist").start()
     ms.addData(b1: _*); q.processAllAvailable()

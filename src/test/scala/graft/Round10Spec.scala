@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{LlmOps, StatsOps, Tables}
+import graft.engine.{Keyed, LlmOps, StatsOps, Tables}
 
 /** Driver-round-7 additions: semantic invariants beyond the oracle
   * hash-compare for the trend/changepoint monitors and the MinHash
@@ -386,10 +386,7 @@ class Round10Spec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.OutputMode
     val days = (1 to 17).map(d => StatsOps.HwIn("t", d.toLong, d * 10.0 + (d % 7) * 3.0))
     val ms = MemoryStream[StatsOps.HwIn]
-    val q = ms.toDS()
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(StatsOps.updateHw)
+    val q = Keyed.run(ms.toDS(), StatsOps.holtWintersFold)
       .toDF()
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("hwst").start()

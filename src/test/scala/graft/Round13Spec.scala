@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ClusterOps, GraphOps, LlmOps, RankOps, Relational, StatsOps, Tables, TextOps}
+import graft.engine.{ClusterOps, GraphOps, Keyed, LlmOps, RankOps, Relational, StatsOps, Tables, TextOps}
 
 /** Round-13 additions (driver round 7, this session): plain-Scala
   * replays and semantic invariants for the transition-graph census,
@@ -183,10 +183,7 @@ class Round13Spec extends AnyFunSuite {
     val days = Seq((1L, 100L), (2L, 50L), (3L, 80L), (5L, 10L), (6L, 40L))
       .map { case (x, c) => StatsOps.DecayIn("t", x, c) }
     val ms = MemoryStream[StatsOps.DecayIn]
-    val q = ms.toDS()
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(StatsOps.updateDecay)
+    val q = Keyed.run(ms.toDS(), StatsOps.decayFold)
       .toDF()
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("decayst").start()
@@ -209,9 +206,7 @@ class Round13Spec extends AnyFunSuite {
     val evs = Seq(("a", 0), ("a", 1), ("a", 1), ("b", 2), ("b", 0), ("a", 9))
       .map { case (t, b) => StatsOps.Chi2Ev(t, b) }
     val ms = MemoryStream[StatsOps.Chi2Ev]
-    val q = ms.toDS().groupByKey(_.etype)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(StatsOps.updateChi2)
+    val q = Keyed.run(ms.toDS(), StatsOps.chi2Fold)
       .toDF()
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("chi2st").start()
@@ -231,9 +226,7 @@ class Round13Spec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode
     val ms = MemoryStream[StatsOps.BenfEv]
-    val q = ms.toDS().groupByKey(_.digit)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(StatsOps.updateBenford)
+    val q = Keyed.run(ms.toDS(), StatsOps.benfordFold)
       .toDF()
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("benfst").start()
@@ -254,9 +247,7 @@ class Round13Spec extends AnyFunSuite {
       ("a", 200L, false), ("a", 120L, true), ("a", 210L, false))
       .map { case (t, c, r) => StatsOps.TtEv(t, c, r) }
     val ms = MemoryStream[StatsOps.TtEv]
-    val q = ms.toDS().groupByKey(_.etype)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(StatsOps.updateTtest)
+    val q = Keyed.run(ms.toDS(), StatsOps.ttestFold)
       .toDF()
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("ttestst").start()

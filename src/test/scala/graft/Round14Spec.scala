@@ -48,28 +48,12 @@ class Round14Spec extends AnyFunSuite {
   }
 
   test("q_stream_cusum fold: micro-batch split equals single shot; drawdown = recursion") {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
     // deterministic 25-day series with a level shift at day 18
     val days = (0 until 25).map { x =>
       StatsOps.CusumIn("t", x.toLong, 1000L + (x % 7) * 13L + (if (x >= 18) 400L else 0L))
     }
-    def fold(batches: Seq[Seq[StatsOps.CusumIn]]): StatsOps.CusumSnap = {
-      var st: Option[Array[Long]] = None
-      var out: StatsOps.CusumSnap = null
-      batches.foreach { b =>
-        val gs = TestGroupState.create[Array[Long]](
-          optionalState = st.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-          timeoutConf = GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 0L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        val res = StatsOps.updateCusumPos("t", b.iterator, gs).toSeq
-        if (res.nonEmpty) out = res.last
-        st = Some(gs.get)
-      }
-      out
-    }
+    def fold(batches: Seq[Seq[StatsOps.CusumIn]]): StatsOps.CusumSnap =
+      KeyedReplay.rows(StatsOps.cusumFold, batches).last
     val single = fold(Seq(days))
     val split = fold(Seq(days.take(12), days.slice(12, 19), days.drop(19)))
     assert(split == single,

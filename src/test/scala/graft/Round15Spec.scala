@@ -90,26 +90,10 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("q_stream_ewma fold: micro-batch split equals single shot equals batch last row") {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
     val series = (0 until 30).map(x =>
       StatsOps.EwmaIn("t", x.toLong, 900L + (x % 11) * 37L))
-    def fold(batches: Seq[Seq[StatsOps.EwmaIn]]): StatsOps.EwmaSnap = {
-      var st: Option[Array[Long]] = None
-      var out: StatsOps.EwmaSnap = null
-      batches.foreach { b =>
-        val gs = TestGroupState.create[Array[Long]](
-          optionalState = st.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-          timeoutConf = GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 0L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        val it = StatsOps.updateEwma("t", b.iterator, gs)
-        it.foreach(out = _)
-        st = if (gs.exists) Some(gs.get) else None
-      }
-      out
-    }
+    def fold(batches: Seq[Seq[StatsOps.EwmaIn]]): StatsOps.EwmaSnap =
+      KeyedReplay.rows(StatsOps.ewmaFold, batches).last
     val single = fold(Seq(series))
     val split = fold(series.grouped(7).toSeq)
     assert(single == split, "state carry across micro-batches must not change the snapshot")
@@ -307,7 +291,6 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("q_stream_late_events fold: batch split equals single shot; late iff behind watermark") {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
     import graft.engine.StreamingOps
     // arrival order with one 20-minute-late straggler and one mild one
     val evs = Seq(
@@ -316,22 +299,8 @@ class Round15Spec extends AnyFunSuite {
       StreamingOps.LateIn("t", 2, (2000L - 1200) * 1000000), // 20 min behind max
       StreamingOps.LateIn("t", 3, (2000L - 500) * 1000000),  // inside the 10-min delay
       StreamingOps.LateIn("t", 4, 3000L * 1000000))
-    def fold(batches: Seq[Seq[StreamingOps.LateIn]]): StreamingOps.LateSnap = {
-      var st: Option[Array[Long]] = None
-      var out: StreamingOps.LateSnap = null
-      batches.foreach { b =>
-        val gs = TestGroupState.create[Array[Long]](
-          optionalState = st.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-          timeoutConf = GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 0L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        StreamingOps.updateLate("t", b.iterator, gs).foreach(out = _)
-        st = if (gs.exists) Some(gs.get) else None
-      }
-      out
-    }
+    def fold(batches: Seq[Seq[StreamingOps.LateIn]]): StreamingOps.LateSnap =
+      KeyedReplay.rows(StreamingOps.lateFold, batches).last
     val single = fold(Seq(evs))
     val split = fold(evs.grouped(2).toSeq)
     assert(single == split, "micro-batch split must not change the snapshot")

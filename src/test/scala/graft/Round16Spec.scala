@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{StatsOps, TextOps}
+import graft.engine.{Keyed, StatsOps, TextOps}
 
 /** Plain-Scala replays of the round-16 operators at sf0.001 — the
   * independent-mirror discipline of Round13/14/15Spec: every number the
@@ -94,9 +94,7 @@ class Round16Spec extends AnyFunSuite {
       TextOps.XentTok(10L, "en", 800000000L), TextOps.XentTok(20L, "de", 500000000L))
     val b2 = Seq(TextOps.XentTok(10L, "en", 1000000000L))
     val ms = MemoryStream[TextOps.XentTok]
-    val q = ms.toDS().groupByKey(_.doc_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(TextOps.updateXent)
+    val q = Keyed.run(ms.toDS(), TextOps.xentFold)
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("pplst").start()
     ms.addData(b1: _*); q.processAllAvailable()
@@ -481,9 +479,7 @@ class Round16Spec extends AnyFunSuite {
       StatsOps.MkEv(1L, 10L, 1000L, "view"))
     val b2 = Seq(StatsOps.MkEv(1L, 12L, 3000L, "purchase"))
     val ms = MemoryStream[StatsOps.MkEv]
-    val q = ms.toDS().groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(StatsOps.updateMarkov)
+    val q = Keyed.run(ms.toDS(), StatsOps.markovFold)
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("mkst").start()
     ms.addData(b1: _*); q.processAllAvailable()

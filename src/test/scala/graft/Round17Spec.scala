@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{Gnn, GraphOps, StatsOps, Tables, TextOps}
+import graft.engine.{Gnn, GraphOps, Keyed, StatsOps, Tables, TextOps}
 
 /** Plain-Scala replays of the round-17 operators at sf0.001 — the
   * independent-mirror discipline of Round13..16Spec: every number the
@@ -230,9 +230,7 @@ class Round17Spec extends AnyFunSuite {
     val b2 = Seq(Relational.NvOrd(1L, 3000L, 12L, 24003L),
       Relational.NvOrd(2L, 3000L, 13L, 24003L))
     val ms = MemoryStream[Relational.NvOrd]
-    val q = ms.toDS().groupByKey(_.ck)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(Relational.updateNv)
+    val q = Keyed.run(ms.toDS(), Relational.nvFold)
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("nvst").start()
     ms.addData(b1: _*); q.processAllAvailable()

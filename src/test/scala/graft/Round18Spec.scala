@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ClusterOps, CurationOps, StatsOps, Tables, TextOps}
+import graft.engine.{ClusterOps, CurationOps, Keyed, StatsOps, Tables, TextOps}
 
 /** Plain-Scala replays of the round-18 operators at sf0.001 — the
   * independent-mirror discipline of Round13..17Spec: every number the
@@ -358,10 +358,7 @@ class Round18Spec extends AnyFunSuite {
     val b2 = Seq(Relational.RfmOrd(1L, 150, 2000L),
       Relational.RfmOrd(2L, 300, 700L))
     val ms = MemoryStream[Relational.RfmOrd]
-    val q = ms.toDS().groupByKey(_.ck)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        Relational.updateRfm)
+    val q = Keyed.run(ms.toDS(), Relational.rfmFold)
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("rfmst").start()
     ms.addData(b1: _*); q.processAllAvailable()
@@ -568,10 +565,7 @@ class Round18Spec extends AnyFunSuite {
     val b2 = Seq(ClusterOps.IsoIn(0L, vec(1000), 11L),
       ClusterOps.IsoIn(1L, vec(5), 3L))
     val ms = MemoryStream[ClusterOps.IsoIn]
-    val q = ms.toDS().groupByKey(_.shard)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        ClusterOps.updateIso)
+    val q = Keyed.run(ms.toDS(), ClusterOps.isoFold)
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("isost").start()
     ms.addData(b1: _*); q.processAllAvailable()
@@ -691,10 +685,7 @@ class Round18Spec extends AnyFunSuite {
     val b2 = Seq(LlmOps.MhIn("en", sig(5, 9, 7, 3, 8, 6, 4, 2)),
       LlmOps.MhIn("en", sig(6, 1, 7, 9, 2, 6, 9, 1)))
     val ms = MemoryStream[LlmOps.MhIn]
-    val q = ms.toDS().groupByKey(_.lang)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        LlmOps.updateMh)
+    val q = Keyed.run(ms.toDS(), LlmOps.mhFold)
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("mhst").start()
     ms.addData(b1: _*); q.processAllAvailable()

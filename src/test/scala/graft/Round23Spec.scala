@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{GraphOps, LlmOps}
+import graft.engine.{GraphOps, Keyed, LlmOps}
 
 /** Round-17 (driver round) pins: the weighted traversal tier and the
   * multi-probe IVF-PQ curve (VERDICT r16 items 1 + 2). The SSSP query
@@ -129,15 +129,14 @@ class Round23Spec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    import graft.engine.GraphOps.{CcEdge, ccUpdate}
+    import graft.engine.GraphOps.{CcEdge, ccFold}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.OutputMode
     // batch 1: 1-2, 3-4 (two components); batch 2: 2-3 arrives and
     // MERGES them — the union must see batch-1 state. A second shard
     // holds 10-11 to prove shard isolation + downstream merge.
     val ms = MemoryStream[CcEdge]
-    val q = ms.toDS().groupByKey(_.shard)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(ccUpdate)
+    val q = Keyed.run(ms.toDS(), ccFold)
       .toDF()
       .writeStream.outputMode("update").format("memory").queryName("cc_uf").start()
     ms.addData(CcEdge(0, 1, 2), CcEdge(0, 3, 4), CcEdge(1, 10, 11))
@@ -208,15 +207,14 @@ class Round23Spec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    import graft.engine.StatsOps.{Ar2In, updateAr2}
+    import graft.engine.StatsOps.{Ar2In, ar2Fold}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.OutputMode
     // batch 1: days 0..3; batch 2 adds days 4..5 — the lag pairs of the
     // final snapshot must span the batch boundary (state carries days)
     val ys = Seq(100L, 250L, 150L, 400L, 50L, 300L)
     val ms = MemoryStream[Ar2In]
-    val q = ms.toDS().groupByKey(_.etype)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updateAr2)
+    val q = Keyed.run(ms.toDS(), ar2Fold)
       .toDF()
       .writeStream.outputMode("update").format("memory").queryName("ar2_st").start()
     ms.addData((0 to 3).map(i => Ar2In("a", i.toLong, ys(i))): _*)
@@ -249,15 +247,14 @@ class Round23Spec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    import graft.engine.GraphOps.{MstEdge, mstUpdate}
+    import graft.engine.GraphOps.{MstEdge, mstFold}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.OutputMode
     // batch 1 builds the path 1-2-3 (weights 5, 6); batch 2's edge
     // (1,3,w=2) closes a cycle THROUGH BATCH-1 STATE and must SWAP out
     // the path maximum (2,3,6). Shard 1 proves isolation.
     val ms = MemoryStream[MstEdge]
-    val q = ms.toDS().groupByKey(_.shard)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(mstUpdate)
+    val q = Keyed.run(ms.toDS(), mstFold)
       .toDF()
       .writeStream.outputMode("update").format("memory").queryName("mst_uf").start()
     ms.addData(MstEdge(0, 1, 2, 5), MstEdge(0, 2, 3, 6), MstEdge(1, 10, 11, 1))

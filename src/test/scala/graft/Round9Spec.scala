@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{Gnn, GraphOps, LlmOps, Relational, SketchOps, StatsOps, Tables, TextOps}
+import graft.engine.{Gnn, GraphOps, Keyed, LlmOps, Relational, SketchOps, StatsOps, Tables, TextOps}
 
 /** Round-9 operators: semantic invariants beyond the oracle hash-compare. */
 class Round9Spec extends AnyFunSuite {
@@ -288,10 +288,7 @@ class Round9Spec extends AnyFunSuite {
     val calm = (1 to 35).map(i => StatsOps.AnomEvent("t", i.toLong, i.toLong, 100L))
     val spike = Seq(StatsOps.AnomEvent("t", 100L, 100L, 100000L))
     val ms = MemoryStream[StatsOps.AnomEvent]
-    val q = ms.toDS()
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(StatsOps.updateAnomaly)
+    val q = Keyed.run(ms.toDS(), StatsOps.anomalyFold)
       .toDF()
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("anomst").start()
@@ -313,10 +310,7 @@ class Round9Spec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.OutputMode
     val days = (1 to 6).map(d => StatsOps.HoltIn("t", d.toLong, d * 10.0))
     val ms = MemoryStream[StatsOps.HoltIn]
-    val q = ms.toDS()
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(StatsOps.updateHolt)
+    val q = Keyed.run(ms.toDS(), StatsOps.holtFold)
       .toDF()
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("holtst").start()

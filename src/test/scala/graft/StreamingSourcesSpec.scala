@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{Dsl, SketchOps, StreamingOps, Tables}
+import graft.engine.{Dsl, Keyed, SketchOps, StreamingOps, Tables}
 
 /** Stream-source coverage beyond MemoryStream: file-based readStream over
   * the fixture parquet, watermarked within-watermark dedup, and the
@@ -459,7 +459,7 @@ class StreamingSourcesSpec extends AnyFunSuite {
 
   test("streaming CMS maintainer is state-provider independent (RocksDB)") {
     // q_stream_cms's keyed CMS grid must survive a provider swap: replay
-    // the fixture token cells through the SAME updateCms fold as a real
+    // the fixture token cells through the SAME cmsFold as a real
     // micro-batched streaming query under the RocksDB provider (the
     // 100 TB state backend) and require the final grid cell-identical to
     // the direct count — pinning state-provider independence the way the
@@ -481,11 +481,7 @@ class StreamingSourcesSpec extends AnyFunSuite {
             lit(SketchOps.CmsWidth)).cast("int").as("bucket"))
         .as[SketchOps.CmsIn].collect()
       val ms = MemoryStream[SketchOps.CmsIn]
-      val q = ms.toDS()
-        .groupByKey(identity)
-        .flatMapGroupsWithState(OutputMode.Update,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-          SketchOps.updateCms)
+      val q = Keyed.run(ms.toDS(), SketchOps.cmsFold)
         .writeStream.outputMode(OutputMode.Update)
         .format("memory").queryName("cms_rocks").start()
       // two micro-batches: the grid must accumulate across the state
