@@ -15,9 +15,9 @@ object Harness {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // The vector tier aggregates 64 dims as 64–129 independent
-      // codegen-friendly buffers by design (meanQVec, zscore, the
-      // VecMeanAgg display twin); Spark's default 100-field cutoff
+      // The vector tier aggregates 64 dims as 64–128 independent
+      // codegen-friendly buffers by design (q_embed_sq8's 128 moments,
+      // the VecMeanAgg display twin); Spark's default 100-field cutoff
       // silently dropped those operators out of whole-stage codegen
       // into interpreted aggregation. 256 re-admits them (r17 opt,
       // measured: neighbor_mean 2.8 -> 0.6 s, udaf_vec_mean 2.0 -> 0.3,

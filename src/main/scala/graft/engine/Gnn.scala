@@ -1,22 +1,27 @@
 package graft.engine
 
 import graft.engine.Ckpt.CkptOps
+import graft.engine.PowerIter.{Cell, VecLeg}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** GNN forward layer (SURVEY.md §2.11 q_gnn_layer) — the dense-layer
-  * update the reference runs with DL4J (`/root/reference/README.md:2`):
-  * `h'_v = ReLU(W · mean_{u∈N(v)} x_u + b)`, GCN eq. 2 (Kipf & Welling
-  * 2017) with mean aggregation (GraphSAGE-mean, Hamilton et al. 2017).
+/** GNN forward layers (SURVEY.md §2.11) — the dense-layer update the
+  * reference runs with DL4J: `h'_v = ReLU(W · mean_{u∈N(v)} x_u + b)`,
+  * GCN eq. 2 (Kipf & Welling 2017) with mean aggregation (GraphSAGE-mean,
+  * Hamilton et al. 2017).
   *
   * Weights are the deterministic seeded matrix fixed in FIXTURES.md:
   * `W[i][j] = ((i*31 + j*17) % 7 - 3) / 10.0`, `b[i] = (i%5-2)/10.0`.
   *
-  * Execution shape: neighbor means come from the VecMeanAgg partial
-  * aggregate (buffers, not rows, cross the shuffle); the 64×64 matmul
-  * runs data-parallel in a typed `map` over (customer, mean) rows —
-  * embarrassingly parallel, no further shuffle, scales with executors.
+  * Execution shape: every message-passing superstep (q_gnn_layer,
+  * q_gnn_layer2, q_gnn_layer_k, q_gnn_appnp) is one leg of the iterative
+  * kernel's vector-sum mode, `PowerIter.vsum`: an arc offers its
+  * from-node's 1e9-scaled Long vector, a node sums and counts its offers
+  * exactly, and the leg's update runs the mean and the dense pass.
+  * Within the kernel's cell guard the state is held on the driver and a
+  * superstep is one narrow job over the edge MV that shuffles nothing;
+  * past it, one `reduceByKey` with a map-side combine.
   * Oracle-checked: Oracle.gnn generates the 4×64-term matmul SQL from
   * the same weight/bias formulas (keep them in sync when changing the
   * layer semantics); also golden-tested on unit-basis inputs.
@@ -42,29 +47,15 @@ object Gnn {
     out
   }
 
-  /** Neighborhood mean as 64 codegen'd per-dim AVG aggregates assembled
-    * into an array — stays entirely inside whole-stage codegen (no UDAF
-    * buffer encoding per row). The typed VecMeanAgg UDAF remains the
-    * contract surface for q_udaf_vec_mean. */
-  private def meanVec(s: SparkSession, dir: String): DataFrame = {
-    val aggs = (1 to Dim).map(i =>
-      avg(element_at(col("embedding"), i).cast("double")).as(s"m$i"))
-    GraphOps.neighborFeatures(s, dir)
-      .groupBy(col("src"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("src"), array((1 to Dim).map(i => col(s"m$i")): _*).as("mv"))
-  }
-
-  /** Full-width digest of the QUANTIZED-chain forward pass (r16,
-    * VERDICT r15 item 7 — the layer_k certification device applied to
-    * the whole layer family): Σ_{i=1..64} i·q9(h_i) where the chain
-    * quantizes every input/superstep boundary to 1e9-scaled BIGINTs,
-    * so the digest doubles are BIT-IDENTICAL across engines by
-    * construction and the oracle hash certifies the entire 64-dim
-    * vector. The displayed dims keep the raw-AVG mean (absorbed by 6dp
-    * rounding, the established twin) — the quantized chain agrees with
-    * it to ~1e-9 per mean component; the digest certifies the
-    * quantized chain exactly, never an empirical rounding. */
+  /** Full-width digest of the QUANTIZED-chain forward pass: Σ_{i=1..64}
+    * i·q9(h_i) where the chain quantizes every input/superstep boundary
+    * to 1e9-scaled BIGINTs, so the digest doubles are BIT-IDENTICAL
+    * across engines by construction and the oracle hash certifies the
+    * entire 64-dim vector. The displayed dims of q_gnn_layer/layer2 keep
+    * the raw f64 mean (absorbed by 6dp rounding, the established twin)
+    * — the quantized chain agrees with it to ~1e-9 per mean component.
+    * Headroom: |q9(h)| ≲ 1e13 at fixture feature scale, ×64 positions
+    * ×64 terms ≈ 1e16 ≪ 2^63. */
   private def digest64(h: Array[Double]): Long = {
     var d = 0L
     var i = 0
@@ -72,38 +63,8 @@ object Gnn {
     d
   }
 
-  /** FUSED layer-1 aggregation: the raw-AVG means (display twin) and
-    * the q9-quantized exact integer sums + count (digest chain) come
-    * out of ONE codegen'd groupBy over the neighbor features — no
-    * second corpus pass, no join. */
-  private def meanQVec(s: SparkSession, dir: String): DataFrame = {
-    def q9Col(c: Column): Column = {
-      val y = c * lit(1e9)
-      when(y >= 0, floor(y + lit(0.5))).otherwise(ceil(y - lit(0.5))).cast("bigint")
-    }
-    // raw means as SUM/COUNT instead of 64 AVG aggregates (r18, §4):
-    // Average on doubles IS (double sum, long count) with evaluate =
-    // sum/count — same accumulation order, same division — so
-    // sum(x)/cnt is bit-identical (embeddings are non-null full-width;
-    // the q9 chain already divides by this same count). This drops the
-    // aggregation buffer from 193 slots (64 avg pairs + 64 sums + cnt)
-    // to 129, a third less generated update code for the widest
-    // codegen'd operator in the engine.
-    val aggs = (1 to Dim).map(i =>
-      sum(element_at(col("embedding"), i).cast("double")).as(s"m$i")) ++
-      (1 to Dim).map(i =>
-        sum(q9Col(element_at(col("embedding"), i).cast("double"))).as(s"s$i")) :+
-      count(lit(1)).as("cnt")
-    GraphOps.neighborFeatures(s, dir)
-      .groupBy(col("src"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("src"),
-        array((1 to Dim).map(i => col(s"m$i") / col("cnt")): _*).as("mv"),
-        array((1 to Dim).map(i => col(s"s$i")): _*).as("sv"), col("cnt"))
-  }
-
-  /** Exact quantized mean from integer sums (the foldMean division
-    * order: sums/n/1e9 — matches the oracle term for term). */
+  /** Exact quantized mean from integer sums: sums/n/1e9, the oracle's
+    * division order term for term. */
   private def qMean(sums: Array[Long], n: Long): Array[Double] = {
     val m = new Array[Double](Dim)
     var i = 0
@@ -111,69 +72,62 @@ object Gnn {
     m
   }
 
-  def q_gnn_layer(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    meanQVec(s, dir).as[(Long, Array[Double], Array[Long], Long)]
-      .map { case (ck, m, sq, n) =>
-        val h = forward(m)
-        (ck, h(0), h(1), h(2), h(3), digest64(forward(qMean(sq, n))))
-      }
-      .toDF("custkey", "h1_raw", "h2_raw", "h3_raw", "h4_raw", "hdigest")
-      .select(col("custkey"),
-        round(col("h1_raw"), 6).as("h1"), round(col("h2_raw"), 6).as("h2"),
-        round(col("h3_raw"), 6).as("h3"), round(col("h4_raw"), 6).as("h4"),
-        col("hdigest"))
-      .orderBy("custkey")
+  /** The first superstep's state: each embedding's q9 lanes and, with
+    * `f64`, its f64 values (the display twin's input). */
+  private def embCells(s: SparkSession, dir: String, f64: Boolean): DataFrame = {
+    val e = Tables.embeddings(s, dir)
+    val q = quant(col("embedding")).as("q")
+    if (f64) e.select(col("vec_id"), q, transform(col("embedding"), _.cast("double")).as("f"))
+    else e.select(col("vec_id"), q)
   }
+
+  /** One superstep over the co-purchase edges MV: customers aggregate
+    * parts (`toCust`) or parts aggregate customers. The first
+    * superstep's from-node is a part's embedding, `dst % n_emb`. */
+  private def edgeLeg(s: SparkSession, dir: String, toCust: Boolean, first: Boolean)(
+      update: (Any, Cell, Long) => Cell): VecLeg = {
+    val nEmb = LlmOps.embCount(s, dir)
+    val key: Any => Any = if (first) k => k.asInstanceOf[Long] % nEmb else identity
+    VecLeg(GraphOps.edges(s, dir), if (toCust) "dst" else "src", if (toCust) "src" else "dst",
+      update, GraphOps.vertexCount(s, dir), key)
+  }
+
+  /** A hidden layer of the display twin: the q9 chain's next message,
+    * and the dense pass over the raw f64 mean. */
+  private val hidden: (Any, Cell, Long) => Cell = (_, c, n) =>
+    Cell(forward(qMean(c.q, n)).map(q9), forward(c.f.map(_ / n)))
+
+  /** The output layer of the display twin: the q9 chain's digest, and
+    * dims 1–4 of the dense pass over the raw f64 mean. */
+  private val shown: (Any, Cell, Long) => Cell = (_, c, n) =>
+    Cell(Array(digest64(forward(qMean(c.q, n)))), forward(c.f.map(_ / n)).take(4))
+
+  /** The supersteps' output as (key, `out`1..4 rounded 6dp, hdigest). */
+  private def outRows(s: SparkSession, dir: String, query: String, f64: Boolean,
+      legs: Seq[VecLeg], key: String, out: String): DataFrame =
+    PowerIter.vsum(s, query, embCells(s, dir, f64), if (f64) 2 * Dim else Dim, legs,
+        GraphOps.iterWidth(s, dir))
+      .select(col("vec_id").as(key) +: (1 to 4).map(i => round(col("f")(i - 1), 6).as(s"$out$i"))
+        :+ col("q")(0).as("hdigest"): _*)
+      .orderBy(key)
+
+  def q_gnn_layer(s: SparkSession, dir: String): DataFrame =
+    outRows(s, dir, "q_gnn_layer", f64 = true,
+      Seq(edgeLeg(s, dir, toCust = true, first = true)(shown)), "custkey", "h")
 
   /** 2-layer GNN (GraphSAGE depth-2): layer 1 produces customer
     * representations from part embeddings; layer 2 aggregates those back
-    * over the reversed edges into part representations — two shuffles =
-    * two message-passing supersteps, the Flink iteration-edge analog.
-    * Oracle-checked via Oracle.gnn's generated chained-matmul SQL;
-    * invariant-tested too. */
-  def q_gnn_layer2(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val edges = GraphOps.edges(s, dir)
-    // FUSED layer 1: display h1 (raw-AVG twin) and the digest chain's
-    // q9-quantized message (the layer_k superstep-boundary device)
-    // from one aggregation; layer 2 folds BOTH in one pass per part —
-    // the 64-dim digest is bit-identical across engines at depth 2
-    val h1 = meanQVec(s, dir).as[(Long, Array[Double], Array[Long], Long)]
-      .map { case (ck, m, sq, n) =>
-        (ck, forward(m), forward(qMean(sq, n)).map(q9))
-      }
-      .toDF("cust", "h1", "qh")
-    // layer 2: aggregate customer representations per part, second dense pass
-    edges.join(h1, col("src") === col("cust"))
-      .select(col("dst"), col("h1"), col("qh"))
-      .as[(Long, Array[Double], Array[Long])]
-      .groupByKey(_._1)
-      .mapGroups { (part, rows) =>
-        val sums = new Array[Double](Dim)
-        val qsums = new Array[Long](Dim)
-        var n = 0L
-        rows.foreach { case (_, v, q) =>
-          var i = 0
-          while (i < Dim) { sums(i) += v(i); qsums(i) += q(i); i += 1 }
-          n += 1
-        }
-        var i = 0
-        while (i < Dim) { sums(i) /= n; i += 1 }
-        val h = forward(sums)
-        (part, h(0), h(1), h(2), h(3), digest64(forward(qMean(qsums, n))))
-      }
-      .toDF("part_key", "g1_raw", "g2_raw", "g3_raw", "g4_raw", "hdigest")
-      .select(col("part_key"),
-        round(col("g1_raw"), 6).as("g1"), round(col("g2_raw"), 6).as("g2"),
-        round(col("g3_raw"), 6).as("g3"), round(col("g4_raw"), 6).as("g4"),
-        col("hdigest"))
-      .orderBy("part_key")
-  }
+    * over the reversed edges into part representations — two vector-sum
+    * supersteps, the Flink iteration-edge analog. The display lanes sum
+    * f64, the digest lanes q9 Longs. Oracle-checked via Oracle.gnn's
+    * generated chained-matmul SQL; invariant-tested too. */
+  def q_gnn_layer2(s: SparkSession, dir: String): DataFrame =
+    outRows(s, dir, "q_gnn_layer2", f64 = true,
+      Seq(edgeLeg(s, dir, toCust = true, first = true)(hidden),
+        edgeLeg(s, dir, toCust = false, first = false)(shown)), "part_key", "g")
 
-  /** Depth of the generalized GNN stack (VERDICT r12 item 5) and its
-    * per-layer seeded parameters: layer l uses
-    * W_l[i][j] = ((i·31 + j·17 + l·13) % 7 − 3)/10,
+  /** Depth of the generalized GNN stack and its per-layer seeded
+    * parameters: layer l uses W_l[i][j] = ((i·31 + j·17 + l·13) % 7 − 3)/10,
     * b_l[i] = ((i + l) % 5 − 2)/10 — the FIXTURES.md family extended by
     * a layer seed so no two layers share weights (l = 1 differs from
     * the base `weight` used by q_gnn_layer/layer2). */
@@ -205,11 +159,11 @@ object Gnn {
     * ceil(x·1e9 − 0.5) — because multiply, add and floor are each
     * correctly rounded and deterministic, so Spark and DuckDB produce
     * BIT-IDENTICAL longs by construction (stronger than the empirical
-    * round(x·1e9, 0) device, and ~100× cheaper than Spark's
-    * BigDecimal-backed round() at 38M calls per superstep). Downstream
-    * sums of these longs are exact and order-blind, so a K-layer chain
-    * is cross-engine bit-identical at any depth (layer/layer2 get away
-    * with raw AVG at depth ≤ 2; at depth 3 the last-ulp tie risk
+    * round(x·1e9, 0) device, and far cheaper than Spark's
+    * BigDecimal-backed round()). Downstream sums of these longs are
+    * exact and order-blind, so a K-layer chain is cross-engine
+    * bit-identical at any depth (layer/layer2's display dims get away
+    * with a raw f64 mean at depth ≤ 2; at depth 3 the last-ulp tie risk
     * compounds, so every superstep boundary quantizes). */
   private def quant(vec: Column): Column =
     transform(vec, x0 => {
@@ -226,79 +180,23 @@ object Gnn {
     (if (y >= 0) math.floor(y + 0.5) else math.ceil(y - 0.5)).toLong
   }
 
-  /** One message-passing superstep: exact integer mean fold over the
-    * pre-quantized neighbor vectors + the layer-l dense pass, in ONE
-    * object pass per group (the q_gnn_layer2 mapGroups shape — measured
-    * 3× faster than 64 separate sum() buffers + a second typed map).
-    * Emits the NEXT superstep's message pre-quantized (q9 in the same
-    * fold), so no decode→transform→re-encode pass sits between steps. */
-  /** Exact order-blind mean of quantized messages: long sums / n / 1e9. */
-  private def foldMean(it: Iterator[(Long, Array[Long])]): Array[Double] = {
-    val sums = new Array[Long](Dim)
-    var n = 0L
-    it.foreach { case (_, q) =>
-      var i = 0; while (i < Dim) { sums(i) += q(i); i += 1 }; n += 1
-    }
-    val m = new Array[Double](Dim)
-    var i = 0
-    while (i < Dim) { m(i) = sums(i).toDouble / n / 1e9; i += 1 }
-    m
-  }
-
-  private def step(l: Int, in: DataFrame): DataFrame = {
-    val s = in.sparkSession
-    import s.implicits._
-    in.as[(Long, Array[Long])]
-      .groupByKey(_._1)
-      .mapGroups((k, it) => (k, forwardK(l, foldMean(it)).map(q9)))
-      .toDF("node", "qh")
-  }
-
   /** K-layer GNN stack (GraphSAGE depth-K, K = LayerK = 3): supersteps
     * alternate customer ← parts ← customers ← parts over the bipartite
     * co-purchase graph, each with its own seeded dense layer — the
     * general form of q_gnn_layer (K=1) / q_gnn_layer2 (K=2). Each
-    * superstep is one join + one keyed object fold (exact integer mean
-    * + matmul fused) — K shuffles total, the Pregel/Flink-iteration
-    * analog, scaling with executors at any K. Oracle: Oracle.gnn
-    * generates the full 3-layer chained-matmul SQL from the same
-    * weightK/biasK formulas over the same quantized means. */
-  def q_gnn_layer_k(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val edges = GraphOps.edges(s, dir)
-    // superstep 1: customers aggregate raw part embeddings (codegen quant)
-    val h1 = step(1, GraphOps.neighborFeatures(s, dir)
-      .select(col("src"), quant(col("embedding")).as("q")))
-    // superstep 2: parts aggregate customer representations (messages
-    // arrive pre-quantized from the previous fold — no transform pass)
-    val h2 = step(2, edges.join(h1, col("src") === col("node"))
-      .select(col("dst").as("k2"), col("qh").as("q")))
-    // superstep 3: customers aggregate part representations; dims 1-4
-    // out as rounded doubles PLUS the full-width digest (r15, VERDICT
-    // r14 missing #5): Σ_i (i+1)·q9(h_i) over ALL 64 dims — a
-    // position-weighted exact-integer fold of the same bit-identical
-    // doubles the quantized chain guarantees, so the DuckDB oracle
-    // hash now certifies the entire output vector, not dims 1–4.
-    // Headroom: |q9(h)| ≲ 1e13 at fixture feature scale, ×64 positions
-    // ×64 terms ≈ 1e16 ≪ 2^63.
-    edges.join(h2, col("dst") === col("node"))
-      .select(col("src").as("k3"), col("qh").as("q"))
-      .as[(Long, Array[Long])]
-      .groupByKey(_._1)
-      .mapGroups { (k, it) =>
-        val h = forwardK(3, foldMean(it))
-        var dig = 0L
-        var i = 0
-        while (i < Dim) { dig += (i + 1) * q9(h(i)); i += 1 }
-        (k, h(0), h(1), h(2), h(3), dig)
+    * superstep is one vector-sum leg (exact integer mean + matmul, the
+    * next message re-quantized); the last emits dims 1–4 and the
+    * full-width digest Σ_i (i+1)·q9(h_i), so the DuckDB oracle hash
+    * certifies the entire output vector. Oracle: Oracle.gnn generates
+    * the full 3-layer chained-matmul SQL from the same weightK/biasK
+    * formulas over the same quantized means. */
+  def q_gnn_layer_k(s: SparkSession, dir: String): DataFrame =
+    outRows(s, dir, "q_gnn_layer_k", f64 = false, (1 to LayerK).map { l =>
+      edgeLeg(s, dir, toCust = l % 2 == 1, first = l == 1) { (_, c, n) =>
+        val h = forwardK(l, qMean(c.q, n))
+        if (l < LayerK) Cell(h.map(q9)) else Cell(Array(digest64(h)), h.take(4))
       }
-      .toDF("custkey", "k1r", "k2r", "k3r", "k4r", "hdigest")
-      .select(col("custkey"),
-        round(col("k1r"), 6).as("k1"), round(col("k2r"), 6).as("k2"),
-        round(col("k3r"), 6).as("k3"), round(col("k4r"), 6).as("k4"),
-        col("hdigest"))
-      .orderBy("custkey")
-  }
+    }, "custkey", "k")
 
   /** Deterministic negative sampling for link-prediction training
     * (GraphSAGE §3.2 / TGN-style objectives): per positive co-purchase
@@ -352,27 +250,37 @@ object Gnn {
   /** Embedding-space outlier screen (the curation pass that catches
     * mis-embedded / out-of-domain vectors before they poison a
     * similarity index): distance of every vector to the GLOBAL
-    * centroid, top-20 by (distance desc, id asc). Centroid = one
-    * 64-moment aggregation (the q_embed_zscore two-pass device);
-    * distance² is a FIXED left-assoc 64-term fold so both engines run
-    * the identical IEEE sequence; the corpus is touched twice and the
-    * 1-row centroid broadcasts — the standard outlier screen at any
-    * scale. */
+    * centroid, top-20 by (distance desc, id asc). The centroid comes
+    * from exact, order-blind 1e9-scaled Long sums (`Dsl.rlong`, the
+    * oracle's device: a raw f64 mean is partition-order-dependent in the
+    * last ulp, which can flip a 6-dp tie at the cutoff); distance² is a
+    * FIXED left-assoc 64-term fold so both engines run the identical
+    * IEEE sequence. Two typed passes over the corpus, no 64-term column
+    * tree to plan — the standard outlier screen at any scale. */
   def q_embed_outliers(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val el = (j: Int) => element_at(col("embedding"), j).cast("double")
-    // order-blind centroid (round-11 review): a raw double AVG is
-    // partition-order-dependent in the last ulp, which can flip a
-    // round-6 tie at the top-20 cutoff between engines; the 1e9-scaled
-    // integer sum is exact and identical everywhere
-    val moments = (1 to 64).map(j =>
-      (sum(Dsl.rlong(el(j) * 1e9)).cast("double")
-        / count(lit(1)).cast("double") / 1e9).as(s"m$j"))
-    val stats = emb.agg(moments.head, moments.tail: _*)
-    val d2 = (1 to 64).map(j => (el(j) - col(s"m$j")) * (el(j) - col(s"m$j")))
-      .reduce(_ + _)
-    emb.crossJoin(broadcast(stats))
-      .select(col("vec_id"), round(sqrt(d2), 6).as("centroid_dist"))
+    import s.implicits._
+    val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])]
+    val (sums, n) = emb.mapPartitions { it =>
+      val t = new Array[Long](Dim)
+      var c = 0L
+      it.foreach { case (_, e) =>
+        var j = 0
+        while (j < Dim) { t(j) += Dsl.rlong(e(j).toDouble * 1e9); j += 1 }
+        c += 1
+      }
+      Iterator.single((t, c))
+    }.collect().foldLeft((new Array[Long](Dim), 0L)) { case ((t, c), (pt, pc)) =>
+      (t.indices.map(j => t(j) + pt(j)).toArray, c + pc)
+    }
+    val m = sums.map(_.toDouble / n.toDouble / 1e9)
+    emb.map { case (id, e) =>
+      var d2 = 0.0
+      var j = 0
+      while (j < Dim) { val d = e(j).toDouble - m(j); d2 += d * d; j += 1 }
+      (id, d2)
+    }.toDF("vec_id", "d2")
+      .select(col("vec_id"), round(sqrt(col("d2")), 6).as("centroid_dist"))
       .orderBy(col("centroid_dist").desc, col("vec_id").asc)
       .limit(20)
   }
@@ -524,51 +432,41 @@ object Gnn {
   /** APPNP propagation (Gasteiger/Klicpera et al., ICLR 2019 "Predict
     * then Propagate" — personalized-PageRank-weighted feature diffusion:
     * z^k = (1−α)·Â·z^{k−1} + α·x decouples the prediction features from
-    * their propagation; round 7) over the thresholded part–part
-    * projection, with row-stochastic Â (neighbor mean), α = 1/4 and
-    * K = 3 power steps — the finite-K truncation of pushing each node's
-    * feature along personalized-PageRank weights.
+    * their propagation) over the thresholded part–part projection, with
+    * row-stochastic Â (neighbor mean), α = 1/4 and K = 3 power steps —
+    * the finite-K truncation of pushing each node's feature along
+    * personalized-PageRank weights.
     *
     * Determinism: features enter as the GIN 1e6-scaled exact BIGINTs;
     * each step's neighbor SUM is exact integer (order-blind), and the
     * blend t = 0.75·(nsum/deg) + 0.25·x6 is the identical IEEE sequence
     * over exact-integer inputs in both engines (α dyadic → both products
-    * correctly rounded), re-pinned to integer state by round(t, 0)
-    * before the next step — iterations can never compound float
-    * divergence. Execution: K keyed sums over the pre-partitioned
-    * projection MV with the |V|-bounded z table broadcast per step
-    * (the pagerank shape); feature/degree tables built once. */
+    * correctly rounded), re-pinned to integer state by Spark's HALF_UP
+    * round(t, 0) (its JVM BigDecimal twin here) before the next step —
+    * iterations can never compound float divergence. Execution: three
+    * vector-sum legs over the projection MV; a node's offer count is its
+    * degree, and its own features are looked up on the node key. */
   def q_gnn_appnp(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
     val ue = GraphOps.undProj(s, dir, GraphOps.TriangleMinCooccur)
     val n = Tables.embeddings(s, dir).agg(count(lit(1)).as("c"))
     val xq = (1 to 4).map(j =>
-      round(element_at(col("embedding"), j).cast("double") * 1000000, 0)
-        .cast("bigint").as(s"x$j"))
-    val deg = ue.groupBy(col("a").as("dn")).agg(count(lit(1)).as("deg"))
-    val feats = ue.select(col("a").as("node")).distinct()
+      round(element_at(col("embedding"), j).cast("double") * 1000000, 0).cast("bigint"))
+    val x = ue.select(col("a").as("node")).distinct()
       .crossJoin(broadcast(n))
       .select(col("node"), (col("node") % col("c")).as("vkey"))
       .join(broadcast(Tables.embeddings(s, dir)), col("vkey") === col("vec_id"))
-      .select(col("node") +: xq: _*)
-      .join(broadcast(deg), col("node") === col("dn"))
-      .select(col("node") +: col("deg") +: (1 to 4).map(j => col(s"x$j")): _*)
-      .ckpt()
-    var z = feats.select(col("node") +: (1 to 4).map(j => col(s"x$j").as(s"z$j")): _*)
-    for (_ <- 1 to 3) {
-      val zB = z.select(col("node").as("zn") +:
-        (1 to 4).map(j => col(s"z$j").as(s"bz$j")): _*)
-      val nsum = ue.join(broadcast(zB), col("b") === col("zn"))
-        .groupBy(col("a"))
-        .agg(sum(col("bz1")).as("s1"),
-          (2 to 4).map(j => sum(col(s"bz$j")).as(s"s$j")): _*)
-      z = feats.join(nsum, col("node") === col("a"))
-        .select(col("node") +: (1 to 4).map(j =>
-          round(lit(0.75) * (col(s"s$j").cast("double") / col("deg").cast("double"))
-            + lit(0.25) * col(s"x$j").cast("double"), 0)
-            .cast("bigint").as(s"z$j")): _*)
-    }
-    z.select(col("node").as("part_key") +:
-        (1 to 4).map(j => (col(s"z$j") / lit(1000000)).as(s"z$j")): _*)
+      .select(col("node"), array(xq: _*))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
+    val blend = (node: Any, c: Cell, deg: Long) => x.get(node.asInstanceOf[Long]).map(xk =>
+      Cell(Array.tabulate(4) { j =>
+        val t = 0.75 * (c.q(j).toDouble / deg.toDouble) + 0.25 * xk(j).toDouble
+        BigDecimal(t).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+      })).orNull
+    PowerIter.vsum(s, "q_gnn_appnp", x.toSeq.toDF("node", "q"), 4,
+        Seq.fill(3)(VecLeg(ue, "b", "a", blend, x.size)), GraphOps.iterWidth(s, dir))
+      .select(col("node").as("part_key") +:
+        (1 to 4).map(j => (col("q")(j - 1) / lit(1000000)).as(s"z$j")): _*)
       .orderBy("part_key")
   }
 

@@ -1879,13 +1879,14 @@ object StatsOps {
   // number, order-blind, in both engines (the oracle uses the closed
   // form; zero rounding until the round-6 display).
   case class DecayIn(etype: String, x: Long, c: Long)
-  case class DecayState(lastX: Long, w: Double)
+  case class DecayState(lastX: Long, w: Double, nDays: Long)
   case class DecaySnap(event_type: String, n_days: Long, last_x: Long, w_raw: Double)
 
+  /** Keeps the day count in its state, so `n_days` covers the whole
+    * stream, not the key's last micro-batch. */
   val decayFold: Keyed.Fold[DecayIn, String, DecayState, DecaySnap] =
-    Keyed.fold((e: DecayIn) => e.etype, DecayState(Long.MinValue, 0.0)) { (key, st0, it) =>
+    Keyed.fold((e: DecayIn) => e.etype, DecayState(Long.MinValue, 0.0, 0L)) { (key, st0, it) =>
       var st = st0
-      var n = 0L
       it.toArray.sortBy(_.x).foreach { e =>
         val dx = if (st.lastX == Long.MinValue) 0L else e.x - st.lastX
         // Overflow-guard equivalence domain (ADVICE r8): this zeroes
@@ -1898,10 +1899,9 @@ object StatsOps {
         // after the round-6 display but not raw-bit-equal. Widening the
         // calendar requires revisiting BOTH guards together.
         val decay = if (dx >= 63) 0.0 else 1.0 / (1L << dx).toDouble
-        st = DecayState(e.x, st.w * decay + e.c)
-        n += 1
+        st = DecayState(e.x, st.w * decay + e.c, st.nDays + 1)
       }
-      (st, Iterator.single(DecaySnap(key, n, st.lastX, st.w)))
+      (st, Iterator.single(DecaySnap(key, st.nDays, st.lastX, st.w)))
     }
 
   /** Driver-contract query: decayed heavy hitters over the daily count

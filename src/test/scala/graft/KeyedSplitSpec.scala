@@ -34,21 +34,20 @@ class KeyedSplitSpec extends AnyFunSuite {
   }
 
   private def finalOut[E, K, S, O](f: Keyed.Fold[E, K, S, O], batches: Seq[Seq[E]],
-      emitter: Boolean, view: O => Any): Map[K, Any] =
+      emitter: Boolean): Map[K, Any] =
     KeyedReplay(f, batches).groupMap(_._1)(_._2).map { case (k, calls) =>
-      k -> norm((if (emitter) calls.flatten else calls.last).map(view))
+      k -> norm(if (emitter) calls.flatten else calls.last)
     }
 
   private def law[E, K, S, O](f: Keyed.Fold[E, K, S, O], rows: Gen[Seq[E]],
-      emitter: Boolean = false, shuffle: Boolean = true,
-      view: O => Any = (o: O) => o): Prop =
+      emitter: Boolean = false, shuffle: Boolean = true): Prop =
     Prop.forAllNoShrink(rows, Gen.listOf(Gen.choose(0, 1000)), Gen.long) { (in, cuts, seed) =>
       val pts = (0 +: cuts.map(_ % (in.size + 1)) :+ in.size).distinct.sorted
       val batches = pts.zip(pts.tail).map { case (a, b) => in.slice(a, b) }
-      val one = finalOut(f, Seq(in), emitter, view)
-      val split = finalOut(f, batches, emitter, view)
+      val one = finalOut(f, Seq(in), emitter)
+      val split = finalOut(f, batches, emitter)
       val rnd = new Random(seed)
-      val mixed = if (shuffle) finalOut(f, batches.map(rnd.shuffle(_)), emitter, view) else one
+      val mixed = if (shuffle) finalOut(f, batches.map(rnd.shuffle(_)), emitter) else one
       (split == one) :| s"split at $pts" && (mixed == one) :| "within-batch order"
     }
 
@@ -160,18 +159,14 @@ class KeyedSplitSpec extends AnyFunSuite {
   check("cusumFold", law(StatsOps.cusumFold, daily(StatsOps.CusumIn(_, _, _))))
   check("ewmaFold", law(StatsOps.ewmaFold, daily(StatsOps.EwmaIn(_, _, _))))
 
-  // DecaySnap.n_days counts only the days of the key's last call:
-  // DecayState (lastX, w) keeps no day count, and adding one would change
-  // the state schema. The law holds for the decayed weight and last day;
-  // the smallest counterexample for n_days is pinned so a fix shows here.
+  // DecayState carries the day count, so n_days is the whole series'.
   private val decayIn = daily((t, x, c) => StatsOps.DecayIn(t, x, c.abs))
-  check("decayFold (last_x, w_raw)", law(StatsOps.decayFold, decayIn,
-    view = (d: StatsOps.DecaySnap) => (d.last_x, d.w_raw)))
-  test("decayFold: n_days of a split series counts the last batch only") {
+  check("decayFold", law(StatsOps.decayFold, decayIn))
+  test("decayFold: n_days of a split series counts every day") {
     val days = Seq(StatsOps.DecayIn("t", 1L, 4L), StatsOps.DecayIn("t", 2L, 6L))
     val one = KeyedReplay.rows(StatsOps.decayFold, Seq(days)).last
     val split = KeyedReplay.rows(StatsOps.decayFold, days.map(Seq(_))).last
     assert(one == StatsOps.DecaySnap("t", 2L, 2L, 8.0))
-    assert(split == one.copy(n_days = 1L))
+    assert(split == one)
   }
 }

@@ -428,16 +428,16 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!mfPlan.contains("BroadcastNestedLoop") && !mfPlan.contains("CartesianProduct"),
       s"motif pattern joins must be hash joins:\n$mfPlan")
     assert(mfPlan.contains("Join"), "motif plan must contain the pattern joins")
-    // layer_k: no unpartitioned window anywhere (supersteps are keyed
-    // folds), and the fact scan happens once inside the edges MV build
+    // layer_k: no unpartitioned window anywhere, and its supersteps run
+    // on the iterative kernel, not as keyed object folds
     val lk = SparkEntry.queries("q_gnn_layer_k")(spark, sf0001)
     val lkWins = lk.queryExecution.sparkPlan.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
     assert(lkWins.forall(_.partitionSpec.nonEmpty),
       "layer_k must not contain an unpartitioned window")
-    assert(lk.queryExecution.sparkPlan.toString.contains("MapGroups"),
-      "supersteps plan as keyed object folds")
+    assert(!lk.queryExecution.sparkPlan.toString.contains("MapGroups"),
+      "supersteps run on the kernel, not as keyed object folds")
   }
 
   test("RFM + tokenizer ladder have NO unpartitioned window (Dist device)") {
@@ -695,8 +695,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // hint drops and the state table pre-hash-partitions on its join
     // key. Pinned on the two fixpoint consumers whose final plan is NOT
     // checkpoint-truncated (modularity, assortativity), plus a result-
-    // invariance check on every PowerIter operator, sum and min mode,
-    // across both regimes (guard 0 runs the kernel's partitioned
+    // invariance check on every PowerIter operator, sum, min and vector
+    // mode, across both regimes (guard 0 runs the kernel's partitioned
     // placement; the kernel-built MVs are evicted so they rebuild in it).
     val guardKey = "spark.graft.stateBroadcastMaxRows"
     def hintCount(df: org.apache.spark.sql.DataFrame): Int =
@@ -712,7 +712,7 @@ class PlanAuditSpec extends AnyFunSuite {
       "q_graph_pseudo_diameter", "q_graph_sssp", "q_graph_closeness", "q_graph_harmonic",
       "q_graph_closeness_w", "q_graph_harmonic_w", "q_graph_scc_colors",
       "q_llm_dedup_clusters", "q_llm_soft_dedup", "q_llm_dedup_keep", "q_llm_dedup_funnel",
-      "q_llm_lsh_clusters")
+      "q_llm_lsh_clusters", "q_gnn_layer", "q_gnn_layer2", "q_gnn_layer_k", "q_gnn_appnp")
     def kernelRows() = kernelOps.map(q => q -> SparkEntry.queries(q)(spark, sf0001).collect().toSeq)
     def evictKernelMvs(): Unit = graft.engine.Mv.keys(spark)
       .filter(k => Seq("closeDist|", "closeDistW|", "dedupLabels|").exists(k.startsWith))

@@ -6,12 +6,14 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.PowerIter
+import graft.engine.PowerIter.{Cell, VecLeg}
 
-/** Property pins for the kernel's min-relaxation mode against plain-Scala
-  * references — union-find for labels, BFS for hops, synchronous
-  * Bellman-Ford for weighted distances — on random small graphs, in both
-  * placements of the state (the default guard holds it on the driver,
-  * guard 0 partitions it). */
+/** Property pins for the kernel's min-relaxation and vector-sum modes
+  * against plain-Scala references — union-find for labels, BFS for hops,
+  * synchronous Bellman-Ford for weighted distances, a superstep replay
+  * for vector sums — on random small graphs, in both placements of the
+  * state (the default guard holds it on the driver, guard 0 partitions
+  * it). */
 class PowerIterSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -100,5 +102,43 @@ class PowerIterSpec extends AnyFunSuite {
       }.toMap
       relaxLanes(as, ss, hop = 0L, weight = Some("w"), rounds = cap) == want
     }, "Bellman-Ford distances")
+  }
+
+  test("vector sums: summed, counted cells per superstep equal a plain-Scala replay") {
+    // 3 Long lanes per key; the f64 lane, when present, holds small
+    // integers, so its sums are exact in any order
+    val cells: Gen[Map[Long, Seq[Long]]] = Gen.frequency(1 -> Gen.const(Map.empty[Long, Seq[Long]]),
+      5 -> Gen.mapOf(Gen.zip(node, Gen.listOfN(3, Gen.chooseNum(-1000L, 1000L)))))
+    def update(key: Any, c: Cell, n: Long): Cell =
+      Cell(c.q.map(_ * 2 + n + key.asInstanceOf[Long]), Option(c.f).map(_.map(_ + n)).orNull)
+    // leg i runs a → b when even, b → a when odd; leg 0 reads its
+    // from-key as `from % 5`, a derived key
+    def ends(i: Int, arc: Arc): (Long, Long) =
+      if (i % 2 == 0) (if (i == 0) arc._1 % 5 else arc._1, arc._2) else (arc._2, arc._1)
+    check(Prop.forAll(arcs, cells, Gen.choose(1, 3), Gen.oneOf(false, true)) { (as, init, legs, f64) =>
+      type V = (Seq[Long], Option[Seq[Double]])
+      var want: Map[Long, V] = init.map { case (k, q) => k -> (q, Option.when(f64)(q.map(_.toDouble))) }
+      for (i <- 0 until legs) {
+        want = as.flatMap { arc => val (f, t) = ends(i, arc); want.get(f).map(t -> _) }
+          .groupMap(_._1)(_._2).map { case (t, vs) =>
+            val q = vs.map(_._1).transpose.map(_.sum)
+            val fs = vs.head._2.map(_ => vs.flatMap(_._2).transpose.map(_.sum))
+            val c = update(t, Cell(q.toArray, fs.map(_.toArray).orNull), vs.size.toLong)
+            t -> (c.q.toSeq, Option(c.f).map(_.toSeq))
+          }
+      }
+      val s = spark
+      import s.implicits._
+      val initDf = if (f64) init.toSeq.map { case (k, q) => (k, q, q.map(_.toDouble)) }.toDF("node", "q", "f")
+        else init.toSeq.toDF("node", "q")
+      val vlegs = (0 until legs).map { i =>
+        val (from, to) = if (i % 2 == 0) ("a", "b") else ("b", "a")
+        val key: Any => Any = if (i == 0) k => k.asInstanceOf[Long] % 5 else identity
+        VecLeg(arcFrame(as), from, to, update, 12L, key)
+      }
+      val got = PowerIter.vsum(spark, "prop", initDf, if (f64) 6 else 3, vlegs).collect()
+        .map(r => r.getLong(0) -> (r.getSeq[Long](1), Option(r.getSeq[Double](2)))).toMap
+      got == want
+    }, "vector sums")
   }
 }
