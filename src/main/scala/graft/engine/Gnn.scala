@@ -32,20 +32,32 @@ object Gnn {
   def weight(i: Int, j: Int): Double = ((i * 31 + j * 17) % 7 - 3) / 10.0
   def bias(i: Int): Double = (i % 5 - 2) / 10.0
 
-  /** Dense forward pass on one aggregated neighborhood vector. */
-  def forward(mean: Array[Double]): Array[Double] = {
+  /** `weight`/`bias` evaluated once: row i of W, and b. The dense passes
+    * read these tables with the same values in the same term order, so
+    * their outputs are bit-identical to evaluating the formulas inline. */
+  private[engine] val W: Array[Array[Double]] = Array.tabulate(Dim, Dim)(weight)
+  private val B: Array[Double] = Array.tabulate(Dim)(bias)
+
+  /** Dense ReLU pass over Dim-vectors with the weight rows `w` and bias
+    * `b`; term order pinned (j-ascending, bias last) to match the
+    * generated oracle SQL's left-associative chain exactly. */
+  private def dense(w: Array[Array[Double]], b: Array[Double], mean: Array[Double]): Array[Double] = {
     val out = new Array[Double](Dim)
     var i = 0
     while (i < Dim) {
+      val wi = w(i)
       var acc = 0.0
       var j = 0
-      while (j < mean.length) { acc += weight(i, j) * mean(j); j += 1 }
-      acc += bias(i)
+      while (j < mean.length) { acc += wi(j) * mean(j); j += 1 }
+      acc += b(i)
       out(i) = if (acc > 0.0) acc else 0.0
       i += 1
     }
     out
   }
+
+  /** Dense forward pass on one aggregated neighborhood vector. */
+  def forward(mean: Array[Double]): Array[Double] = dense(W, B, mean)
 
   /** Full-width digest of the QUANTIZED-chain forward pass: Σ_{i=1..64}
     * i·q9(h_i) where the chain quantizes every input/superstep boundary
@@ -137,22 +149,13 @@ object Gnn {
     ((i * 31 + j * 17 + l * 13) % 7 - 3) / 10.0
   def biasK(l: Int, i: Int): Double = ((i + l) % 5 - 2) / 10.0
 
-  /** Dense forward pass with the layer-l seeded parameters; term order
-    * pinned (j-ascending, bias last) to match the generated oracle
-    * SQL's left-associative chain exactly. */
-  def forwardK(l: Int, mean: Array[Double]): Array[Double] = {
-    val out = new Array[Double](Dim)
-    var i = 0
-    while (i < Dim) {
-      var acc = 0.0
-      var j = 0
-      while (j < mean.length) { acc += weightK(l, i, j) * mean(j); j += 1 }
-      acc += biasK(l, i)
-      out(i) = if (acc > 0.0) acc else 0.0
-      i += 1
-    }
-    out
-  }
+  /** `weightK`/`biasK` tables of layers 1..LayerK, indexed by l − 1. */
+  private val WK = Array.tabulate(LayerK)(l => Array.tabulate(Dim, Dim)(weightK(l + 1, _, _)))
+  private val BK = Array.tabulate(LayerK)(l => Array.tabulate(Dim)(biasK(l + 1, _)))
+
+  /** Dense forward pass with the layer-l seeded parameters (l in
+    * 1..LayerK). */
+  def forwardK(l: Int, mean: Array[Double]): Array[Double] = dense(WK(l - 1), BK(l - 1), mean)
 
   /** Quantize a vector column to 1e9-scaled BIGINTs inside codegen.
     * Half-away-from-zero via pure IEEE ops — floor(x·1e9 + 0.5) /

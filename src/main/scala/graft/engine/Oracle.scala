@@ -1809,9 +1809,11 @@ object Oracle {
 
     // Streaming twin of q_gnn_layer2: the chained keyed-state maintainer's
     // final snapshot must equal the batch 2-layer math; only the per-part
-    // neighbor count is additionally surfaced. Layer-2's aggregation order
-    // differs (sorted state fold vs AVG), absorbed by the 6dp rounding —
-    // the same argument as the batch twin's loop-vs-AVG order.
+    // neighbor count is additionally surfaced. Layer 2 averages exact Long
+    // sums of h·1e12 (StreamingGnn.L2Scale) where this SQL takes the f64
+    // AVG of h; the two means differ by at most one 1e-12 rounding step per
+    // lane, absorbed by the 6dp rounding (no row flipped at sf0.001, sf0.01
+    // or sf0.1, where a 1e9 scale flipped some).
     "q_stream_gnn_layer2" -> {
       val hr = (0 until Gnn.Dim).map(i => s"${matmulExpr(i, "m")} AS r${i + 1}").mkString(", ")
       val h64 = (0 until Gnn.Dim).map(i => s"${relu(s"r${i + 1}")} AS h${i + 1}").mkString(", ")

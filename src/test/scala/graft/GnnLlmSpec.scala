@@ -27,6 +27,25 @@ class GnnLlmSpec extends AnyFunSuite {
     assert(Gnn.forward(Array.fill(64)(0.5)).forall(_ >= 0.0))
   }
 
+  test("gnn forward/forwardK: the weight tables give the inline formulas' bits") {
+    def inline(w: (Int, Int) => Double, b: Int => Double, m: Array[Double]): Array[Double] =
+      Array.tabulate(64) { i =>
+        var acc = 0.0
+        var j = 0
+        while (j < m.length) { acc += w(i, j) * m(j); j += 1 }
+        acc += b(i)
+        if (acc > 0.0) acc else 0.0
+      }
+    val rnd = new scala.util.Random(7)
+    (1 to 200).foreach { _ =>
+      val m = Array.fill(64)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(7) - 3))
+      assert(Gnn.forward(m).sameElements(inline(Gnn.weight, Gnn.bias, m)))
+      (1 to Gnn.LayerK).foreach { l =>
+        assert(Gnn.forwardK(l, m).sameElements(inline(Gnn.weightK(l, _, _), Gnn.biasK(l, _), m)))
+      }
+    }
+  }
+
   test("gnn layer runs per customer with finite outputs") {
     val out = Gnn.q_gnn_layer(spark, sf0001).collect()
     val nCust = GraphOps.edges(spark, sf0001).select("src").distinct().count()

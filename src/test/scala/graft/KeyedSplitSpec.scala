@@ -17,8 +17,12 @@ import graft.engine.{ClusterOps, GraphOps, Keyed, LlmOps, Relational, SketchOps,
   * output is the rows of its last call for snapshot folds, and all the
   * rows it emitted for event emitters (anomaly, markov, new-vs-returning).
   *
-  * Not shuffled: the f64 neighbor sums of embedFold and custRepFold,
-  * and partRepFold, which keeps a customer's last message of a batch.
+  * Not shuffled: the f64 neighbor sums of embedFold and custRepFold.
+  * custRepFold's last record is compared on (h, version): its `old` is
+  * the h before the last batch, so it depends on where the batches
+  * were cut; a chain property covers `old`. partRepFold reads real
+  * layer-1 change records, and a two-layer law checks both layers
+  * together, with the hop re-batching and re-delivering records.
   * Generators follow each fold's input contract: the time-ordered
   * folds get rows in their sort order, the daily-series folds one row
   * per (key, day) — the daily aggregate their queries feed them. */
@@ -34,27 +38,34 @@ class KeyedSplitSpec extends AnyFunSuite {
   }
 
   private def finalOut[E, K, S, O](f: Keyed.Fold[E, K, S, O], batches: Seq[Seq[E]],
-      emitter: Boolean): Map[K, Any] =
+      emitter: Boolean, view: O => Any = (o: Any) => o): Map[K, Any] =
     KeyedReplay(f, batches).groupMap(_._1)(_._2).map { case (k, calls) =>
-      k -> norm(if (emitter) calls.flatten else calls.last)
+      k -> norm(if (emitter) calls.flatten.map(view) else calls.last.map(view))
     }
+
+  /** `in` cut into consecutive batches at the given points. */
+  private def cutAt[T](in: Seq[T], cuts: Seq[Int]): Seq[Seq[T]] = {
+    val pts = (0 +: cuts.map(_ % (in.size + 1)) :+ in.size).distinct.sorted
+    pts.zip(pts.tail).map { case (a, b) => in.slice(a, b) }
+  }
+  private val cuts = Gen.listOf(Gen.choose(0, 1000))
 
   private def law[E, K, S, O](f: Keyed.Fold[E, K, S, O], rows: Gen[Seq[E]],
-      emitter: Boolean = false, shuffle: Boolean = true): Prop =
-    Prop.forAllNoShrink(rows, Gen.listOf(Gen.choose(0, 1000)), Gen.long) { (in, cuts, seed) =>
-      val pts = (0 +: cuts.map(_ % (in.size + 1)) :+ in.size).distinct.sorted
-      val batches = pts.zip(pts.tail).map { case (a, b) => in.slice(a, b) }
-      val one = finalOut(f, Seq(in), emitter)
-      val split = finalOut(f, batches, emitter)
+      emitter: Boolean = false, shuffle: Boolean = true, view: O => Any = (o: Any) => o): Prop =
+    Prop.forAllNoShrink(rows, cuts, Gen.long) { (in, cs, seed) =>
+      val batches = cutAt(in, cs)
+      val one = finalOut(f, Seq(in), emitter, view)
+      val split = finalOut(f, batches, emitter, view)
       val rnd = new Random(seed)
-      val mixed = if (shuffle) finalOut(f, batches.map(rnd.shuffle(_)), emitter) else one
-      (split == one) :| s"split at $pts" && (mixed == one) :| "within-batch order"
+      val mixed = if (shuffle) finalOut(f, batches.map(rnd.shuffle(_)), emitter, view) else one
+      (split == one) :| s"split into ${batches.map(_.size)}" && (mixed == one) :| "within-batch order"
     }
 
-  private def check(name: String, p: Prop): Unit = test(s"$name: split law") {
+  private def run(name: String, p: Prop): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(100), p)
     assert(res.passed, s"$name: ${res.status}")
   }
+  private def check(name: String, p: Prop): Unit = test(s"$name: split law")(run(name, p))
 
   // ---- generators -------------------------------------------------------
 
@@ -75,13 +86,58 @@ class KeyedSplitSpec extends AnyFunSuite {
 
   // ---- streaming GNN ----------------------------------------------------
 
+  import StreamingGnn.{Change, CustRep, PartMsg}
+
   check("embedFold", law(StreamingGnn.embedFold, edgeFeats, shuffle = false))
-  check("custRepFold", law(StreamingGnn.custRepFold, edgeFeats, shuffle = false))
+  check("custRepFold", law(StreamingGnn.custRepFold, edgeFeats, shuffle = false,
+    view = (r: CustRep) => (Change(r.rep).h, Change(r.rep).version)))
+
+  test("custRepFold: each record retracts its customer's previous record") {
+    run("custRepFold chain", Prop.forAllNoShrink(edgeFeats, cuts) { (in, cs) =>
+      val recs = KeyedReplay.rows(StreamingGnn.custRepFold, cutAt(in, cs)).groupBy(_.cust)
+      recs.forall { case (c, rs) =>
+        val ch = rs.map(r => Change(r.rep))
+        ch.head.old.isEmpty && ch.last.version == in.count(_.cust == c) &&
+          ch.zip(ch.tail).forall { case (a, b) =>
+            a.version < b.version && b.old.map(norm) == Some(norm(a.h))
+          }
+      }
+    })
+  }
+
+  /** Co-purchase edge events (customer, part, the part's features). */
+  private val events = rowsOf(Gen.zip(Gen.choose(1L, 4L), Gen.choose(1L, 3L), vec), 40)
+
+  /** The hop: layer 1 over `evs` cut at `cs`, each change record sent to
+    * the parts of its customer's first `version` events — the edges
+    * seen by the time it was emitted, as the production pipeline joins
+    * them — so a part can gain a customer after its first record. */
+  private def hop(evs: Seq[(Long, Long, Array[Float])], cs: Seq[Int]): Seq[PartMsg] = {
+    val parts = evs.groupMap(_._1)(_._2)
+    KeyedReplay.rows(StreamingGnn.custRepFold,
+      cutAt(evs.map(e => StreamingGnn.EdgeFeat(e._1, e._3)), cs)).flatMap { r =>
+      parts(r.cust).take(Change(r.rep).version.toInt).distinct.map(PartMsg(_, r.cust, r.rep))
+    }
+  }
+
   check("partRepFold", law(StreamingGnn.partRepFold,
-    rowsOf(Gen.zip(Gen.choose(1L, 2L), Gen.choose(1L, 4L),
-      Gen.listOfN(StreamingGnn.Dim, Gen.choose(-1.0, 1.0)))
-      .map { case (p, c, r) => StreamingGnn.PartMsg(p, c, r.toArray) }, 40),
-    shuffle = false))
+    Gen.zip(events, cuts).map { case (evs, cs) => hop(evs, cs) }))
+
+  test("partRepFold after custRepFold: two-layer split law with re-delivered hop records") {
+    run("two layers", Prop.forAllNoShrink(events, cuts, cuts, Gen.long) { (evs, cs1, cs2, seed) =>
+      val rnd = new Random(seed)
+      // each hop record, and for about a quarter of them a copy up to 50
+      // records later: at-least-once delivery in the hop's order
+      val msgs = hop(evs, cs1).zipWithIndex.flatMap { case (m, i) =>
+        (i.toDouble, m) +: (if (rnd.nextInt(4) == 0) Seq((i + 1 + rnd.nextDouble() * 50, m)) else Nil)
+      }.sortBy(_._1).map(_._2)
+      val one = finalOut(StreamingGnn.partRepFold, Seq(hop(evs, Nil)), emitter = false)
+      val got = finalOut(StreamingGnn.partRepFold, cutAt(msgs, cs2).map(rnd.shuffle(_)),
+        emitter = false)
+      (got == one) :| s"${msgs.size} hop records"
+    })
+  }
+
   check("poolFold", law(StreamingGnn.poolFold, edgeFeats))
 
   // ---- event streams ----------------------------------------------------

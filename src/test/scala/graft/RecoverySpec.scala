@@ -151,9 +151,12 @@ class RecoverySpec extends AnyFunSuite {
   // explicit stream — Flink's iteration edge made explicit. Single-query
   // recovery is covered above; this kills BOTH stages between
   // micro-batches while layer-1 state (cust 1's accumulator) AND layer-2
-  // state (part 10's neighbor-rep map) hold data that the post-kill
-  // batch must combine with, restarts both from their own checkpoints,
-  // and requires the final part snapshot to equal the uninterrupted run.
+  // state (part 10's sums and neighbor versions) hold data that the
+  // post-kill batch must combine with, restarts both from their own
+  // checkpoints, and requires the final part snapshot to equal the
+  // uninterrupted run. The hop is at-least-once: after the restart it
+  // delivers its last pre-kill batch again, which layer 2 must skip by
+  // the records' versions.
   private def vec(xs: Float*): Seq[Float] = xs ++ Seq.fill(64 - xs.length)(0.0f)
   private val gnnB1 = Seq(L2Edge(1, 10, vec(1f, 2f)), L2Edge(2, 10, vec(10f, 0f)))
   private val gnnB2 = Seq(L2Edge(1, 11, vec(3f, 4f)))
@@ -170,6 +173,7 @@ class RecoverySpec extends AnyFunSuite {
     // joins layer-1 emissions against to fan them out to parts
     val edgesSoFar = new java.util.concurrent.CopyOnWriteArrayList[(Long, Long)]
     val partSnaps = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Double)]
+    val lastHop = new java.util.concurrent.atomic.AtomicReference[Seq[StreamingGnn.PartMsg]](Nil)
     def startL1() = StreamingGnn.custRepStream(s, ms1.toDF())
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", s"$root/ckpt1")
@@ -180,7 +184,7 @@ class RecoverySpec extends AnyFunSuite {
             StreamingGnn.PartMsg(p, c, r.rep)
           }
         }
-        if (msgs.nonEmpty) { ms2.addData(msgs.toIndexedSeq: _*); () }
+        if (msgs.nonEmpty) { lastHop.set(msgs.toIndexedSeq); ms2.addData(msgs.toIndexedSeq: _*); () }
       }.start()
     def startL2() = StreamingGnn.partRepStream(s, ms2.toDS())
       .writeStream.outputMode(OutputMode.Update())
@@ -199,9 +203,12 @@ class RecoverySpec extends AnyFunSuite {
     feed(gnnB1)
     if (kill) {
       // kill BETWEEN the stages' work: layer 1 holds cust accumulators,
-      // layer 2 holds part 10's two neighbor reps — both must round-trip
+      // layer 2 holds part 10's sums and two neighbor versions — both must round-trip
       q1.stop(); q2.stop()
       q1 = startL1(); q2 = startL2()
+      // an at-least-once hop re-sends its last pre-kill batch
+      ms2.addData(lastHop.get: _*)
+      q2.processAllAvailable()
     }
     feed(gnnB2)
     q1.stop(); q2.stop()

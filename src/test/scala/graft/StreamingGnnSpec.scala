@@ -58,4 +58,21 @@ class StreamingGnnSpec extends AnyFunSuite {
     assert(out.length == nParts)
     assert(out.forall(r => (1 to 4).forall(i => r.getDouble(i) >= 0.0 && !r.getDouble(i).isNaN)))
   }
+
+  test("layer 2: a lane outside the Long range at L2Scale throws instead of wrapping") {
+    import StreamingGnn.{Change, L2Scale, PartMsg, partRepFold}
+    def msg(cust: Long, h0: Double) =
+      PartMsg(1L, cust, Change.encode(Array.tabulate(StreamingGnn.Dim)(i => if (i == 0) h0 else 0.0),
+        1L, null))
+    // 1e8 · 1e12 = 1e20 > Long.MaxValue ≈ 9.22e18: out of range before any sum
+    val big = intercept[ArithmeticException](KeyedReplay(partRepFold, Seq(Seq(msg(1L, 1e8)))))
+    assert(big.getMessage.contains("out of the Long range"), big.getMessage)
+    intercept[ArithmeticException](KeyedReplay(partRepFold, Seq(Seq(msg(1L, Double.NaN)))))
+    // each lane fits (5e18), their sum does not: Math.addExact, not a wrap
+    val half = 5e18 / L2Scale
+    intercept[ArithmeticException](KeyedReplay(partRepFold, Seq(Seq(msg(1L, half), msg(2L, half)))))
+    // one such lane alone is accepted
+    val ok = KeyedReplay(partRepFold, Seq(Seq(msg(1L, half))))
+    assert(ok.map(_._2.length) == Seq(1))
+  }
 }
