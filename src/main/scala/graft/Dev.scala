@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SessionBridge
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
-import graft.engine.{Ckpt, Mv, StreamingGnn, StreamingOps}
+import graft.engine.{Ckpt, Mv, StreamingOps}
 
 /** Development entry point, not part of the Verify/Bench contract:
   *
@@ -396,18 +396,17 @@ object Dev {
 
   case class Ev2(event_id: Long, user_id: Long, ts: Timestamp, value: Double)
 
-  /** Events/s through the engine's three keyed-state maintainers on the
-    * RocksDB state store: `embedStream` (the streaming GNN neighbor
-    * mean, 520 B of state per vertex), `timedSessions` (event-time
-    * timers + watermark) and `statefulSnapshotTws` (transformWithState).
-    * Input is a deterministic synthetic stream shaped like the sf0.1
-    * fixture (15k vertices / 20k users, default 600k events in 12
-    * batches) through MemoryStream to a noop sink; after one untimed
-    * prime batch, the window is first addData → last
-    * processAllAvailable. `keys` re-runs all three at 1×/4×/16× the
-    * distinct keys with the event volume fixed: per-event work must
-    * stay flat while state grows, or a maintainer rescans its state.
-    * Runs on a child session, so the state store setting stays local. */
+  /** Events/s through two keyed-state maintainers on the RocksDB state
+    * store: `timedSessions` (event-time timers + watermark) and
+    * `statefulSnapshotTws` (transformWithState). Input is a
+    * deterministic synthetic stream shaped like the sf0.1 fixture (20k
+    * users, default 600k events in 12 batches) through MemoryStream to a
+    * noop sink; after one untimed prime batch, the window is first
+    * addData → last processAllAvailable. `keys` re-runs both at
+    * 1×/4×/16× the distinct keys with the event volume fixed: per-event
+    * work must stay flat while state grows, or a maintainer rescans its
+    * state. Runs on a child session, so the state store setting stays
+    * local. */
   def stream(spark: SparkSession, dir: String, args: Seq[String]): Unit = {
     val keyAxis = args.contains("keys")
     val numeric = args.filter(_ != "keys")
@@ -420,8 +419,9 @@ object Dev {
     implicit val sq = s.sqlContext
     val perBatch = events / batches
 
-    def run[T](name: String, mkBatch: Int => Seq[T], ms: MemoryStream[T],
+    def run(name: String, mkBatch: Int => Seq[Ev2],
         start: DataFrame => StreamingQuery): Unit = {
+      val ms = MemoryStream[Ev2]
       ms.addData(mkBatch(0): _*)
       val q = start(ms.toDF())
       q.processAllAvailable()
@@ -441,12 +441,7 @@ object Dev {
 
     (if (keyAxis) Seq(1, 4, 16) else Seq(1)).foreach { mult =>
       if (keyAxis) println(s"[streambench] == key tier ${mult}x: " +
-        s"${15000 * mult} vertices / ${20000 * mult} users, $events events ==")
-      def edgeBatch(b: Int): Seq[StreamingGnn.EdgeFeat] = (0 until perBatch).map { i =>
-        val g = b.toLong * perBatch + i
-        StreamingGnn.EdgeFeat(g % (15000L * mult),
-          Array.tabulate(64)(j => ((g * 31 + j * 7) % 1000).toFloat / 1000f))
-      }
+        s"${20000 * mult} users, $events events ==")
       // one event per user per simulated minute: sessions stay open
       // across the whole run, so state accumulates
       def evBatch(b: Int): Seq[Ev2] = {
@@ -457,15 +452,11 @@ object Dev {
             (g % 997).toDouble / 100.0)
         }
       }
-      run(s"gnn_embed(fMGWS)@${mult}x", edgeBatch, MemoryStream[StreamingGnn.EdgeFeat],
-        df => StreamingGnn.embedStream(s, df.select(col("cust").as("src"), col("vec").as("embedding")))
-          .writeStream.outputMode(OutputMode.Update())
-          .option("checkpointLocation", ckpt("embed")).format("noop").start())
-      run(s"sessions(fMGWS+timer)@${mult}x", evBatch, MemoryStream[Ev2],
+      run(s"sessions(fMGWS+timer)@${mult}x", evBatch,
         df => StreamingOps.timedSessions(s, df)
           .writeStream.outputMode(OutputMode.Append())
           .option("checkpointLocation", ckpt("sess")).format("noop").start())
-      run(s"snapshot(tws)@${mult}x", evBatch, MemoryStream[Ev2],
+      run(s"snapshot(tws)@${mult}x", evBatch,
         df => StreamingOps.statefulSnapshotTws(s, df)
           .writeStream.outputMode(OutputMode.Update())
           .option("checkpointLocation", ckpt("tws")).format("noop").start())

@@ -2,10 +2,9 @@ package graft.engine
 
 import graft.engine.Ckpt.CkptOps
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Event-stream operators (SURVEY.md §2.9) — the Flink DataStream surface
   * the reference names (`/root/reference/README.md:2`), re-expressed as
@@ -20,6 +19,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale: tumbling/sliding/session aggregations are keyed state with
   * watermark-driven eviction; at 100 TB the state store shards by
   * (key, window) across executors — no global state.
+  *
+  * Keyed state: every keyed maintainer here is a `Keyed.Fold` except
+  * `timedSessions`, the one on Spark's GroupState API (see `Keyed`).
   */
 object StreamingOps {
 
@@ -208,46 +210,15 @@ object StreamingOps {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(timedSessionUpdate)
   }
 
-  /** Spark 4 arbitrary-state API (`transformWithState`): the modern
-    * replacement for flatMapGroupsWithState and the closest Spark analog
-    * of Flink's keyed `ValueState` + `processElement` — typed state
-    * handles in the state store (RocksDB provider at scale), per-key
-    * timers, TTL. Same fold as userAggFold so both APIs are covered
-    * by the same oracle. */
-  class UserAggProcessor extends StatefulProcessor[Long, Ev, UserAgg] {
-    @transient private var st: ValueState[UserState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[UserState]("userAgg",
-        Encoders.product[UserState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, events: Iterator[Ev],
-        timerValues: TimerValues): Iterator[UserAgg] = {
-      val init = if (st.exists()) st.get() else UserState(0L, null, 0L)
-      var n = init.n
-      var last = init.lastTs
-      var cents = init.cents
-      events.foreach { e =>
-        n += 1
-        if (last == null || e.ts.compareTo(last) > 0) last = e.ts
-        cents += java.math.BigDecimal.valueOf(e.value)
-          .setScale(2, java.math.RoundingMode.HALF_UP)
-          .movePointRight(2).longValueExact()
-      }
-      st.update(UserState(n, last, cents))
-      Iterator.single(UserAgg(key, n, last, cents / 100.0))
-    }
-  }
-
-  /** transformWithState requires the RocksDB state store provider (its
-    * column-family state layout) — the caller configures the provider on
-    * the session that owns `ev` (streaming runs register their own
-    * StateStoreCoordinator; the batch path uses [[batchTwsSession]]). */
+  /** userAggFold through `transformWithState` (`Keyed.runTws`), so
+    * q_stream_stateful and q_stream_stateful_tws run the same fold. The
+    * caller configures the RocksDB provider on the session that owns
+    * `ev` (streaming runs register their own StateStoreCoordinator; the
+    * batch path uses [[batchTwsSession]]). */
   def statefulSnapshotTws(s: SparkSession, ev: DataFrame): Dataset[UserAgg] = {
     import s.implicits._
-    ev.select(col("event_id"), col("user_id"), col("ts"), col("value")).as[Ev]
-      .groupByKey(_.user_id)
-      .transformWithState(new UserAggProcessor, TimeMode.None(), OutputMode.Update())
+    Keyed.runTws(ev.select(col("event_id"), col("user_id"), col("ts"), col("value")).as[Ev],
+      userAggFold)
   }
 
   /** Session prepared for BATCH transformWithState, cloned from `s` so the
@@ -472,7 +443,7 @@ object StreamingOps {
     * the existential check reduces to one comparison per anchor row.
     * Scale shape: k windows over the same (user_id | ts, event_id)
     * ordering — ONE shuffle, k sort-free passes, state per user
-    * bounded by k witnesses (the streaming twin `cepUpdate` keeps
+    * bounded by k witnesses (the streaming twin `cepFold` keeps
     * exactly that). Returns the match rows. */
   /** Add pattern p's chain/lag columns (name-prefixed, NO filtering) to
     * df — the column-building half of the compilation, factored out so
@@ -674,11 +645,13 @@ object StreamingOps {
     * contract (the spec feeds ordered batches; a production deployment
     * fronts this with watermark-ordered delivery). State is O(k) per
     * user — the 100 TB CEP shape. */
-  private[graft] def cepUpdate(p: CepPattern)(userId: Long, it: Iterator[CepEv],
-      state: GroupState[CepState]): Iterator[CepMatch] = {
+  private[graft] def cepFold(p: CepPattern): Keyed.Fold[CepEv, Long, CepState, CepMatch] =
+    Keyed.fold((e: CepEv) => e.user_id, CepState(Seq.fill(p.steps.size - 1)(Long.MinValue),
+      Seq.fill(p.steps.size - 1)(0L), Long.MinValue, 0L), append = true)(cepStep(p))
+
+  private def cepStep(p: CepPattern)(userId: Long, st: CepState,
+      it: Iterator[CepEv]): (CepState, Iterator[CepMatch]) = {
     val k = p.steps.size
-    val st = state.getOption.getOrElse(CepState(
-      Seq.fill(k - 1)(Long.MinValue), Seq.fill(k - 1)(0L), Long.MinValue, 0L))
     val lTs = st.latestTs.toArray
     val lEid = st.latestEid.toArray
     var notTs = st.lastNotTs
@@ -727,9 +700,8 @@ object StreamingOps {
           emit(ring.head._2, e.ts_us)
         ring = (ring :+ ((e.event_type, e.ts_us, e.event_id))).takeRight(k - 1)
       }
-      state.update(CepState(ring.map(_._2), ring.map(_._3),
-        Long.MinValue, 0L, ring.map(_._1), lastEmit))
-      return out.iterator
+      return (CepState(ring.map(_._2), ring.map(_._3),
+        Long.MinValue, 0L, ring.map(_._1), lastEmit), out.iterator)
     }
     it.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
       // anchor check BEFORE state updates: strictly-before semantics
@@ -755,17 +727,14 @@ object StreamingOps {
       }
       if (p.notBetween.contains(e.event_type)) { notTs = e.ts_us; notEid = e.event_id }
     }
-    state.update(CepState(lTs.toSeq, lEid.toSeq, notTs, notEid,
-      lastEmitTs = lastEmit))
-    out.iterator
+    (CepState(lTs.toSeq, lEid.toSeq, notTs, notEid, lastEmitTs = lastEmit), out.iterator)
   }
 
   /** Streaming leg: same transform shape on a stream or batch Dataset. */
   private[graft] def cepStream(p: CepPattern)(ev: Dataset[CepEv]): Dataset[CepMatch] = {
     val s = ev.sparkSession
     import s.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(cepUpdate(p))
+    Keyed.run(ev, cepFold(p))
   }
 
   def q_stream_tumbling(s: SparkSession, dir: String): DataFrame =
@@ -980,36 +949,32 @@ object StreamingOps {
     * index, count, sum, first/last id) — bounded regardless of stream
     * length, and the fold is micro-batch-split invariant because the
     * partial window carries across batches. */
-  def updateCountWindow(key: String, it: Iterator[CwIn],
-      state: GroupState[Array[Long]]): Iterator[CwOut] = {
+  val countWindowFold: Keyed.Fold[CwIn, String, Array[Long], CwOut] =
     // state layout: winIdx, cnt, sum, firstEid, lastEid
-    val st = state.getOption.getOrElse(Array(0L, 0L, 0L, -1L, -1L))
-    val out = Seq.newBuilder[CwOut]
-    it.toArray.sortBy(_.eid).foreach { e =>
-      if (st(1) == 0L) st(3) = e.eid
-      st(1) += 1
-      st(2) += e.c
-      st(4) = e.eid
-      if (st(1) == CountWindowN) {
-        out += CwOut(key, st(0), st(2), st(3), st(4))
-        st(0) += 1; st(1) = 0L; st(2) = 0L; st(3) = -1L; st(4) = -1L
+    Keyed.fold((e: CwIn) => e.etype, Array(0L, 0L, 0L, -1L, -1L), append = true) { (key, st, it) =>
+      val out = Seq.newBuilder[CwOut]
+      it.toArray.sortBy(_.eid).foreach { e =>
+        if (st(1) == 0L) st(3) = e.eid
+        st(1) += 1
+        st(2) += e.c
+        st(4) = e.eid
+        if (st(1) == CountWindowN) {
+          out += CwOut(key, st(0), st(2), st(3), st(4))
+          st(0) += 1; st(1) = 0L; st(2) = 0L; st(3) = -1L; st(4) = -1L
+        }
       }
+      (st, out.result().iterator)
     }
-    state.update(st)
-    out.result().iterator
-  }
 
   /** Driver-contract query: tumbling 100-event count windows per
     * event_type; only CLOSED windows emit (the oracle's complete-window
     * HAVING mirrors the tail staying in state). */
   def q_stream_count_window(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, dir)
+    Keyed.run(Tables.events(s, dir)
       .select(col("event_type").as("etype"), col("event_id").as("eid"),
         Dsl.rlong(col("value") * 100).as("c"))
-      .as[CwIn]
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(updateCountWindow)
+      .as[CwIn], countWindowFold)
       .toDF()
       .orderBy("event_type", "win")
   }

@@ -15,7 +15,8 @@ import graft.engine.{ClusterOps, GraphOps, Keyed, LlmOps, Relational, SketchOps,
   * integers, sets, a max, or a series they sort within the batch must
   * also give it when each batch arrives in random order. A key's final
   * output is the rows of its last call for snapshot folds, and all the
-  * rows it emitted for event emitters (anomaly, markov, new-vs-returning).
+  * rows it emitted for event emitters (anomaly, markov, new-vs-returning)
+  * and for the Append folds (count window, CEP).
   *
   * Not shuffled: the f64 neighbor sums of embedFold and custRepFold.
   * custRepFold's last record is compared on (h, version): its `old` is
@@ -149,6 +150,17 @@ class KeyedSplitSpec extends AnyFunSuite {
   check("lateFold", law(StreamingOps.lateFold, numbered(
     Gen.zip(etype, Gen.choose(0L, 5000L))
       .map { case (t, sec) => (id: Long) => StreamingOps.LateIn(t, id, sec * 1000000L) })))
+  check("countWindowFold", law(StreamingOps.countWindowFold, numbered(
+    Gen.zip(Gen.oneOf("a", "b"), cents)
+      .map { case (t, c) => (id: Long) => StreamingOps.CwIn(t, id, c) }, 400), emitter = true))
+  // events in (ts, event_id) order, the source's contract across batches
+  private val cepTypes = Seq("view", "click", "purchase", "error")
+  StreamingOps.CepPatterns.foreach { p =>
+    check(s"cepFold(${p.name})", law(StreamingOps.cepFold(p), numbered(
+      Gen.zip(Gen.choose(1L, 3L), Gen.choose(0L, 300L), Gen.oneOf(cepTypes))
+        .map { case (u, min, t) => (id: Long) => StreamingOps.CepEv(u, id, min * 60000000L, t) })
+      .map(_.sortBy(e => (e.ts_us, e.event_id))), emitter = true))
+  }
   check("anomalyFold", law(StatsOps.anomalyFold, numbered(
     Gen.zip(Gen.oneOf("a", "b"), Gen.choose(0L, 300L), cents)
       .map { case (t, us, c) => (id: Long) => StatsOps.AnomEvent(t, us, id, c) }, 160)

@@ -332,25 +332,10 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("q_stream_count_window fold: split-invariant; windows are exact 100-event tiles") {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
     import graft.engine.StreamingOps
     val evs = (0 until 250).map(i => StreamingOps.CwIn("t", i.toLong, (i % 13).toLong))
-    def fold(batches: Seq[Seq[StreamingOps.CwIn]]): Seq[StreamingOps.CwOut] = {
-      var st: Option[Array[Long]] = None
-      val out = Seq.newBuilder[StreamingOps.CwOut]
-      batches.foreach { b =>
-        val gs = TestGroupState.create[Array[Long]](
-          optionalState = st.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-          timeoutConf = GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 0L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        out ++= StreamingOps.updateCountWindow("t", b.iterator, gs)
-        st = if (gs.exists) Some(gs.get) else None
-      }
-      out.result()
-    }
+    def fold(batches: Seq[Seq[StreamingOps.CwIn]]): Seq[StreamingOps.CwOut] =
+      KeyedReplay.rows(StreamingOps.countWindowFold, batches)
     val single = fold(Seq(evs))
     val split = fold(evs.grouped(37).toSeq) // window boundaries straddle batches
     assert(single == split, "micro-batch split must not change the closed windows")

@@ -264,19 +264,26 @@ class StreamingSourcesSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       def ts(h: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:00:00")
-      val ms = MemoryStream[E]
-      val q = StreamingOps.statefulSnapshotTws(s, ms.toDF())
-        .writeStream.outputMode(OutputMode.Update)
-        .format("memory").queryName("tws").start()
-      ms.addData(E(1, 7, ts(1), "click", 2.5), E(2, 7, ts(2), "view", 1.0))
-      q.processAllAvailable()
-      ms.addData(E(3, 7, ts(3), "click", 4.0), E(4, 8, ts(1), "view", 9.0))
-      q.processAllAvailable(); q.stop()
-      // latest snapshot per user equals the one-shot batch fold
-      val streamed = s.table("tws").collect()
-        .groupBy(_.getLong(0)).map { case (u, rows) => u -> rows.maxBy(_.getLong(1)) }
-      assert(streamed(7L).getLong(1) == 3L && streamed(7L).getDouble(3) == 7.5)
-      assert(streamed(8L).getLong(1) == 1L && streamed(8L).getDouble(3) == 9.0)
+      val (ms, msF) = (MemoryStream[E], MemoryStream[E])
+      val qs = Seq(
+        StreamingOps.statefulSnapshotTws(s, ms.toDF()).writeStream
+          .outputMode(OutputMode.Update).format("memory").queryName("tws").start(),
+        Keyed.run(msF.toDF().select($"event_id", $"user_id", $"ts", $"value")
+          .as[StreamingOps.Ev], StreamingOps.userAggFold).writeStream
+          .outputMode(OutputMode.Update).format("memory").queryName("tws_fgws").start())
+      Seq(Seq(E(1, 7, ts(1), "click", 2.5), E(2, 7, ts(2), "view", 1.0)),
+        Seq(E(3, 7, ts(3), "click", 4.0), E(4, 8, ts(1), "view", 9.0))).foreach { b =>
+        ms.addData(b: _*); msF.addData(b: _*)
+        qs.foreach(_.processAllAvailable())
+      }
+      qs.foreach(_.stop())
+      // latest snapshot per user
+      def latest(table: String) = s.table(table).as[StreamingOps.UserAgg].collect()
+        .groupBy(_.user_id).map { case (u, rows) => u -> rows.maxBy(_.n_events) }
+      val streamed = latest("tws")
+      assert(streamed == latest("tws_fgws"), "transformWithState and the fGWS fold disagree")
+      assert(streamed(7L).n_events == 3L && streamed(7L).total_value == 7.5)
+      assert(streamed(8L).n_events == 1L && streamed(8L).total_value == 9.0)
     } finally {
       prev match {
         case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
