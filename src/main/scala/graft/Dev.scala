@@ -396,9 +396,9 @@ object Dev {
 
   case class Ev2(event_id: Long, user_id: Long, ts: Timestamp, value: Double)
 
-  /** Events/s through two keyed-state maintainers on the RocksDB state
+  /** Events/s through two `Keyed` maintainers on the RocksDB state
     * store: `timedSessions` (event-time timers + watermark) and
-    * `statefulSnapshotTws` (transformWithState). Input is a
+    * `statefulSnapshot` (the per-user fold). Input is a
     * deterministic synthetic stream shaped like the sf0.1 fixture (20k
     * users, default 600k events in 12 batches) through MemoryStream to a
     * noop sink; after one untimed prime batch, the window is first
@@ -452,14 +452,14 @@ object Dev {
             (g % 997).toDouble / 100.0)
         }
       }
-      run(s"sessions(fMGWS+timer)@${mult}x", evBatch,
+      run(s"sessions@${mult}x", evBatch,
         df => StreamingOps.timedSessions(s, df)
           .writeStream.outputMode(OutputMode.Append())
           .option("checkpointLocation", ckpt("sess")).format("noop").start())
-      run(s"snapshot(tws)@${mult}x", evBatch,
-        df => StreamingOps.statefulSnapshotTws(s, df)
+      run(s"snapshot@${mult}x", evBatch,
+        df => StreamingOps.statefulSnapshot(s, df)
           .writeStream.outputMode(OutputMode.Update())
-          .option("checkpointLocation", ckpt("tws")).format("noop").start())
+          .option("checkpointLocation", ckpt("snap")).format("noop").start())
     }
   }
 

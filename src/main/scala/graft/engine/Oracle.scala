@@ -349,8 +349,8 @@ object Oracle {
         |SELECT day, user_id, cnt, CAST(rnk AS BIGINT) AS rnk
         |FROM r WHERE rnk <= 3 ORDER BY day, rnk""".stripMargin,
 
-    // transformWithState runs the same fold as Keyed (flatMapGroupsWithState) —
-    // one oracle text, two stateful APIs.
+    // The same fold as q_stream_stateful (StreamingOps.userAggFold), kept as its
+    // own registered query — one oracle text, two names.
     "q_stream_stateful_tws" ->
       """SELECT user_id, COUNT(*) AS n_events,
         |  MAX(CAST(ts AS TIMESTAMP)) AS last_ts,

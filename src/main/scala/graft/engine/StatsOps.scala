@@ -2002,7 +2002,7 @@ object StatsOps {
     }
 
   /** Driver-contract query: the streaming CUSUM drift monitor over the
-    * bounded daily series (the batch-mode fMGWS run of the maintainer,
+    * bounded daily series (the bounded `Keyed.run` of the maintainer,
     * the q_stream_decay_topk template): per event_type, the reference
     * window size, monitored days, max positive excursion C⁺ with its
     * earliest peak day index, and the count of alarm days
@@ -2134,7 +2134,7 @@ object StatsOps {
     }
 
   /** Driver-contract query: the streaming EWMA maintainer over the
-    * bounded daily series (the q_stream_cusum batch-mode fMGWS run);
+    * bounded daily series (the q_stream_cusum bounded `Keyed.run`);
     * one snapshot row per event_type = the latest 20-tap EWMA. */
   def q_stream_ewma(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -94,10 +94,11 @@ object StreamingGnn {
   // retract stream: UPDATE_BEFORE and UPDATE_AFTER in one record), so
   // layer 2 adds the difference instead of storing every neighbor's h1.
   //
-  // Deployment shape: Spark requires a keyed-state operator to be the
-  // terminal stateful operator of a streaming query, so the two layers run
-  // as two chained jobs connected by a stream (exactly Flink's iteration
-  // edge made explicit); the scenario test wires that two-hop pipeline.
+  // Deployment shape: the two layers run as two streaming queries
+  // connected by a stream (Flink's iteration edge made explicit); the
+  // scenario test wires that two-hop pipeline. Both are Update-mode
+  // `Keyed` folds on transformWithState, which also accepts them chained
+  // in ONE streaming query (layer 1, the `edges` join, layer 2).
   // On a bounded input the whole DAG runs as ONE batch plan (the contract
   // query below), which is also what makes it DuckDB-oracle-checkable.
 

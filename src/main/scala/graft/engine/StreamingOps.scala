@@ -4,7 +4,6 @@ import graft.engine.Ckpt.CkptOps
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Event-stream operators (SURVEY.md §2.9) — the Flink DataStream surface
   * the reference names (`/root/reference/README.md:2`), re-expressed as
@@ -20,8 +19,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * watermark-driven eviction; at 100 TB the state store shards by
   * (key, window) across executors — no global state.
   *
-  * Keyed state: every keyed maintainer here is a `Keyed.Fold` except
-  * `timedSessions`, the one on Spark's GroupState API (see `Keyed`).
+  * Keyed state: every keyed maintainer here is a `Keyed` fold —
+  * `timedSessions` a `Keyed.Timed` one with an event-time timer — so a
+  * stream runs it on `transformWithState` and a bounded input as a plain
+  * group (see `Keyed`).
   */
 object StreamingOps {
 
@@ -160,91 +161,50 @@ object StreamingOps {
   val SessionGapMs: Long = 30L * 60L * 1000L
 
   /** Flink timer analog: per-user sessions closed by an EVENT-TIME
-    * timeout, late-data-safe. Every incoming event becomes a singleton
+    * timer, late-data-safe. Every incoming event becomes a singleton
     * session; pending sessions merge whenever their boundaries are
     * within the 30-min gap (matching session_window, which merges at
     * exactly gap distance). A session is emitted ONLY once the
-    * watermark passes session_end + gap — before that, an out-of-order
-    * event still above the watermark may extend it or bridge two
-    * pending sessions, so emission is independent of arrival order and
-    * of where the micro-batch cuts fell. The timer (armed at the
-    * earliest pending end + gap) is the state-eviction mechanism:
-    * when it fires, sealed sessions flush and the timer re-arms for
-    * the next pending one. */
-  def timedSessionUpdate(key: Long, events: Iterator[Ev],
-      state: GroupState[SessState]): Iterator[SessionOut] = {
-    val wm = state.getCurrentWatermarkMs()
-    val prior = state.getOption.map(_.sessions).getOrElse(Seq.empty)
+    * watermark `wm` passes session_end + gap — before that, an
+    * out-of-order event still above the watermark may extend it or
+    * bridge two pending sessions, so emission is independent of arrival
+    * order and of where the micro-batch cuts fell. The timer (armed at
+    * the earliest pending end + gap) is the state-eviction mechanism:
+    * when it fires, sealed sessions flush and the timer re-arms for the
+    * next pending one; with no pending session the state is cleared. */
+  def timedSessionUpdate(key: Long, state: SessState, events: Iterator[Ev],
+      wm: Long): (Option[SessState], Iterator[SessionOut], Option[Long]) = {
     val incoming = events.map(e => Sess(1L, e.ts.getTime, e.ts.getTime)).toSeq
-    val merged = (prior ++ incoming).sortBy(s => (s.startMs, s.endMs))
+    val merged = (state.sessions ++ incoming).sortBy(s => (s.startMs, s.endMs))
       .foldLeft(List.empty[Sess]) {
         case (cur :: rest, s) if s.startMs - cur.endMs <= SessionGapMs =>
           Sess(cur.n + s.n, cur.startMs, math.max(cur.endMs, s.endMs)) :: rest
         case (acc, s) => s :: acc
       }.reverse
-    // Boundary is intentionally exclusive (ADVICE r3): Spark's fGWS
-    // late-row filter drops rows with ts <= wm before they reach this
-    // function (verified empirically in StreamingSourcesSpec), so every
-    // surviving event has ts > wm >= endMs + gap and can never merge
-    // with a session sealed here. Emission stays arrival-order
+    // Boundary is intentionally exclusive (ADVICE r3): the stateful
+    // operator's late-row filter drops rows with ts <= wm before they
+    // reach this function (verified empirically in StreamingSourcesSpec),
+    // so every surviving event has ts > wm >= endMs + gap and can never
+    // merge with a session sealed here. Emission stays arrival-order
     // independent because the watermark filter, not arrival order,
     // decides a boundary event's fate.
     val (sealed_, open) = merged.partition(_.endMs + SessionGapMs <= wm)
-    if (open.isEmpty) state.remove()
-    else {
-      state.update(SessState(open))
-      // min pending end + gap is > wm by construction of `open`; the
-      // clamp guards the invariant anyway, since Spark rejects timeout
-      // timestamps at or before the current watermark.
-      state.setTimeoutTimestamp(
-        math.max(open.map(_.endMs).min + SessionGapMs, wm + 1L))
-    }
-    sealed_.iterator.map(s => SessionOut(key, s.n, new java.sql.Timestamp(s.endMs)))
+    val out = sealed_.iterator.map(s => SessionOut(key, s.n, new java.sql.Timestamp(s.endMs)))
+    // min pending end + gap is > wm by construction of `open`; the clamp
+    // guards the invariant anyway, since a timer at or before the
+    // watermark is already due.
+    if (open.isEmpty) (None, out, None)
+    else (Some(SessState(open)), out,
+      Some(math.max(open.map(_.endMs).min + SessionGapMs, wm + 1L)))
   }
+
+  val timedSessionFold: Keyed.Timed[Ev, Long, SessState, SessionOut] =
+    Keyed.Timed(_.user_id, () => SessState(Seq.empty), timedSessionUpdate)
 
   def timedSessions(s: SparkSession, ev: DataFrame): Dataset[SessionOut] = {
     import s.implicits._
-    ev.select(col("event_id"), col("user_id"), col("ts"), col("value")).as[Ev]
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(timedSessionUpdate)
-  }
-
-  /** userAggFold through `transformWithState` (`Keyed.runTws`), so
-    * q_stream_stateful and q_stream_stateful_tws run the same fold. The
-    * caller configures the RocksDB provider on the session that owns
-    * `ev` (streaming runs register their own StateStoreCoordinator; the
-    * batch path uses [[batchTwsSession]]). */
-  def statefulSnapshotTws(s: SparkSession, ev: DataFrame): Dataset[UserAgg] = {
-    import s.implicits._
-    Keyed.runTws(ev.select(col("event_id"), col("user_id"), col("ts"), col("value")).as[Ev],
-      userAggFold)
-  }
-
-  /** Session prepared for BATCH transformWithState, cloned from `s` so the
-    * provider override stays scoped to this query instead of silently
-    * switching every later stateful query in the shared session to
-    * RocksDB (builder-level confs — shuffle partitions, TZ, extensions —
-    * are inherited from the shared SparkConf). */
-  private[engine] def batchTwsSession(s: SparkSession): SparkSession = {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // Batch execution skips the streaming runner that registers the
-    // driver's StateStoreCoordinator RPC endpoint, and RocksDB's
-    // snapshot-upload reporting then kills every task with
-    // RpcEndpointNotFoundException. Force-create it the same way a
-    // streaming run would (private[sql] lazy val, public in bytecode).
-    try s2.streams.getClass.getMethod("stateStoreCoordinator").invoke(s2.streams)
-    catch {
-      case e: ReflectiveOperationException => throw new IllegalStateException(
-        "Cannot force-create the StateStoreCoordinator: " +
-          "StreamingQueryManager.stateStoreCoordinator (a private[sql] lazy " +
-          "val, public in Spark 4.1 bytecode) was not found — the Spark " +
-          "version in use must have moved it. Run q_stream_stateful_tws as " +
-          "a streaming query (which registers the coordinator itself) instead.", e)
-    }
-    s2
+    Keyed.run(ev.select(col("event_id"), col("user_id"), col("ts"), col("value")).as[Ev]
+      .withWatermark("ts", "10 minutes"), timedSessionFold)
   }
 
   def statefulSnapshot(s: SparkSession, ev: DataFrame): Dataset[UserAgg] = {
@@ -730,13 +690,6 @@ object StreamingOps {
     (CepState(lTs.toSeq, lEid.toSeq, notTs, notEid, lastEmitTs = lastEmit), out.iterator)
   }
 
-  /** Streaming leg: same transform shape on a stream or batch Dataset. */
-  private[graft] def cepStream(p: CepPattern)(ev: Dataset[CepEv]): Dataset[CepMatch] = {
-    val s = ev.sparkSession
-    import s.implicits._
-    Keyed.run(ev, cepFold(p))
-  }
-
   def q_stream_tumbling(s: SparkSession, dir: String): DataFrame =
     tumblingDaily(Tables.events(s, dir)).orderBy("day", "event_type")
 
@@ -774,12 +727,10 @@ object StreamingOps {
   def q_stream_win_topk(s: SparkSession, dir: String): DataFrame =
     windowTopUsers(Tables.events(s, dir)).orderBy("day", "rnk")
 
-  def q_stream_stateful_tws(s: SparkSession, dir: String): DataFrame = {
-    val s2 = batchTwsSession(s)
-    statefulSnapshotTws(s2, Tables.events(s2, dir))
-      .toDF()
-      .orderBy("user_id")
-  }
+  /** The same fold as q_stream_stateful: its name is kept for the
+    * registered query and its oracle. */
+  def q_stream_stateful_tws(s: SparkSession, dir: String): DataFrame =
+    q_stream_stateful(s, dir)
 
   def q_stream_static_join(s: SparkSession, dir: String): DataFrame =
     staticEnrich(Tables.events(s, dir), Tables.customer(s, dir))

@@ -6,12 +6,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.StreamingOps
+import graft.engine.{Keyed, StreamingOps}
 
 /** Checkpoint/restart recovery (VERDICT r6 item 4): the exactly-once
   * story of SURVEY §3.2 E2, demonstrated rather than asserted. A
-  * flatMapGroupsWithState query (event-time timers, RocksDB state
-  * store — the 100 TB backend) is STOPPED mid-stream while its state
+  * `Keyed` query (transformWithState with event-time timers, RocksDB
+  * state store — the 100 TB backend) is STOPPED mid-stream while its state
   * holds pending sessions, restarted from the same checkpoint
   * directory, and fed the rest of the stream; the recovered run's file
   * sink must equal an uninterrupted run of the identical input —
@@ -65,9 +65,9 @@ class RecoverySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2))).toSet
   }
 
-  /** Same recovery story for the MODERN arbitrary-state API
-    * (`transformWithState`, Spark 4 StatefulProcessor with typed
-    * ValueState handles): kill the query between micro-batches while
+  /** Same recovery story for the per-user snapshot fold
+    * (`statefulSnapshot`, one transformWithState ValueState per user):
+    * kill the query between micro-batches while
     * every key holds accumulated state, restart from the checkpoint,
     * and require the final per-user snapshot to equal the uninterrupted
     * run — counts and cent-exact sums must BRIDGE the kill, which is
@@ -84,7 +84,7 @@ class RecoverySpec extends AnyFunSuite {
     E(4, 1, ts(1, 20), "click", 4.00),
     E(5, 3, ts(2, 0), "view", 3.33))
 
-  private def runTws(kill: Boolean): Map[Long, (Long, Double)] = {
+  private def runSnapshot(kill: Boolean): Map[Long, (Long, Double)] = {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
@@ -95,7 +95,7 @@ class RecoverySpec extends AnyFunSuite {
     // re-run after the restart, so the in-JVM buffer — which outlives
     // the killed query object — sees every emission exactly once.
     val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Double)]
-    def start() = StreamingOps.statefulSnapshotTws(s, ms.toDF())
+    def start() = StreamingOps.statefulSnapshot(s, ms.toDF())
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", ckpt)
       .foreachBatch { (df: org.apache.spark.sql.Dataset[StreamingOps.UserAgg], _: Long) =>
@@ -122,31 +122,19 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("transformWithState ValueState survives a kill+restart from checkpoint") {
-    val s = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val uninterrupted = runTws(kill = false)
-      val recovered = runTws(kill = true)
-      // user 1 has events on BOTH sides of the kill: its final count can
-      // only be 3 if the pre-kill ValueState was restored
-      assert(recovered(1L) == ((3L, 7.75)),
-        s"user 1 count and exact-cents sum must bridge the restart: $recovered")
-      assert(recovered == uninterrupted,
-        s"recovered snapshot must equal the uninterrupted run:\n" +
-          s"  recovered     = $recovered\n  uninterrupted = $uninterrupted")
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None => s.conf.unset(key)
-      }
-    }
+    val uninterrupted = runSnapshot(kill = false)
+    val recovered = runSnapshot(kill = true)
+    // user 1 has events on BOTH sides of the kill: its final count can
+    // only be 3 if the pre-kill ValueState was restored
+    assert(recovered(1L) == ((3L, 7.75)),
+      s"user 1 count and exact-cents sum must bridge the restart: $recovered")
+    assert(recovered == uninterrupted,
+      s"recovered snapshot must equal the uninterrupted run:\n" +
+        s"  recovered     = $recovered\n  uninterrupted = $uninterrupted")
   }
 
   // ---- Chained-stage recovery (VERDICT r7 item 6 / r8 item 6) ----------
-  // q_stream_gnn_layer2's production shape is TWO chained fMGWS stages
+  // q_stream_gnn_layer2's production shape is TWO chained Keyed stages
   // (layer 1 keyed by customer, layer 2 keyed by part) connected by an
   // explicit stream — Flink's iteration edge made explicit. Single-query
   // recovery is covered above; this kills BOTH stages between
@@ -219,47 +207,35 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("chained 2-stage streaming GNN survives a kill of BOTH stages between batches") {
-    val s = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val uninterrupted = runChained(kill = false)
-      val recovered = runChained(kill = true)
-      // batch ground truth (Round7Spec's math): after ALL edges, cust 1's
-      // rep reflects BOTH its edges (layer-1 state bridged the kill) and
-      // part 10 aggregates custs {1, 2} (layer-2 state bridged the kill)
-      import graft.engine.Gnn
-      val h1 = Map(
-        1L -> Gnn.forward(Array.tabulate(64)(i =>
-          if (i == 0) 2.0 else if (i == 1) 3.0 else 0.0)),
-        2L -> Gnn.forward(Array.tabulate(64)(i => if (i == 0) 10.0 else 0.0)))
-      def l2(custs: Seq[Long]): Double = {
-        val mean = Array.tabulate(64)(i => custs.map(c => h1(c)(i)).sum / custs.length)
-        Gnn.forward(mean)(0)
-      }
-      assert(recovered(10L)._1 == 2L, s"part 10 must still see 2 neighbor custs: $recovered")
-      assert(math.abs(recovered(10L)._2 - l2(Seq(1L, 2L))) < 1e-9,
-        "part 10's embedding must combine pre-kill state with the post-kill update")
-      assert(math.abs(recovered(11L)._2 - l2(Seq(1L))) < 1e-9,
-        "part 11 must see cust 1's FULL post-kill representation")
-      assert(recovered == uninterrupted,
-        s"recovered chained run must equal the uninterrupted run:\n" +
-          s"  recovered     = $recovered\n  uninterrupted = $uninterrupted")
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None => s.conf.unset(key)
-      }
+    val uninterrupted = runChained(kill = false)
+    val recovered = runChained(kill = true)
+    // batch ground truth (Round7Spec's math): after ALL edges, cust 1's
+    // rep reflects BOTH its edges (layer-1 state bridged the kill) and
+    // part 10 aggregates custs {1, 2} (layer-2 state bridged the kill)
+    import graft.engine.Gnn
+    val h1 = Map(
+      1L -> Gnn.forward(Array.tabulate(64)(i =>
+        if (i == 0) 2.0 else if (i == 1) 3.0 else 0.0)),
+      2L -> Gnn.forward(Array.tabulate(64)(i => if (i == 0) 10.0 else 0.0)))
+    def l2(custs: Seq[Long]): Double = {
+      val mean = Array.tabulate(64)(i => custs.map(c => h1(c)(i)).sum / custs.length)
+      Gnn.forward(mean)(0)
     }
+    assert(recovered(10L)._1 == 2L, s"part 10 must still see 2 neighbor custs: $recovered")
+    assert(math.abs(recovered(10L)._2 - l2(Seq(1L, 2L))) < 1e-9,
+      "part 10's embedding must combine pre-kill state with the post-kill update")
+    assert(math.abs(recovered(11L)._2 - l2(Seq(1L))) < 1e-9,
+      "part 11 must see cust 1's FULL post-kill representation")
+    assert(recovered == uninterrupted,
+      s"recovered chained run must equal the uninterrupted run:\n" +
+        s"  recovered     = $recovered\n  uninterrupted = $uninterrupted")
   }
 
   test("CEP pattern state survives a kill+restart from checkpoint") {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    import StreamingOps.{CepEv, CepPatterns, cepStream}
+    import StreamingOps.{CepEv, CepPatterns, cepFold}
     val p = CepPatterns.find(_.name == "click_purchase_clean").get
     def us(min: Long): Long = min * 60L * 1000000L
     // user 1's click lands BEFORE the kill and its purchase AFTER —
@@ -273,7 +249,7 @@ class RecoverySpec extends AnyFunSuite {
       val root = java.nio.file.Files.createTempDirectory("graft_cep_recov").toString
       val (ckpt, out) = (s"$root/ckpt", s"$root/out")
       val ms = MemoryStream[CepEv]
-      def start() = cepStream(p)(ms.toDS())
+      def start() = Keyed.run(ms.toDS(), cepFold(p))
         .writeStream.outputMode(OutputMode.Append)
         .option("checkpointLocation", ckpt)
         .format("parquet").option("path", out).start()
@@ -293,28 +269,16 @@ class RecoverySpec extends AnyFunSuite {
     assert(recovered == uninterrupted, "recovered == uninterrupted")
   }
 
-  test("fGWS sessions survive a kill+restart from checkpoint (RocksDB provider)") {
-    val s = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val uninterrupted = run(kill = false)
-      val recovered = run(kill = true)
-      // user 1's session must BRIDGE the kill point: 3 events ending
-      // 01:20 — only possible if the pending pre-kill session state was
-      // restored from the checkpoint
-      assert(recovered.contains((1L, 3L, ts(1, 20))),
-        s"session spanning the restart must be bridged: $recovered")
-      assert(recovered == uninterrupted,
-        s"recovered run must equal the uninterrupted run:\n" +
-          s"  recovered     = $recovered\n  uninterrupted = $uninterrupted")
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None => s.conf.unset(key)
-      }
-    }
+  test("timed sessions survive a kill+restart from checkpoint (RocksDB provider)") {
+    val uninterrupted = run(kill = false)
+    val recovered = run(kill = true)
+    // user 1's session must BRIDGE the kill point: 3 events ending
+    // 01:20 — only possible if the pending pre-kill session state was
+    // restored from the checkpoint
+    assert(recovered.contains((1L, 3L, ts(1, 20))),
+      s"session spanning the restart must be bridged: $recovered")
+    assert(recovered == uninterrupted,
+      s"recovered run must equal the uninterrupted run:\n" +
+        s"  recovered     = $recovered\n  uninterrupted = $uninterrupted")
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.LlmOps
+import graft.engine.{Keyed, LlmOps}
 
 /** Round-15 (driver round) pins: the tightened bracket-oracle envelopes
   * are FALSIFIABLE — a bracket oracle whose booleans cannot fail
@@ -205,7 +205,7 @@ class Round21Spec extends AnyFunSuite {
       StreamingOps.CepEv(1, 3, us(10), "purchase"),
       StreamingOps.CepEv(2, 10, us(0), "click"), StreamingOps.CepEv(2, 11, us(0), "error"),
       StreamingOps.CepEv(2, 12, us(10), "purchase")).toDS()
-    val inc = StreamingOps.cepStream(p)(typed).collect().map(_.user_id)
+    val inc = Keyed.run(typed, StreamingOps.cepFold(p)).collect().map(_.user_id)
     assert(inc.toSeq == Seq(1L), s"streaming twin must agree: ${inc.toSeq}")
   }
 
@@ -218,7 +218,7 @@ class Round21Spec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val p = StreamingOps.CepPatterns.find(_.name == "double_click_purchase").get
     val ms = MemoryStream[CepEv]
-    val q = StreamingOps.cepStream(p)(ms.toDS())
+    val q = Keyed.run(ms.toDS(), StreamingOps.cepFold(p))
       .writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
       .format("memory").queryName("cep_r15").start()
     // click | click | purchase arrive in three separate micro-batches:

@@ -280,7 +280,7 @@ class Round23Spec extends AnyFunSuite {
       "LAST ROW separate on an overlapping-match scenario, batch == stream") {
     import spark.implicits._
     import graft.engine.StreamingOps
-    import StreamingOps.{CepEv, cepStream, compileCep, parseCep}
+    import StreamingOps.{CepEv, cepFold, compileCep, parseCep}
     // view@0 click@10 view@15 purchase@20 click@25 purchase@30 (minutes):
     // skip-till-last matches (0,20) and (15,30) — overlapping spans
     // with DISTINCT starts, the configuration where the three modes
@@ -299,7 +299,7 @@ class Round23Spec extends AnyFunSuite {
       val batch = compileCep(df, p)
         .collect().map(r => (r.getTimestamp(1).getTime, r.getTimestamp(2).getTime))
         .toSeq.sorted
-      val stream = cepStream(p)(evs.toDS())
+      val stream = Keyed.run(evs.toDS(), cepFold(p))
         .collect().map(m => (m.start_us / 1000, m.end_us / 1000)).toSeq.sorted
       assert(batch == stream, s"batch $batch != stream $stream for '$pat'")
       batch

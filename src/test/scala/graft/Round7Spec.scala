@@ -38,38 +38,29 @@ class Round7Spec extends AnyFunSuite {
 
   test("session seal boundary: wm == end+gap seals, and the earliest admissible event cannot merge") {
     // Pins the inclusive-seal convention (ADVICE r3/r4): a session sealed
-    // at exactly wm = endMs + gap is SAFE because Spark's fMGWS late-row
-    // filter admits only events with ts > wm, and such an event starts
-    // at least gap+1 past the sealed end — strictly outside the
+    // at exactly wm = endMs + gap is SAFE because the stateful operator's
+    // late-row filter admits only events with ts > wm, and such an event
+    // starts at least gap+1 past the sealed end — strictly outside the
     // inclusive merge rule (startMs - endMs <= gap). Both halves of that
-    // argument are exercised here through TestGroupState.
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    import org.apache.spark.api.java.Optional
+    // argument are exercised here on the pure session step, called the
+    // way a fired timer calls it (no rows) and with an explicit watermark.
+    import StreamingOps.{Sess, SessState, timedSessionUpdate}
     val gap = StreamingOps.SessionGapMs
     val end = 10_000_000L
+    val pending = SessState(Seq(Sess(3L, end - 1000, end)))
     // 1) timer fires with wm exactly at end + gap → the session seals
-    val sealSt = TestGroupState.create[StreamingOps.SessState](
-      Optional.of(StreamingOps.SessState(Seq(StreamingOps.Sess(3L, end - 1000, end)))),
-      GroupStateTimeout.EventTimeTimeout, 0L,
-      Optional.of(java.lang.Long.valueOf(end + gap)), hasTimedOut = true)
-    val sealed_ = StreamingOps.timedSessionUpdate(42L, Iterator.empty, sealSt).toList
-    assert(sealed_.map(_.n_events) == List(3L), "boundary wm == end+gap must seal")
-    assert(sealSt.isRemoved, "no pending sessions remain")
+    val (sealSt, sealed_, sealTimer) = timedSessionUpdate(42L, pending, Iterator.empty, end + gap)
+    assert(sealed_.toList.map(_.n_events) == List(3L), "boundary wm == end+gap must seal")
+    assert(sealSt.isEmpty && sealTimer.isEmpty, "no pending sessions remain")
     // 2) one ms earlier it must NOT seal (the boundary is tight)
-    val holdSt = TestGroupState.create[StreamingOps.SessState](
-      Optional.of(StreamingOps.SessState(Seq(StreamingOps.Sess(3L, end - 1000, end)))),
-      GroupStateTimeout.EventTimeTimeout, 0L,
-      Optional.of(java.lang.Long.valueOf(end + gap - 1)), hasTimedOut = true)
-    assert(StreamingOps.timedSessionUpdate(42L, Iterator.empty, holdSt).isEmpty,
+    assert(timedSessionUpdate(42L, pending, Iterator.empty, end + gap - 1)._2.isEmpty,
       "wm == end+gap-1 must keep the session pending")
     // 3) the earliest event the watermark filter can admit (ts = wm + 1)
     // starts a NEW session gap+1 past the sealed end: merge impossible
     // under the inclusive rule, so the seal can never lose a bridge.
-    val lateSt = TestGroupState.create[StreamingOps.SessState](
-      Optional.empty(), GroupStateTimeout.EventTimeTimeout, 0L,
-      Optional.of(java.lang.Long.valueOf(end + gap)), hasTimedOut = false)
     val ev = StreamingOps.Ev(1L, 42L, new java.sql.Timestamp(end + gap + 1), 1.0)
-    assert(StreamingOps.timedSessionUpdate(42L, Iterator(ev), lateSt).isEmpty,
+    val (lateSt, lateOut, _) = timedSessionUpdate(42L, SessState(Seq.empty), Iterator(ev), end + gap)
+    assert(lateOut.isEmpty,
       "admitted boundary event opens a new pending session, no emission")
     assert(lateSt.get.sessions.map(s => (s.n, s.startMs)) == Seq((1L, end + gap + 1)))
     assert((end + gap + 1) - end > gap, "new session start is strictly outside the merge gap")

@@ -254,42 +254,28 @@ class StreamingSourcesSpec extends AnyFunSuite {
     assert(closed.get(1L).contains(2L), s"user 1 session must close with 2 events: $closed")
   }
 
-  test("transformWithState across micro-batches equals the fGWS fold (RocksDB provider)") {
+  test("streamed fold across micro-batches equals Keyed.run's bounded branch") {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    // transformWithState requires the RocksDB provider in streaming mode
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def ts(h: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:00:00")
-      val (ms, msF) = (MemoryStream[E], MemoryStream[E])
-      val qs = Seq(
-        StreamingOps.statefulSnapshotTws(s, ms.toDF()).writeStream
-          .outputMode(OutputMode.Update).format("memory").queryName("tws").start(),
-        Keyed.run(msF.toDF().select($"event_id", $"user_id", $"ts", $"value")
-          .as[StreamingOps.Ev], StreamingOps.userAggFold).writeStream
-          .outputMode(OutputMode.Update).format("memory").queryName("tws_fgws").start())
-      Seq(Seq(E(1, 7, ts(1), "click", 2.5), E(2, 7, ts(2), "view", 1.0)),
-        Seq(E(3, 7, ts(3), "click", 4.0), E(4, 8, ts(1), "view", 9.0))).foreach { b =>
-        ms.addData(b: _*); msF.addData(b: _*)
-        qs.foreach(_.processAllAvailable())
-      }
-      qs.foreach(_.stop())
-      // latest snapshot per user
-      def latest(table: String) = s.table(table).as[StreamingOps.UserAgg].collect()
-        .groupBy(_.user_id).map { case (u, rows) => u -> rows.maxBy(_.n_events) }
-      val streamed = latest("tws")
-      assert(streamed == latest("tws_fgws"), "transformWithState and the fGWS fold disagree")
-      assert(streamed(7L).n_events == 3L && streamed(7L).total_value == 7.5)
-      assert(streamed(8L).n_events == 1L && streamed(8L).total_value == 9.0)
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    def ts(h: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:00:00")
+    def typed(df: org.apache.spark.sql.DataFrame) =
+      df.select($"event_id", $"user_id", $"ts", $"value").as[StreamingOps.Ev]
+    val batches = Seq(Seq(E(1, 7, ts(1), "click", 2.5), E(2, 7, ts(2), "view", 1.0)),
+      Seq(E(3, 7, ts(3), "click", 4.0), E(4, 8, ts(1), "view", 9.0)))
+    val ms = MemoryStream[E]
+    val q = Keyed.run(typed(ms.toDF()), StreamingOps.userAggFold).writeStream
+      .outputMode(OutputMode.Update).format("memory").queryName("tws").start()
+    batches.foreach { b => ms.addData(b: _*); q.processAllAvailable() }
+    q.stop()
+    // latest snapshot per user
+    val streamed = s.table("tws").as[StreamingOps.UserAgg].collect()
+      .groupBy(_.user_id).map { case (u, rows) => u -> rows.maxBy(_.n_events) }
+    val bounded = Keyed.run(typed(batches.flatten.toDF()), StreamingOps.userAggFold)
+      .collect().map(r => r.user_id -> r).toMap
+    assert(streamed == bounded, "the streamed fold and its bounded branch disagree")
+    assert(streamed(7L).n_events == 3L && streamed(7L).total_value == 7.5)
+    assert(streamed(8L).n_events == 1L && streamed(8L).total_value == 9.0)
   }
 
   test("timed sessions split at intra-batch gaps (batch-cut invariance)") {
@@ -363,8 +349,8 @@ class StreamingSourcesSpec extends AnyFunSuite {
     ms.addData(E(1, 1, ts(1, 0), "click", 0), E(2, 9, ts(1, 40), "click", 0))
     q.processAllAvailable()
     // An event at ts == wm (01:30) sits exactly gap after the sealed
-    // session. Spark's fGWS late-row filter drops rows with ts <= wm,
-    // so it never reaches the operator: no merge AND no singleton
+    // session. The stateful operator's late-row filter drops rows with
+    // ts <= wm, so it never reaches the step: no merge AND no singleton
     // session — the inclusive seal can never race such an event, and
     // emission stays arrival-order independent. This pins the drop
     // semantics the exclusive boundary relies on; if a Spark upgrade
@@ -443,25 +429,15 @@ class StreamingSourcesSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def ts(h: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:00:00")
-      val ms = MemoryStream[E]
-      val q = StreamingOps.statefulSnapshot(s, ms.toDF())
-        .writeStream.outputMode(OutputMode.Update)
-        .format("memory").queryName("rocks").start()
-      ms.addData(E(1, 5, ts(1), "click", 2.0)); q.processAllAvailable()
-      ms.addData(E(2, 5, ts(2), "view", 3.0)); q.processAllAvailable(); q.stop()
-      val last = s.table("rocks").collect().maxBy(_.getLong(1))
-      assert(last.getLong(1) == 2L && last.getDouble(3) == 5.0)
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    def ts(h: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:00:00")
+    val ms = MemoryStream[E]
+    val q = StreamingOps.statefulSnapshot(s, ms.toDF())
+      .writeStream.outputMode(OutputMode.Update)
+      .format("memory").queryName("rocks").start()
+    ms.addData(E(1, 5, ts(1), "click", 2.0)); q.processAllAvailable()
+    ms.addData(E(2, 5, ts(2), "view", 3.0)); q.processAllAvailable(); q.stop()
+    val last = s.table("rocks").collect().maxBy(_.getLong(1))
+    assert(last.getLong(1) == 2L && last.getDouble(3) == 5.0)
   }
 
   test("streaming CMS maintainer is state-provider independent (RocksDB)") {
@@ -474,42 +450,32 @@ class StreamingSourcesSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val cells = Tables.documents(s, sf0001)
-        .select(explode(split(col("text"), " ")).as("tok"))
-        .filter(length(col("tok")) > 0)
-        .select(col("tok"),
-          explode(array((0 until SketchOps.CmsDepth).map(lit): _*)).as("d"))
-        .select(col("d").cast("int").as("d"),
-          pmod(Dsl.md5Hash60(concat(col("d").cast("string"), lit(":"), col("tok"))),
-            lit(SketchOps.CmsWidth)).cast("int").as("bucket"))
-        .as[SketchOps.CmsIn].collect()
-      val ms = MemoryStream[SketchOps.CmsIn]
-      val q = Keyed.run(ms.toDS(), SketchOps.cmsFold)
-        .writeStream.outputMode(OutputMode.Update)
-        .format("memory").queryName("cms_rocks").start()
-      // two micro-batches: the grid must accumulate across the state
-      // round-trip, not restart per batch
-      val (half1, half2) = cells.splitAt(cells.length / 2)
-      ms.addData(half1.toIndexedSeq: _*); q.processAllAvailable()
-      ms.addData(half2.toIndexedSeq: _*); q.processAllAvailable(); q.stop()
-      // counters only grow: the latest emission per cell is its max
-      val streamed = s.table("cms_rocks").collect()
-        .map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2)))
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max }
-      val expected = cells.groupBy(c => (c.d, c.bucket))
-        .map { case (k, vs) => k -> vs.length.toLong }
-      assert(streamed == expected,
-        s"RocksDB-backed grid differs: ${streamed.size} vs ${expected.size} cells")
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    val cells = Tables.documents(s, sf0001)
+      .select(explode(split(col("text"), " ")).as("tok"))
+      .filter(length(col("tok")) > 0)
+      .select(col("tok"),
+        explode(array((0 until SketchOps.CmsDepth).map(lit): _*)).as("d"))
+      .select(col("d").cast("int").as("d"),
+        pmod(Dsl.md5Hash60(concat(col("d").cast("string"), lit(":"), col("tok"))),
+          lit(SketchOps.CmsWidth)).cast("int").as("bucket"))
+      .as[SketchOps.CmsIn].collect()
+    val ms = MemoryStream[SketchOps.CmsIn]
+    val q = Keyed.run(ms.toDS(), SketchOps.cmsFold)
+      .writeStream.outputMode(OutputMode.Update)
+      .format("memory").queryName("cms_rocks").start()
+    // two micro-batches: the grid must accumulate across the state
+    // round-trip, not restart per batch
+    val (half1, half2) = cells.splitAt(cells.length / 2)
+    ms.addData(half1.toIndexedSeq: _*); q.processAllAvailable()
+    ms.addData(half2.toIndexedSeq: _*); q.processAllAvailable(); q.stop()
+    // counters only grow: the latest emission per cell is its max
+    val streamed = s.table("cms_rocks").collect()
+      .map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2)))
+      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max }
+    val expected = cells.groupBy(c => (c.d, c.bucket))
+      .map { case (k, vs) => k -> vs.length.toLong }
+    assert(streamed == expected,
+      s"RocksDB-backed grid differs: ${streamed.size} vs ${expected.size} cells")
   }
 
   test("exactly-once foreachBatch sink: batchId-idempotent upsert survives a replay") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{StreamingOps, Tables}
+import graft.engine.{Keyed, StreamingOps, Tables}
 
 /** Streaming scenario tests (SURVEY.md §5.2.3): the shared transforms run
   * on MemoryStream sources with explicit watermark / late-data / stateful
@@ -46,7 +46,7 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    import StreamingOps.{CepEv, CepPatterns, cepStream, compileCep}
+    import StreamingOps.{CepEv, CepPatterns, cepFold, compileCep}
     val p = CepPatterns.find(_.name == "click_purchase_clean").get
     def us(min: Long): Long = min * 60L * 1000000L // minutes → micros
     // user 1: click (batch 1) → purchase 10 min later (batch 2): the
@@ -62,7 +62,7 @@ class StreamingSpec extends AnyFunSuite {
       CepEv(2, 12, us(10), "purchase"),
       CepEv(3, 21, us(40), "purchase"))
     val ms = MemoryStream[CepEv]
-    val q = cepStream(p)(ms.toDS())
+    val q = Keyed.run(ms.toDS(), cepFold(p))
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("cep").start()
     ms.addData(b1: _*); q.processAllAvailable()
@@ -79,7 +79,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type")).as[CepEv]
     CepPatterns.foreach { pat =>
-      val inc = cepStream(pat)(ev).collect()
+      val inc = Keyed.run(ev, cepFold(pat)).collect()
         .map(m => (m.user_id, m.start_us, m.end_us)).toSet
       val alg = compileCep(Tables.events(s, sf0001), pat).collect()
         .map(r => (r.getLong(0),
@@ -94,7 +94,7 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    import StreamingOps.{CepEv, cepStream, compileCep, parseCep}
+    import StreamingOps.{CepEv, cepFold, compileCep, parseCep}
     def us(min: Long): Long = min * 60L * 1000000L
     // one user: click(0) view(1) click(2) purchase(3) purchase(4)
     //  relaxed "click purchase": anchors at t3 AND t4 each match
@@ -116,7 +116,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(skipN.skipToNext && !skipN.strict)
     def runStream(p: StreamingOps.CepPattern): Seq[(Long, Long, Long)] = {
       val ms = MemoryStream[CepEv]
-      val q = cepStream(p)(ms.toDS())
+      val q = Keyed.run(ms.toDS(), cepFold(p))
         .writeStream.outputMode(OutputMode.Append)
         .format("memory").queryName(s"cep_${p.name}").start()
       // two batches: the mode state (ring / consumed start) must carry
@@ -213,7 +213,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(out(ts(1, 1)) == 2L, s"late event must not reopen closed window: $out")
   }
 
-  test("stateful flatMapGroupsWithState across micro-batches equals batch snapshot") {
+  test("Keyed.run: transformWithState on a stream, no stateful node on bounded input") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val stateful = Set("FlatMapGroupsWithState", "TransformWithState")
+    def nodes(df: org.apache.spark.sql.Dataset[_]): Seq[String] =
+      df.queryExecution.analyzed.collect { case p if stateful(p.nodeName) => p.nodeName }
+    val ms = MemoryStream[E]
+    assert(nodes(StreamingOps.statefulSnapshot(s, ms.toDF())) == Seq("TransformWithState"))
+    assert(nodes(StreamingOps.timedSessions(s, ms.toDF())) == Seq("TransformWithState"))
+    val bounded = StreamingOps.statefulSnapshot(s, Tables.events(s, sf0001))
+    assert(nodes(bounded).isEmpty, bounded.queryExecution.analyzed.treeString)
+    val physical = bounded.queryExecution.executedPlan.toString
+    assert(!Seq("WithState", "StateStore").exists(physical.contains), physical)
+  }
+
+  test("bounded timed sessions see the end-of-input watermark and equal session_window") {
+    val s = spark
+    val ev = Tables.events(s, sf0001)
+    val timed = StreamingOps.timedSessions(s, ev).toDF()
+      .groupBy("user_id").agg(count(lit(1)), sum("n_events"))
+    val windowed = StreamingOps.sessionPerUser(ev)
+      .groupBy("user_id").agg(count(lit(1)), sum("n"))
+    assert(timed.count() > 0)
+    assert(timed.collect().toSet == windowed.collect().toSet)
+  }
+
+  test("stateful fold across micro-batches equals batch snapshot") {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext

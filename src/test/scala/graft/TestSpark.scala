@@ -16,6 +16,10 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      // a streaming `Keyed.run` is a transformWithState operator, which
+      // runs only on the RocksDB state store
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
