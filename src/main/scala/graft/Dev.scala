@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler._
@@ -308,6 +309,16 @@ object Dev {
     // local-mode storage memory
     Group("r19g", "round-19 tiers (GNN stack + motifs, horizontal axis)", graphTiers, Seq(
       "q_gnn_layer_k", "q_graph_motif_find")),
+    // every PowerIter operator: where each tier's arcs cross from the
+    // driver-held placements to the partitioned one (the closeDist,
+    // closeDistW and dedupLabels consumers read their MV when warm)
+    Group("kernel", "PowerIter operators (graph tiers, with arc placements)", graphTiers, Seq(
+      "q_graph_pagerank", "q_graph_pagerank_w", "q_graph_ppr", "q_graph_ppr_w", "q_graph_katz",
+      "q_graph_eigenvector", "q_graph_hits", "q_text_textrank", "q_graph_cc", "q_stream_cc",
+      "q_graph_bfs", "q_graph_pseudo_diameter", "q_graph_sssp", "q_graph_closeness",
+      "q_graph_harmonic", "q_graph_closeness_w", "q_graph_harmonic_w", "q_graph_scc_colors",
+      "q_llm_dedup_clusters", "q_llm_soft_dedup", "q_llm_dedup_keep", "q_llm_dedup_funnel",
+      "q_llm_lsh_clusters", "q_gnn_layer", "q_gnn_layer2", "q_gnn_layer_k", "q_gnn_appnp")),
     Group("lsh", "perturbed-doc tiers (realistic near-dup rate)", perturbTiers, Seq(
       "q_llm_minhash_md5", "q_llm_dedup_clusters")),
     // the Louvain sweep and coarsening must track the edge count
@@ -340,7 +351,8 @@ object Dev {
     * `rebuild` is given. Per (query, dir), the first call is printed as
     * `cold` (for MV consumers it includes the one-time build at that
     * scale, charged to the group's first consumer), then the minimum of
-    * two more calls. */
+    * two more calls, and the arc placements (`<q>/arcs:<placement>` job
+    * descriptions) those two calls' kernel runs took. */
   def scale(spark: SparkSession, base: String, args: Seq[String]): Unit = {
     val ready = mutable.Set.empty[String]
     def ensure(ts: TierSet): Unit = if (ready.add(ts.name)) ts.tiers.foreach { case (copies, out) =>
@@ -353,7 +365,14 @@ object Dev {
       }
     }
     def t(q: String, dir: String): Double = timeRows(spark, dir, q)._1
-    scaleGroups(args).foreach { g =>
+    val placed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .map(_.split("/arcs:")).filter(_.length == 2).foreach(d => placed.add(d(1)))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try scaleGroups(args).foreach { g =>
       ensure(g.tiers)
       val tiers = g.tiers.tiers
       val dirs = (1 -> base) +: tiers
@@ -365,16 +384,25 @@ object Dev {
       val timedHdr = tiers.map { case (n, _) => f"${s"x$n"}%8s" }.mkString(" ")
       val ratioHdr = tiers.map { case (n, _) => f"${s"r$n"}%6s" }.mkString(" ")
       val coldHdr = dirs.map { case (n, _) => f"${s"c$n"}%7s" }.mkString(" ")
-      println(f"${"query"}%-26s ${"x1"}%8s $timedHdr $ratioHdr $coldHdr")
+      val placeHdr = dirs.map { case (n, _) => s"p$n" }.mkString(" ")
+      println(f"${"query"}%-26s ${"x1"}%8s $timedHdr $ratioHdr $coldHdr  $placeHdr")
       g.probes.foreach { q =>
-        def m(dir: String): Double = math.min(t(q, dir), t(q, dir))
+        val places = mutable.ArrayBuffer.empty[String]
+        def m(dir: String): Double = {
+          SessionBridge.drainListeners(spark)
+          placed.clear()
+          val v = math.min(t(q, dir), t(q, dir))
+          SessionBridge.drainListeners(spark)
+          places += (if (placed.isEmpty) "-" else placed.asScala.toSeq.distinct.mkString(">"))
+          v
+        }
         val a = m(base)
-        val ts = tiers.map { case (n, d) => if (g.exclude((q, n))) -1.0 else m(d) }
+        val ts = tiers.map { case (n, d) => if (g.exclude((q, n))) { places += "-"; -1.0 } else m(d) }
         val timedCols = ts.map(v => if (v < 0) f"${"-"}%8s" else f"$v%8.2f").mkString(" ")
         val ratioCols = ts.map(v => if (v < 0) f"${"-"}%6s" else f"${v / a}%6.2f").mkString(" ")
         val coldCols = dirs.map { case (n, _) =>
           cold.get((q, n)).map(v => f"$v%7.2f").getOrElse(f"${"-"}%7s") }.mkString(" ")
-        println(f"$q%-26s $a%8.2f $timedCols $ratioCols $coldCols")
+        println(f"$q%-26s $a%8.2f $timedCols $ratioCols $coldCols  ${places.mkString(" ")}")
       }
       if (g.name == "emb") {
         // pair COUNTS, which the scheduling floor cannot mask: Σ c·(c−1)/2
@@ -389,7 +417,7 @@ object Dev {
             f"n_vecs=${r.getLong(2)}%8d")
         }
       }
-    }
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   // ---- stream: streaming maintainer throughput --------------------------

@@ -19,9 +19,11 @@ import org.apache.spark.sql.functions._
   * kernel's vector-sum mode, `PowerIter.vsum`: an arc offers its
   * from-node's 1e9-scaled Long vector, a node sums and counts its offers
   * exactly, and the leg's update runs the mean and the dense pass.
-  * Within the kernel's cell guard the state is held on the driver and a
-  * superstep is one narrow job over the edge MV that shuffles nothing;
-  * past it, one `reduceByKey` with a map-side combine.
+  * Within the kernel's cell guard the state is held on the driver: with
+  * the edge MV beside it every superstep runs there, after one read of
+  * the edges, and with only the state a superstep is one narrow job over
+  * the edge MV that shuffles nothing; past it, one `reduceByKey` with a
+  * map-side combine.
   * Oracle-checked: Oracle.gnn generates the 4×64-term matmul SQL from
   * the same weight/bias formulas (keep them in sync when changing the
   * layer semantics); also golden-tested on unit-basis inputs.

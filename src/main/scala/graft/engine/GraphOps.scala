@@ -328,7 +328,7 @@ object GraphOps {
     * the same SCC, so class boundaries near the horizon are heuristic.
     * The census reports the top-10 classes of the k-hop refinement.
     * Each sweep is a SccHops-round PowerIter min relaxation over the
-    * transition arcs (a hop is one narrow scan within the state guard);
+    * transition arcs (within the state guard a hop runs on the driver);
     * top-10 via TakeOrderedAndProject, never a global sort. */
   def q_graph_scc_colors(s: SparkSession, dir: String): DataFrame = {
     val t = transEdges(s, dir)

@@ -1,13 +1,15 @@
 package graft.engine
 
 import scala.collection.mutable
+import scala.collection.mutable.ArrayBuilder
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
-import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.{HashPartitioner, Partitioner, ShuffleDependency}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.SessionBridge
 import org.apache.spark.sql.types._
 
 /** The iterative kernel: every superstep of the iterative tier is a scan
@@ -33,24 +35,40 @@ import org.apache.spark.sql.types._
   *    is offered and counts them, and the leg's `update(key, sums, n)`
   *    (mean, dense layer, re-quantization) gives its next cell.
   *
-  * Two placements of the state, chosen per step against
-  * `spark.graft.stateBroadcastMaxRows`:
-  *  - within the guard the state is held on the driver and broadcast,
-  *    and the step is ONE narrow job over the arc MV's blocks (read
-  *    through `queryExecution.toRdd`, nothing persisted) whose per-task
-  *    partials the driver merges — no query is planned per step;
-  *  - past it the state stays partitioned on its key: each step zips it
-  *    with the arcs (shuffled onto their `from` key once per run, the
-  *    shuffle output reused by every step) and combines with one
-  *    `reduceByKey` shuffle onto the same placement.
-  * The scalar modes guard the state's row count. `vsum` guards cells
-  * (rows × lanes): the state's, and the per-task partials' bound of
-  * scan tasks × the leg's `toKeys` × lanes, so neither a 64-wide state
-  * nor many tasks' partials load the driver. State only grows between
-  * steps, so once partitioned it stays partitioned. Round i's jobs run
-  * under the job description `<query>/iter<i>` (the state's collect is
-  * iter0); `width`, when positive, coalesces the arc scan to that many
-  * tasks.
+  * Three placements, chosen against `spark.graft.stateBroadcastMaxRows`,
+  * a budget of cells (values) the driver may hold:
+  *  - local: when the state's cells plus the arcs' cells fit (an arc
+  *    is 2 + its weight columns), every leg's arc scan is read to the
+  *    driver once per run, in one job: one compact chunk per scan
+  *    partition, keys numbered into dense `Int` ids. Every step then
+  *    runs on the driver over primitive arrays: no broadcast, no job
+  *    per step, nothing persisted or kept past the call. Each read task
+  *    brings back at most its share of the budget, so the driver never
+  *    pulls more than the guard; a task past its share sends nothing
+  *    and the run goes narrow;
+  *  - narrow: when the state fits but the arcs do not, the state is
+  *    held on the driver and broadcast, and each step is ONE narrow job
+  *    over the arc MV's blocks (read through `queryExecution.toRdd`,
+  *    nothing persisted) whose per-task partials the driver merges;
+  *  - partitioned: past the guard the state stays partitioned on its
+  *    key: each step zips it with the arcs (shuffled onto their `from`
+  *    key once per run, in a job of their own, the shuffle output
+  *    reused by every step) and combines with one `reduceByKey` shuffle
+  *    onto the same placement.
+  * A local step builds each chunk's partials as a narrow task does and
+  * merges them on the driver in partition order, so both give the same
+  * bits. The scalar modes guard the state's row count. `vsum` guards
+  * cells (rows × lanes): the state's, and the per-task partials' bound
+  * of scan tasks × the leg's `toKeys` × lanes, so neither a 64-wide
+  * state nor many tasks' partials load the driver. State only grows
+  * between steps, so a run only moves down the list: local arcs are
+  * dropped (never read again) once the state outgrows their share.
+  * Round i's jobs run under the job description `<query>/iter<i>` (the
+  * state's read is iter0). The arcs' reads run under
+  * `<query>/arcs:<placement>`: the local read (`local`, whether or not
+  * the arcs fit), the first narrow step (`narrow`) and each leg's
+  * shuffle (`partitioned`); `width`, when positive, coalesces the arc scan to
+  * that many tasks.
   *
   * Stateless: a run's state is local to it, so concurrent callers share
   * nothing but the SparkContext. */
@@ -71,20 +89,21 @@ object PowerIter {
     * returns the final state as a DataFrame with `init`'s column names. */
   def run(s: SparkSession, query: String, init: DataFrame, iters: Int,
       legs: Seq[Leg], width: Int = 0): DataFrame = {
-    val k = Plumbing(s, query, width)
+    val k = new Plumbing(s, query, width)
     val scans = legs.map(l => k.scan(l.arcs, l.from, l.to, l.weights))
     var state: Either[collection.Map[Any, Double], RDD[(Any, Double)]] = k.held(init) match {
       case Some(rows) => Left(rows.map(r => r.get(0) -> r.getDouble(1)).toMap)
       case None => Right(init.rdd.map(r => (r.get(0): Any) -> r.getDouble(1)).partitionBy(k.p))
     }
     for (i <- 1 to iters) k.round(i) {
-      legs.zip(scans).foreach { case (leg, sc) =>
+      legs.zip(scans).zipWithIndex.foreach { case ((leg, sc), li) =>
         val term = leg.term
         val offer: Offer[Double, Long] = (v, to, w1, w2, acc) =>
           acc.add(to, Dsl.rlong(term(v, w1, w2) * 1e9))
         state = state match {
           case Left(m) if m.size <= k.guard =>
-            Left(sumMerge(leg, k.narrow(sc, m, () => new Acc(min = false))(offer)))
+            Left(sumMerge(leg, k.arcs(scans, m.size).fold(
+              k.narrow(sc, m, () => new Acc(min = false))(offer))(sumLocal(_, li, m, term))))
           case st =>
             val part = st.fold(m => s.sparkContext.parallelize(m.toSeq).partitionBy(k.p), identity)
             Right(sumShuffled(s, leg, k.shuffled(part, sc, k.p, () => new Acc(min = false),
@@ -107,6 +126,31 @@ object PowerIter {
     val next = sums.map { case (k, t) => k -> leg.update(k, t.toDouble / 1e9) }
     if (!leg.maxNorm || next.isEmpty) next
     else { val mx = next.values.max; next.map { case (k, v) => k -> v / mx } }
+  }
+
+  /** The sum mode's local step over leg `li`: every arc whose from key
+    * holds `v` adds `rlong(term(v, w1, w2)·1e9)` to its to key's sum. */
+  private def sumLocal(a: Arcs, li: Int, m: collection.Map[Any, Double],
+      term: (Double, Long, Long) => Double): Array[(Any, Long)] = {
+    val n = a.keys.length
+    val v = new Array[Double](n)
+    val has = new Array[Boolean](n)
+    for ((key, x) <- m) { val i = a.id(key); if (i >= 0) { v(i) = x; has(i) = true } }
+    val sums = new Array[Long](n)
+    val hit = new Array[Boolean](n)
+    for (c <- a.legs(li)) {
+      var j = 0
+      while (j < c.rows) {
+        val f = c.from(j)
+        if (has(f)) {
+          val t = c.to(j)
+          sums(t) += Dsl.rlong(term(v(f), c.w1(j), c.w2(j)) * 1e9)
+          hit(t) = true
+        }
+        j += 1
+      }
+    }
+    (0 until n).iterator.filter(hit).map(t => a.keys(t) -> sums(t)).toArray
   }
 
   /** The sum mode's partitioned merge over the reduced sums. */
@@ -139,7 +183,7 @@ object PowerIter {
   def relax(s: SparkSession, query: String, init: DataFrame, arcs: DataFrame,
       from: String, to: String, hop: Long = 0L, weight: Option[String] = None,
       maxRounds: Int = Int.MaxValue, width: Int = 0): DataFrame = {
-    val k = Plumbing(s, query, width)
+    val k = new Plumbing(s, query, width)
     val sc = k.scan(arcs, from, to, weight.toSeq)
     val lanes = init.columns.length == 3
     val byKey = new ByKey(k.p)
@@ -167,7 +211,9 @@ object PowerIter {
           case (Left(m), Left(f)) if m.size <= k.guard =>
             // driver merge: keep the minimum, the improved keys go next
             val next = mutable.HashMap.empty[(Any, Any), Long]
-            val offers = k.narrow(sc, byNode(f), () => new Acc(min = true))(offer)
+            val fr = byNode(f)
+            val offers = k.arcs(Seq(sc), m.size).fold(
+              k.narrow(sc, fr, () => new Acc(min = true))(offer))(minLocal(_, fr, hop))
             for ((key: (Any, Any) @unchecked, c) <- offers)
               if (c < m.getOrElse(key, Long.MaxValue)) { m(key) = c; next(key) = c }
             front = Left(next)
@@ -196,6 +242,37 @@ object PowerIter {
       st => Right(st.map { case (key, v) => row(key, v) })))
   }
 
+  /** The min mode's local step: every arc from a frontier key offers
+    * each of the key's (lane, `v`) as `v + hop + w` to (lane, its to
+    * key), and each (lane, key) keeps its least offer. */
+  private def minLocal(a: Arcs, front: Map[Any, Seq[(Any, Long)]],
+      hop: Long): Array[(Any, Long)] = {
+    val n = a.keys.length
+    val fr = new Array[Seq[(Any, Long)]](n)
+    for ((key, ls) <- front) { val i = a.id(key); if (i >= 0) fr(i) = ls }
+    // per lane, each id's least offer (Long.MaxValue: none — an offer
+    // of Long.MaxValue would improve nothing)
+    val best = new java.util.HashMap[Any, Array[Long]]()
+    for (c <- a.legs(0)) {
+      var j = 0
+      while (j < c.rows) {
+        val ls = fr(c.from(j))
+        if (ls != null) {
+          val t = c.to(j)
+          val w = c.w1(j)
+          for ((lane, v) <- ls) {
+            val b = best.computeIfAbsent(lane, _ => Array.fill(n)(Long.MaxValue))
+            b(t) = math.min(b(t), v + hop + w)
+          }
+        }
+        j += 1
+      }
+    }
+    best.asScala.iterator.flatMap { case (lane, b) =>
+      (0 until n).iterator.filter(b(_) != Long.MaxValue).map(t => ((lane, a.keys(t)): Any) -> b(t))
+    }.toArray
+  }
+
   /** A vector-sum cell: Long lanes `q` and an optional f64 lane `f`
     * (null when absent). */
   final case class Cell(q: Array[Long], f: Array[Double] = null) {
@@ -219,7 +296,7 @@ object PowerIter {
     * partition order, past it in `reduceByKey`'s merge order. */
   def vsum(s: SparkSession, query: String, init: DataFrame, lanes: Int,
       legs: Seq[VecLeg], width: Int = 0): DataFrame = {
-    val k = Plumbing(s, query, width)
+    val k = new Plumbing(s, query, width)
     def cell(r: Row): Cell = Cell(r.getSeq[Long](1).toArray,
       if (r.length < 3 || r.isNullAt(2)) null else r.getSeq[Double](2).toArray)
     var state: Either[collection.Map[Any, Cell], RDD[(Any, Cell)]] = k.held(init, lanes) match {
@@ -230,13 +307,13 @@ object PowerIter {
     val offer: Offer[Cell, Cell] = (c, to, _, _, acc) => acc.add(to, c)
     for (((leg, sc), i) <- legs.zip(scans).zipWithIndex) k.round(i + 1) {
       val update = leg.update
+      def lanes(m: collection.Map[Any, Cell]): Long = m.headOption.fold(0L)(_._2.lanes.toLong)
       state = state match {
-        case Left(m) if {
-          val w = m.headOption.fold(0L)(_._2.lanes.toLong)
-          m.size * w <= k.guard && sc.rows.getNumPartitions * leg.toKeys * w <= k.guard
-        } =>
+        case Left(m) if m.size * lanes(m) <= k.guard &&
+            sc.rows.getNumPartitions * leg.toKeys * lanes(m) <= k.guard =>
           val sums = mutable.HashMap.empty[Any, VSum]
-          for ((key, p) <- k.narrow(sc, m, () => new VecAcc)(offer))
+          for ((key, p) <- k.arcs(scans, m.size * lanes(m)).fold(
+              k.narrow(sc, m, () => new VecAcc)(offer))(vecLocal(_, i, m)))
             sums.get(key).fold(sums(key) = p)(_.merge(p))
           Left(sums.flatMap { case (key, p) => Option(update(key, p.cell, p.n)).map(key -> _) })
         case st =>
@@ -252,6 +329,31 @@ object PowerIter {
       StructField("f", ArrayType(DoubleType, containsNull = false)))), state.fold(
       m => Left(m.map { case (key, c) => row(key, c) }),
       st => Right(st.map { case (key, c) => row(key, c) })))
+  }
+
+  /** The vector-sum mode's local step over leg `li`: per chunk, as one
+    * narrow task, each to key sums its offered cells in scan order from
+    * zero; the chunks' partials follow in partition order. */
+  private def vecLocal(a: Arcs, li: Int, m: collection.Map[Any, Cell]): Array[(Any, VSum)] = {
+    val n = a.keys.length
+    val cells = new Array[Cell](n)
+    for ((key, c) <- m) { val i = a.id(key); if (i >= 0) cells(i) = c }
+    val out = mutable.ArrayBuffer.empty[(Any, VSum)]
+    for (ch <- a.legs(li)) {
+      val part = new Array[VSum](n)
+      var j = 0
+      while (j < ch.rows) {
+        val c = cells(ch.from(j))
+        if (c != null) {
+          val t = ch.to(j)
+          var v = part(t)
+          if (v == null) { v = VSum.zero(c); part(t) = v; out += a.keys(t) -> v }
+          v.add(c.q, c.f, 1L)
+        }
+        j += 1
+      }
+    }
+    out.toArray
   }
 
   /** A mode's per-arc offer: given the value(s) held at the arc's `from`
@@ -290,15 +392,18 @@ object PowerIter {
     def cell: Cell = Cell(q, f)
   }
 
+  private object VSum {
+    /** An empty sum of cells shaped as `c`. */
+    def zero(c: Cell): VSum =
+      new VSum(new Array(c.q.length), if (c.f == null) null else new Array(c.f.length), 0L)
+  }
+
   /** Cell offers: a key sums its cells, from zero, and counts them. */
   private final class VecAcc extends Combiner[Cell, VSum] {
     private val cells = new java.util.HashMap[Any, VSum]()
     def add(k: Any, c: Cell): Unit = {
       var v = cells.get(k)
-      if (v == null) {
-        v = new VSum(new Array(c.q.length), if (c.f == null) null else new Array(c.f.length), 0L)
-        cells.put(k, v)
-      }
+      if (v == null) { v = VSum.zero(c); cells.put(k, v) }
       v.add(c.q, c.f, 1L)
     }
     def iterator: Iterator[(Any, VSum)] = cells.asScala.iterator
@@ -320,20 +425,104 @@ object PowerIter {
     def to(r: InternalRow): Any = col(r, toAt)
     def w1(r: InternalRow): Long = if (w1At < 0) 0L else r.getLong(w1At)
     def w2(r: InternalRow): Long = if (w2At < 0) 0L else r.getLong(w2At)
+    /** An arc's cells: its two keys and its weights. */
+    def cells: Int = 2 + (if (w1At < 0) 0 else 1) + (if (w2At < 0) 0 else 1)
   }
 
   /** One arc MV as the kernel reads it: the reader, the (coalesced) row
     * blocks, and the arcs keyed on `from` on the state's partitioner —
-    * lazy, so a run that never leaves the driver-held placement never
+    * lazy, so a run that never leaves the driver-held placements never
     * shuffles. */
   private final case class Scan(rd: Reader, rows: RDD[InternalRow],
       byFrom: RDD[(Any, (Any, Long, Long))])
 
-  /** The placement and step plumbing the modes share. */
-  private final case class Plumbing(s: SparkSession, query: String, width: Int) {
+  /** One scan partition's arcs as a read task sends them: the raw key
+    * columns (`Array[Long]` or `Array[String]`, the from-key before
+    * `key`) and the weight columns (null when absent). */
+  private final class Raw(val from: Array[_], val to: Array[_], val w1: Array[Long],
+      val w2: Array[Long]) extends Serializable
+
+  private object Raw {
+    /** The arcs of `it`, or null when they pass `share` cells. */
+    def read(rd: Reader, share: Long, it: Iterator[InternalRow]): Raw = {
+      val max = share / rd.cells
+      val (fl, tl, w1, w2) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong,
+        new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
+      val (fs, ts) = (ArrayBuilder.make[String], ArrayBuilder.make[String])
+      var n = 0L
+      while (n <= max && it.hasNext) {
+        val r = it.next()
+        n += 1
+        if (n <= max) {
+          if (rd.strKeys) {
+            fs += r.getUTF8String(rd.fromAt).toString
+            ts += r.getUTF8String(rd.toAt).toString
+          } else { fl += r.getLong(rd.fromAt); tl += r.getLong(rd.toAt) }
+          if (rd.w1At >= 0) w1 += r.getLong(rd.w1At)
+          if (rd.w2At >= 0) w2 += r.getLong(rd.w2At)
+        }
+      }
+      if (n > max) null
+      else if (rd.strKeys) new Raw(fs.result(), ts.result(), weights(rd.w1At, w1), weights(rd.w2At, w2))
+      else new Raw(fl.result(), tl.result(), weights(rd.w1At, w1), weights(rd.w2At, w2))
+    }
+
+    private def weights(at: Int, b: ArrayBuilder.ofLong): Array[Long] =
+      if (at < 0) null else b.result()
+  }
+
+  /** One scan partition's arcs on the driver, keys as dense ids. */
+  private final class Chunk(val from: Array[Int], val to: Array[Int], w1s: Array[Long],
+      w2s: Array[Long]) {
+    def rows: Int = from.length
+    def w1(j: Int): Long = if (w1s == null) 0L else w1s(j)
+    def w2(j: Int): Long = if (w2s == null) 0L else w2s(j)
+  }
+
+  /** Every leg's arcs on the driver: `keys(id)` is the key numbered
+    * `id`, and each leg's arcs are one `Chunk` per scan partition, in
+    * partition order. `cells` counts each arc's keys and weights. */
+  private final class Arcs(val keys: Array[Any], ids: java.util.HashMap[Any, Integer],
+      val legs: Array[Array[Chunk]], val cells: Long) {
+    /** `k`'s id, or -1 when no arc holds it. */
+    def id(k: Any): Int = { val i = ids.get(k); if (i == null) -1 else i.intValue }
+  }
+
+  private object Arcs {
+    /** Numbers the keys of `raw`, the read of `scans`' partitions in
+      * order. */
+    def apply(scans: Seq[Scan], raw: Array[Raw]): Arcs = {
+      val ids = new java.util.HashMap[Any, Integer]()
+      val keys = mutable.ArrayBuffer.empty[Any]
+      def id(k: Any): Int = {
+        val i = ids.get(k)
+        if (i != null) i.intValue else { ids.put(k, keys.length); keys += k; keys.length - 1 }
+      }
+      val parts = raw.iterator
+      var cells = 0L
+      val legs = scans.map { sc =>
+        Array.fill(sc.rows.getNumPartitions) {
+          val r = parts.next()
+          cells += r.from.length.toLong * sc.rd.cells
+          new Chunk(Array.tabulate(r.from.length)(j => id(sc.rd.key(r.from(j)))),
+            Array.tabulate(r.to.length)(j => id(r.to(j))), r.w1, r.w2)
+        }
+      }
+      new Arcs(keys.toArray, ids, legs.toArray, cells)
+    }
+  }
+
+  /** The placement and step plumbing the modes share, for one run. */
+  private final class Plumbing(s: SparkSession, query: String, width: Int) {
     val guard: Long = s.conf.get("spark.graft.stateBroadcastMaxRows",
       GraphOps.StateBroadcastMaxRows.toString).toLong
     val p = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
+    // the placement of the last arc read, the local arcs, and the scans
+    // already shuffled onto their from key
+    private var placed = ""
+    private var local: Option[Arcs] = None
+    private var tried = false
+    private val parted = mutable.Set.empty[Scan]
 
     def scan(arcs: DataFrame, from: String, to: String, weights: Seq[String],
         key: Any => Any = identity): Scan = {
@@ -347,22 +536,52 @@ object PowerIter {
     }
 
     /** `init`'s rows when their cells (`lanes` per row) fit the guard,
-      * else None (iter0). */
+      * else None: one job (iter0) of one task, which sends nothing past
+      * the guard. */
     def held(init: DataFrame, lanes: Int = 1): Option[Array[Row]] = {
-      val cap = guard / math.max(lanes, 1)
-      val first = JobTag(s.sparkContext, s"$query/iter0") {
-        init.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
-      }
-      if (first.length <= cap) Some(first) else None
+      val cap = math.min(guard / math.max(lanes, 1), Int.MaxValue - 1L).toInt
+      JobTag(s.sparkContext, s"$query/iter0") {
+        init.rdd.coalesce(1).mapPartitions { it =>
+          val rows = it.take(cap + 1).toArray
+          Iterator(Option.when(rows.length <= cap)(rows))
+        }.collect()
+      }.headOption.getOrElse(Some(Array.empty[Row]))
     }
 
     def round[A](i: Int)(body: => A): A = JobTag(s.sparkContext, s"$query/iter$i")(body)
+
+    /** Runs `body` under `<query>/arcs:<placement>` when the run enters
+      * the placement: the local read, or the first narrow step. */
+    private def entering[A](placement: String)(body: => A): A =
+      if (placed == placement) body
+      else { placed = placement; JobTag(s.sparkContext, s"$query/arcs:$placement")(body) }
+
+    /** Every leg's arcs on the driver beside a state of `stateCells`, or
+      * None. The first call reads them in one job, each task bringing
+      * back at most its share of what the guard leaves; they are kept
+      * while they and the state fit, and once dropped not read again. */
+    def arcs(scans: Seq[Scan], stateCells: Long): Option[Arcs] = {
+      if (!tried) {
+        tried = true
+        val budget = guard - stateCells
+        if (budget >= 0) entering("local") {
+          val share = budget / math.max(scans.map(_.rows.getNumPartitions).sum, 1)
+          val raw = s.sparkContext.union(scans.map { sc =>
+            val rd = sc.rd
+            sc.rows.mapPartitions(it => Iterator(Raw.read(rd, share, it)))
+          }).collect()
+          if (!raw.contains(null)) local = Some(Arcs(scans, raw))
+        }
+      }
+      local = local.filter(_.cells + stateCells <= guard)
+      local
+    }
 
     /** One step with a driver-held state: broadcast the values of the
       * keys that offer, scan the arcs in one narrow job, and return each
       * task's combined partials for the driver to merge. */
     def narrow[V, T, P](sc: Scan, held: collection.Map[Any, V], acc: () => Combiner[T, P])(
-        offer: Offer[V, T]): Array[(Any, P)] = {
+        offer: Offer[V, T]): Array[(Any, P)] = entering("narrow") {
       val m = new java.util.HashMap[Any, V](held.size * 2)
       held.foreach { case (k, v) => m.put(k, v) }
       val bc = s.sparkContext.broadcast(m)
@@ -381,18 +600,27 @@ object PowerIter {
 
     /** One step with a partitioned state (placed as the arcs' `from`):
       * zip it with the arcs, combine per task, then one `reduceByKey`
-      * shuffle onto `onto`. */
+      * shuffle onto `onto`. The arcs' own shuffle runs first, once per
+      * leg, as a job of its own (`<query>/arcs:partitioned`). */
     def shuffled[V, T, P: ClassTag](st: RDD[(Any, V)], sc: Scan, onto: Partitioner,
-        acc: () => Combiner[T, P], merge: (P, P) => P)(offer: Offer[V, T]): RDD[(Any, P)] =
+        acc: () => Combiner[T, P], merge: (P, P) => P)(offer: Offer[V, T]): RDD[(Any, P)] = {
+      if (parted.add(sc) && sc.rows.getNumPartitions > 0) {
+        placed = "partitioned"
+        JobTag(s.sparkContext, s"$query/arcs:partitioned")(SessionBridge.runMapStage(s.sparkContext,
+          sc.byFrom.dependencies.head.asInstanceOf[ShuffleDependency[_, _, _]]))
+      }
       st.zipPartitions(sc.byFrom) { (held, it) =>
         val m = held.toMap
         val a = acc()
         it.foreach { case (k, (to, w1, w2)) => m.get(k).foreach(offer(_, to, w1, w2, a)) }
         a.iterator
       }.reduceByKey(onto, merge)
+    }
 
-    /** The final state as a DataFrame of `schema`. */
+    /** The final state as a DataFrame of `schema`; a driver-held state
+      * is one partition, so a caller's global sort plans no exchange. */
     def frame(schema: StructType, rows: Either[Iterable[Row], RDD[Row]]): DataFrame =
-      rows.fold(r => s.createDataFrame(r.toSeq.asJava, schema), r => s.createDataFrame(r, schema))
+      rows.fold(r => s.createDataFrame(r.toSeq.asJava, schema).coalesce(1),
+        r => s.createDataFrame(r, schema))
   }
 }

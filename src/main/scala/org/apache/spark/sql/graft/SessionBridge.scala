@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{ShuffleDependency, SparkContext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
 
@@ -31,4 +32,9 @@ object SessionBridge {
     * SparkListeners (`listenerBus` is `private[spark]`). */
   def drainListeners(s: SparkSession): Unit =
     s.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Run `dep`'s map stage as a job of its own and wait for it
+    * (`submitMapStage` is `private[spark]`). */
+  def runMapStage(sc: SparkContext, dep: ShuffleDependency[_, _, _]): Unit =
+    sc.submitMapStage(dep).get()
 }

@@ -103,25 +103,39 @@ class OptimizationR18Spec extends AnyFunSuite {
       s"worker ckpt not captured: ${recorded.map(_._1)}")
   }
 
-  test("job descriptions tag kernel iterations, MV builds and Par legs " +
+  test("job descriptions tag kernel runs, MV builds and Par legs " +
       "and restore the caller's; the job group is untouched") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.SessionBridge
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.SpanSugar._
     import engine.{GraphOps, Mv, Par}
     import engine.Ckpt.CkptOps
     val sc = spark.sparkContext
+    // a first call builds the katz call's MV and edge-count probe, so
+    // every job of the second one is the kernel's
+    GraphOps.q_graph_katz(spark, sf0001)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val katzJobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    @volatile var inKatz = false
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add((
-        e.properties.getProperty("spark.job.description"),
-        e.properties.getProperty("spark.jobGroup.id")))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val t = (e.properties.getProperty("spark.job.description"),
+          e.properties.getProperty("spark.jobGroup.id"))
+        seen.add(t)
+        if (inKatz) katzJobs.add(t)
+      }
     }
     val mvKey = s"jobTagProbe|${System.nanoTime()}"
     sc.addSparkListener(listener)
     sc.setJobGroup("tag-group", "caller")
     try {
-      GraphOps.q_graph_katz(spark, sf0001).collect()
+      SessionBridge.drainListeners(spark)
+      inKatz = true
+      val katz = GraphOps.q_graph_katz(spark, sf0001)
+      SessionBridge.drainListeners(spark)
+      inKatz = false
+      katz.collect()
       Mv.memo(spark, mvKey)(bs => bs.range(8).toDF("x").ckpt("probe"))
       Par.run(spark, Seq(() => spark.range(5).count(), () => spark.range(6).count()))
       assert(sc.getLocalProperty("spark.job.description") == "caller")
@@ -130,9 +144,13 @@ class OptimizationR18Spec extends AnyFunSuite {
       sc.clearJobGroup()
       Mv.evict(spark, mvKey)
     }
-    val want = (0 to GraphOps.KatzIters).map(i => s"q_graph_katz/iter$i") ++
-      Seq(s"mv:$mvKey/ckpt:probe", "caller/leg0", "caller/leg1")
     import scala.jdk.CollectionConverters._
+    // steps run on the driver launch no job: the kernel's jobs are its
+    // state and arc reads, all under the query's name
+    val kernel = katzJobs.asScala.toSeq
+    assert(kernel.nonEmpty && kernel.forall(t => t._1.startsWith("q_graph_katz/") &&
+      t._2 == "tag-group"), s"katz jobs: $kernel")
+    val want = Seq(s"mv:$mvKey/ckpt:probe", "caller/leg0", "caller/leg1")
     try eventually(timeout(20.seconds)) {
       val tags = seen.asScala.toSeq
       assert(want.forall(w => tags.exists(_._1 == w)), s"missing tags in ${tags.map(_._1)}")

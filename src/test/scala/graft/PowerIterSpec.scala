@@ -2,6 +2,11 @@ package graft
 
 import scala.collection.mutable
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{array, lit}
+import org.apache.spark.sql.graft.SessionBridge
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,16 +16,20 @@ import graft.engine.PowerIter.{Cell, VecLeg}
 /** Property pins for the kernel's min-relaxation and vector-sum modes
   * against plain-Scala references — union-find for labels, BFS for hops,
   * synchronous Bellman-Ford for weighted distances, a superstep replay
-  * for vector sums — on random small graphs, in both placements of the
-  * state (the default guard holds it on the driver, guard 0 partitions
-  * it). */
+  * for vector sums — on random small graphs, in the three placements of
+  * the state; and pins of the placements themselves: the jobs a run
+  * launches, and the order of the f64 lane's sums. */
 class PowerIterSpec extends AnyFunSuite {
   import TestSpark._
 
   private val guardKey = "spark.graft.stateBroadcastMaxRows"
 
-  private def check(p: Prop, label: String): Unit =
-    for (guard <- Seq(None, Some("0"))) {
+  /** Runs `p` under three guards: the default holds the state and the
+    * arcs on the driver (the local placement); `held` holds every state
+    * the samples reach, but beside it the arcs of most samples do not
+    * fit (the narrow step); 0 partitions the state. */
+  private def check(p: Prop, label: String, held: Long): Unit =
+    for (guard <- Seq(None, Some(held.toString), Some("0"))) {
       guard.foreach(spark.conf.set(guardKey, _))
       try {
         val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), p)
@@ -69,7 +78,7 @@ class PowerIterSpec extends AnyFunSuite {
       val got = PowerIter.relax(spark, "prop", nodes.map(x => (x, x)).toDF("node", "lbl"),
         arcFrame(und), "b", "a").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       got == nodes.map(x => x -> find(x)).toMap
-    }, "union-find labels")
+    }, "union-find labels", held = 12)
   }
 
   test("hops: multi-lane BFS under a round cap equals per-seed BFS to that depth") {
@@ -85,7 +94,7 @@ class PowerIterSpec extends AnyFunSuite {
         dist.map { case (v, d) => (sd, v) -> d }
       }.toMap
       relaxLanes(as, ss, hop = 1L, weight = None, rounds = cap) == want
-    }, "BFS hops")
+    }, "BFS hops", held = 36)
   }
 
   test("weights: capped min relaxation equals synchronous Bellman-Ford, per lane") {
@@ -101,7 +110,7 @@ class PowerIterSpec extends AnyFunSuite {
         d.map { case (v, x) => (sd, v) -> x }
       }.toMap
       relaxLanes(as, ss, hop = 0L, weight = Some("w"), rounds = cap) == want
-    }, "Bellman-Ford distances")
+    }, "Bellman-Ford distances", held = 36)
   }
 
   test("vector sums: summed, counted cells per superstep equal a plain-Scala replay") {
@@ -139,6 +148,90 @@ class PowerIterSpec extends AnyFunSuite {
       val got = PowerIter.vsum(spark, "prop", initDf, if (f64) 6 else 3, vlegs).collect()
         .map(r => r.getLong(0) -> (r.getSeq[Long](1), Option(r.getSeq[Double](2)))).toMap
       got == want
-    }, "vector sums")
+      // the narrow step's partials bound: 4 scan tasks × 12 keys × 6 lanes
+    }, "vector sums", held = 288)
+  }
+
+  /** Runs `body` on this thread under a job group of its own and returns
+    * it with the descriptions of the jobs it launched, in order. */
+  private def jobs[A](body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"poweriter-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(e.jobId -> e.properties.getProperty("spark.job.description"))
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "")
+    try {
+      val a = body
+      SessionBridge.drainListeners(spark)
+      (a, seen.asScala.toSeq.sortBy(_._1).map(_._2))
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
+
+  test("within the guard a run launches as many jobs for 1 step as for 10") {
+    val s = spark
+    import s.implicits._
+    // a path of 12 arcs: the frontier of `relax` lives 10 rounds
+    val path = arcFrame((0L until 12L).map(i => (i, i + 1, 1L)).toList)
+    val nodes = (0L to 12L).toDF("node")
+    def launched(steps: Int): Seq[Seq[String]] = Seq(
+      jobs(PowerIter.run(spark, "steps", nodes.select($"node", lit(1.0).as("x")), steps,
+        Seq(PowerIter.Leg(path, "a", "b", (x, _, _) => x / 2))))._2,
+      jobs(PowerIter.relax(spark, "steps", Seq((0L, 0L)).toDF("node", "d"), path, "a", "b",
+        hop = 1L, maxRounds = steps))._2,
+      jobs(PowerIter.vsum(spark, "steps", nodes.select($"node", array($"node").as("q")), 1,
+        Seq.fill(steps)(VecLeg(path, "a", "b", (_, c, _) => c, 13L))))._2)
+    // one read of the state and one of the arcs
+    assert(launched(1) == launched(10))
+    assert(launched(10).forall(_ == Seq("steps/iter0", "steps/arcs:local")))
+  }
+
+  test("a driver-held final state is one partition: a global sort plans no exchange") {
+    val s = spark
+    import s.implicits._
+    val out = PowerIter.run(spark, "sorted", (0L until 40L).map(k => (k, 1.0)).toDF("node", "x"),
+      2, Seq(PowerIter.Leg(arcFrame((0L until 40L).map(i => (i, (i * 7) % 40, 1L)).toList),
+        "a", "b", (x, _, _) => x))).orderBy($"x".desc, $"node")
+    assert(out.rdd.getNumPartitions == 1)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+  }
+
+  test("each placement tags its first arc read; local and narrow sum the f64 lane alike") {
+    val s = spark
+    import s.implicits._
+    // 300 arcs over 40 keys in 3 scan tasks; the f64 cells' sums round
+    // differently in another order of addition
+    val rnd = new scala.util.Random(7)
+    val as = List.fill(300)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong, 1L))
+    val init = (0L until 40L).map(k => (k, Seq(k, 2 * k, 3 * k), Seq.fill(3)(rnd.nextDouble() * 1e3)))
+      .toDF("node", "q", "f")
+    def sums(guard: Option[String]): (Map[Long, (Seq[Long], Seq[Double])], Seq[String]) = {
+      guard.foreach(spark.conf.set(guardKey, _))
+      try jobs(PowerIter.vsum(spark, "tags", init, 6, Seq(
+          VecLeg(arcFrame(as), "a", "b", (_, c, _) => c, 40L),
+          VecLeg(arcFrame(as), "b", "a", (_, c, _) => c, 40L)), width = 3)
+        .collect().map(r => r.getLong(0) -> (r.getSeq[Long](1), r.getSeq[Double](2))).toMap)
+      finally spark.conf.unset(guardKey)
+    }
+    // 720 = 3 tasks × 40 keys × 6 lanes holds the state and the partials,
+    // not the 1,200 arc cells of the two legs beside the state
+    val (local, lt) = sums(None)
+    val (narrow, nt) = sums(Some("720"))
+    val (parted, pt) = sums(Some("0"))
+    def arcTags(ts: Seq[String]) = ts.filter(_.startsWith("tags/arcs:"))
+    assert(arcTags(lt) == Seq("tags/arcs:local"))
+    assert(arcTags(nt) == Seq("tags/arcs:local", "tags/arcs:narrow"))
+    assert(arcTags(pt) == Seq("tags/arcs:partitioned", "tags/arcs:partitioned"))
+    def bits(m: Map[Long, (Seq[Long], Seq[Double])]) =
+      m.map { case (k, (q, f)) => k -> (q, f.map(java.lang.Double.doubleToLongBits)) }
+    assert(local.nonEmpty && bits(local) == bits(narrow))
+    assert(parted.keySet == local.keySet && parted.forall { case (k, (q, f)) =>
+      q == local(k)._1 && f.zip(local(k)._2).forall { case (x, y) => math.abs(x - y) <= 1e-9 * y }
+    })
   }
 }
