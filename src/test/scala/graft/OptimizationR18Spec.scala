@@ -103,7 +103,7 @@ class OptimizationR18Spec extends AnyFunSuite {
       s"worker ckpt not captured: ${recorded.map(_._1)}")
   }
 
-  test("job descriptions tag kernel runs, MV builds and Par legs " +
+  test("job descriptions tag kernel iterations, MV builds and Par legs " +
       "and restore the caller's; the job group is untouched") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.graft.SessionBridge
