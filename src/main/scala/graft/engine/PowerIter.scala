@@ -8,7 +8,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.{HashPartitioner, Partitioner, ShuffleDependency}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.graft.SessionBridge
 import org.apache.spark.sql.types._
 
@@ -38,14 +38,16 @@ import org.apache.spark.sql.types._
   * Three placements, chosen against `spark.graft.stateBroadcastMaxRows`,
   * a budget of cells (values) the driver may hold:
   *  - local: when the state's cells plus the arcs' cells fit (an arc
-  *    is 2 + its weight columns), every leg's arc scan is read to the
-  *    driver once per run, in one job: one compact chunk per scan
-  *    partition, keys numbered into dense `Int` ids. Every step then
-  *    runs on the driver over primitive arrays: no broadcast, no job
-  *    per step, nothing persisted or kept past the call. Each read task
-  *    brings back at most its share of the budget, so the driver never
-  *    pulls more than the guard; a task past its share sends nothing
-  *    and the run goes narrow;
+  *    is 2 + its weight columns), the arcs are read to the driver once
+  *    per run, by the job of the run's first step, which runs as a
+  *    narrow step: one compact chunk per scan partition, keys numbered
+  *    into dense `Int` ids. Legs over the same arcs share one scan, so
+  *    a shared arc MV is read, numbered and counted once. Every later
+  *    step runs on the driver: no broadcast, no job per step, nothing
+  *    persisted or kept past the call. Each task brings back at most
+  *    its share of the budget, so the driver never pulls more than the
+  *    guard; a task past its share sends no arcs, and the run goes on
+  *    narrow with no job spent on the try;
   *  - narrow: when the state fits but the arcs do not, the state is
   *    held on the driver and broadcast, and each step is ONE narrow job
   *    over the arc MV's blocks (read through `queryExecution.toRdd`,
@@ -55,19 +57,22 @@ import org.apache.spark.sql.types._
   *    key once per run, in a job of their own, the shuffle output
   *    reused by every step) and combines with one `reduceByKey` shuffle
   *    onto the same placement.
-  * A local step builds each chunk's partials as a narrow task does and
-  * merges them on the driver in partition order, so both give the same
-  * bits. The scalar modes guard the state's row count. `vsum` guards
-  * cells (rows × lanes): the state's, and the per-task partials' bound
-  * of scan tasks × the leg's `toKeys` × lanes, so neither a 64-wide
-  * state nor many tasks' partials load the driver. State only grows
+  * A local step runs over arrays indexed by the arcs' ids: Long sums
+  * and minima are exact in any order, and `vsum` sums each chunk's
+  * cells in scan order into partials of their own, merged in partition
+  * order as a narrow step's task partials are, so every placement
+  * gives the same bits. The scalar modes guard the state's row count.
+  * `vsum` guards cells (rows × lanes): the state's, and the per-task
+  * partials' bound of scan tasks × the leg's `toKeys` × lanes, so
+  * neither a 64-wide state nor many tasks' partials load the driver. State only grows
   * between steps, so a run only moves down the list: local arcs are
   * dropped (never read again) once the state outgrows their share.
   * Round i's jobs run under the job description `<query>/iter<i>` (the
-  * state's read is iter0). The arcs' reads run under
-  * `<query>/arcs:<placement>`: the local read (`local`, whether or not
-  * the arcs fit), the first narrow step (`narrow`) and each leg's
-  * shuffle (`partitioned`); `width`, when positive, coalesces the arc scan to
+  * state's read is iter0). The job that first reads the arcs in a
+  * placement is tagged `<query>/iter<i>/arcs:<placement>`: the first
+  * step's (`local`, whether or not the arcs fit), the first narrow
+  * step after a failed try (`narrow`) and each scan's shuffle
+  * (`partitioned`). `width`, when positive, coalesces the arc scan to
   * that many tasks.
   *
   * Stateless: a run's state is local to it, so concurrent callers share
@@ -96,14 +101,14 @@ object PowerIter {
       case None => Right(init.rdd.map(r => (r.get(0): Any) -> r.getDouble(1)).partitionBy(k.p))
     }
     for (i <- 1 to iters) k.round(i) {
-      legs.zip(scans).zipWithIndex.foreach { case ((leg, sc), li) =>
+      legs.zip(scans).foreach { case (leg, sc) =>
         val term = leg.term
         val offer: Offer[Double, Long] = (v, to, w1, w2, acc) =>
           acc.add(to, Dsl.rlong(term(v, w1, w2) * 1e9))
         state = state match {
           case Left(m) if m.size <= k.guard =>
-            Left(sumMerge(leg, k.arcs(scans, m.size).fold(
-              k.narrow(sc, m, () => new Acc(min = false))(offer))(sumLocal(_, li, m, term))))
+            Left(sumMerge(leg, k.step(scans, sc, m, m.size, () => new Acc(min = false))(offer)(
+              sumLocal(_, sc, m, term))))
           case st =>
             val part = st.fold(m => s.sparkContext.parallelize(m.toSeq).partitionBy(k.p), identity)
             Right(sumShuffled(s, leg, k.shuffled(part, sc, k.p, () => new Acc(min = false),
@@ -128,9 +133,9 @@ object PowerIter {
     else { val mx = next.values.max; next.map { case (k, v) => k -> v / mx } }
   }
 
-  /** The sum mode's local step over leg `li`: every arc whose from key
+  /** The sum mode's driver step over `sc`: every arc whose from key
     * holds `v` adds `rlong(term(v, w1, w2)·1e9)` to its to key's sum. */
-  private def sumLocal(a: Arcs, li: Int, m: collection.Map[Any, Double],
+  private def sumLocal(a: Arcs, sc: Scan, m: collection.Map[Any, Double],
       term: (Double, Long, Long) => Double): Array[(Any, Long)] = {
     val n = a.keys.length
     val v = new Array[Double](n)
@@ -138,7 +143,7 @@ object PowerIter {
     for ((key, x) <- m) { val i = a.id(key); if (i >= 0) { v(i) = x; has(i) = true } }
     val sums = new Array[Long](n)
     val hit = new Array[Boolean](n)
-    for (c <- a.legs(li)) {
+    for (c <- a.of(sc)) {
       var j = 0
       while (j < c.rows) {
         val f = c.from(j)
@@ -212,8 +217,8 @@ object PowerIter {
             // driver merge: keep the minimum, the improved keys go next
             val next = mutable.HashMap.empty[(Any, Any), Long]
             val fr = byNode(f)
-            val offers = k.arcs(Seq(sc), m.size).fold(
-              k.narrow(sc, fr, () => new Acc(min = true))(offer))(minLocal(_, fr, hop))
+            val offers = k.step(Seq(sc), sc, fr, m.size, () => new Acc(min = true))(offer)(
+              minLocal(_, sc, fr, hop))
             for ((key: (Any, Any) @unchecked, c) <- offers)
               if (c < m.getOrElse(key, Long.MaxValue)) { m(key) = c; next(key) = c }
             front = Left(next)
@@ -242,10 +247,10 @@ object PowerIter {
       st => Right(st.map { case (key, v) => row(key, v) })))
   }
 
-  /** The min mode's local step: every arc from a frontier key offers
-    * each of the key's (lane, `v`) as `v + hop + w` to (lane, its to
-    * key), and each (lane, key) keeps its least offer. */
-  private def minLocal(a: Arcs, front: Map[Any, Seq[(Any, Long)]],
+  /** The min mode's driver step over `sc`: every arc from a frontier
+    * key offers each of the key's (lane, `v`) as `v + hop + w` to (lane,
+    * its to key), and each (lane, key) keeps its least offer. */
+  private def minLocal(a: Arcs, sc: Scan, front: Map[Any, Seq[(Any, Long)]],
       hop: Long): Array[(Any, Long)] = {
     val n = a.keys.length
     val fr = new Array[Seq[(Any, Long)]](n)
@@ -253,7 +258,7 @@ object PowerIter {
     // per lane, each id's least offer (Long.MaxValue: none — an offer
     // of Long.MaxValue would improve nothing)
     val best = new java.util.HashMap[Any, Array[Long]]()
-    for (c <- a.legs(0)) {
+    for (c <- a.of(sc)) {
       var j = 0
       while (j < c.rows) {
         val ls = fr(c.from(j))
@@ -312,8 +317,8 @@ object PowerIter {
         case Left(m) if m.size * lanes(m) <= k.guard &&
             sc.rows.getNumPartitions * leg.toKeys * lanes(m) <= k.guard =>
           val sums = mutable.HashMap.empty[Any, VSum]
-          for ((key, p) <- k.arcs(scans, m.size * lanes(m)).fold(
-              k.narrow(sc, m, () => new VecAcc)(offer))(vecLocal(_, i, m)))
+          for ((key, p) <- k.step(scans, sc, m, m.size * lanes(m), () => new VecAcc)(offer)(
+              vecLocal(_, sc, m)))
             sums.get(key).fold(sums(key) = p)(_.merge(p))
           Left(sums.flatMap { case (key, p) => Option(update(key, p.cell, p.n)).map(key -> _) })
         case st =>
@@ -331,15 +336,15 @@ object PowerIter {
       st => Right(st.map { case (key, c) => row(key, c) })))
   }
 
-  /** The vector-sum mode's local step over leg `li`: per chunk, as one
+  /** The vector-sum mode's driver step over `sc`: per chunk, as one
     * narrow task, each to key sums its offered cells in scan order from
     * zero; the chunks' partials follow in partition order. */
-  private def vecLocal(a: Arcs, li: Int, m: collection.Map[Any, Cell]): Array[(Any, VSum)] = {
+  private def vecLocal(a: Arcs, sc: Scan, m: collection.Map[Any, Cell]): Array[(Any, VSum)] = {
     val n = a.keys.length
     val cells = new Array[Cell](n)
     for ((key, c) <- m) { val i = a.id(key); if (i >= 0) cells(i) = c }
     val out = mutable.ArrayBuffer.empty[(Any, VSum)]
-    for (ch <- a.legs(li)) {
+    for (ch <- a.of(sc)) {
       val part = new Array[VSum](n)
       var j = 0
       while (j < ch.rows) {
@@ -432,9 +437,10 @@ object PowerIter {
   /** One arc MV as the kernel reads it: the reader, the (coalesced) row
     * blocks, and the arcs keyed on `from` on the state's partitioner —
     * lazy, so a run that never leaves the driver-held placements never
-    * shuffles. */
-  private final case class Scan(rd: Reader, rows: RDD[InternalRow],
-      byFrom: RDD[(Any, (Any, Long, Long))])
+    * shuffles. A run makes one per distinct (arcs, from, to, weights,
+    * key), so legs over the same arcs share its read and its shuffle. */
+  private final class Scan(val rd: Reader, val rows: RDD[InternalRow],
+      val byFrom: RDD[(Any, (Any, Long, Long))])
 
   /** One scan partition's arcs as a read task sends them: the raw key
     * columns (`Array[Long]` or `Array[String]`, the from-key before
@@ -442,30 +448,32 @@ object PowerIter {
   private final class Raw(val from: Array[_], val to: Array[_], val w1: Array[Long],
       val w2: Array[Long]) extends Serializable
 
-  private object Raw {
-    /** The arcs of `it`, or null when they pass `share` cells. */
-    def read(rd: Reader, share: Long, it: Iterator[InternalRow]): Raw = {
-      val max = share / rd.cells
-      val (fl, tl, w1, w2) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong,
-        new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
-      val (fs, ts) = (ArrayBuilder.make[String], ArrayBuilder.make[String])
-      var n = 0L
-      while (n <= max && it.hasNext) {
-        val r = it.next()
-        n += 1
-        if (n <= max) {
-          if (rd.strKeys) {
-            fs += r.getUTF8String(rd.fromAt).toString
-            ts += r.getUTF8String(rd.toAt).toString
-          } else { fl += r.getLong(rd.fromAt); tl += r.getLong(rd.toAt) }
-          if (rd.w1At >= 0) w1 += r.getLong(rd.w1At)
-          if (rd.w2At >= 0) w2 += r.getLong(rd.w2At)
-        }
+  /** Builds one scan partition's `Raw` from its rows, in scan order,
+    * while they fit `share` cells; past it the rest are only counted. */
+  private final class RawBuilder(rd: Reader, share: Long) {
+    private val max = share / rd.cells
+    private val (fl, tl, w1, w2) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong,
+      new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
+    private val (fs, ts) = (ArrayBuilder.make[String], ArrayBuilder.make[String])
+    private var n = 0L
+
+    def +=(r: InternalRow): Unit = {
+      n += 1
+      if (n <= max) {
+        if (rd.strKeys) {
+          fs += r.getUTF8String(rd.fromAt).toString
+          ts += r.getUTF8String(rd.toAt).toString
+        } else { fl += r.getLong(rd.fromAt); tl += r.getLong(rd.toAt) }
+        if (rd.w1At >= 0) w1 += r.getLong(rd.w1At)
+        if (rd.w2At >= 0) w2 += r.getLong(rd.w2At)
       }
+    }
+
+    /** The partition's arcs, or null when they passed `share`. */
+    def result: Raw =
       if (n > max) null
       else if (rd.strKeys) new Raw(fs.result(), ts.result(), weights(rd.w1At, w1), weights(rd.w2At, w2))
       else new Raw(fl.result(), tl.result(), weights(rd.w1At, w1), weights(rd.w2At, w2))
-    }
 
     private def weights(at: Int, b: ArrayBuilder.ofLong): Array[Long] =
       if (at < 0) null else b.result()
@@ -479,13 +487,14 @@ object PowerIter {
     def w2(j: Int): Long = if (w2s == null) 0L else w2s(j)
   }
 
-  /** Every leg's arcs on the driver: `keys(id)` is the key numbered
-    * `id`, and each leg's arcs are one `Chunk` per scan partition, in
+  /** Every scan's arcs on the driver: `keys(id)` is the key numbered
+    * `id`, and a scan's arcs are one `Chunk` per scan partition, in
     * partition order. `cells` counts each arc's keys and weights. */
   private final class Arcs(val keys: Array[Any], ids: java.util.HashMap[Any, Integer],
-      val legs: Array[Array[Chunk]], val cells: Long) {
+      scans: Seq[Scan], chunks: Array[Array[Chunk]], val cells: Long) {
     /** `k`'s id, or -1 when no arc holds it. */
     def id(k: Any): Int = { val i = ids.get(k); if (i == null) -1 else i.intValue }
+    def of(sc: Scan): Array[Chunk] = chunks(scans.indexOf(sc))
   }
 
   private object Arcs {
@@ -500,7 +509,7 @@ object PowerIter {
       }
       val parts = raw.iterator
       var cells = 0L
-      val legs = scans.map { sc =>
+      val chunks = scans.map { sc =>
         Array.fill(sc.rows.getNumPartitions) {
           val r = parts.next()
           cells += r.from.length.toLong * sc.rd.cells
@@ -508,7 +517,7 @@ object PowerIter {
             Array.tabulate(r.to.length)(j => id(r.to(j))), r.w1, r.w2)
         }
       }
-      new Arcs(keys.toArray, ids, legs.toArray, cells)
+      new Arcs(keys.toArray, ids, scans, chunks.toArray, cells)
     }
   }
 
@@ -517,96 +526,129 @@ object PowerIter {
     val guard: Long = s.conf.get("spark.graft.stateBroadcastMaxRows",
       GraphOps.StateBroadcastMaxRows.toString).toLong
     val p = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
-    // the placement of the last arc read, the local arcs, and the scans
-    // already shuffled onto their from key
+    // the placement of the last arc read, the local arcs, the run's
+    // scans by what they read, and the scans already shuffled onto
+    // their from key
     private var placed = ""
     private var local: Option[Arcs] = None
     private var tried = false
+    private val scans = mutable.ArrayBuffer.empty[((DataFrame, String, String, Seq[String], Any => Any), Scan)]
     private val parted = mutable.Set.empty[Scan]
 
+    /** The scan of `arcs`; the same arcs, columns and `key` give the
+      * same scan. */
     def scan(arcs: DataFrame, from: String, to: String, weights: Seq[String],
         key: Any => Any = identity): Scan = {
-      val sc = arcs.schema
-      val w = weights.map(sc.fieldIndex)
-      val rd = Reader(sc.fieldIndex(from), sc.fieldIndex(to), sc(from).dataType == StringType,
-        w.headOption.getOrElse(-1), w.lift(1).getOrElse(-1), key)
-      val r = arcs.queryExecution.toRdd
-      val rows = if (width > 0 && width < r.getNumPartitions) r.coalesce(width) else r
-      Scan(rd, rows, rows.map(x => (rd.from(x), (rd.to(x), rd.w1(x), rd.w2(x)))).partitionBy(p))
+      val what = (arcs, from, to, weights, key)
+      scans.collectFirst { case ((a, f, t, w, kf), sc) if (a eq arcs) && f == from && t == to &&
+          w == weights && (kf eq key) => sc }.getOrElse {
+        val sc = arcs.schema
+        val w = weights.map(sc.fieldIndex)
+        val rd = Reader(sc.fieldIndex(from), sc.fieldIndex(to), sc(from).dataType == StringType,
+          w.headOption.getOrElse(-1), w.lift(1).getOrElse(-1), key)
+        val r = arcs.queryExecution.toRdd
+        val rows = if (width > 0 && width < r.getNumPartitions) r.coalesce(width) else r
+        val made = new Scan(rd, rows, rows.map(x => (rd.from(x), (rd.to(x), rd.w1(x), rd.w2(x))))
+          .partitionBy(p))
+        scans += what -> made
+        made
+      }
     }
 
     /** `init`'s rows when their cells (`lanes` per row) fit the guard,
-      * else None: one job (iter0) of one task, which sends nothing past
-      * the guard. */
+      * else None, in one job (iter0): each task sends its rows when
+      * they fit its share of the guard, else nothing. When a task
+      * passes its share, a limit read to the guard decides (two more
+      * jobs), so the driver never pulls more than the guard. */
     def held(init: DataFrame, lanes: Int = 1): Option[Array[Row]] = {
       val cap = math.min(guard / math.max(lanes, 1), Int.MaxValue - 1L).toInt
+      val schema = init.schema
+      val rows = init.queryExecution.toRdd
+      val share = cap / math.max(rows.getNumPartitions, 1)
       JobTag(s.sparkContext, s"$query/iter0") {
-        init.rdd.coalesce(1).mapPartitions { it =>
-          val rows = it.take(cap + 1).toArray
-          Iterator(Option.when(rows.length <= cap)(rows))
+        // internal rows, which serialize compactly
+        val parts = rows.mapPartitions { it =>
+          val got = it.take(share + 1).map(_.copy()).toArray
+          Iterator(Option.when(got.length <= share)(got))
         }.collect()
-      }.headOption.getOrElse(Some(Array.empty[Row]))
+        if (parts.forall(_.isDefined)) {
+          val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+          Some(parts.flatMap(_.get).map(toRow(_).asInstanceOf[Row]))
+        } else Some(init.limit(cap + 1).collect()).filter(_.length <= cap)
+      }
     }
 
     def round[A](i: Int)(body: => A): A = JobTag(s.sparkContext, s"$query/iter$i")(body)
 
-    /** Runs `body` under `<query>/arcs:<placement>` when the run enters
+    /** Runs `body` under `<round's>/arcs:<placement>` when the run enters
       * the placement: the local read, or the first narrow step. */
     private def entering[A](placement: String)(body: => A): A =
       if (placed == placement) body
-      else { placed = placement; JobTag(s.sparkContext, s"$query/arcs:$placement")(body) }
+      else { placed = placement; JobTag.under(s.sparkContext, s"arcs:$placement")(body) }
 
-    /** Every leg's arcs on the driver beside a state of `stateCells`, or
-      * None. The first call reads them in one job, each task bringing
-      * back at most its share of what the guard leaves; they are kept
-      * while they and the state fit, and once dropped not read again. */
-    def arcs(scans: Seq[Scan], stateCells: Long): Option[Arcs] = {
+    /** One step of `sc` with a driver-held state of `stateCells`:
+      * `onDriver` over the local arcs when they fit beside it, else one
+      * narrow job whose tasks combine their partition's offers into a
+      * fresh `acc()` and return the partials, in partition order, for
+      * the driver to merge. The run's first such step is a narrow job
+      * that also reads every scan's arcs (`<round's>/arcs:local`): each
+      * task brings them back when they fit its share of what the guard
+      * leaves beside the state, else nothing. The arcs are kept while
+      * they and the state fit, and once dropped not read again. */
+    def step[V, T, P](all: Seq[Scan], sc: Scan, held: collection.Map[Any, V], stateCells: Long,
+        acc: () => Combiner[T, P])(offer: Offer[V, T])(
+        onDriver: Arcs => Array[(Any, P)]): Array[(Any, P)] =
       if (!tried) {
         tried = true
-        val budget = guard - stateCells
-        if (budget >= 0) entering("local") {
-          val share = budget / math.max(scans.map(_.rows.getNumPartitions).sum, 1)
-          val raw = s.sparkContext.union(scans.map { sc =>
-            val rd = sc.rd
-            sc.rows.mapPartitions(it => Iterator(Raw.read(rd, share, it)))
-          }).collect()
-          if (!raw.contains(null)) local = Some(Arcs(scans, raw))
-        }
+        val scans = all.distinct
+        val share = (guard - stateCells) / math.max(scans.map(_.rows.getNumPartitions).sum, 1)
+        val (parts, raw) = entering("local")(narrow(scans, sc, held, acc, share)(offer))
+        if (!raw.contains(null)) local = Some(Arcs(scans, raw))
+        parts
+      } else {
+        local = local.filter(_.cells + stateCells <= guard)
+        local.fold(entering("narrow")(narrow(Seq(sc), sc, held, acc, -1L)(offer)._1))(onDriver)
       }
-      local = local.filter(_.cells + stateCells <= guard)
-      local
-    }
 
-    /** One step with a driver-held state: broadcast the values of the
-      * keys that offer, scan the arcs in one narrow job, and return each
-      * task's combined partials for the driver to merge. */
-    def narrow[V, T, P](sc: Scan, held: collection.Map[Any, V], acc: () => Combiner[T, P])(
-        offer: Offer[V, T]): Array[(Any, P)] = entering("narrow") {
+    /** One job with a driver-held state: broadcast the values of the
+      * keys that offer and scan `sc`, whose tasks return their combined
+      * partials, in partition order, for the driver to merge. With a
+      * `share` of cells (not -1) every task of `scans` also returns its
+      * partition's arcs, or null past the share. */
+    private def narrow[V, T, P](scans: Seq[Scan], sc: Scan, held: collection.Map[Any, V],
+        acc: () => Combiner[T, P], share: Long)(offer: Offer[V, T]): (Array[(Any, P)], Array[Raw]) = {
       val m = new java.util.HashMap[Any, V](held.size * 2)
       held.foreach { case (k, v) => m.put(k, v) }
       val bc = s.sparkContext.broadcast(m)
-      val rd = sc.rd
-      try sc.rows.mapPartitions { it =>
-        val st = bc.value
-        val a = acc()
-        it.foreach { r =>
-          val v = st.get(rd.from(r))
-          if (v != null) offer(v, rd.to(r), rd.w1(r), rd.w2(r), a)
-        }
-        a.iterator
-      }.collect()
-      finally bc.destroy()
+      try {
+        val out = s.sparkContext.union(scans.map { x =>
+          val (rd, stepped) = (x.rd, x eq sc)
+          x.rows.mapPartitions { it =>
+            val (st, a) = if (stepped) (bc.value, acc()) else (null, null)
+            val b = if (share >= 0) new RawBuilder(rd, share) else null
+            it.foreach { r =>
+              if (a != null) {
+                val v = st.get(rd.from(r))
+                if (v != null) offer(v, rd.to(r), rd.w1(r), rd.w2(r), a)
+              }
+              if (b != null) b += r
+            }
+            Iterator((if (a == null) null else a.iterator.toArray, if (b == null) null else b.result))
+          }
+        }).collect()
+        (out.flatMap(o => Option(o._1)).flatten, out.map(_._2))
+      } finally bc.destroy()
     }
 
     /** One step with a partitioned state (placed as the arcs' `from`):
       * zip it with the arcs, combine per task, then one `reduceByKey`
       * shuffle onto `onto`. The arcs' own shuffle runs first, once per
-      * leg, as a job of its own (`<query>/arcs:partitioned`). */
+      * scan, as a job of its own (`<round's>/arcs:partitioned`). */
     def shuffled[V, T, P: ClassTag](st: RDD[(Any, V)], sc: Scan, onto: Partitioner,
         acc: () => Combiner[T, P], merge: (P, P) => P)(offer: Offer[V, T]): RDD[(Any, P)] = {
       if (parted.add(sc) && sc.rows.getNumPartitions > 0) {
         placed = "partitioned"
-        JobTag(s.sparkContext, s"$query/arcs:partitioned")(SessionBridge.runMapStage(s.sparkContext,
+        JobTag.under(s.sparkContext, "arcs:partitioned")(SessionBridge.runMapStage(s.sparkContext,
           sc.byFrom.dependencies.head.asInstanceOf[ShuffleDependency[_, _, _]]))
       }
       st.zipPartitions(sc.byFrom) { (held, it) =>

@@ -117,13 +117,16 @@ class OptimizationR18Spec extends AnyFunSuite {
     GraphOps.q_graph_katz(spark, sf0001)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val katzJobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val narrowJobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     @volatile var inKatz = false
+    @volatile var inNarrow = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val t = (e.properties.getProperty("spark.job.description"),
           e.properties.getProperty("spark.jobGroup.id"))
         seen.add(t)
         if (inKatz) katzJobs.add(t)
+        if (inNarrow) narrowJobs.add(t._1)
       }
     }
     val mvKey = s"jobTagProbe|${System.nanoTime()}"
@@ -136,6 +139,18 @@ class OptimizationR18Spec extends AnyFunSuite {
       SessionBridge.drainListeners(spark)
       inKatz = false
       katz.collect()
+      // a guard that holds the state but not the arcs beside it: every
+      // round is a narrow job of its own
+      val ue = GraphOps.undProj(spark, sf0001, GraphOps.TriangleMinCooccur)
+      val guard = ue.select("a").distinct().count() + ue.count()
+      spark.conf.set("spark.graft.stateBroadcastMaxRows", guard.toString)
+      try {
+        SessionBridge.drainListeners(spark)
+        inNarrow = true
+        GraphOps.q_graph_katz(spark, sf0001)
+        SessionBridge.drainListeners(spark)
+        inNarrow = false
+      } finally spark.conf.unset("spark.graft.stateBroadcastMaxRows")
       Mv.memo(spark, mvKey)(bs => bs.range(8).toDF("x").ckpt("probe"))
       Par.run(spark, Seq(() => spark.range(5).count(), () => spark.range(6).count()))
       assert(sc.getLocalProperty("spark.job.description") == "caller")
@@ -150,6 +165,13 @@ class OptimizationR18Spec extends AnyFunSuite {
     val kernel = katzJobs.asScala.toSeq
     assert(kernel.nonEmpty && kernel.forall(t => t._1.startsWith("q_graph_katz/") &&
       t._2 == "tag-group"), s"katz jobs: $kernel")
+    // the narrow call's rounds: iter0 reads the state, iter1's step also
+    // tries the arcs, and iter2 is the first narrow step after it
+    val narrow = narrowJobs.asScala.toSeq
+    assert((0 to GraphOps.KatzIters).forall(i => narrow.exists(d =>
+      d == s"q_graph_katz/iter$i" || d.startsWith(s"q_graph_katz/iter$i/"))), s"narrow jobs: $narrow")
+    assert(Seq("iter1/arcs:local", "iter2/arcs:narrow").forall(t => narrow.contains(s"q_graph_katz/$t")),
+      s"narrow jobs: $narrow")
     val want = Seq(s"mv:$mvKey/ckpt:probe", "caller/leg0", "caller/leg1")
     try eventually(timeout(20.seconds)) {
       val tags = seen.asScala.toSeq

@@ -124,7 +124,7 @@ class PowerIterSpec extends AnyFunSuite {
     // from-key as `from % 5`, a derived key
     def ends(i: Int, arc: Arc): (Long, Long) =
       if (i % 2 == 0) (if (i == 0) arc._1 % 5 else arc._1, arc._2) else (arc._2, arc._1)
-    check(Prop.forAll(arcs, cells, Gen.choose(1, 3), Gen.oneOf(false, true)) { (as, init, legs, f64) =>
+    check(Prop.forAll(arcs, cells, Gen.choose(1, 4), Gen.oneOf(false, true)) { (as, init, legs, f64) =>
       type V = (Seq[Long], Option[Seq[Double]])
       var want: Map[Long, V] = init.map { case (k, q) => k -> (q, Option.when(f64)(q.map(_.toDouble))) }
       for (i <- 0 until legs) {
@@ -140,10 +140,13 @@ class PowerIterSpec extends AnyFunSuite {
       import s.implicits._
       val initDf = if (f64) init.toSeq.map { case (k, q) => (k, q, q.map(_.toDouble)) }.toDF("node", "q", "f")
         else init.toSeq.toDF("node", "q")
+      // every leg reads one frame: legs 0 and 2 differ only in their
+      // key, and leg 3 reads the arcs as leg 1 does
+      val af = arcFrame(as)
       val vlegs = (0 until legs).map { i =>
         val (from, to) = if (i % 2 == 0) ("a", "b") else ("b", "a")
         val key: Any => Any = if (i == 0) k => k.asInstanceOf[Long] % 5 else identity
-        VecLeg(arcFrame(as), from, to, update, 12L, key)
+        VecLeg(af, from, to, update, 12L, key)
       }
       val got = PowerIter.vsum(spark, "prop", initDf, if (f64) 6 else 3, vlegs).collect()
         .map(r => r.getLong(0) -> (r.getSeq[Long](1), Option(r.getSeq[Double](2)))).toMap
@@ -187,7 +190,25 @@ class PowerIterSpec extends AnyFunSuite {
         Seq.fill(steps)(VecLeg(path, "a", "b", (_, c, _) => c, 13L))))._2)
     // one read of the state and one of the arcs
     assert(launched(1) == launched(10))
-    assert(launched(10).forall(_ == Seq("steps/iter0", "steps/arcs:local")))
+    assert(launched(10).forall(_ == Seq("steps/iter0", "steps/iter1/arcs:local")))
+  }
+
+  test("arcs that do not fit beside the state cost no job: one job per step, as narrow") {
+    val s = spark
+    import s.implicits._
+    val path = arcFrame((0L until 12L).map(i => (i, i + 1, 1L)).toList)
+    def halve() = jobs(PowerIter.run(spark, "try", (0L to 12L).map(k => (k, 1.0)).toDF("node", "x"),
+      10, Seq(PowerIter.Leg(path, "a", "b", (x, _, _) => x / 2))).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap)
+    // 20 holds the 13 keys of the state, not the 24 arc cells beside it
+    spark.conf.set(guardKey, "20")
+    val (narrow, tags) = try halve() finally spark.conf.unset(guardKey)
+    // the first step's job tries the arcs; the second goes narrow (the
+    // untagged job is the caller's collect)
+    assert(tags.filter(_.nonEmpty) == Seq("try/iter0", "try/iter1/arcs:local", "try/iter2/arcs:narrow") ++
+      (3 to 10).map(i => s"try/iter$i"))
+    // ten steps along the path leave its last three nodes
+    assert(narrow.keySet == Set(10L, 11L, 12L) && narrow == halve()._1)
   }
 
   test("a driver-held final state is one partition: a global sort plans no exchange") {
@@ -223,15 +244,35 @@ class PowerIterSpec extends AnyFunSuite {
     val (local, lt) = sums(None)
     val (narrow, nt) = sums(Some("720"))
     val (parted, pt) = sums(Some("0"))
-    def arcTags(ts: Seq[String]) = ts.filter(_.startsWith("tags/arcs:"))
-    assert(arcTags(lt) == Seq("tags/arcs:local"))
-    assert(arcTags(nt) == Seq("tags/arcs:local", "tags/arcs:narrow"))
-    assert(arcTags(pt) == Seq("tags/arcs:partitioned", "tags/arcs:partitioned"))
+    def arcTags(ts: Seq[String]) = ts.filter(_.contains("/arcs:"))
+    assert(arcTags(lt) == Seq("tags/iter1/arcs:local"))
+    assert(arcTags(nt) == Seq("tags/iter1/arcs:local", "tags/iter2/arcs:narrow"))
+    assert(arcTags(pt) == Seq("tags/iter1/arcs:partitioned", "tags/iter2/arcs:partitioned"))
     def bits(m: Map[Long, (Seq[Long], Seq[Double])]) =
       m.map { case (k, (q, f)) => k -> (q, f.map(java.lang.Double.doubleToLongBits)) }
     assert(local.nonEmpty && bits(local) == bits(narrow))
     assert(parted.keySet == local.keySet && parted.forall { case (k, (q, f)) =>
       q == local(k)._1 && f.zip(local(k)._2).forall { case (x, y) => math.abs(x - y) <= 1e-9 * y }
     })
+  }
+
+  test("legs over the same arcs share one read and one count of their cells") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(11)
+    val as = arcFrame(List.fill(300)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong, 1L)))
+    val init = (0L until 40L).map(k => (k, Seq(k, 2 * k, 3 * k, 4 * k, 5 * k, 6 * k))).toDF("node", "q")
+    def tags(guard: String): Seq[String] = {
+      spark.conf.set(guardKey, guard)
+      try jobs(PowerIter.vsum(spark, "shared", init, 6,
+          Seq.fill(3)(VecLeg(as, "a", "b", (_, c, _) => c, 40L)), width = 3).collect())._2
+        .filter(_.contains("/arcs:"))
+      finally spark.conf.unset(guardKey)
+    }
+    // 1,200 holds the 240 state cells, the 720 partials' cells and the
+    // 600 arc cells once (each of the 3 read tasks may send 320 of the
+    // 960 left), not three times
+    assert(tags("1200") == Seq("shared/iter1/arcs:local"))
+    assert(tags("0") == Seq("shared/iter1/arcs:partitioned"))
   }
 }
