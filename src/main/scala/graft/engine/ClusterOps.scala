@@ -42,7 +42,7 @@ object ClusterOps {
     * the quality report can never drift from the clustering it scores
     * (the langid/lang_confusion sharing device). */
   private[graft] def kmeansAssign(s: SparkSession, dir: String): DataFrame =
-    Mv.memo(s, s"kmeansAssign|${LlmOps.tablesKey(s, dir, Seq("embeddings"))}") { bs =>
+    Mv.memo(s, s"kmeansAssign|${Mv.tablesKey(s, dir, Seq("embeddings"))}") { bs =>
       val emb = Tables.embeddings(bs, dir)
       var cents = emb.filter(col("vec_id") < KmeansK)
         .select(col("vec_id").as("cl") +:

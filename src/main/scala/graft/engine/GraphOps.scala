@@ -34,22 +34,15 @@ object GraphOps {
     * tested sf. */
   val JaccardMinSim = 0.05
 
-  /** Memo for the one-scalar vertex-count stats probe: one pair of
-    * distinct-counts per (session, edge-MV generation), not one per
-    * fixpoint query (the LlmOps.tokenMasks device — cc/bfs/closeness/…
-    * would otherwise each rescan the edge MV just to learn |V|). Keyed
-    * on the freshness-scoped `gKey`, like the MV it counts, so a
-    * mid-session rewrite of orders/lineitem re-probes. */
-  private val vertexCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
+  /** Vertex-count probe: one pair of distinct-counts per edge-MV
+    * generation, not one per fixpoint query (cc/bfs/closeness/… would
+    * otherwise each rescan the edge MV just to learn |V|). */
   private[graft] def vertexCount(s: SparkSession, dir: String): Long =
-    vertexCountCache.computeIfAbsent(
-      (s.sparkContext.applicationId, gKey(s, dir)), _ => {
-        val e = edges(s, dir)
-        e.select(col("src")).distinct().count() +
-          e.select(col("dst")).distinct().count()
-      })
+    Mv.probe(s, s"vertexCount|${gKey(s, dir)}") {
+      val e = edges(s, dir)
+      e.select(col("src")).distinct().count() +
+        e.select(col("dst")).distinct().count()
+    }
 
   /** Default row guard for broadcast-hinting |V|-sized iteration-state
     * tables (ranks/labels/frontiers/degrees). ~20M rows of (long, num)
@@ -58,14 +51,15 @@ object GraphOps {
     * (PlanAuditSpec pins both regimes with it). */
   val StateBroadcastMaxRows = 20000000L
 
-  /** Memoized edge-count probe (one scalar per session × edge-MV
-    * generation, `gKey` as for |V|) — feeds the iterative tier's
-    * adaptive scan width. */
-  private val edgeCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
+  /** The session's state guard: `spark.graft.stateBroadcastMaxRows`,
+    * else `StateBroadcastMaxRows`. */
+  private[graft] def stateGuard(s: SparkSession): Long =
+    s.conf.get("spark.graft.stateBroadcastMaxRows", StateBroadcastMaxRows.toString).toLong
+
+  /** Edge-count probe, per edge-MV generation like |V| — feeds the
+    * iterative tier's adaptive scan width. */
   private[graft] def edgeCount(s: SparkSession, dir: String): Long =
-    edgeCountCache.computeIfAbsent(
-      (s.sparkContext.applicationId, gKey(s, dir)), _ => edges(s, dir).count())
+    Mv.probe(s, s"edgeCount|${gKey(s, dir)}")(edges(s, dir).count())
 
   /** Target rows per task for the PowerIter arc scans (about 5 ms of
     * kernel work per task, a few times a local task launch): at sf0.01
@@ -73,17 +67,15 @@ object GraphOps {
     * query 0.55 s, three tasks 5 ms each and 0.45 s. */
   val IterRowsPerTask = 25000L
 
-  /** ADAPTIVE scan width for the iterative tier (VERDICT r16 advisory:
-    * q_graph_hits hard-coded `coalesce(8)` as a local[32] tune that
-    * had to be hand-edited at deployment — the ivfNlist convention
-    * applied to scheduling): width = clamp(⌈|E|/rowsPerTask⌉, 1,
-    * defaultParallelism), a deterministic function of the measured
-    * edge count. Small graphs coalesce to few fat tasks (cutting
-    * per-job scheduler latency across the 10-iteration chain); as |E|
-    * grows the width rises until the clamp makes the coalesce a no-op
-    * at full parallelism — the "drop it at scale" note executed by the
-    * rule instead of by hand. Narrow dependency over the checkpoint
-    * blocks, so key-locality of the MV is preserved. */
+  /** ADAPTIVE scan width for the iterative tier (the ivfNlist
+    * convention applied to scheduling): width = clamp(⌈|E|/rowsPerTask⌉,
+    * 1, defaultParallelism), a deterministic function of the measured
+    * edge count, so no width is tuned by hand for one deployment. Small
+    * graphs coalesce to few fat tasks (cutting per-job scheduler latency
+    * across the 10-iteration chain); as |E| grows the width rises until
+    * the clamp makes the coalesce a no-op at full parallelism. Narrow
+    * dependency over the checkpoint blocks, so key-locality of the MV is
+    * preserved. */
   private[graft] def iterWidth(s: SparkSession, dir: String): Int = {
     val e = edgeCount(s, dir)
     val w = (e + IterRowsPerTask - 1) / IterRowsPerTask
@@ -92,12 +84,10 @@ object GraphOps {
 
   private def stateFitsBroadcast(s: SparkSession, dir: String,
       factor: Long): Boolean =
-    vertexCount(s, dir) * factor <= s.conf
-      .get("spark.graft.stateBroadcastMaxRows", StateBroadcastMaxRows.toString).toLong
+    vertexCount(s, dir) * factor <= stateGuard(s)
 
   /** Probe-gated broadcast hint for the fixpoint tier's |V|-sized state
-    * tables (VERDICT r10 item 3 — the 100 TB story was a comment).
-    * Below the guard: `broadcast(df)` — each superstep is a broadcast
+    * tables. Below the guard: `broadcast(df)` — each superstep is a broadcast
     * join, the pre-partitioned edge MV never moves, and the whole
     * multi-step computation stays one job. Above it: the hint is
     * DROPPED and the state table is hash-partitioned on its join key,
@@ -108,7 +98,7 @@ object GraphOps {
   private[graft] def stateHint(s: SparkSession, dir: String, df: DataFrame,
       key: String, factor: Long = 1L, moreKeys: Seq[String] = Nil): DataFrame =
     if (stateFitsBroadcast(s, dir, factor)) broadcast(df)
-    // Partition on the FULL join-key tuple (ADVICE r11): a multi-key
+    // Partition on the FULL join-key tuple: a multi-key
     // equi-join clusters on all its keys, so a single-column placement
     // would still force a planner-inserted exchange on the state side.
     else df.repartition((key +: moreKeys).map(col): _*)
@@ -124,16 +114,12 @@ object GraphOps {
     * inputs to a dozen graph/GNN operators each, and rebuilding the
     * 12M-row co-occurrence aggregation per operator was the single
     * largest cost block in the bench (PERF.md). All MVs share Mv.memo —
-    * one cache, one eviction listener (VERDICT r5 item 5). */
+    * one cache, one eviction listener. */
 
   /** Freshness-scoped key suffix for every orders/lineitem-derived
-    * graph MV (r17, ADVICE r16: graph MVs were keyed by dir alone, so
-    * a mid-session rewrite of the fact tables could serve stale
-    * adjacency into fresh joins — the failure class docsKey closed for
-    * the documents tier). Superseded generations evict via
-    * LlmOps.tablesKey's shared register. */
+    * graph MV and probe (see `Mv.tablesKey`). */
   private[graft] def gKey(s: SparkSession, dir: String): String =
-    LlmOps.tablesKey(s, dir, Seq("orders", "lineitem"))
+    Mv.tablesKey(s, dir, Seq("orders", "lineitem"))
 
   /** Co-purchase bipartite edges: DISTINCT (customer, part) — built once
     * per (session, fixture), pre-hash-partitioned on the customer key
@@ -208,22 +194,15 @@ object GraphOps {
     }
 
   /** Out-degree-weighted arc list (src, dst, d) over the symmetrized
-    * bipartite graph, pre-hash-partitioned on dst (a relational
-    * power-iteration step's groupBy(dst) aggregates partition-locally,
-    * NO exchange — PlanAuditSpec pins the layout).
-    * Session MV: PageRank and PPR consumed identical private copies
-    * until round 6 (VERDICT r5 what's-wrong #1); at 100 TB this is a
-    * persisted adjacency layout, built once per corpus snapshot. */
+    * bipartite graph — the arcs of PageRank and PPR. Only PowerIter legs
+    * read it, and they place the arcs themselves, so it keeps the join's
+    * layout. Session MV; at 100 TB a persisted adjacency, built once per
+    * corpus snapshot. */
   private[graft] def undWeighted(s: SparkSession, dir: String): DataFrame =
     Mv.memo(s, s"undW|${gKey(s, dir)}") { bs =>
       undArcs(bs, dir)
         .join(undDegrees(bs, dir), col("src") === col("node"))
         .select(col("src"), col("dst"), col("d"))
-        // EXPLICIT partition count: a count-less repartition is an AQE
-        // coalesce candidate, and the coalesced exchange's partitioning
-        // is not captured by the checkpoint — every consumer would
-        // re-shuffle (caught by PlanAuditSpec's power-iteration pin)
-        .repartition(bs.sessionState.conf.numShufflePartitions, col("dst"))
         .ckpt()
     }
 
@@ -900,10 +879,9 @@ object GraphOps {
     * purchase MULTIPLICITY (order-line count of the customer–part
     * pair — the strength the DISTINCT edge list throws away),
     * symmetrized, with each source's total outgoing weight wt attached
-    * — what the weighted power-iteration tier divides by. Same
-    * dst-pre-partitioning as undWeighted (partition-local groupBy(dst),
-    * no per-step exchange). Session MV; at 100 TB a persisted weighted
-    * adjacency beside the unweighted one. */
+    * — what the weighted power-iteration tier divides by. Like
+    * undWeighted, read only by PowerIter legs. Session MV; at 100 TB a
+    * persisted weighted adjacency beside the unweighted one. */
   private[graft] def undWeightedArcs(s: SparkSession, dir: String): DataFrame =
     Mv.memo(s, s"undWArcs|${gKey(s, dir)}") { bs =>
       // materialize the multiplicity aggregation ONCE: both the
@@ -920,7 +898,6 @@ object GraphOps {
       val wsum = sym.groupBy(col("src").as("n")).agg(sum(col("w")).as("wt"))
       sym.join(broadcast(wsum), col("src") === col("n"))
         .select(col("src"), col("dst"), col("w"), col("wt"))
-        .repartition(bs.sessionState.conf.numShufflePartitions, col("dst"))
         .ckpt()
     }
 

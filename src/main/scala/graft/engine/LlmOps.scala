@@ -80,128 +80,34 @@ object LlmOps {
       .agg(count(lit(1)).as("n_docs"), countDistinct(col("h")).as("n_distinct"))
       .orderBy("lang")
 
-  /** Exact near-dup: same-lang pairs with token-set Jaccard ≥ 0.5.
-    * O(n²) per lang — correct baseline; the scale path is
-    * q_llm_minhash_lsh which prunes candidates first. */
+  /** Freshness-scoped key suffix for every documents-derived MV and
+    * probe (see `Mv.tablesKey`). */
+  private[graft] def docsKey(s: SparkSession, dir: String): String =
+    Mv.tablesKey(s, dir, Seq("documents"))
+
   /** Adaptive dictionary+bitmap encoding of token sets (one scalar stats
     * probe, AQE-style): when the global vocabulary fits in 64 bits, each
     * token set becomes a bigint mask, so pairwise set math collapses to
     * `bit_count(ma & mb)` — a bitmap-index join. Returns None for open
     * vocabularies (callers keep the array path). Identical results either
-    * way. */
-  /** Memo for the vocabulary-size stats probe: one count per (session,
-    * dir), not one per calling query (jaccard + minhash would otherwise
-    * each rescan the corpus just to learn the answer). */
-  private val vocabFitsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Boolean]()
-
-  /** BEST-EFFORT freshness token for dir's documents table: file count
-    * + max modification time + total byte size from ONE driver-side
-    * metadata listing. Folded into EVERY corpus-derived cache key via
-    * `docsKey` (r16; r15 covered only the vocab probe and the mask MV),
-    * a mid-session rewrite of the corpus becomes a cache MISS — fresh
-    * probe, fresh build — instead of a stale read. The staleness
-    * failure mode this targets: a memoized verdict/MV surviving a data
-    * change would silently wrap mask bits (pre-r14) or serve stale
-    * checkpoints into fresh joins (unknown doc_ids dropping through
-    * inner joins — ADVICE r15). Best-effort, not categorical: a
-    * same-second rewrite that keeps both the part-file count AND the
-    * total byte count defeats the token on coarse-mtime filesystems;
-    * the raise_error CASE in the mask build remains the hard backstop.
-    * A missing path yields a sentinel token so the consumer's table
-    * read raises the friendlier data-source error instead of this
-    * metadata probe. */
-  private def docsFreshness(s: SparkSession, dir: String): String =
-    tableFreshness(s, dir, "documents")
-
-  private[graft] def tableFreshness(s: SparkSession, dir: String,
-      table: String): String = try {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.listStatus(p)
-    s"${st.length}:${st.map(_.getModificationTime).foldLeft(0L)(math.max)}:" +
-      s"${st.map(_.getLen).sum}"
-  } catch { case _: java.io.FileNotFoundException => "absent" }
-
-  /** Latest observed freshness token per (application, dir) — the
-    * generation register behind `docsKey`'s eviction of superseded
-    * builds. */
-  private val docsGenCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  /** Freshness-scoped cache-key suffix for EVERY corpus-derived memo
-    * (MV keys and driver-side probe maps alike): `dir|fresh`. On a
-    * freshness MISS (the corpus under `dir` was rewritten in-session)
-    * the SUPERSEDED generation's entries are evicted before the new
-    * token is returned — Mv entries matching the old `dir|fresh`
-    * suffix have their checkpoint blocks unpersisted synchronously, and
-    * the stale probe-map rows are dropped — so repeated rewrites cannot
-    * grow executor storage unboundedly, and no consumer can ever join a
-    * FRESH mask table against a STALE signature/pair MV (ADVICE r15:
-    * mixed-generation joins silently dropped unknown doc_ids through
-    * inner joins). */
-  private[graft] def docsKey(s: SparkSession, dir: String): String = {
-    val fresh = docsFreshness(s, dir)
-    val appId = s.sparkContext.applicationId
-    val prev = docsGenCache.put((appId, dir), fresh)
-    if (prev != null && prev != fresh) {
-      val stale = s"|$dir|$prev"
-      Mv.keys(s).filter(_.endsWith(stale)).foreach(Mv.evict(s, _))
-      vocabFitsCache.remove((appId, s"$dir|$prev"))
-      docCountCache.remove((appId, s"$dir|$prev"))
-    }
-    s"$dir|$fresh"
-  }
-
-  /** Latest observed freshness token per (application, dir, table-set)
-    * — the generation register behind `tablesKey`. */
-  private val tableGenCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  /** Freshness-scoped cache-key suffix for MVs derived from an
-    * ARBITRARY table set — the docsKey device generalized (r17, ADVICE
-    * r16: the r16 freshness keying covered only documents-derived MVs;
-    * graph/embedding MVs stayed keyed by dir alone, so a mid-session
-    * rewrite of orders/lineitem/embeddings could still serve stale
-    * adjacency or centroid MVs into fresh joins). Same
-    * superseded-generation eviction: on a freshness miss every Mv
-    * entry of the old generation is unpersisted synchronously before
-    * the new token is returned. Key shape `dir|fresh` keeps the
-    * eviction suffix-match shared with docsKey. */
-  private[graft] def tablesKey(s: SparkSession, dir: String,
-      tables: Seq[String]): String = {
-    val fresh = tables.map(t => tableFreshness(s, dir, t)).mkString("+")
-    val appId = s.sparkContext.applicationId
-    val prev = tableGenCache.put((appId, s"$dir|${tables.mkString(",")}"), fresh)
-    if (prev != null && prev != fresh) {
-      val stale = s"|$dir|$prev"
-      Mv.keys(s).filter(_.endsWith(stale)).foreach(Mv.evict(s, _))
-    }
-    s"$dir|$fresh"
-  }
-
+    * way. The vocabulary size is one probe per corpus generation, not one
+    * count per calling query. */
   private[graft] def tokenMasks(s: SparkSession, dir: String): Option[DataFrame] = {
     val dk = docsKey(s, dir)
-    val fits = vocabFitsCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dk), _ =>
-        tokenSets(s, dir).select(explode(col("toks")).as("vtok"))
-          .distinct().count() <= 64)
-    if (!fits) None
-    // Session MV (r15 perf recovery): the mask table is the shared
-    // working set of the whole dedup/audit tier — jaccard_pairs,
-    // minhash_lsh, simhash, minhash_est and the dedup-cluster family
-    // each verified candidates against it, and every call re-ran the
-    // token explode + vid join + groupBy over the corpus. One build per
-    // (session, fixture); consumers scan a doc-count-sized checkpoint.
+    val vocab = Mv.probe(s, s"vocab|$dk")(
+      tokenSets(s, dir).select(explode(col("toks")).as("vtok")).distinct().count())
+    if (vocab > 64) None
+    // Session MV: the mask table is the shared working set of the
+    // whole dedup/audit tier — jaccard_pairs, minhash_lsh, simhash,
+    // minhash_est and the dedup-cluster family verify candidates
+    // against it. One build per corpus generation; consumers scan a
+    // doc-count-sized checkpoint.
     else Some(Mv.memo(s, s"tokenMasks|$dk") { bs =>
       val d = tokenSets(bs, dir)
       val vocab = d.select(explode(col("toks")).as("vtok")).distinct()
       // vocab ≤ 64 rows (guarded above): collect the SORTED vocabulary
-      // and ship literal ids — a bounded driver-side table. This
-      // replaces the former `row_number().over(Window.orderBy(vtok))`,
-      // which was the last unpartitioned window left in the dedup
-      // tier's plans (it was bounded, but every consumer needed a
-      // plan-gate allowlist entry; a 64-row collect needs none).
+      // and ship literal ids — a bounded driver-side table, and no
+      // unpartitioned window in the dedup tier's plans.
       import bs.implicits._
       val vids = vocab.orderBy(col("vtok")).collect().map(_.getString(0))
         .zipWithIndex.toSeq.toDF("vtok", "vid")
@@ -220,25 +126,17 @@ object LlmOps {
     })
   }
 
-  /** Memoized one-scalar document-count probe (the vertexCount /
-    * vocabFits device): gates the mask-table broadcast below. */
-  private val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
+  /** Document-count probe: gates the mask-table broadcast below. */
   private[graft] def docCount(s: SparkSession, dir: String): Long =
-    docCountCache.computeIfAbsent(
-      (s.sparkContext.applicationId, docsKey(s, dir)),
-      _ => Tables.documents(s, dir).count())
+    Mv.probe(s, s"docCount|${docsKey(s, dir)}")(Tables.documents(s, dir).count())
 
   /** Probe-gated broadcast hint for the doc-count-sized mask/set tables
-    * (the GraphOps.stateHint pattern): below the shared
-    * `spark.graft.stateBroadcastMaxRows` guard the per-doc table
-    * broadcasts onto the candidate-pair stream — the pair stream (the
-    * big side) never moves for the verify joins; past the guard the
-    * hint drops and AQE plans the shuffle join. */
+    * (the GraphOps.stateHint pattern): below the shared state guard the
+    * per-doc table broadcasts onto the candidate-pair stream — the pair
+    * stream (the big side) never moves for the verify joins; past the
+    * guard the hint drops and AQE plans the shuffle join. */
   private def docHint(s: SparkSession, dir: String, df: DataFrame): DataFrame =
-    if (docCount(s, dir) <= s.conf.get("spark.graft.stateBroadcastMaxRows",
-        GraphOps.StateBroadcastMaxRows.toString).toLong) broadcast(df)
+    if (docCount(s, dir) <= GraphOps.stateGuard(s)) broadcast(df)
     else df
 
   /** Shared exact-Jaccard verification: given candidate (lang, doc_a,
@@ -286,6 +184,9 @@ object LlmOps {
     * guard is exercised (non-vacuous) on every fixture run. */
   val JaccardExactMaxDocsPerLang = 20000L
 
+  /** Exact near-dup: same-lang pairs with token-set Jaccard ≥ 0.5.
+    * O(n²) per lang — correct baseline; the scale path is
+    * q_llm_minhash_lsh which prunes candidates first. */
   def q_llm_jaccard_pairs(s: SparkSession, dir: String): DataFrame = {
     // EXACT BASELINE — not the scale path. O(n²/lang) by design: this is
     // the oracle-checkable ground truth the banded-LSH production path
@@ -1052,16 +953,12 @@ object LlmOps {
       .orderBy("vec_a", "vec_b")
   }
 
-  /** Memoized embeddings-count probe (freshness-keyed like docCount):
-    * one scalar per (session, fixture), read by every capacity rule of
-    * the vector tier below. */
-  private val embCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
+  /** Embeddings-count probe, read by every capacity rule of the vector
+    * tier below; keyed on the embeddings generation like the ivfAssign,
+    * pqSubvecs and kmeansAssign MVs. */
   private[graft] def embCount(s: SparkSession, dir: String): Long =
-    embCountCache.computeIfAbsent(
-      (s.sparkContext.applicationId, s"$dir|${tableFreshness(s, dir, "embeddings")}"),
-      _ => Tables.embeddings(s, dir).count())
+    Mv.probe(s, s"embCount|${Mv.tablesKey(s, dir, Seq("embeddings"))}")(
+      Tables.embeddings(s, dir).count())
 
   /** SCALE-ADAPTIVE coarse-quantizer capacity (VERDICT r15 item 1 —
     * the one scale-killer-class finding): nlist = max(16, ⌊√n_vecs⌋)
@@ -1109,7 +1006,7 @@ object LlmOps {
     * NINE ANN-tier operators — memoized per (session, embeddings
     * generation), it runs once per board sweep. */
   private def ivfAssign(s: SparkSession, dir: String): DataFrame =
-    Mv.memo(s, s"ivfAssign|${tablesKey(s, dir, Seq("embeddings"))}") { bs =>
+    Mv.memo(s, s"ivfAssign|${Mv.tablesKey(s, dir, Seq("embeddings"))}") { bs =>
       val emb = Tables.embeddings(bs, dir)
       val nlist = ivfNlist(bs, dir)
       val cents = emb.filter(col("vec_id") < nlist)
@@ -1985,7 +1882,7 @@ object LlmOps {
     * (session, embeddings generation): the seed codebook, both error
     * legs, every Lloyd iteration, and the trained-ADC curve re-read it. */
   private[graft] def pqSubvecs(s: SparkSession, dir: String): DataFrame =
-    Mv.memo(s, s"pqSubvecs|${tablesKey(s, dir, Seq("embeddings"))}") { bs =>
+    Mv.memo(s, s"pqSubvecs|${Mv.tablesKey(s, dir, Seq("embeddings"))}") { bs =>
       val emb = Tables.embeddings(bs, dir)
       val nlist = ivfNlist(bs, dir)
       val cents = emb.filter(col("vec_id") < nlist)
@@ -2029,7 +1926,7 @@ object LlmOps {
     * Session MV — the trainer's report and the trained-ADC operating
     * curve both consume the identical 128-row table. */
   private[graft] def pqTrainedCb(s: SparkSession, dir: String): DataFrame =
-    Mv.memo(s, s"pqTrainedCb|${tablesKey(s, dir, Seq("embeddings"))}") { bs =>
+    Mv.memo(s, s"pqTrainedCb|${Mv.tablesKey(s, dir, Seq("embeddings"))}") { bs =>
       val sv = pqSubvecs(bs, dir)
       var cb = pqSeedCb(bs, dir)
       for (_ <- 1 to PqTrainIters) {

@@ -523,8 +523,7 @@ object PowerIter {
 
   /** The placement and step plumbing the modes share, for one run. */
   private final class Plumbing(s: SparkSession, query: String, width: Int) {
-    val guard: Long = s.conf.get("spark.graft.stateBroadcastMaxRows",
-      GraphOps.StateBroadcastMaxRows.toString).toLong
+    val guard: Long = GraphOps.stateGuard(s)
     val p = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
     // the placement of the last arc read, the local arcs, the run's
     // scans by what they read, and the scans already shuffled onto

@@ -625,37 +625,13 @@ object Relational {
       .orderBy("day")
   }
 
-  /** Memoized one-scalar customer-dimension row probe (the
-    * vertexCount/docCount device) — gates q_win_ntile's regime choice. */
-  private val custCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
-  private def customerCount(s: SparkSession, dir: String): Long =
-    custCountCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir),
-      _ => Tables.customer(s, dir).count())
-
-  /** Global customer quartiles. DEFAULT REGIME: the Dist device
-    * (pid-partitioned windows, bit-identical NTILE) — the customer
-    * dimension GROWS with the corpus, so the scale-safe path is the
-    * default and the single unpartitioned window is an explicit OPT-IN
-    * for dimensions known to fit one comfortable sort partition:
-    * `spark.graft.ntileDirectMaxRows` (0 = never; the probe-gate
-    * pattern of stateBroadcastMaxRows). r15, VERDICT r14 item 7 — this
-    * deletes the last fact-adjacent entry from the plan gate's
-    * global-window allowlist; PlanAuditSpec pins both regimes and
-    * their result identity. */
+  /** Global customer quartiles through the Dist device (pid-partitioned
+    * windows, bit-identical NTILE): the customer dimension grows with
+    * the corpus, so no plan ranks it in one unpartitioned window. */
   def q_win_ntile(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.customer(s, dir).select(col("c_custkey"), col("c_acctbal"))
-    val order = Seq(col("c_acctbal").desc, col("c_custkey").asc)
-    val direct = customerCount(s, dir) <= s.conf
-      .get("spark.graft.ntileDirectMaxRows", "0").toLong
-    val bucketed =
-      if (direct)
-        base.select(col("c_custkey"), col("c_acctbal"),
-          ntile(4).over(Window.orderBy(order: _*)).cast("bigint").as("quartile"))
-      else Dist.ntile(base, 4, order, "quartile")
-    bucketed.select(col("c_custkey"), col("c_acctbal"), col("quartile"))
+    Dist.ntile(base, 4, Seq(col("c_acctbal").desc, col("c_custkey").asc), "quartile")
+      .select(col("c_custkey"), col("c_acctbal"), col("quartile"))
       .orderBy("c_custkey")
   }
 

@@ -151,4 +151,34 @@ class MvSpec extends AnyFunSuite {
       "cache hits must re-bind clone-built MVs to the caller's session")
     assert(Mv.evict(s, kIn))
   }
+
+  test("probe computes once per key and stays out of keys and census") {
+    val s = spark
+    val key = s"mvspec-probe-$runId"
+    val keysBefore = Mv.keys(s)
+    val nBefore = Mv.census(s)._1
+    var counts = 0
+    def count() = { counts += 1; s.range(7).count() }
+    assert(Mv.probe(s, key)(count()) == 7L)
+    assert(Mv.probe(s, key)(count()) == 7L)
+    assert(counts == 1, s"a probe must count once per key, counted $counts times")
+    assert(Mv.keys(s) == keysBefore, "probes must not be listed as MVs")
+    assert(Mv.census(s)._1 == nBefore, "probes must not be counted as MVs")
+  }
+
+  test("probes nest inside probes and inside MV builds") {
+    val s = spark
+    val outer = s"mvspec-probe-outer-$runId"
+    val inner = s"mvspec-probe-inner-$runId"
+    val inBuild = s"mvspec-probe-build-$runId"
+    val kMv = s"mvspec-probe-mv-$runId"
+    // the production shapes: vertexCount builds edges inside its count,
+    // and MV builds read probes (the kernel guard, the scan width)
+    assert(Mv.probe(s, outer)(Mv.probe(s, inner)(3L) + 1L) == 4L)
+    assert(Mv.probe(s, inner)(sys.error("must be cached")) == 3L)
+    val mv = Mv.memo(s, kMv)(bs => bs.range(Mv.probe(bs, inBuild)(5L)).toDF())
+    assert(mv.count() == 5L)
+    assert(Mv.probe(s, inBuild)(sys.error("must be cached")) == 5L)
+    Mv.evict(s, kMv)
+  }
 }

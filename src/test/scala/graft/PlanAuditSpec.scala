@@ -222,22 +222,16 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("Join"), s"checkpointed training set must not re-join:\n$p")
   }
 
-  test("power-iteration step over the undWeighted MV shuffles nothing but the rank broadcast") {
-    // the 100 TB pagerank/ppr story: the arc-list MV is pre-hash-
-    // partitioned on dst and the checkpoint preserves that partitioning,
-    // so each iteration's groupBy(dst) aggregates partition-locally —
-    // the ONLY per-step data movement is the |V|-sized rank broadcast
-    import org.apache.spark.sql.functions.{broadcast, col, lit, sum}
-    val undW = GraphOps.undWeighted(spark, sf0001)
-    val ranks = GraphOps.undDegrees(spark, sf0001)
-      .select(col("node").as("rn"), lit(1.0).as("r"))
-    val step = undW.join(broadcast(ranks), col("src") === col("rn"))
-      .groupBy(col("dst")).agg(sum(col("r") / col("d")).as("r"))
-    step.collect()
-    val p = step.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin"), s"rank table must broadcast:\n$p")
+  test("the edges MV keeps its src layout: groupBy(src) plans no hash exchange") {
+    // Mv builds run with AQE off so the checkpoint captures the build's
+    // repartition(src); the stream hop and pairCounts join the edge MV
+    // on src, and an aggregation on it must stay partition-local
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val agg = GraphOps.edges(spark, sf0001).groupBy(col("src")).agg(count(lit(1)).as("n"))
+    agg.collect()
+    val p = agg.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange hashpartitioning"),
-      s"pre-partitioned arc MV must make the per-step aggregation exchange-free:\n$p")
+      s"the src-partitioned edge MV must make groupBy(src) exchange-free:\n$p")
   }
 
   test("bucketed fact join is exchange-free on both sides") {
@@ -590,39 +584,15 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(maxPool <= 5000L, s"rrf candidate pool must stay bounded, got $maxPool")
   }
 
-  test("ntile: Dist device by default; the direct global window is a guarded opt-in (r15)") {
-    // r15 (VERDICT r14 item 7): the customer dimension GROWS with the
-    // corpus, so the scale-safe Dist regime is the DEFAULT — no
-    // unpartitioned window anywhere in the default plan, and the old
-    // globalWinAllow entry is deleted. The single-window fast path is
-    // an explicit opt-in via spark.graft.ntileDirectMaxRows, pinned
-    // here in both regimes with result identity.
+  test("ntile: the Dist device ranks customers in partitioned windows only") {
+    // the customer dimension grows with the corpus, so no plan of
+    // q_win_ntile may hold an unpartitioned window
     import org.apache.spark.sql.execution.window.WindowExec
-    def wins(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.sparkPlan.collect { case w: WindowExec => w }
     val dist = SparkEntry.queries("q_win_ntile")(spark, sf0001)
-    val distWins = wins(dist)
+    val distWins = dist.queryExecution.sparkPlan.collect { case w: WindowExec => w }
     assert(distWins.nonEmpty, "Dist regime ranks via pid-partitioned windows")
     distWins.foreach(w => assert(w.partitionSpec.nonEmpty,
-      s"default regime may not contain an unpartitioned window:\n$w"))
-    val distRows = dist.collect().map(r => (r.getLong(0), r.getLong(2)))
-    spark.conf.set("spark.graft.ntileDirectMaxRows", "10000000")
-    try {
-      val direct = SparkEntry.queries("q_win_ntile")(spark, sf0001)
-      val dWins = wins(direct)
-      assert(dWins.size == 1 && dWins.head.partitionSpec.isEmpty,
-        "opt-in regime is the single global window")
-      val scanned = direct.queryExecution.sparkPlan.collect {
-        case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
-          sc.relation.location.rootPaths.map(_.getName).mkString(",")
-      }
-      assert(scanned.nonEmpty && scanned.forall(_.contains("customer")),
-        s"the direct window may read only the customer dimension, scans=$scanned")
-      // both regimes must assign bit-identical quartiles
-      val directRows = direct.collect().map(r => (r.getLong(0), r.getLong(2)))
-      assert(directRows.sameElements(distRows),
-        "Dist and direct regimes must produce identical quartiles")
-    } finally spark.conf.unset("spark.graft.ntileDirectMaxRows")
+      s"q_win_ntile may not contain an unpartitioned window:\n$w"))
   }
 
   test("round-14 bounded inputs: the PMI pair space stays vocab-bounded") {

@@ -122,5 +122,16 @@ class VocabGuardSpec extends AnyFunSuite {
     val now = graft.engine.Mv.keys(s)
     val leftover = gen1Keys.filter(now.contains)
     assert(leftover.isEmpty, s"superseded generation not evicted: $leftover")
+    // the scalar probes follow the rewrite too: generation 3 changes the
+    // document count and the vocabulary size
+    def vocab(): Long = {
+      LlmOps.tokenMasks(s, dir)
+      graft.engine.Mv.probe(s, s"vocab|${LlmOps.docsKey(s, dir)}")(
+        fail("tokenMasks must take the vocabulary probe"))
+    }
+    assert(LlmOps.docCount(s, dir) == 3L && vocab() == 10L)
+    write(Seq((0L, "one two"), (10L, "one two"), (20L, "three"), (30L, "four")))
+    assert(LlmOps.docCount(s, dir) == 4L, "stale document count after the rewrite")
+    assert(vocab() == 4L, "stale vocabulary size after the rewrite")
   }
 }
